@@ -57,17 +57,6 @@ object GraftConf {
   // cross (measured: 1000 starved x 1.5M rights = 1.5e9 pairs was the
   // dominant term of the d=4 100x slice)
   val KnnNaivePairBudget = "spark.graft.knn.naivePairBudget"
-  // sample-driven PBSM cell sizing for the shape joins (intersects /
-  // shape-distance / polygon-distance): evaluate a replica+pair cost
-  // model over halvings of the median-span heuristic side and take the
-  // cheapest. The heuristic (cell = larger side's median bbox span)
-  // bounds per-row replica fan-out at O(1) but ignores PAIR volume —
-  // when one side's shapes dwarf the other's the domain collapses into
-  // a handful of cells and the equi-join proposes millions of pairs
-  // for a few true hits. Off = the pre-r17 heuristic side. Either
-  // setting is exact (superset grid + reference point + exact
-  // predicate); this is cost only.
-  val ShapeCellCostModel = "spark.graft.shape.cellCostModel"
   val KnnVecApprox       = "spark.graft.knn.vec.approx"
   val KnnVecApproxNlist  = "spark.graft.knn.vec.approx.nlist"
   val KnnVecApproxNprobe = "spark.graft.knn.vec.approx.nprobe"
@@ -114,8 +103,6 @@ object GraftConf {
   def knnPivotCellSize(s: SparkSession): Int = get(s, KnnPivotCellSize, "64").toInt
   def knnNaivePairBudget(s: SparkSession): Long =
     get(s, KnnNaivePairBudget, "33554432").toLong
-  def shapeCellCostModel(s: SparkSession): Boolean =
-    get(s, ShapeCellCostModel, "true").toBoolean
   def knnVecApprox(s: SparkSession): Boolean = get(s, KnnVecApprox, "false").toBoolean
   def knnVecApproxNlist(s: SparkSession): Int = get(s, KnnVecApproxNlist, "16").toInt
   def knnVecApproxNprobe(s: SparkSession): Int = get(s, KnnVecApproxNprobe, "4").toInt

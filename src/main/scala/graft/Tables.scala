@@ -62,6 +62,17 @@ object Tables {
       col("s_acctbal").as("sx"),
       (col("s_suppkey") % 1000).cast("double").as("sy"))
 
+  /** [[customerPts]] with skew, columns `<p>id`, `<p>x`, `<p>y`: 80% of
+    * rows (c_custkey % 5 < 4) squeeze 100x into a dense cluster, the
+    * rest spread 10x wider. The skewed kNN-join fixture. */
+  def skewedPts(s: SparkSession, d: String, p: String): DataFrame = {
+    val dense = col("c_custkey") % 5 < 4
+    customerPts(s, d).select(
+      col("c_custkey").as(s"${p}id"),
+      when(dense, col("cx") * 0.01).otherwise(col("cx") * 10.0).as(s"${p}x"),
+      when(dense, col("cy") * 0.01).otherwise(col("cy") * 10.0).as(s"${p}y"))
+  }
+
   /** events as 2-D points with time retained. */
   def eventsPts(s: SparkSession, d: String): DataFrame =
     events(s, d).select(

@@ -791,6 +791,14 @@ case class ProjectFold(child: Expression, weights: Array[Double])
     case _ => false
   }
 
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType | DoubleType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects an array<float> or array<double> input, got ${t.simpleString}")
+    }
+
   override def nullSafeEval(v: Any): Any =
     VectorKernels.projectFold(v.asInstanceOf[ArrayData], floatInput, weights)
 

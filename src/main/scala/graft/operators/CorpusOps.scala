@@ -1079,9 +1079,10 @@ object CorpusOps {
       // cannot fire, and the final plan tokenized the corpus TWICE with
       // two gram exchanges (measured: r15 distinct 4.62 s, r16 shared-
       // repartition 4.12 s, this window shape 3.83 s median at sf0.1 —
-      // AbBoilerplate, bit-exact parity across all three). At scale the
-      // win is structural: the heavy exploded-gram stream crosses the
-      // network once instead of twice, and the corpus scans once.
+      // in-JVM A/B in OPTIMIZATION_r17.md, bit-exact parity across all
+      // three). At scale the win is structural: the heavy exploded-gram
+      // stream crosses the network once instead of twice, and the
+      // corpus scans once.
       val w = Window.partitionBy(col("__graft_gram"))
       ds.toDF
         .select(col(idCol).as("__graft_bid"),

@@ -217,163 +217,66 @@ object SpatialOps {
 
     /** Distance join of this POLYGON table against a point table: every
       * (polygon, point) pair with minDist(polygon, point) <= `r`
-      * (r = 0 keeps containment and boundary contact). The grid
-      * discipline with an EXTENSIVE left: a point sits in exactly ONE
-      * cell, a polygon covers every cell its r-dilated bbox intersects
-      * (two `explode(sequence(...))` over the per-row bbox — the
-      * SpatialDisk.distanceJoin shape), so the cell equi-join meets each
-      * qualifying pair exactly once and the exact polygon test
+      * (r = 0 keeps containment and boundary contact). The PBSM core
+      * ([[SpatialOps.pbsmJoin]]) with an EXTENSIVE left: a polygon
+      * covers every cell its r-dilated bbox intersects, a point is a
+      * degenerate box in exactly ONE cell (so the reference-point rule
+      * never drops a true pair), and the exact polygon test
       * ([[graft.functions.stDistance]] — point-in-polygon else min
       * segment distance, codegen'd) refines. Closes the last Simba
       * shape-join the surface lacked (ref Polygon.scala:32-38).
       *
       * `shapeCol` is a [[graft.spatial.ShapeCodec]] struct column of
-      * 2-D polygons (any pair-layout shape works — MBR, segment). Cell
-      * side adapts to the data: max(r, median sampled bbox span), so a
-      * polygon explodes to O(1) cells whatever its size — at 100 TB the
-      * fan-out per polygon stays bounded and the shuffle carries each
-      * point once. */
+      * 2-D shapes (polygon, MBR, segment, circle — bboxes through
+      * [[SpatialOps.shapeBBoxLo]]). The cell side comes from bounded
+      * samples of both sides ([[SpatialOps.pbsmSide]]), so a polygon
+      * explodes to O(1) cells whatever its size — at 100 TB the fan-out
+      * per polygon stays bounded and the shuffle carries each point
+      * once. */
     def polygonDistanceJoin(points: Dataset[_], shapeCol: String,
                             pKeys: Seq[String], r: Double,
                             sampleCap: Int = 512): DataFrame = {
       require(r >= 0, s"distance must be >= 0, got $r")
       require(pKeys.length == 2, "polygonDistanceJoin is 2-D only")
-      val polys = ds.toDF
-      val pts = points.toDF
-      require(polys.columns.intersect(pts.columns).isEmpty,
-        s"polygonDistanceJoin requires disjoint column names, shared: " +
-          polys.columns.intersect(pts.columns).mkString(","))
-      val coords = col(s"$shapeCol.coords")
-      def axis(parity: Int): Column =
-        filter(coords, (_, i) => i % 2 === parity)
-      // bounded driver sample sizes the grid: median per-polygon bbox
-      // span keeps each polygon's cell fan-out O(1) (a fixed side of r
-      // under huge polygons would explode them to span/r cells each).
-      // [[SpatialOps.medianSampledSpan]]: seeded sample, not first
-      // rows — a zoom-ordered tile table's first rows are the smallest
-      // polygons and a first-rows median under-sizes the cell. Null
-      // shapes drop out of the join everywhere (null bbox -> no cells,
-      // null exact test -> filtered); the sampler skips them the same
-      // way instead of NPE-ing on the driver
-      // cell side: cost-model-chosen when enabled (polygon boxes
-      // dilated by r, points are degenerate boxes), else the r16
-      // heuristic max(r, polygon median span)
-      val side =
-        if (!graft.GraftConf.shapeCellCostModel(ds.sparkSession))
-          math.max(1e-9, math.max(r,
-            SpatialOps.medianSampledSpan(polys, greatest(
-              array_max(axis(0)) - array_min(axis(0)),
-              array_max(axis(1)) - array_min(axis(1))), sampleCap)))
-        else {
-          val (lS, lFrac) = SpatialOps.sampleShapesWithFraction(
-            polys, shapeCol, sampleCap, seed = 7)
-          val lB = lS.map(SpatialOps.sampleBox)
-          val (rPts, rFrac, _) = SpatialOps.samplePointsWithFraction(
-            pts, pKeys, sampleCap)
-          val rB = rPts.map(p => Array(p(0), p(1), p(0), p(1)))
-          val s0 = math.max(1e-9, math.max(r, SpatialOps.medianBoxSpan(lB)))
-          SpatialOps.chooseShapeCellSide(lB, lB.length / math.max(lFrac, 1e-12),
-            rB, rB.length / math.max(rFrac, 1e-12), r, s0)
-        }
-      val pl = polys
-        .withColumn("__graft_pj_cx", explode(sequence(
-          floor((array_min(axis(0)) - r) / side).cast("long"),
-          floor((array_max(axis(0)) + r) / side).cast("long"))))
-        .withColumn("__graft_pj_cy", explode(sequence(
-          floor((array_min(axis(1)) - r) / side).cast("long"),
-          floor((array_max(axis(1)) + r) / side).cast("long"))))
-      val pt = pts
-        .withColumn("__graft_pj_cx", floor(col(pKeys(0)) / side).cast("long"))
-        .withColumn("__graft_pj_cy", floor(col(pKeys(1)) / side).cast("long"))
-      pl.join(pt, Seq("__graft_pj_cx", "__graft_pj_cy"))
-        .filter(stDistance(col(shapeCol),
-          stPoint(col(pKeys(0)), col(pKeys(1)))) <= r)
-        .select((polys.columns ++ pts.columns).map(col): _*)
+      val (polys, pts) = (ds.toDF, points.toDF)
+      SpatialOps.requireDisjoint("polygonDistanceJoin", polys, pts)
+      val (lB, lFrac) = SpatialOps.sampleBoxes(polys, shapeCol, sampleCap, seed = 7)
+      val (rPts, rFrac, _) = SpatialOps.samplePointsWithFraction(pts, pKeys, sampleCap)
+      val rB = rPts.map(p => Array(p(0), p(1), p(0), p(1)))
+      val (x, y) = (col(pKeys(0)), col(pKeys(1)))
+      SpatialOps.pbsmJoin(polys, SpatialOps.shapeBox(col(shapeCol)), pts, Seq(x, y, x, y),
+        r, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, r),
+        stDistance(col(shapeCol), stPoint(x, y)) <= r)
     }
 
     /** Spatial INTERSECTION join of two mixed-shape tables: every
       * (left, right) pair whose shapes intersect — the classic spatial
-      * join, partition-based (PBSM): BOTH sides are extensive, so each
-      * row explodes to the grid cells its bbox covers, the cell
-      * equi-join proposes pairs, and the exact codegen'd
-      * [[graft.functions.stIntersects]] test decides. Overlapping
-      * bboxes meet in EVERY shared cell, so duplicates are suppressed
-      * with the reference-point method instead of a distinct shuffle: a
-      * pair is reported only in the single cell holding its
-      * bbox-intersection's min corner (that corner lies inside both
-      * bboxes, so the pair provably meets there; every other shared
-      * cell drops it with a codegen'd comparison).
+      * join, partition-based (PBSM, [[SpatialOps.pbsmJoin]]): BOTH
+      * sides are extensive, so each row explodes to the grid cells its
+      * bbox covers, the cell equi-join proposes pairs, the
+      * reference-point rule keeps each pair in exactly one shared cell,
+      * and the exact codegen'd [[graft.functions.stIntersects]] test
+      * decides.
       *
       * Shape columns are [[graft.spatial.ShapeCodec]] structs of any
       * 2-D shape (point, MBR, circle, polygon, segment — bboxes come
-      * from the coords layout, circles from center ± radius). Cell side
-      * = the larger of the two sides' median sampled bbox spans, so
-      * per-row fan-out stays O(1) whatever the shapes' size — the
-      * 100-TB shape: one shuffle keyed by locality, pair work
-      * proportional to true bbox overlaps, never a cross product. */
+      * from the coords layout, circles from center ± radius). The cell
+      * side comes from bounded samples of both sides
+      * ([[SpatialOps.pbsmSide]]), so per-row fan-out stays O(1)
+      * whatever the shapes' size — the 100-TB shape: one shuffle keyed
+      * by locality, pair work proportional to true bbox overlaps,
+      * never a cross product. */
     def shapeIntersectsJoin(right: Dataset[_], lShapeCol: String,
                             rShapeCol: String,
                             sampleCap: Int = 512): DataFrame = {
-      val l = ds.toDF
-      val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty,
-        s"shapeIntersectsJoin requires disjoint column names, shared: " +
-          l.columns.intersect(rt.columns).mkString(","))
-      def lo(shape: Column, parity: Int): Column =
-        SpatialOps.shapeBBoxLo(shape, parity)
-      def hi(shape: Column, parity: Int): Column =
-        SpatialOps.shapeBBoxHi(shape, parity)
-      // bounded driver sample sizes the grid from the LARGER side's
-      // median bbox span — big shapes dictate the cell so their fan-out
-      // stays O(1); the smaller side lands in O(1) cells regardless
-      // [[SpatialOps.medianSampledSpan]]: seeded sample, not first rows
-      // — size-sorted shape tables would otherwise bias the median and
-      // blow up per-row cell fan-out; null shapes drop out of the join
-      // (null cells, null exact test) and the sampler skips them too
-      def medianSpan(df: DataFrame, c: String): Double =
-        SpatialOps.medianSampledSpan(df,
-          greatest(hi(col(c), 0) - lo(col(c), 0),
-            hi(col(c), 1) - lo(col(c), 1)), sampleCap)
-      // cell side: cost-model-chosen from bbox samples when enabled
-      // (see GraftConf.ShapeCellCostModel), else the r16 heuristic
-      val side =
-        if (!graft.GraftConf.shapeCellCostModel(ds.sparkSession))
-          math.max(1e-9,
-            math.max(medianSpan(l, lShapeCol), medianSpan(rt, rShapeCol)))
-        else {
-          val (lS, lFrac) = SpatialOps.sampleShapesWithFraction(
-            l, lShapeCol, sampleCap, seed = 7)
-          val (rS, rFrac) = SpatialOps.sampleShapesWithFraction(
-            rt, rShapeCol, sampleCap, seed = 42)
-          val lB = lS.map(SpatialOps.sampleBox)
-          val rB = rS.map(SpatialOps.sampleBox)
-          val s0 = math.max(1e-9, math.max(
-            SpatialOps.medianBoxSpan(lB), SpatialOps.medianBoxSpan(rB)))
-          SpatialOps.chooseShapeCellSide(lB, lB.length / math.max(lFrac, 1e-12),
-            rB, rB.length / math.max(rFrac, 1e-12), 0.0, s0)
-        }
-      def celled(df: DataFrame, c: String, p: String): DataFrame = df
-        .withColumn(s"__graft_ij_${p}lx", lo(col(c), 0))
-        .withColumn(s"__graft_ij_${p}hx", hi(col(c), 0))
-        .withColumn(s"__graft_ij_${p}ly", lo(col(c), 1))
-        .withColumn(s"__graft_ij_${p}hy", hi(col(c), 1))
-        .withColumn("__graft_ij_cx", explode(sequence(
-          floor(col(s"__graft_ij_${p}lx") / side).cast("long"),
-          floor(col(s"__graft_ij_${p}hx") / side).cast("long"))))
-        .withColumn("__graft_ij_cy", explode(sequence(
-          floor(col(s"__graft_ij_${p}ly") / side).cast("long"),
-          floor(col(s"__graft_ij_${p}hy") / side).cast("long"))))
-      celled(l, lShapeCol, "l")
-        .join(celled(rt, rShapeCol, "r"), Seq("__graft_ij_cx", "__graft_ij_cy"))
-        // reference point: the bbox intersection's min corner picks ONE
-        // of the shared cells; all others drop the pair right here
-        .filter(
-          floor(greatest(col("__graft_ij_llx"), col("__graft_ij_rlx")) / side)
-            .cast("long") === col("__graft_ij_cx") &&
-          floor(greatest(col("__graft_ij_lly"), col("__graft_ij_rly")) / side)
-            .cast("long") === col("__graft_ij_cy"))
-        .filter(stIntersects(col(lShapeCol), col(rShapeCol)))
-        .select((l.columns ++ rt.columns).map(col): _*)
+      val (l, rt) = (ds.toDF, right.toDF)
+      SpatialOps.requireDisjoint("shapeIntersectsJoin", l, rt)
+      val (lB, lFrac) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
+      val (rB, rFrac) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
+      SpatialOps.pbsmJoin(l, SpatialOps.shapeBox(col(lShapeCol)),
+        rt, SpatialOps.shapeBox(col(rShapeCol)),
+        0.0, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, 0.0),
+        stIntersects(col(lShapeCol), col(rShapeCol)))
     }
 
     /** Distance join over MIXED-GEOMETRY ShapeCodec columns: every
@@ -381,87 +284,23 @@ object SpatialOps {
       * reference's any-Shape join surface (its joins accept any Shape
       * key via util/ShapeUtils.scala:54-71; the rebuild's point-keyed
       * [[distanceJoin]] and polygon form covered only part of that).
-      * The [[shapeIntersectsJoin]] PBSM discipline with a dilation: the
-      * LEFT bbox grows by `r` per axis (a pair at shape distance <= r
-      * has per-axis bbox deficits <= r, so the dilated-left and raw
-      * right bboxes overlap), both sides explode to their bbox's grid
-      * cells, the cell equi-join proposes pairs, the reference-point
-      * rule (min corner of the dilated-bbox intersection) keeps each
-      * pair exactly once, and the exact codegen'd
-      * [[graft.functions.stDistance]] decides. Cell side = max(r, both
-      * sides' median sampled bbox span), so per-row fan-out stays O(1)
-      * whatever the shapes' size — same 100-TB shape as the intersects
-      * join: one locality-keyed shuffle, never a cross product. */
+      * The [[shapeIntersectsJoin]] PBSM core with the LEFT bbox dilated
+      * by `r` per axis, and the exact codegen'd
+      * [[graft.functions.stDistance]] deciding. Same 100-TB shape as the
+      * intersects join: one locality-keyed shuffle, never a cross
+      * product. */
     def shapeDistanceJoin(right: Dataset[_], lShapeCol: String,
                           rShapeCol: String, r: Double,
                           sampleCap: Int = 512): DataFrame = {
       require(r >= 0, s"distance must be >= 0, got $r")
-      val l = ds.toDF
-      val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty,
-        s"shapeDistanceJoin requires disjoint column names, shared: " +
-          l.columns.intersect(rt.columns).mkString(","))
-      def lo(shape: Column, parity: Int): Column =
-        SpatialOps.shapeBBoxLo(shape, parity)
-      def hi(shape: Column, parity: Int): Column =
-        SpatialOps.shapeBBoxHi(shape, parity)
-      def medianSpan(df: DataFrame, c: String): Double =
-        SpatialOps.medianSampledSpan(df,
-          greatest(hi(col(c), 0) - lo(col(c), 0),
-            hi(col(c), 1) - lo(col(c), 1)), sampleCap)
-      // cell side: cost-model-chosen from bbox samples when enabled
-      // (left boxes dilated by r in the model, exactly as in the grid),
-      // else the r16 heuristic max(r, medians)
-      val side =
-        if (!graft.GraftConf.shapeCellCostModel(ds.sparkSession))
-          math.max(1e-9, math.max(r,
-            math.max(medianSpan(l, lShapeCol), medianSpan(rt, rShapeCol))))
-        else {
-          val (lS, lFrac) = SpatialOps.sampleShapesWithFraction(
-            l, lShapeCol, sampleCap, seed = 7)
-          val (rS, rFrac) = SpatialOps.sampleShapesWithFraction(
-            rt, rShapeCol, sampleCap, seed = 42)
-          val lB = lS.map(SpatialOps.sampleBox)
-          val rB = rS.map(SpatialOps.sampleBox)
-          val s0 = math.max(1e-9, math.max(r, math.max(
-            SpatialOps.medianBoxSpan(lB), SpatialOps.medianBoxSpan(rB))))
-          SpatialOps.chooseShapeCellSide(lB, lB.length / math.max(lFrac, 1e-12),
-            rB, rB.length / math.max(rFrac, 1e-12), r, s0)
-        }
-      // left bbox dilated by r; right raw — cells over each bbox
-      val lt = l
-        .withColumn("__graft_sdj_llx", lo(col(lShapeCol), 0) - r)
-        .withColumn("__graft_sdj_lhx", hi(col(lShapeCol), 0) + r)
-        .withColumn("__graft_sdj_lly", lo(col(lShapeCol), 1) - r)
-        .withColumn("__graft_sdj_lhy", hi(col(lShapeCol), 1) + r)
-        .withColumn("__graft_sdj_cx", explode(sequence(
-          floor(col("__graft_sdj_llx") / side).cast("long"),
-          floor(col("__graft_sdj_lhx") / side).cast("long"))))
-        .withColumn("__graft_sdj_cy", explode(sequence(
-          floor(col("__graft_sdj_lly") / side).cast("long"),
-          floor(col("__graft_sdj_lhy") / side).cast("long"))))
-      val rr = rt
-        .withColumn("__graft_sdj_rlx", lo(col(rShapeCol), 0))
-        .withColumn("__graft_sdj_rhx", hi(col(rShapeCol), 0))
-        .withColumn("__graft_sdj_rly", lo(col(rShapeCol), 1))
-        .withColumn("__graft_sdj_rhy", hi(col(rShapeCol), 1))
-        .withColumn("__graft_sdj_cx", explode(sequence(
-          floor(col("__graft_sdj_rlx") / side).cast("long"),
-          floor(col("__graft_sdj_rhx") / side).cast("long"))))
-        .withColumn("__graft_sdj_cy", explode(sequence(
-          floor(col("__graft_sdj_rly") / side).cast("long"),
-          floor(col("__graft_sdj_rhy") / side).cast("long"))))
-      lt.join(rr, Seq("__graft_sdj_cx", "__graft_sdj_cy"))
-        // reference point: the dilated-bbox intersection's min corner
-        // lies in both exploded bboxes, so the pair provably meets in
-        // that one cell; every other shared cell drops it here
-        .filter(
-          floor(greatest(col("__graft_sdj_llx"), col("__graft_sdj_rlx")) / side)
-            .cast("long") === col("__graft_sdj_cx") &&
-          floor(greatest(col("__graft_sdj_lly"), col("__graft_sdj_rly")) / side)
-            .cast("long") === col("__graft_sdj_cy"))
-        .filter(stDistance(col(lShapeCol), col(rShapeCol)) <= r)
-        .select((l.columns ++ rt.columns).map(col): _*)
+      val (l, rt) = (ds.toDF, right.toDF)
+      SpatialOps.requireDisjoint("shapeDistanceJoin", l, rt)
+      val (lB, lFrac) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
+      val (rB, rFrac) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
+      SpatialOps.pbsmJoin(l, SpatialOps.shapeBox(col(lShapeCol)),
+        rt, SpatialOps.shapeBox(col(rShapeCol)),
+        r, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, r),
+        stDistance(col(lShapeCol), col(rShapeCol)) <= r)
     }
 
     /** kNN join over MIXED-GEOMETRY ShapeCodec columns: per left shape,
@@ -476,8 +315,10 @@ object SpatialOps {
       *     distance against the right sample gives the radius pool, and
       *     theta = quantile * safety (an over-estimate only widens the
       *     candidate grid — exactness never depends on the sample);
-      *  2. candidates = [[shapeDistanceJoin]] at r = theta — the
-      *     dilated-bbox PBSM grid, reference-point dedup, exact refine;
+      *  2. candidates = the [[shapeDistanceJoin]] PBSM core at
+      *     r = theta, its cell side sized from the SAME samples (no
+      *     second draw) — dilated-bbox grid, reference-point dedup,
+      *     exact refine;
       *  3. per-left windowed top-k over candidates (satisfied = lefts
       *     with >= k candidates inside theta);
       *  4. starved lefts take the exact cross-window fallback (the
@@ -490,15 +331,13 @@ object SpatialOps {
                      sampleCap: Int = 500, quantile: Double = 0.95,
                      safety: Double = 2.0): DataFrame = {
       require(k >= 1, s"k must be >= 1, got $k")
-      val l = ds.toDF
-      val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty,
-        s"shapeKnnJoin requires disjoint column names, shared: " +
-          l.columns.intersect(rt.columns).mkString(","))
-      val (lShapes, _) = SpatialOps.sampleShapesWithFraction(l, lShapeCol,
+      val (l, rt) = (ds.toDF, right.toDF)
+      SpatialOps.requireDisjoint("shapeKnnJoin", l, rt)
+      val (lShapes, lFrac) = SpatialOps.sampleShapesWithFraction(l, lShapeCol,
         sampleCap, seed = 7)
       val (rShapes, rFrac) = SpatialOps.sampleShapesWithFraction(rt,
         rShapeCol, math.max(sampleCap, 4 * k), seed = 42)
+      val rB = rShapes.map(SpatialOps.sampleBox)
       // Radii are exact in both branches: a right sample at or under
       // the cap IS the whole right side (the rFrac >= 1 driver loop),
       // and sub-cap samples take the exact distributed k-th-distance
@@ -545,8 +384,16 @@ object SpatialOps {
           val q = math.max(quant(radii), quant(radii.filter(_ > 0)))
           math.max(q * safety, 1e-9)
         }
-      val cand = shapeDistanceJoin(rt, lShapeCol, rShapeCol, theta)
-        .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
+      // shape-distance PBSM candidates within d, the cell side sized
+      // from left boxes `lB` and the right sample drawn above
+      def candidates(left: DataFrame, lB: Array[Array[Double]], lF: Double,
+                     d: Double): DataFrame =
+        SpatialOps.pbsmJoin(left, SpatialOps.shapeBox(col(lShapeCol)),
+          rt, SpatialOps.shapeBox(col(rShapeCol)),
+          d, SpatialOps.pbsmSide(lB, lF, rB, rFrac, d),
+          stDistance(col(lShapeCol), col(rShapeCol)) <= d)
+          .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
+      val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lFrac, theta)
       val (satisfied, satisfiedLeftIds) =
         SpatialOps.topKWithCount(cand, leftId, k, tieBreak,
           materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
@@ -559,10 +406,9 @@ object SpatialOps {
       // 10x trend measured 38 GB of shuffle without this pass). The 2x
       // grid pass rescues every left whose radius estimate was off by
       // less than 2x; only the genuinely adversarial remainder pays the
-      // exact cross-window.
-      val cand2 = new DatasetSpatialOps(starved)
-        .shapeDistanceJoin(rt, lShapeCol, rShapeCol, theta * 2)
-        .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
+      // exact cross-window. Only the starved left is sampled again.
+      val (sB, sFrac) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
+      val cand2 = candidates(starved, sB, sFrac, theta * 2)
       val (satisfied2, satisfiedIds2) =
         SpatialOps.topKWithCount(cand2, leftId, k, tieBreak,
           materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
@@ -587,11 +433,8 @@ object SpatialOps {
                      r: Double, broadcastRight: Boolean = false): DataFrame = {
       require(lKeys.length == rKeys.length && lKeys.nonEmpty)
       require(r > 0, "distance join radius must be positive")
-      val l = ds.toDF
-      val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty,
-        s"distanceJoin requires disjoint column names, shared: " +
-          l.columns.intersect(rt.columns).mkString(","))
+      val (l, rt) = (ds.toDF, right.toDF)
+      SpatialOps.requireDisjoint("distanceJoin", l, rt)
       val dims = lKeys.length
 
       // All internal columns get side-distinct names so every reference
@@ -670,11 +513,8 @@ object SpatialOps {
       require(lKeys.length == rKeys.length && lKeys.nonEmpty)
       require(r > 0, "distance join radius must be positive")
       require(dtMillis > 0, "time window must be positive")
-      val l = ds.toDF
-      val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty,
-        s"spatioTemporalJoin requires disjoint column names, shared: " +
-          l.columns.intersect(rt.columns).mkString(","))
+      val (l, rt) = (ds.toDF, right.toDF)
+      SpatialOps.requireDisjoint("spatioTemporalJoin", l, rt)
       val dims = lKeys.length
       // QUADRANT replication (guide §2.3 shuffle fewer bytes): cells of
       // side 2r (2·dt on the time axis) and per-axis DIRECTED neighbor
@@ -1784,9 +1624,7 @@ object SpatialOps {
       l: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       theta: Double, cellThetas: Map[Seq[Long], Double],
       maxRefine: Int = 64): DataFrame = {
-    require(l.columns.intersect(rt.columns).isEmpty,
-      s"knnJoin requires disjoint column names, shared: " +
-        l.columns.intersect(rt.columns).mkString(","))
+    requireDisjoint("knnJoin", l, rt)
     val dims = lKeys.length
     val spark = l.sparkSession
 
@@ -2398,6 +2236,73 @@ object SpatialOps {
       .otherwise(array_max(filter(coords, (_, i) => i % 2 === parity)))
   }
 
+  /** A shape column's 2-D bbox as [lx, ly, hx, hy] columns. */
+  private[operators] def shapeBox(shape: Column): Seq[Column] =
+    Seq(shapeBBoxLo(shape, 0), shapeBBoxLo(shape, 1),
+      shapeBBoxHi(shape, 0), shapeBBoxHi(shape, 1))
+
+  /** Joins take no shared column names: every internal and output
+    * column is referenced unqualified. */
+  private[operators] def requireDisjoint(verb: String, l: DataFrame,
+                                         r: DataFrame): Unit = {
+    val shared = l.columns.intersect(r.columns)
+    require(shared.isEmpty,
+      s"$verb requires disjoint column names, shared: " + shared.mkString(","))
+  }
+
+  /** The PBSM core under every shape join (the polygon, intersects and
+    * shape-distance joins and the shape kNN candidate phase). Each row
+    * explodes to the grid cells of side `side` its bbox covers, the
+    * LEFT bbox dilated by `d` per axis (a pair within distance d has
+    * per-axis bbox deficits <= d, so the dilated-left and raw right
+    * bboxes overlap); the cell equi-join proposes pairs. Overlapping
+    * bboxes meet in EVERY shared cell, so duplicates are suppressed
+    * with the reference-point method instead of a distinct shuffle: a
+    * pair is kept only in the cell holding its bbox intersection's min
+    * corner, which lies inside both exploded bboxes, so the pair
+    * provably meets there and every other shared cell drops it with a
+    * codegen'd compare. `exact` then decides. Boxes are [lx, ly, hx, hy]
+    * columns; a point side passes degenerate boxes (one cell each).
+    * Exact for any side: a superset grid, the reference point, the
+    * exact predicate. Output: the left ++ right columns. */
+  private[operators] def pbsmJoin(l: DataFrame, lBox: Seq[Column],
+                                  r: DataFrame, rBox: Seq[Column], d: Double,
+                                  side: Double, exact: Column): DataFrame = {
+    val P = "__graft_pbsm_"
+    def cell(c: Column): Column = floor(c / side).cast("long")
+    def celled(df: DataFrame, box: Seq[Column], s: String): DataFrame = {
+      val names = Seq("lx", "ly", "hx", "hy").map(a => s"$P$s$a")
+      df.withColumns(names.zip(box).toMap)
+        .withColumn(s"${P}cx", explode(sequence(cell(col(names(0))), cell(col(names(2))))))
+        .withColumn(s"${P}cy", explode(sequence(cell(col(names(1))), cell(col(names(3))))))
+    }
+    val Seq(lx, ly, hx, hy) = lBox
+    celled(l, Seq(lx - d, ly - d, hx + d, hy + d), "l")
+      .join(celled(r, rBox, "r"), Seq(s"${P}cx", s"${P}cy"))
+      .filter(cell(greatest(col(s"${P}llx"), col(s"${P}rlx"))) === col(s"${P}cx") &&
+        cell(greatest(col(s"${P}lly"), col(s"${P}rly"))) === col(s"${P}cy"))
+      .filter(exact)
+      .select((l.columns ++ r.columns).map(col): _*)
+  }
+
+  /** PBSM cell side from bounded samples of both sides' bboxes and the
+    * fractions of their tables they represent: the cost model's pick
+    * among halvings of max(d, either side's median bbox span). */
+  private[operators] def pbsmSide(lB: Array[Array[Double]], lFrac: Double,
+                                  rB: Array[Array[Double]], rFrac: Double,
+                                  d: Double): Double = {
+    val s0 = math.max(1e-9, math.max(d, math.max(medianBoxSpan(lB), medianBoxSpan(rB))))
+    chooseShapeCellSide(lB, lB.length / math.max(lFrac, 1e-12),
+      rB, rB.length / math.max(rFrac, 1e-12), d, s0)
+  }
+
+  /** [[sampleShapesWithFraction]] as bboxes for [[pbsmSide]]. */
+  private[operators] def sampleBoxes(df: DataFrame, c: String, cap: Int,
+                                     seed: Long): (Array[Array[Double]], Double) = {
+    val (shapes, frac) = sampleShapesWithFraction(df, c, cap, seed)
+    (shapes.map(sampleBox), frac)
+  }
+
   /** Bounded driver sample of a ShapeCodec struct column, decoded to
     * ADT shapes, plus the fraction of the table it represents. Small
     * tables (one limit-probe) are taken whole; larger ones take a
@@ -2422,58 +2327,11 @@ object SpatialOps {
         r.getSeq[Double](1).toArray))
     val head = projected.limit(cap + 1).collect()
     if (head.length <= cap) return (decode(head), 1.0)
-    val total = projected.count()
-    // Bernoulli-thin before the uniform cap (see uniformCap): bounds
-    // the TakeOrdered driver merge at ~1.2*cap rows at any partition
-    // count; the count is already paid here for the fraction.
-    val frac = math.min(1.0, cap.toDouble * 1.2 / total)
-    val thinned = projected.sample(withReplacement = false, frac, seed)
-      .orderBy(rand(seed)).limit(cap).collect()
-    val rows =
-      if (thinned.length >= math.min(cap.toLong, total)) thinned
-      else projected.orderBy(rand(seed)).limit(cap).collect()
+    // the uniform cap's count is the fraction's denominator too
+    val (rows, total) = uniformCap(projected, cap, seed)
     (decode(rows), rows.length.toDouble / total)
   }
 
-  /** Median of a bounded sample of one double-valued expression — the
-    * [[samplePoints]] limit-probe/uniform-cap discipline applied to
-    * the shape-join grid sizers. A bare `limit(cap)` takes the FIRST
-    * rows, and shape tables are routinely size-sorted on disk (tiles
-    * written in zoom order), so a first-rows median misestimates the
-    * span and the per-row cell fan-out silently blows up at scale —
-    * and a `sample(0.1).limit(cap)` is no better (the limit still
-    * takes the sampled stream's HEAD, i.e. the first partitions), so
-    * this takes the uniform random cap via orderBy(rand).limit. Small
-    * tables (<= cap, detected by one limit(cap+1) probe) are taken
-    * whole — exact median, no extra job. Null spans drop out the same
-    * way null shapes drop out of the joins. */
-  private[graft] def medianSampledSpan(df: DataFrame, span: Column,
-                                       cap: Int): Double = {
-    val projected = df.select(span.cast("double").as("__graft_span"))
-      .na.drop("any")
-    val head = projected.limit(cap + 1).collect()
-    val rows =
-      if (head.length <= cap) head
-      else uniformCap(projected, cap)
-    if (rows.isEmpty) 0.0
-    else {
-      val spans = rows.map(_.getDouble(0)).sorted
-      spans(spans.length / 2)
-    }
-  }
-
-  /** Bounded driver sample of coordinate columns. Small tables (one
-    * limit-probe) are taken whole; larger ones take a UNIFORM random
-    * cap via orderBy(rand).limit — TakeOrdered per partition, one
-    * scan, no shuffle (the [[sampleShapesWithFraction]] discipline).
-    * Uniformity is load-bearing for the PIVOT join above all: a
-    * `sample(0.1).limit(cap)` reads the FIRST partitions only, so on
-    * partition-clustered data (any ingest-ordered table) every maximin
-    * pivot lands inside the first cluster, the rest of the space
-    * drains into ONE Voronoi cell, and the cell equi-join degenerates
-    * to that cell's near-cross-product (measured on the 10x x-shifted
-    * trend: one cell held 72% of the lefts and admitted every right —
-    * 16.1e9 of 17.1e9 enumerated pairs, exponent 1.09/decade). */
   /** Sample-driven PBSM cell side for the shape joins (guide §1.2
     * first-principles + §2.3 shuffle-vs-compute): evaluate the
     * replica+pair cost of halvings of the heuristic side `s0` on the
@@ -2554,11 +2412,23 @@ object SpatialOps {
       spans(spans.length / 2)
     }
 
+  /** Bounded driver sample of coordinate columns. Small tables (one
+    * limit-probe) are taken whole; larger ones take a UNIFORM random
+    * cap via orderBy(rand).limit — TakeOrdered per partition, one
+    * scan, no shuffle (the [[sampleShapesWithFraction]] discipline).
+    * Uniformity is load-bearing for the PIVOT join above all: a
+    * `sample(0.1).limit(cap)` reads the FIRST partitions only, so on
+    * partition-clustered data (any ingest-ordered table) every maximin
+    * pivot lands inside the first cluster, the rest of the space
+    * drains into ONE Voronoi cell, and the cell equi-join degenerates
+    * to that cell's near-cross-product (measured on the 10x x-shifted
+    * trend: one cell held 72% of the lefts and admitted every right —
+    * 16.1e9 of 17.1e9 enumerated pairs, exponent 1.09/decade). */
   private[graft] def samplePoints(df: DataFrame, keys: Seq[String], cap: Int): Array[Array[Double]] = {
     val projected = df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any")
     val head = projected.limit(cap + 1).collect()
     if (head.length <= cap) toPts(head, keys.length)
-    else toPts(uniformCap(projected, cap), keys.length)
+    else toPts(uniformCap(projected, cap)._1, keys.length)
   }
 
   /** [[samplePoints]] when the caller already knows the projection's
@@ -2588,15 +2458,16 @@ object SpatialOps {
     * table has (the samplePointsWithFraction discipline, ADVICE r15).
     * The thin keeps uniformity (Bernoulli is per-row, partition-blind);
     * on the rare under-fill the un-thinned uniform cap is the fallback,
-    * never a first-partitions head. */
+    * never a first-partitions head. Returns the rows and the
+    * projection's total row count. */
   private def uniformCap(projected: DataFrame, cap: Int,
-                         seed: Long = 42): Array[org.apache.spark.sql.Row] = {
+                         seed: Long = 42): (Array[org.apache.spark.sql.Row], Long) = {
     val total = projected.count()
     val frac = math.min(1.0, cap.toDouble * 1.2 / total)
     val thinned = projected.sample(withReplacement = false, frac, seed)
       .orderBy(rand(seed)).limit(cap).collect()
-    if (thinned.length >= math.min(cap.toLong, total))  thinned
-    else projected.orderBy(rand(seed)).limit(cap).collect()
+    if (thinned.length >= math.min(cap.toLong, total)) (thinned, total)
+    else (projected.orderBy(rand(seed)).limit(cap).collect(), total)
   }
 
   /** Deterministic bounded sample plus the fraction of the table it

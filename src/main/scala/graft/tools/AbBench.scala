@@ -18,14 +18,6 @@ import graft.operators.SpatialOps._
   */
 object AbBench {
 
-  private def skewedPts(s: SparkSession, d: String, p: String): DataFrame = {
-    val dense = col("c_custkey") % 5 < 4
-    customerPts(s, d).select(
-      col("c_custkey").as(s"${p}id"),
-      when(dense, col("cx") * 0.01).otherwise(col("cx") * 10.0).as(s"${p}x"),
-      when(dense, col("cy") * 0.01).otherwise(col("cy") * 10.0).as(s"${p}y"))
-  }
-
   private def entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "b5_knn_join_grid" -> ((s: SparkSession, d: String) =>
       customerPts(s, d).knnJoin(supplierPts(s, d), Seq("cx", "cy"), Seq("sx", "sy"),

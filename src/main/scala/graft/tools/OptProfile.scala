@@ -148,12 +148,4 @@ object OptProfile {
       col("cy").as(s"${p}y"),
       (col("c_custkey") % 773).cast("double").as(s"${p}z"),
       (col("c_custkey") % 337).cast("double").as(s"${p}w"))
-
-  private def skewedPts(s: SparkSession, d: String, p: String): DataFrame = {
-    val dense = col("c_custkey") % 5 < 4
-    customerPts(s, d).select(
-      col("c_custkey").as(s"${p}id"),
-      when(dense, col("cx") * 0.01).otherwise(col("cx") * 10.0).as(s"${p}x"),
-      when(dense, col("cy") * 0.01).otherwise(col("cy") * 10.0).as(s"${p}y"))
-  }
 }

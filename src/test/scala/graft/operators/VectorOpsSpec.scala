@@ -1469,4 +1469,14 @@ class VectorOpsSpec extends SparkSpec {
     assert(plan.contains("project_fold"), s"kernel missing from plan:\n$plan")
     assert(!plan.contains("zip_with"), s"HOF scorer still in plan:\n$plan")
   }
+
+  test("projectFold rejects a non-float array at analysis, not runtime") {
+    import spark.implicits._
+    val ints = Seq((1L, Array(1, 2, 3))).toDF("vec_id", "embedding")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ints.select(graft.functions.projectFold(col("embedding"),
+        Array(1.0, 2.0, 3.0))).collect()
+    }
+    assert(e.getMessage.contains("array<int>"), e.getMessage)
+  }
 }
