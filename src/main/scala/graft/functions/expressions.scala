@@ -485,6 +485,30 @@ case class ShapeMinDist(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** `shape_bbox_edge(shape) -> double` — the low or high edge on `axis`
+  * of a struct-encoded shape's bbox, read from the DECODED shape: the
+  * layouts with headers in their coords (tag-5 ring counts, tag-6 part
+  * headers) have no fixed stride to read the edge from. */
+case class ShapeBBoxEdge(child: Expression, axis: Int, hi: Boolean)
+    extends UnaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "shape_bbox_edge"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    ShapeExprChecks.checkOne(prettyName, child)
+
+  override def nullSafeEval(a: Any): Any =
+    graft.spatial.ShapeCodec.bboxEdgeRow(
+      a.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow], axis, hi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.spatial.ShapeCodec.bboxEdgeRow($a, $axis, $hi);")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** `point_in_polygon(x: double, y: double)` against a literal 2-D polygon
   * ring — boundary-inclusive even-odd test. The vertex ring rides along
   * as a referenced object so the per-row kernel call stays inside

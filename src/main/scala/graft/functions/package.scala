@@ -128,6 +128,11 @@ package object functions {
   def stDistance(a: Column, b: Column): Column =
     toCol(ShapeMinDist(toExpr(a), toExpr(b)))
 
+  /** Low or high bbox edge on `axis` of a shape column, from the
+    * decoded shape (see [[graft.functions.ShapeBBoxEdge]]). */
+  private[graft] def stBBoxEdge(shape: Column, axis: Int, hi: Boolean): Column =
+    toCol(ShapeBBoxEdge(toExpr(shape), axis, hi))
+
   /** WKT text of a shape column (see [[graft.spatial.Wkt]] for the
     * mapping and the non-standard CIRCLE extension). */
   def stAsWkt(shape: Column): Column = toCol(ShapeAsWkt(toExpr(shape)))

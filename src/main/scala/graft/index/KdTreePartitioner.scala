@@ -110,8 +110,8 @@ object KdTreePartitioner {
     * `cap` rides a random order, not the stream head: a bare
     * `.limit(cap)` after `sample` drops rows from the LAST partitions
     * only, and KD cuts from a head-biased sample skew every partition
-    * boundary on ingest-ordered tables (the SpatialOps.samplePoints
-    * bias, same fix). */
+    * boundary on ingest-ordered tables (the bias SpatialOps.pointStats
+    * avoids too). */
   private def samplePts(df: DataFrame, keyCols: Seq[String], cap: Int): Array[Array[Double]] = {
     val keyed = df.select(keyCols.map(c => col(c).cast("double")): _*).na.drop()
     val probe = keyed.limit(cap + 1).collect()

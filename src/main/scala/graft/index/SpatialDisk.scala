@@ -1043,7 +1043,7 @@ object SpatialDisk {
       s"left dims ${leftKeys.length} != layout dims $dims")
 
     // ---- driver-side radius bounds from the meta's true cell stats
-    val lPts = graft.operators.SpatialOps.samplePoints(left, leftKeys, sampleCap)
+    val lPts = graft.operators.SpatialOps.pointStats(left, leftKeys, sampleCap).sample
     val total = m.cells.map(_.count).sum
     val cellArr = m.cells.toArray
     // radius per sampled point = min(CERTIFIED walk bound, density

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{types, Column, DataFrame, Dataset}
+import org.apache.spark.sql.{types, Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -228,7 +228,7 @@ object SpatialOps {
       *
       * `shapeCol` is a [[graft.spatial.ShapeCodec]] struct column of
       * 2-D shapes (polygon, MBR, segment, circle — bboxes through
-      * [[SpatialOps.shapeBBoxLo]]). The cell side comes from bounded
+      * [[SpatialOps.shapeBox]]). The cell side comes from bounded
       * samples of both sides ([[SpatialOps.pbsmSide]]), so a polygon
       * explodes to O(1) cells whatever its size — at 100 TB the fan-out
       * per polygon stays bounded and the shuffle carries each point
@@ -240,12 +240,12 @@ object SpatialOps {
       require(pKeys.length == 2, "polygonDistanceJoin is 2-D only")
       val (polys, pts) = (ds.toDF, points.toDF)
       SpatialOps.requireDisjoint("polygonDistanceJoin", polys, pts)
-      val (lB, lFrac) = SpatialOps.sampleBoxes(polys, shapeCol, sampleCap, seed = 7)
-      val (rPts, rFrac, _) = SpatialOps.samplePointsWithFraction(pts, pKeys, sampleCap)
-      val rB = rPts.map(p => Array(p(0), p(1), p(0), p(1)))
+      val (lB, lN) = SpatialOps.sampleBoxes(polys, shapeCol, sampleCap, seed = 7)
+      val rS = SpatialOps.pointStats(pts, pKeys, sampleCap)
+      val rB = rS.sample.map(p => Array(p(0), p(1), p(0), p(1)))
       val (x, y) = (col(pKeys(0)), col(pKeys(1)))
       SpatialOps.pbsmJoin(polys, SpatialOps.shapeBox(col(shapeCol)), pts, Seq(x, y, x, y),
-        r, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, r),
+        r, SpatialOps.pbsmSide(lB, lN, rB, rS.count, r),
         stDistance(col(shapeCol), stPoint(x, y)) <= r)
     }
 
@@ -271,11 +271,11 @@ object SpatialOps {
                             sampleCap: Int = 512): DataFrame = {
       val (l, rt) = (ds.toDF, right.toDF)
       SpatialOps.requireDisjoint("shapeIntersectsJoin", l, rt)
-      val (lB, lFrac) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
-      val (rB, rFrac) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
+      val (lB, lN) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
+      val (rB, rN) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
       SpatialOps.pbsmJoin(l, SpatialOps.shapeBox(col(lShapeCol)),
         rt, SpatialOps.shapeBox(col(rShapeCol)),
-        0.0, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, 0.0),
+        0.0, SpatialOps.pbsmSide(lB, lN, rB, rN, 0.0),
         stIntersects(col(lShapeCol), col(rShapeCol)))
     }
 
@@ -295,11 +295,11 @@ object SpatialOps {
       require(r >= 0, s"distance must be >= 0, got $r")
       val (l, rt) = (ds.toDF, right.toDF)
       SpatialOps.requireDisjoint("shapeDistanceJoin", l, rt)
-      val (lB, lFrac) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
-      val (rB, rFrac) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
+      val (lB, lN) = SpatialOps.sampleBoxes(l, lShapeCol, sampleCap, seed = 7)
+      val (rB, rN) = SpatialOps.sampleBoxes(rt, rShapeCol, sampleCap, seed = 42)
       SpatialOps.pbsmJoin(l, SpatialOps.shapeBox(col(lShapeCol)),
         rt, SpatialOps.shapeBox(col(rShapeCol)),
-        r, SpatialOps.pbsmSide(lB, lFrac, rB, rFrac, r),
+        r, SpatialOps.pbsmSide(lB, lN, rB, rN, r),
         stDistance(col(lShapeCol), col(rShapeCol)) <= r)
     }
 
@@ -310,10 +310,11 @@ object SpatialOps {
       * the point-keyed [[knnJoin]] and single-query `shapeKnn` covered
       * the rest). The grid join's bound-then-refine discipline over
       * shapes:
-      *  1. bounded driver samples of BOTH shape columns decode through
-      *     the codec; each sampled left's k-th smallest exact shape
-      *     distance against the right sample gives the radius pool, and
-      *     theta = quantile * safety (an over-estimate only widens the
+      *  1. one stats pass per side ([[SpatialOps.shapeStats]]): a
+      *     bounded sample and exact count of each, and — carried by the
+      *     right pass — each sampled left's exact k-th smallest shape
+      *     distance against the FULL right column; theta = quantile *
+      *     safety of those radii (an over-estimate only widens the
       *     candidate grid — exactness never depends on the sample);
       *  2. candidates = the [[shapeDistanceJoin]] PBSM core at
       *     r = theta, its cell side sized from the SAME samples (no
@@ -333,47 +334,31 @@ object SpatialOps {
       require(k >= 1, s"k must be >= 1, got $k")
       val (l, rt) = (ds.toDF, right.toDF)
       SpatialOps.requireDisjoint("shapeKnnJoin", l, rt)
-      val (lShapes, lFrac) = SpatialOps.sampleShapesWithFraction(l, lShapeCol,
-        sampleCap, seed = 7)
-      val (rShapes, rFrac) = SpatialOps.sampleShapesWithFraction(rt,
-        rShapeCol, math.max(sampleCap, 4 * k), seed = 42)
-      val rB = rShapes.map(SpatialOps.sampleBox)
-      // Radii are exact in both branches: a right sample at or under
-      // the cap IS the whole right side (the rFrac >= 1 driver loop),
-      // and sub-cap samples take the exact distributed k-th-distance
-      // pass against the FULL right column instead. EXTENSIVE
-      // shapes make the plain quantile degenerate: a box CONTAINING k
-      // points has k-th distance exactly 0, so when most sampled boxes
-      // are point-saturated the 0.95-quantile collapses to ~0, the grid
+      val lS = SpatialOps.shapeStats(l, lShapeCol, sampleCap, seed = 7)
+      val lShapes = lS.sample
+      // Radii are exact: the right side's stats pass carries the left
+      // sample as probes, so each sampled left's k-th shape distance
+      // comes from the FULL right column in the scan that counts and
+      // samples it. (A former sqrt(rFrac) subset correction
+      // extrapolated with a fixed 2-D exponent; on effectively
+      // lower-dimensional shape data — roads, coastlines — it
+      // misestimated theta the way the d=4 point slice measured, 627 vs
+      // ~280, a 1.3e9-pair candidate set.) EXTENSIVE shapes make the
+      // plain quantile degenerate: a box CONTAINING k points has k-th
+      // distance exactly 0, so when most sampled boxes are
+      // point-saturated the 0.95-quantile collapses to ~0, the grid
       // pass (and its 2x retry — 2*0 = 0) rescues nothing, and every
       // point-starved box detonates in the cross fallback (the 10x
       // trend measured 80 GB of shuffle). The boxes that NEED reach are
       // exactly the positive-radius samples, so theta also consults the
       // quantile of the POSITIVE radii — zero-radius lefts only gain
       // already-matching candidates from the wider grid.
+      val rS = SpatialOps.shapeStats(rt, rShapeCol, sampleCap, seed = 42,
+        probes = lShapes, k = k)
+      val rB = rS.sample.map(SpatialOps.sampleBox)
       val theta: Double =
-        if (lShapes.isEmpty || rShapes.length < k) 0.0
+        if (lShapes.isEmpty || rS.count < k) 0.0
         else {
-          // Exact radii, the point joins' discipline (round-15
-          // addendum 1): when the probe saw the whole right side the
-          // driver loop IS exact; otherwise one bounded distributed
-          // pass computes each sampled left's true k-th shape distance
-          // against the FULL right column. The former sqrt(rFrac)
-          // subset correction extrapolated with a fixed 2-D exponent,
-          // and on effectively-lower-dimensional shape data (roads,
-          // coastlines — anything whose extent is dominated by one
-          // axis) a fixed exponent misestimates theta exactly the way
-          // the d=4 point slice measured (627 vs ~280 — a 1.3e9-pair
-          // candidate set); exact radii remove the estimator-risk
-          // class instead of re-tuning it.
-          val radii: Array[Double] =
-            if (rFrac >= 1.0)
-              lShapes.map { ls =>
-                val dists = rShapes.map(rs => ls.minDist(rs))
-                java.util.Arrays.sort(dists)
-                dists(k - 1)
-              }
-            else SpatialOps.exactKthShapeRadii(rt, rShapeCol, lShapes, k)
           def quant(xs: Array[Double]): Double =
             if (xs.isEmpty) 0.0
             else {
@@ -381,19 +366,19 @@ object SpatialOps {
               xs(math.min(xs.length - 1,
                 math.ceil(quantile * xs.length).toInt - 1).max(0))
             }
-          val q = math.max(quant(radii), quant(radii.filter(_ > 0)))
+          val q = math.max(quant(rS.kth), quant(rS.kth.filter(_ > 0)))
           math.max(q * safety, 1e-9)
         }
       // shape-distance PBSM candidates within d, the cell side sized
-      // from left boxes `lB` and the right sample drawn above
-      def candidates(left: DataFrame, lB: Array[Array[Double]], lF: Double,
+      // from left boxes `lB` of a `lN`-row left and the right sample
+      def candidates(left: DataFrame, lB: Array[Array[Double]], lN: Long,
                      d: Double): DataFrame =
         SpatialOps.pbsmJoin(left, SpatialOps.shapeBox(col(lShapeCol)),
           rt, SpatialOps.shapeBox(col(rShapeCol)),
-          d, SpatialOps.pbsmSide(lB, lF, rB, rFrac, d),
+          d, SpatialOps.pbsmSide(lB, lN, rB, rS.count, d),
           stDistance(col(lShapeCol), col(rShapeCol)) <= d)
           .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
-      val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lFrac, theta)
+      val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lS.count, theta)
       val (satisfied, satisfiedLeftIds) =
         SpatialOps.topKWithCount(cand, leftId, k, tieBreak,
           materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
@@ -406,9 +391,9 @@ object SpatialOps {
       // 10x trend measured 38 GB of shuffle without this pass). The 2x
       // grid pass rescues every left whose radius estimate was off by
       // less than 2x; only the genuinely adversarial remainder pays the
-      // exact cross-window. Only the starved left is sampled again.
-      val (sB, sFrac) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
-      val cand2 = candidates(starved, sB, sFrac, theta * 2)
+      // exact cross-window. Only the starved left takes a stats pass again.
+      val (sB, sN) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
+      val cand2 = candidates(starved, sB, sN, theta * 2)
       val (satisfied2, satisfiedIds2) =
         SpatialOps.topKWithCount(cand2, leftId, k, tieBreak,
           materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
@@ -673,7 +658,7 @@ object SpatialOps {
       val l = ds.toDF
       val rt = right.toDF
 
-      val (lPts, radii, theta, nRight) =
+      val SpatialOps.KnnSample(lPts, radii, theta, nRight, _) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
       val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
       val cellThetas: Map[Seq[Long], Double] =
@@ -732,8 +717,13 @@ object SpatialOps {
       val rt = right.toDF
       require(l.columns.intersect(rt.columns).isEmpty, "need disjoint column names")
 
-      val (lPts, radii, theta, nRight) =
+      val SpatialOps.KnnSample(lPts, radii, theta, nRight, rSample) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
+      // a uniform right sample of `n` rows: a prefix of the stats pass's
+      // own sample when it is large enough, else one more pass
+      def rightSample(n: Int): Array[Array[Double]] =
+        if (n <= sampleCap) rSample.take(n)
+        else SpatialOps.pointStats(rt, rKeys, n).sample
       // Size-adaptive pivot budget (VERDICT r15 #1), DIMENSION-SPLIT:
       //
       //  - d <= 3: p ∝ n — per-cell RIGHT population held at
@@ -757,7 +747,7 @@ object SpatialOps {
       //    sample-estimable (cells ~ sample size).
       //
       // `numPivots` remains the caller's FLOOR; nRight is exact and
-      // free (the radius sampler already paid the sizing count).
+      // free (the right side's stats pass counted it).
       val budget =
         if (lKeys.length <= 3)
           math.ceil(nRight.toDouble /
@@ -798,8 +788,7 @@ object SpatialOps {
         // and spread pivots by EXTENT, leaving dense clusters with
         // √n-sized cells again. Duplicate sampled points cost one
         // empty cell each (-inf band, skipped in-kernel).
-        val pivots0 = SpatialOps.samplePointsKnownTotal(rt, rKeys, pTarget, nRight)
-        require(pivots0.nonEmpty, "pivot kNN join: right side is empty")
+        val pivots0 = rightSample(pTarget)
         val (pivots, hier, fineToGroup) = SpatialOps.buildPivotHierarchy(pivots0)
         // per-cell thetas at the COARSE-group level: the left sample is
         // far too thin for per-fine-cell quantiles at p ∝ n (most of
@@ -845,11 +834,9 @@ object SpatialOps {
         // regardless of how high spark.graft.knn.maxPivots is raised
         // for the two-level route.
         val pFlat = math.min(pTarget, 4096)
-        val rPool = samplePoints(rt, rKeys,
-          math.max(sampleCap, 2 * pFlat)).toIndexedSeq
+        val rPool = rightSample(math.max(sampleCap, 2 * pFlat)).toIndexedSeq
         val pivots0 = SpatialOps.farthestPointPivots[Array[Double]](
           rPool, graft.spatial.Dist.pointToPoint, pFlat)
-        require(pivots0.nonEmpty, "pivot kNN join: right side is empty")
         val pivots: Array[Array[Double]] = SpatialOps.refinePivots[Array[Double]](
           lPts.toIndexedSeq, radii, rPool, graft.spatial.Dist.pointToPoint,
           pivots0, maxPivots = pivots0.length + numPivots, quantile, theta).toArray
@@ -1075,7 +1062,7 @@ object SpatialOps {
         new DatasetSpatialOps(starved).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak)
       else {
         val quantile = graft.GraftConf.knnQuantile(spark)
-        val (lPts, radii, theta, _) = sampleKnnRadii(l, r, lKeys, rKeys, k,
+        val KnnSample(lPts, radii, theta, _, _) = sampleKnnRadii(l, r, lKeys, rKeys, k,
           cap = graft.GraftConf.sampleCap(spark), quantile = quantile,
           safety = graft.GraftConf.knnSafety(spark))
         gridRetryThenNaive(starved, r, lKeys, rKeys, k, leftId, tieBreak,
@@ -1097,37 +1084,34 @@ object SpatialOps {
     * this only affects performance — the exact fallback in `knnJoin`
     * restores any left row whose true kth neighbor lies beyond its
     * cell's theta. */
-  /** Bounded sample of the left side with each sampled point's
-    * density-corrected, safety'd kth-NN radius and the global quantile
-    * theta — the shared front half of [[estimateKnnRadii]] (grid cells)
-    * and `knnJoinPivot` (pivot cells), which group the same per-point
-    * radii by their own cell notion. Sample sizes are capped (like
-    * RangePartitioner's sketch), so driver work is O(cap²) regardless of
-    * table size. Seeing only a fraction f of the right side inflates the
-    * sampled kth-NN distance by ~f^(-1/d) (kth-NN distance scales with
-    * local density^(-1/d)), which once cost a 50x candidate blow-up at a
-    * 10% sample; the density correction multiplies it back down. The
-    * estimates only affect performance — the exact fallback in every
-    * kNN join guarantees correctness whatever comes out. Empty left →
-    * (empty, empty, 1e-9, right total). The 4th element is the RIGHT
-    * side's total row count (exact — either the under-cap probe length
-    * or the fraction-sizing count the sampler already pays), so callers
-    * sizing pivot budgets from data size add no job. */
+  /** The kNN joins' plan-build statistics: the left sample, each sampled
+    * point's exact, safety'd kth-NN radius against the full right side,
+    * the global quantile `theta`, the right side's exact row count and
+    * its uniform sample (ascending priority, so a prefix is a smaller
+    * uniform sample). */
+  private[operators] final case class KnnSample(
+      lPts: Array[Array[Double]], radii: Array[Double], theta: Double,
+      nRight: Long, rPts: Array[Array[Double]])
+
+  /** [[KnnSample]] from TWO stats passes ([[statsPass]]): the left, then
+    * the right carrying the left sample as probes — the shared front
+    * half of [[estimateKnnRadii]] (grid cells) and `knnJoinPivot` (pivot
+    * cells), which group the same per-point radii by their own cell
+    * notion. Sample sizes are capped (like RangePartitioner's sketch),
+    * so driver work is O(cap) rows regardless of table size, and callers
+    * sizing pivot budgets from `nRight` or drawing pivots from `rPts`
+    * add no job. The estimates only affect performance — the exact
+    * fallback in every kNN join guarantees correctness whatever comes
+    * out. Empty left → (empty, empty, 1e-9, ...). */
   private[operators] def sampleKnnRadii(
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
-  ): (Array[Array[Double]], Array[Double], Double, Long) = {
-    val lPts = samplePoints(l, lKeys, cap)
-    val (rPts, rFrac, rTotal) = samplePointsWithFraction(r, rKeys, cap)
-    require(rPts.nonEmpty, "kNN join: right side is empty")
-    // empty left: any radius yields the correct empty result downstream
-    if (lPts.isEmpty) return (Array.empty, Array.empty, 1e-9, rTotal)
-    // Radii are EXACT when the probe saw the whole right side
-    // (rFrac = 1, the common small-table case — zero extra jobs).
-    // Otherwise one bounded distributed pass computes the sampled
-    // lefts' kth-NN distances against the FULL right side (broadcast
-    // <= cap lefts, per-partition k-smallest, treeReduce): one right
-    // scan at O(cap · dims) flops per row. The former density
+  ): KnnSample = {
+    val lPts = pointStats(l, lKeys, cap).sample
+    // Radii are EXACT: the right side's stats pass carries the left
+    // sample as probes, so each sampled left's kth-NN distance comes
+    // from the FULL right side in the same scan that counts and samples
+    // it (one scan at O(cap · dims) flops per row). The former density
     // correction (kth_sampled * rFrac^(1/dims)) is gone because no
     // constant-exponent correction is right: the scaling exponent is
     // the data's EFFECTIVE dimension at the sampled density, which
@@ -1137,10 +1121,13 @@ object SpatialOps {
     // column-count exponent inflated theta 627 vs true ~280 (26x the
     // candidate ball volume, a 1.3e9-pair candidate set, >200 GB of
     // checkpoint spill); a sample-measured exponent collapsed it to
-    // 4.5 (every left starved into the cross fallback). Exact radii
-    // cost one scan and remove the whole estimator-risk class; every
+    // 4.5 (every left starved into the cross fallback). Every
     // downstream estimate (theta, per-cell thetas, admission bands)
     // inherits the accuracy.
+    val right = pointStats(r, rKeys, cap, probes = lPts, k = k)
+    require(right.count > 0, "kNN join: right side is empty")
+    // empty left: any radius yields the correct empty result downstream
+    if (lPts.isEmpty) return KnnSample(Array.empty, Array.empty, 1e-9, right.count, right.sample)
     // Volume-calibrated safety (guide §2.3 shuffle fewer bytes): the
     // safety margin exists to cover unsampled lefts whose kth radius
     // exceeds the sampled quantile, and what it costs downstream is
@@ -1156,145 +1143,29 @@ object SpatialOps {
     val effSafety =
       if (lKeys.length <= 2) safety
       else math.pow(safety, 2.0 / lKeys.length)
-    val radii: Array[Double] =
-      if (rFrac >= 1.0)
-        lPts.map(p => math.max(kthSmallestDist(p, rPts, k) * effSafety, 1e-9))
-      else
-        exactKthRadii(r, rKeys, lPts, k).map(d => math.max(d * effSafety, 1e-9))
-    (lPts, radii, quantileOf(radii.sorted, quantile), rTotal)
+    val radii = right.kth.map(d => math.max(d * effSafety, 1e-9))
+    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), right.count, right.sample)
   }
 
-  /** Exact kth-NN distance of each probe point against the FULL `r`
-    * table: broadcast the (driver-capped) probes, fold each partition
-    * of `r` into a per-probe k-smallest array, treeReduce the merge.
-    * One scan of `r`; accumulator memory is |probes| × k doubles
-    * (bounded by the sample cap); per-row work O(|probes| · dims) in a
-    * tight primitive loop. The RDD fold is deliberate: per-partition
-    * bounded-state aggregation with a custom merge has no efficient
-    * DataFrame form (an explode-to-pairs plan would materialize
-    * |probes| × |r| rows to aggregate them straight back down). */
-  private[operators] def exactKthRadii(r: DataFrame, rKeys: Seq[String],
-                                       probes: Array[Array[Double]],
-                                       k: Int): Array[Double] = {
-    val projected = r.select(rKeys.map(c => col(c).cast("double")): _*).na.drop("any")
-    val dims = rKeys.length
-    val spark = r.sparkSession
-    val bc = spark.sparkContext.broadcast(probes)
-    def mergeInto(best: Array[Double], x: Double): Unit = {
-      val m = best.length
-      if (x < best(m - 1)) {
-        var j = m - 1
-        while (j > 0 && best(j - 1) > x) { best(j) = best(j - 1); j -= 1 }
-        best(j) = x
-      }
+  /** Insert `x` into the ascending k-smallest array `best` (slots not
+    * yet filled hold Double.MaxValue) — O(k) for the joins' small k. */
+  private def mergeInto(best: Array[Double], x: Double): Unit = {
+    val m = best.length
+    if (x < best(m - 1)) {
+      var j = m - 1
+      while (j > 0 && best(j - 1) > x) { best(j) = best(j - 1); j -= 1 }
+      best(j) = x
     }
-    val zero = Array.fill(probes.length)(Array.fill(k)(Double.MaxValue))
-    val folded = projected.rdd.treeAggregate(zero)(
-      seqOp = (best, row) => {
-        val ps = bc.value
-        var pi = 0
-        while (pi < ps.length) {
-          val p = ps(pi)
-          var acc = 0.0
-          var d0 = 0
-          while (d0 < dims) {
-            val diff = row.getDouble(d0) - p(d0); acc += diff * diff; d0 += 1
-          }
-          mergeInto(best(pi), math.sqrt(acc))
-          pi += 1
-        }
-        best
-      },
-      combOp = (a, b) => {
-        var pi = 0
-        while (pi < a.length) {
-          val bb = b(pi)
-          var j = 0
-          while (j < bb.length && bb(j) < Double.MaxValue) {
-            mergeInto(a(pi), bb(j)); j += 1
-          }
-          pi += 1
-        }
-        a
-      })
-    bc.destroy()
-    folded.map(best => best(math.min(k, best.length) - 1))
   }
 
-  /** [[exactKthRadii]] for ShapeCodec struct columns: exact kth-NN
-    * SHAPE distance of each probe shape against the full `r` table —
-    * broadcast the decoded probes, fold each partition into per-probe
-    * k-smallest arrays (each right row decodes once, then one
-    * `minDist` per probe), treeReduce the merge. Same bounds: one scan
-    * of `r`, |probes| × k accumulator doubles, O(|probes|) shape
-    * kernels per row. */
-  private[operators] def exactKthShapeRadii(r: DataFrame, shapeCol: String,
-                                            probes: Array[graft.spatial.Shape],
-                                            k: Int): Array[Double] = {
-    val projected = r
-      .select(col(s"$shapeCol.tag").as("__graft_tag"),
-        col(s"$shapeCol.coords").as("__graft_coords"))
-      .na.drop("any")
-    val spark = r.sparkSession
-    val bc = spark.sparkContext.broadcast(probes)
-    def mergeInto(best: Array[Double], x: Double): Unit = {
-      val m = best.length
-      if (x < best(m - 1)) {
-        var j = m - 1
-        while (j > 0 && best(j - 1) > x) { best(j) = best(j - 1); j -= 1 }
-        best(j) = x
-      }
-    }
-    val zero = Array.fill(probes.length)(Array.fill(k)(Double.MaxValue))
-    val folded = projected.rdd.treeAggregate(zero)(
-      seqOp = (best, row) => {
-        val ps = bc.value
-        val rs = graft.spatial.ShapeCodec.decode(row.getInt(0),
-          row.getSeq[Double](1).toArray)
-        var pi = 0
-        while (pi < ps.length) {
-          mergeInto(best(pi), ps(pi).minDist(rs))
-          pi += 1
-        }
-        best
-      },
-      combOp = (a, b) => {
-        var pi = 0
-        while (pi < a.length) {
-          val bb = b(pi)
-          var j = 0
-          while (j < bb.length && bb(j) < Double.MaxValue) {
-            mergeInto(a(pi), bb(j)); j += 1
-          }
-          pi += 1
-        }
-        a
-      })
-    bc.destroy()
-    folded.map(best => best(math.min(k, best.length) - 1))
-  }
-
-  /** k-th smallest distance from `p` to `pts` via a bounded insertion
-    * pass — O(n·k) for the joins' single-digit k, replacing the full
-    * O(n log n) sort-then-index that made the radius sampler the
-    * dominant driver-side cost of every kNN join build (measured ~1 s
-    * of a 4.4 s pivot join at the default 2000-point caps). Same value
-    * as `distances.sorted.apply(min(k, n) - 1)` exactly. */
+  /** k-th smallest distance from `p` to `pts` via the bounded insertion
+    * kernel — O(n·k), the same value as
+    * `distances.sorted.apply(min(k, n) - 1)` exactly. */
   private def kthSmallestDist(p: Array[Double],
                               pts: Array[Array[Double]], k: Int): Double = {
-    val m = math.min(k, pts.length)
-    val best = Array.fill(m)(Double.MaxValue)
-    var i = 0
-    while (i < pts.length) {
-      val x = graft.spatial.Dist.pointToPoint(p, pts(i))
-      if (x < best(m - 1)) {
-        var j = m - 1
-        while (j > 0 && best(j - 1) > x) { best(j) = best(j - 1); j -= 1 }
-        best(j) = x
-      }
-      i += 1
-    }
-    best(m - 1)
+    val best = Array.fill(math.min(k, pts.length))(Double.MaxValue)
+    pts.foreach(q => mergeInto(best, graft.spatial.Dist.pointToPoint(p, q)))
+    best.last
   }
 
   private def quantileOf(sorted: Array[Double], quantile: Double): Double =
@@ -1336,8 +1207,8 @@ object SpatialOps {
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, quantile: Double, safety: Double): String = {
     if (lKeys.length > 3) return "pivot"
-    val lPts = samplePoints(l, lKeys, 500)
-    val rPts = samplePoints(r, rKeys, 500)
+    val lPts = pointStats(l, lKeys, 500).sample
+    val rPts = pointStats(r, rKeys, 500).sample
     if (lPts.isEmpty || rPts.isEmpty) return "grid"
     val radii = lPts.map(p => math.max(kthSmallestDist(p, rPts, k) * safety, 1e-9))
     val theta = quantileOf(radii.sorted, quantile)
@@ -1569,7 +1440,8 @@ object SpatialOps {
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
   ): (Double, Map[Seq[Long], Double]) = {
-    val (lPts, radii, theta, _) = sampleKnnRadii(l, r, lKeys, rKeys, k, cap, quantile, safety)
+    val KnnSample(lPts, radii, theta, _, _) =
+      sampleKnnRadii(l, r, lKeys, rKeys, k, cap, quantile, safety)
     if (lPts.isEmpty) return (theta, Map.empty)
     val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
     (theta, perCellQuantile(lPts.map(gridCell), radii, quantile, theta))
@@ -2203,43 +2075,48 @@ object SpatialOps {
     // spread the probe produced, minus the build-time planning.
     // (localCheckpoint keeps the origin plan's stats, so checkpointed
     // fallback inputs still read small — pinned in SpatialOpsSpec.)
-    val maxSplit =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        sess.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-      catch { case _: Throwable => 128L * 1024 * 1024 }
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= BigInt(target) * maxSplit) df
+    // A leaf at or above `spark.sql.defaultSizeInBytes` has NO stats (a
+    // stats-free RDD-backed frame reads as the default, Long.MaxValue):
+    // unknown is not big, so it spreads too rather than pass through to
+    // a one-core cross product.
+    import org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    def bytes(key: String, default: String): Long =
+      try byteStringAsBytes(sess.conf.get(key, default))
+      catch { case _: Throwable => byteStringAsBytes(default) }
+    val maxSplit = bytes("spark.sql.files.maxPartitionBytes", "128m")
+    val unknown = bytes("spark.sql.defaultSizeInBytes", s"${Long.MaxValue}b")
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.stats.sizeInBytes >= BigInt(target) * maxSplit &&
+        !plan.collectLeaves().exists(_.stats.sizeInBytes >= unknown)) df
     else df.repartition(target)
   }
 
-  private def toPts(rows: Array[org.apache.spark.sql.Row], dims: Int): Array[Array[Double]] =
-    rows.map(row => Array.tabulate(dims)(row.getDouble))
-
   /** Per-axis bbox edge of a 2-D [[graft.spatial.ShapeCodec]] struct
-    * column (parity 0 = x, 1 = y): circles decode as center ± radius;
-    * every other tag's 2-D coords layout puts the axis' values at the
-    * parity-strided positions (point/polygon/segment interleave (x, y);
-    * a 2-D box's [lx, ly, hx, hy] strides the same way), so the axis
-    * min/max over the strided slice IS the bbox edge. Shared by the
-    * shape joins. */
-  private[graft] def shapeBBoxLo(shape: Column, parity: Int): Column = {
+    * column (parity 0 = x, 1 = y). Circles decode as center ± radius.
+    * Points, boxes, polygons and segments put the axis' values at the
+    * parity-strided positions of `coords` (interleaved (x, y); a 2-D
+    * box's [lx, ly, hx, hy] strides the same way), so the axis min/max
+    * over the strided slice IS the edge. Tag-5 ring counts and tag-6
+    * part headers shift that stride — a collection holding the point
+    * (5, 100) encodes as [1, 0, 2, 5, 100] — so those two tags read the
+    * edge from the decoded shape's mbr. Shared by the shape joins. */
+  private def shapeBBoxEdge(shape: Column, parity: Int, hi: Boolean): Column = {
     val coords = shape.getField("coords")
-    when(shape.getField("tag") === lit(graft.spatial.ShapeCodec.TagCircle),
-      element_at(coords, parity + 1) - element_at(coords, 3))
-      .otherwise(array_min(filter(coords, (_, i) => i % 2 === parity)))
-  }
-
-  private[graft] def shapeBBoxHi(shape: Column, parity: Int): Column = {
-    val coords = shape.getField("coords")
-    when(shape.getField("tag") === lit(graft.spatial.ShapeCodec.TagCircle),
-      element_at(coords, parity + 1) + element_at(coords, 3))
-      .otherwise(array_max(filter(coords, (_, i) => i % 2 === parity)))
+    val tag = shape.getField("tag")
+    val strided = filter(coords, (_, i) => i % 2 === parity)
+    val radius = element_at(coords, 3)
+    when(tag === lit(graft.spatial.ShapeCodec.TagCircle),
+      if (hi) element_at(coords, parity + 1) + radius
+      else element_at(coords, parity + 1) - radius)
+      .when(tag >= lit(graft.spatial.ShapeCodec.TagPolygonHoles),
+        stBBoxEdge(shape, parity, hi))
+      .otherwise(if (hi) array_max(strided) else array_min(strided))
   }
 
   /** A shape column's 2-D bbox as [lx, ly, hx, hy] columns. */
   private[operators] def shapeBox(shape: Column): Seq[Column] =
-    Seq(shapeBBoxLo(shape, 0), shapeBBoxLo(shape, 1),
-      shapeBBoxHi(shape, 0), shapeBBoxHi(shape, 1))
+    Seq(shapeBBoxEdge(shape, 0, hi = false), shapeBBoxEdge(shape, 1, hi = false),
+      shapeBBoxEdge(shape, 0, hi = true), shapeBBoxEdge(shape, 1, hi = true))
 
   /** Joins take no shared column names: every internal and output
     * column is referenced unqualified. */
@@ -2286,50 +2163,21 @@ object SpatialOps {
   }
 
   /** PBSM cell side from bounded samples of both sides' bboxes and the
-    * fractions of their tables they represent: the cost model's pick
-    * among halvings of max(d, either side's median bbox span). */
-  private[operators] def pbsmSide(lB: Array[Array[Double]], lFrac: Double,
-                                  rB: Array[Array[Double]], rFrac: Double,
+    * exact row counts of their tables: the cost model's pick among
+    * halvings of max(d, either side's median bbox span). */
+  private[operators] def pbsmSide(lB: Array[Array[Double]], lN: Long,
+                                  rB: Array[Array[Double]], rN: Long,
                                   d: Double): Double = {
     val s0 = math.max(1e-9, math.max(d, math.max(medianBoxSpan(lB), medianBoxSpan(rB))))
-    chooseShapeCellSide(lB, lB.length / math.max(lFrac, 1e-12),
-      rB, rB.length / math.max(rFrac, 1e-12), d, s0)
+    chooseShapeCellSide(lB, lN.toDouble, rB, rN.toDouble, d, s0)
   }
 
-  /** [[sampleShapesWithFraction]] as bboxes for [[pbsmSide]]. */
+  /** One [[shapeStats]] pass as sampled bboxes for [[pbsmSide]], plus the
+    * table's exact row count. */
   private[operators] def sampleBoxes(df: DataFrame, c: String, cap: Int,
-                                     seed: Long): (Array[Array[Double]], Double) = {
-    val (shapes, frac) = sampleShapesWithFraction(df, c, cap, seed)
-    (shapes.map(sampleBox), frac)
-  }
-
-  /** Bounded driver sample of a ShapeCodec struct column, decoded to
-    * ADT shapes, plus the fraction of the table it represents. Small
-    * tables (one limit-probe) are taken whole; larger ones take a
-    * UNIFORM random cap via orderBy(rand).limit — TakeOrdered per
-    * partition, one scan, no shuffle. The uniformity matters more here
-    * than in [[samplePoints]]: a `sample(0.1).limit(cap)` reads the
-    * FIRST partitions only, and when the theta estimator's left and
-    * right samples land in DIFFERENT regions of a partition-clustered
-    * table, every sampled k-th distance inflates to the cluster
-    * offset, theta explodes past the data's span, the grid collapses
-    * to one cell, and the "pruned" join is a cross product (the 10x
-    * trend measured exactly this: 80 GB of shuffle from a replica-
-    * biased sample). */
-  private[graft] def sampleShapesWithFraction(df: DataFrame, c: String,
-      cap: Int, seed: Long): (Array[graft.spatial.Shape], Double) = {
-    val projected = df
-      .select(col(s"$c.tag").as("__graft_tag"),
-        col(s"$c.coords").as("__graft_coords"))
-      .na.drop("any")
-    def decode(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => graft.spatial.ShapeCodec.decode(r.getInt(0),
-        r.getSeq[Double](1).toArray))
-    val head = projected.limit(cap + 1).collect()
-    if (head.length <= cap) return (decode(head), 1.0)
-    // the uniform cap's count is the fraction's denominator too
-    val (rows, total) = uniformCap(projected, cap, seed)
-    (decode(rows), rows.length.toDouble / total)
+                                     seed: Long): (Array[Array[Double]], Long) = {
+    val st = shapeStats(df, c, cap, seed)
+    (st.sample.map(sampleBox), st.count)
   }
 
   /** Sample-driven PBSM cell side for the shape joins (guide §1.2
@@ -2412,86 +2260,99 @@ object SpatialOps {
       spans(spans.length / 2)
     }
 
-  /** Bounded driver sample of coordinate columns. Small tables (one
-    * limit-probe) are taken whole; larger ones take a UNIFORM random
-    * cap via orderBy(rand).limit — TakeOrdered per partition, one
-    * scan, no shuffle (the [[sampleShapesWithFraction]] discipline).
-    * Uniformity is load-bearing for the PIVOT join above all: a
-    * `sample(0.1).limit(cap)` reads the FIRST partitions only, so on
-    * partition-clustered data (any ingest-ordered table) every maximin
-    * pivot lands inside the first cluster, the rest of the space
-    * drains into ONE Voronoi cell, and the cell equi-join degenerates
-    * to that cell's near-cross-product (measured on the 10x x-shifted
-    * trend: one cell held 72% of the lefts and admitted every right —
-    * 16.1e9 of 17.1e9 enumerated pairs, exponent 1.09/decade). */
-  private[graft] def samplePoints(df: DataFrame, keys: Seq[String], cap: Int): Array[Array[Double]] = {
-    val projected = df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any")
-    val head = projected.limit(cap + 1).collect()
-    if (head.length <= cap) toPts(head, keys.length)
-    else toPts(uniformCap(projected, cap)._1, keys.length)
+  /** One input's plan-build statistics, from ONE bounded Spark job. */
+  private[graft] final case class InputStats[T](count: Long, sample: Array[T],
+                                                kth: Array[Double])
+
+  /** The stats pass: every plan-build statistic of one join input from
+    * a single `mapPartitionsWithIndex` + `treeAggregate` job over the
+    * null-dropped projection — many aggregates sharing one scan (LMFAO),
+    * the count-with-sample of Spark's own RangePartitioner sketch:
+    *  - `count`: the exact row count;
+    *  - `sample`: a UNIFORM bounded sample — the `cap` rows with the
+    *    smallest per-row priority, drawn per partition from a
+    *    `SplittableRandom` seeded by (seed, partition index). That is the
+    *    distribution of `orderBy(rand).limit(cap)`, deterministic for a
+    *    fixed seed and partitioning, and partition-blind: a head-biased
+    *    `sample(f).limit(cap)` reads the FIRST partitions only, and on
+    *    partition-clustered data (any ingest-ordered table) that once
+    *    drained 72% of a 10x slice's lefts into one pivot cell and
+    *    inflated shape thetas past the data's span. The sample comes in
+    *    ascending priority order, so any prefix of it is itself the
+    *    uniform sample at that smaller cap;
+    *  - `kth`: per probe, the exact k-th smallest `dist(probe, row)` over
+    *    EVERY row (the farthest row when the input holds fewer than k
+    *    rows; empty when it holds none), folded with the [[mergeInto]]
+    *    insertion kernel.
+    * Per-partition state is bounded — `cap` rows plus |probes| × k
+    * doubles — and so is every merge of the tree, so driver memory never
+    * scales with the partition count. A row is decoded only when it
+    * enters the sample or meets the probes. The RDD fold is deliberate:
+    * bounded-state aggregation with a custom merge has no efficient
+    * DataFrame form. */
+  private def statsPass[T: scala.reflect.ClassTag, P: scala.reflect.ClassTag](
+      projected: DataFrame, cap: Int, seed: Long, decode: Row => T,
+      probes: Array[P], k: Int, dist: (P, T) => Double): InputStats[T] = {
+    type Part = (Long, Array[(Double, T)], Array[Array[Double]])
+    val bc = projected.sparkSession.sparkContext.broadcast(probes)
+    val byPriority = Ordering.by[(Double, T), Double](_._1)
+    def merge(a: Part, b: Part): Part = {
+      a._3.zip(b._3).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
+      (a._1 + b._1, (a._2 ++ b._2).sorted(byPriority).take(cap), a._3)
+    }
+    val partials = projected.rdd.mapPartitionsWithIndex { (idx, rows) =>
+      val ps = bc.value
+      val rng = new java.util.SplittableRandom(seed * 0x9E3779B97F4A7C15L + idx)
+      val heap = new java.util.PriorityQueue[(Double, T)](
+        math.max(cap, 1), byPriority.reverse)
+      val best = Array.fill(ps.length)(Array.fill(k)(Double.MaxValue))
+      var n = 0L
+      rows.foreach { row =>
+        n += 1
+        val pri = rng.nextDouble()
+        val keep = cap > 0 && (heap.size < cap || pri < heap.peek._1)
+        if (keep || ps.nonEmpty) {
+          val t = decode(row)
+          if (keep) {
+            if (heap.size == cap) heap.poll()
+            heap.add((pri, t))
+          }
+          var i = 0
+          while (i < ps.length) { mergeInto(best(i), dist(ps(i), t)); i += 1 }
+        }
+      }
+      val sample = Array.fill(heap.size)(heap.poll()).reverse
+      Iterator.single[Part]((n, sample, best))
+    }
+    val zero: Part = (0L, Array.empty[(Double, T)],
+      Array.fill(probes.length)(Array.fill(k)(Double.MaxValue)))
+    val (n, sample, best) = partials.treeAggregate(zero)(merge, merge)
+    bc.destroy()
+    InputStats(n, sample.map(_._2),
+      if (n == 0) Array.empty else best.map(_(math.min(k.toLong, n).toInt - 1)))
   }
 
-  /** [[samplePoints]] when the caller already knows the projection's
-    * exact row count (the pivot joins: the radius sampler's sizing
-    * count) — skips the limit-probe and the count job, thinning
-    * straight from the known total. Totals at or under the cap take
-    * the table whole. */
-  private[graft] def samplePointsKnownTotal(df: DataFrame, keys: Seq[String],
-                                            cap: Int, total: Long): Array[Array[Double]] = {
-    val projected = df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any")
-    if (total <= cap) return toPts(projected.collect(), keys.length)
-    val frac = math.min(1.0, cap.toDouble * 1.2 / total)
-    val thinned = projected.sample(withReplacement = false, frac, 42)
-      .orderBy(rand(42)).limit(cap).collect()
-    val rows =
-      if (thinned.length >= math.min(cap.toLong, total)) thinned
-      else projected.orderBy(rand(42)).limit(cap).collect()
-    toPts(rows, keys.length)
+  /** [[statsPass]] over coordinate columns cast to double (rows with a
+    * null key dropped); probes are points, distances Euclidean. */
+  private[graft] def pointStats(df: DataFrame, keys: Seq[String], cap: Int,
+                                seed: Long = 42,
+                                probes: Array[Array[Double]] = Array.empty,
+                                k: Int = 1): InputStats[Array[Double]] = {
+    val dims = keys.length
+    statsPass[Array[Double], Array[Double]](
+      df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any"),
+      cap, seed, row => Array.tabulate(dims)(row.getDouble), probes, k,
+      graft.spatial.Dist.pointToPoint)
   }
 
-  /** Uniform random cap of an over-cap projection: Bernoulli-thin
-    * FIRST, then orderBy(rand).limit. The bare `orderBy(rand).limit`
-    * executes as per-partition TakeOrdered with a DRIVER merge of up
-    * to numPartitions*cap rows — linear in partition count at the
-    * 100-TB target — so one count() sizes a thinning fraction that
-    * bounds the merge at ~1.2*cap rows however many partitions the
-    * table has (the samplePointsWithFraction discipline, ADVICE r15).
-    * The thin keeps uniformity (Bernoulli is per-row, partition-blind);
-    * on the rare under-fill the un-thinned uniform cap is the fallback,
-    * never a first-partitions head. Returns the rows and the
-    * projection's total row count. */
-  private def uniformCap(projected: DataFrame, cap: Int,
-                         seed: Long = 42): (Array[org.apache.spark.sql.Row], Long) = {
-    val total = projected.count()
-    val frac = math.min(1.0, cap.toDouble * 1.2 / total)
-    val thinned = projected.sample(withReplacement = false, frac, seed)
-      .orderBy(rand(seed)).limit(cap).collect()
-    if (thinned.length >= math.min(cap.toLong, total)) (thinned, total)
-    else (projected.orderBy(rand(seed)).limit(cap).collect(), total)
-  }
-
-  /** Deterministic bounded sample plus the fraction of the table it
-    * represents and the table's total row count. Tables at or under the
-    * cap are taken whole — detected with a single `limit(cap+1)` probe,
-    * no count job — giving exact local densities (fraction 1) and an
-    * exact total for free; only genuinely larger tables pay one count()
-    * to size the sampling fraction (and that same count IS the total,
-    * so callers sizing pivot budgets from it add no job). */
-  private def samplePointsWithFraction(df: DataFrame, keys: Seq[String],
-                                       cap: Int): (Array[Array[Double]], Double, Long) = {
-    val projected = df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any")
-    val head = projected.limit(cap + 1).collect()
-    if (head.length <= cap) return (toPts(head, keys.length), 1.0, head.length.toLong)
-    val total = projected.count()
-    val frac = math.min(1.0, cap.toDouble * 1.2 / total)
-    // Bernoulli thin FIRST (so the TakeOrdered merge sees ~1.2*cap rows
-    // however many partitions the table has), then a uniform random cap
-    // of the thinned stream — `sample(frac).limit(cap)` alone would
-    // read the FIRST partitions only (see samplePoints: that bias
-    // detonates the pivot join on partition-clustered data)
-    val sampled = projected.sample(withReplacement = false, frac, 42)
-      .orderBy(rand(42)).limit(cap).collect()
-    val rows = if (sampled.nonEmpty) sampled else head.take(cap)
-    (toPts(rows, keys.length), rows.length.toDouble / total, total)
-  }
+  /** [[statsPass]] over a ShapeCodec struct column (null shapes dropped),
+    * sampled rows decoded to ADT shapes; probes are shapes, distances
+    * the exact `minDist`. */
+  private[graft] def shapeStats(df: DataFrame, c: String, cap: Int, seed: Long,
+                                probes: Array[graft.spatial.Shape] = Array.empty,
+                                k: Int = 1): InputStats[graft.spatial.Shape] =
+    statsPass[graft.spatial.Shape, graft.spatial.Shape](
+      df.select(col(s"$c.tag"), col(s"$c.coords")).na.drop("any"), cap, seed,
+      row => graft.spatial.ShapeCodec.decode(row.getInt(0), row.getSeq[Double](1).toArray),
+      probes, k, (p, s) => p.minDist(s))
 }

@@ -1476,7 +1476,7 @@ object VectorOps {
           // `sample(0.1).limit(cap)` reads the FIRST partitions only,
           // and a partition-clustered corpus (written by topic/time)
           // would hand theta, the admit gate, AND the pivot set to one
-          // cluster (the SpatialOps.samplePoints bias, same fix).
+          // cluster (the bias SpatialOps.pointStats avoids too).
           else {
             val total = projected.count()
             val frac = math.min(1.0, cap.toDouble * 1.2 / total)

@@ -130,4 +130,10 @@ object ShapeCodec {
 
   def minDistRows(a: InternalRow, b: InternalRow): Double =
     fromRow(a).minDist(fromRow(b))
+
+  /** Low (`hi` false) or high edge of the decoded shape's bbox on `axis`. */
+  def bboxEdgeRow(r: InternalRow, axis: Int, hi: Boolean): Double = {
+    val m = fromRow(r).mbr
+    (if (hi) m.high else m.low).coord(axis)
+  }
 }

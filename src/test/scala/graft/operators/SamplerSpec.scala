@@ -1,21 +1,27 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.operators.SpatialOps._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** Pins the estimator plumbing every kNN join builds on: uniform
-  * bounded sampling (no partition-order bias), exact distributed
-  * kth-NN radii, and the per-cell-theta sample floor that differs by
-  * cell geometry. Each assertion here is the spec form of a measured
-  * 100-TB-class failure (see BASELINE.md round-15 addenda): biased
-  * pivots once drained 72% of a 10x slice's lefts into one Voronoi
-  * cell, and an extrapolated density correction misestimated theta in
-  * BOTH directions at a 0.0013 sampling fraction.
+/** Pins the estimator plumbing every kNN join builds on: the stats pass
+  * (uniform bounded sampling with no partition-order bias, exact counts,
+  * exact distributed kth-NN radii, one Spark job per input), and the
+  * per-cell-theta sample floor that differs by cell geometry. Each
+  * assertion here is the spec form of a measured 100-TB-class failure
+  * (see BASELINE.md round-15 addenda): biased pivots once drained 72% of
+  * a 10x slice's lefts into one Voronoi cell, and an extrapolated
+  * density correction misestimated theta in BOTH directions at a 0.0013
+  * sampling fraction.
   */
 class SamplerSpec extends SparkSpec {
   import spark.implicits._
 
-  test("samplePoints: uniform cap on partition-clustered data reaches every cluster") {
+  private def dist(a: Array[Double], b: Array[Double]): Double =
+    math.sqrt(math.pow(a(0) - b(0), 2) + math.pow(a(1) - b(1), 2))
+
+  test("stats pass: uniform cap reaches every partition band") {
     // 10 partitions, each a distinct x-band — the ingest-ordered shape.
     // A head-biased cap (sample(f).limit(cap) or bare limit(cap)) sees
     // only the first band(s); the uniform cap must span nearly all.
@@ -24,24 +30,26 @@ class SamplerSpec extends SparkSpec {
         (col("id") % 3000).cast("double").as("off"))
       .select((col("band") * 1000.0 + col("off") / 3.0).as("x"),
         col("off").as("y"))
-    val pts = SpatialOps.samplePoints(df, Seq("x", "y"), cap = 2000)
+    val st = SpatialOps.pointStats(df, Seq("x", "y"), cap = 2000)
+    assert(st.count == 30000)
+    val pts = st.sample
     assert(pts.length == 2000)
     val bands = pts.map(p => math.floor(p(0) / 1000.0).toLong).distinct
     assert(bands.length >= 9,
       s"uniform sample must reach ~all 10 x-bands, saw ${bands.length}")
   }
 
-  test("exactKthRadii equals the brute-force kth distance") {
+  test("stats pass: exact k-th radii equal brute force") {
     val rng = new scala.util.Random(7)
     val rights = Array.fill(500)(Array(rng.nextDouble() * 100, rng.nextDouble() * 100))
     val probes = Array.fill(40)(Array(rng.nextDouble() * 100, rng.nextDouble() * 100))
     val rDf = rights.toSeq.map(a => (a(0), a(1))).toDF("rx", "ry")
-      .repartition(7) // multiple partitions: exercises the treeAggregate merge
-    val got = SpatialOps.exactKthRadii(rDf, Seq("rx", "ry"), probes, k = 3)
-    val want = probes.map { p =>
-      rights.map(r => math.sqrt(math.pow(p(0) - r(0), 2) + math.pow(p(1) - r(1), 2)))
-        .sorted.apply(2)
-    }
+      .repartition(7) // multiple partitions: exercises the tree merge
+    // cap far under |right|: the radii must not come from the sample
+    val got = SpatialOps.pointStats(rDf, Seq("rx", "ry"), cap = 50,
+      probes = probes, k = 3).kth
+    val want = probes.map(p => rights.map(dist(p, _)).sorted.apply(2))
+    assert(got.length == probes.length)
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(math.abs(g - w) < 1e-9, s"probe $i: $g vs $w")
     }
@@ -63,17 +71,17 @@ class SamplerSpec extends SparkSpec {
         ((col("id") * a) % 1009).cast("double").as(px),
         ((col("id") * b) % 997).cast("double").as(py))
     val l = scatter(2000, 53, 17, "lx", "ly")
-    val (_, _, thetaSparse, _) = SpatialOps.sampleKnnRadii(
+    val thetaSparse = SpatialOps.sampleKnnRadii(
       l, scatter(8000, 37, 91, "rx", "ry"),
-      Seq("lx", "ly"), Seq("rx", "ry"), k = 3, cap = 500, quantile = 0.95, safety = 2.0)
-    val (_, _, thetaDense, _) = SpatialOps.sampleKnnRadii(
+      Seq("lx", "ly"), Seq("rx", "ry"), k = 3, cap = 500, quantile = 0.95, safety = 2.0).theta
+    val thetaDense = SpatialOps.sampleKnnRadii(
       l, scatter(64000, 37, 91, "rx", "ry"),
-      Seq("lx", "ly"), Seq("rx", "ry"), k = 3, cap = 500, quantile = 0.95, safety = 2.0)
+      Seq("lx", "ly"), Seq("rx", "ry"), k = 3, cap = 500, quantile = 0.95, safety = 2.0).theta
     assert(thetaDense < thetaSparse,
       s"8x denser right side must shrink theta: sparse $thetaSparse dense $thetaDense")
   }
 
-  test("exactKthShapeRadii equals the brute-force kth shape distance") {
+  test("stats pass: exact k-th shape radii equal brute force") {
     import graft.spatial.{Shape, Point, MBR, ShapeCodec}
     val rng = new scala.util.Random(11)
     def pt() = Point(Array(rng.nextDouble() * 100, rng.nextDouble() * 100))
@@ -89,11 +97,120 @@ class SamplerSpec extends SparkSpec {
     }.toDF("tag", "coords")
       .select(struct(col("tag"), col("coords")).as("shp"))
       .repartition(5)
-    val got = SpatialOps.exactKthShapeRadii(rDf, "shp", probes, k = 3)
+    val st = SpatialOps.shapeStats(rDf, "shp", cap = 30, seed = 42, probes = probes, k = 3)
+    assert(st.count == 300 && st.sample.length == 30)
     val want = probes.map(p => rights.map(p.minDist).sorted.apply(2))
-    got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+    st.kth.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(math.abs(g - w) < 1e-9, s"probe $i: $g vs $w")
     }
+  }
+
+  test("stats pass: count is exact with nulls over several partitions") {
+    val df = spark.range(0, 1000, 1, 6).select(
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id").cast("double")).as("x"),
+      when(col("id") % 11 === 0, lit(null)).otherwise(col("id") * 2.0).as("y"))
+    val nonNull = (0 until 1000).count(i => i % 7 != 0 && i % 11 != 0)
+    for (cap <- Seq(0, 10, 5000)) {
+      val st = SpatialOps.pointStats(df, Seq("x", "y"), cap)
+      assert(st.count == nonNull, s"cap $cap")
+      assert(st.sample.length == math.min(cap, nonNull), s"cap $cap")
+      assert(st.sample.forall(p => !p(0).isNaN && p(1) == 2 * p(0)))
+    }
+  }
+
+  test("stats pass: cap >= n returns every non-null row") {
+    val df = spark.range(0, 300, 1, 4).select(
+      col("id").cast("double").as("x"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(-col("id").cast("double")).as("y"))
+    val st = SpatialOps.pointStats(df, Seq("x", "y"), cap = 300)
+    val want = (0 until 300).filter(_ % 5 != 0).map(i => (i.toDouble, -i.toDouble))
+    assert(st.count == want.length)
+    assert(st.sample.map(p => (p(0), p(1))).sorted.toSeq == want)
+  }
+
+  test("stats pass: the same seed and partitioning give the same sample") {
+    val df = spark.range(0, 5000, 1, 5)
+      .select(col("id").cast("double").as("x"), (col("id") % 97).cast("double").as("y"))
+    def draw(seed: Long) = SpatialOps.pointStats(df, Seq("x", "y"), cap = 200, seed = seed)
+      .sample.map(_.toSeq).toSeq
+    val a = draw(42)
+    assert(a.length == 200)
+    assert(draw(42) == a, "same seed, same partitioning: same rows in the same order")
+    assert(draw(7) != a, "another seed draws another sample")
+    // ascending priority order: a prefix is the smaller cap's sample
+    assert(SpatialOps.pointStats(df, Seq("x", "y"), cap = 50).sample.map(_.toSeq).toSeq ==
+      a.take(50))
+  }
+
+  test("stats pass: an empty input gives count 0 and no rows; the verbs still refuse it") {
+    val empty = Seq.empty[(Long, Double, Double)].toDF("rid", "rx", "ry")
+    val probes = Array(Array(1.0, 2.0))
+    for (df <- Seq(empty, spark.range(0, 10, 1, 3)
+        .select(col("id").as("rid"), lit(null).cast("double").as("rx"), lit(1.0).as("ry")))) {
+      val st = SpatialOps.pointStats(df, Seq("rx", "ry"), cap = 10, probes = probes, k = 2)
+      assert(st.count == 0 && st.sample.isEmpty && st.kth.isEmpty)
+    }
+    val l = Seq((1L, 0.0, 0.0), (2L, 5.0, 5.0)).toDF("lid", "lx", "ly")
+    val grid = intercept[IllegalArgumentException](
+      l.knnJoin(empty, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid")))
+    assert(grid.getMessage.contains("right side is empty"))
+    val pivot = intercept[IllegalArgumentException](
+      l.knnJoinPivot(empty, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid")))
+    assert(pivot.getMessage.contains("right side is empty"))
+  }
+
+  test("stats pass: k >= |right| gives the farthest right as the k-th radius") {
+    val rights = Array(Array(0.0, 0.0), Array(3.0, 4.0), Array(10.0, 0.0))
+    val rDf = rights.toSeq.map(a => (a(0), a(1))).toDF("rx", "ry").repartition(2)
+    val probes = Array(Array(0.0, 0.0), Array(6.0, 8.0))
+    for (k <- Seq(3, 4, 10)) {
+      val got = SpatialOps.pointStats(rDf, Seq("rx", "ry"), cap = 1, probes = probes, k = k).kth
+      val want = probes.map(p => rights.map(dist(p, _)).max)
+      assert(got.toSeq == want.toSeq, s"k = $k")
+    }
+  }
+
+  test("stats pass: one Spark job per input") {
+    import graft.spatial.{MBR, Point, ShapeCodec}
+    val sc = spark.sparkContext
+    // jobs launched by `body` on this thread, tagged by a job group; a
+    // marker job closes the count, since the listener bus delivers job
+    // starts in order
+    def jobsOf(body: => Unit): Int = {
+      val group = s"stats-pass-jobs-${java.util.UUID.randomUUID}"
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+            .foreach(p => seen.add(p.getProperty("spark.job.description")))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "body")
+        body
+        sc.setJobGroup(group, "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(seen.contains("marker"), "listener never saw the marker job")
+        seen.toArray.count(_ == "body")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    // over the cap on both sides, two partitions each
+    def pts(n: Int, x: String, y: String) = spark.range(0, n, 1, 2)
+      .select((col("id") % 101).cast("double").as(x), (col("id") % 89).cast("double").as(y))
+    val (l, r) = (pts(3000, "lx", "ly"), pts(4000, "rx", "ry"))
+    assert(jobsOf(SpatialOps.sampleKnnRadii(l, r, Seq("lx", "ly"), Seq("rx", "ry"),
+      k = 3, cap = 500, quantile = 0.95, safety = 2.0)) == 2)
+    val boxes = spark.range(0, 2000, 1, 2).as[Long].map { i =>
+      val (tag, c) = ShapeCodec.encode(MBR(Point(i % 50 * 1.0, i % 31 * 1.0),
+        Point(i % 50 + 2.0, i % 31 + 3.0)))
+      (tag, c.toSeq)
+    }.toDF("tag", "coords").select(struct(col("tag"), col("coords")).as("shp"))
+    assert(jobsOf(SpatialOps.sampleBoxes(boxes, "shp", cap = 512, seed = 7)) == 1)
   }
 
   test("perCellQuantile: minSamples gates sparse-sampled cells, default keeps all") {

@@ -458,8 +458,8 @@ class SpatialOpsSpec extends SparkSpec {
     // the implementation's own theta estimate confirms the shape: the
     // phase-1 radius misses every kth neighbor, the doubled one covers
     // all of them — so the retry provably empties the cross plan's left
-    val (_, _, theta, _) = SpatialOps.sampleKnnRadii(l, r, Seq("lx", "ly"), Seq("rx", "ry"),
-      k = 1, cap = 1000, quantile = 0.95, safety = 0.7)
+    val theta = SpatialOps.sampleKnnRadii(l, r, Seq("lx", "ly"), Seq("rx", "ry"),
+      k = 1, cap = 1000, quantile = 0.95, safety = 0.7).theta
     assert(theta < 3.0, s"phase-1 theta must starve every left, got $theta")
     assert(2 * theta >= 3.0, s"retry theta must cover every kth neighbor, got ${2 * theta}")
   }
@@ -931,8 +931,9 @@ class SpatialOpsSpec extends SparkSpec {
         array(lit(0.0), lit(0.0), col("span"), col("span")).as("coords")).as("shape"))
     val cap = 512
     def sampled(df: DataFrame): (Double, Double) = {
-      val (shapes, frac) = SpatialOps.sampleShapesWithFraction(df, "shape", cap, seed = 7)
-      (SpatialOps.medianBoxSpan(shapes.map(SpatialOps.sampleBox)), frac)
+      val st = SpatialOps.shapeStats(df, "shape", cap, seed = 7)
+      (SpatialOps.medianBoxSpan(st.sample.map(SpatialOps.sampleBox)),
+        st.sample.length.toDouble / math.max(st.count, 1L))
     }
     val n = 4096
     val sorted = boxes((1 to n).map(i => (i.toLong, i.toDouble)).toDF("id", "span"))
@@ -1013,6 +1014,66 @@ class SpatialOpsSpec extends SparkSpec {
         stDistance(col("circ"), stPoint(col("px"), col("py"))) <= r))
       assert(got === want && got.contains((1, 100L)), s"r = $r")
     }
+  }
+
+  test("shape joins take tag-5 and tag-6 bboxes from the decoded shape") {
+    import spark.implicits._
+    import graft.functions.{stDistance, stIntersects}
+    import graft.spatial.{MBR, Point, Polygon, Shape, ShapeCodec, ShapeCollection}
+    // Collections of a box and a point, plus polygons with a hole. A
+    // collection's part headers shift the coords' (x, y) stride — one
+    // point (5, 100) encodes as [1, 0, 2, 5, 100] — so a bbox read from
+    // the strided coords lands far from the shape (here y in ~[0, 230]
+    // for shapes at y >= 1000) and the cell join drops true pairs.
+    def shapeDf(id: String, c: String, shapes: Seq[Shape]): DataFrame =
+      shapes.zipWithIndex.map { case (sh, i) =>
+        val (tag, coords) = ShapeCodec.encode(sh); (i.toLong, tag, coords.toSeq)
+      }.toDF(id, "__t", "__c")
+        .select(col(id), struct(col("__t").as("tag"), col("__c").as("coords")).as(c))
+    val lefts: Seq[Shape] = (0 until 5).map { i =>
+      val (x, y) = (100.0 + 40 * i, 1000.0 + 40 * i)
+      ShapeCollection(Array[Shape](MBR(Point(x, y), Point(x + 8, y + 8)),
+        Point(x + 20, y + 25)))
+    } :+ Polygon(
+      Array(Point(300.0, 1200.0), Point(330.0, 1200.0), Point(330.0, 1230.0),
+        Point(300.0, 1230.0)),
+      Array(Array(Point(310.0, 1210.0), Point(320.0, 1210.0), Point(320.0, 1220.0),
+        Point(310.0, 1220.0))))
+    // points inside the boxes (some across the box midlines, so in other
+    // cells than the box's low corner), on and near the parts' points,
+    // in the polygon's ring and hole, and far away
+    val rights: Seq[Shape] = (0 until 5).flatMap { i =>
+      val (x, y) = (100.0 + 40 * i, 1000.0 + 40 * i)
+      Seq(Point(x + 1, y + 1), Point(x + 7, y + 7), Point(x + 4, y + 6),
+        Point(x + 20, y + 25), Point(x + 22, y + 26), Point(x + 30, y - 20))
+    } ++ Seq(Point(302.0, 1202.0), Point(315.0, 1215.0), Point(328.0, 1229.0),
+      Point(5.0, 100.0))
+    val l = shapeDf("lid", "lshape", lefts)
+    val r = shapeDf("rid", "rshape", rights)
+    def pairs(df: DataFrame) = df.select("lid", "rid").as[(Long, Long)].collect().toSet
+    val wantI = pairs(l.crossJoin(r).filter(stIntersects(col("lshape"), col("rshape"))))
+    assert(wantI.size >= 15)
+    assert(pairs(l.shapeIntersectsJoin(r, "lshape", "rshape")) === wantI)
+    for (d <- Seq(0.0, 3.0)) {
+      val want = pairs(l.crossJoin(r).filter(stDistance(col("lshape"), col("rshape")) <= d))
+      assert(pairs(l.shapeDistanceJoin(r, "lshape", "rshape", d)) === want, s"r = $d")
+    }
+  }
+
+  test("spreadForCross: a stats-free RDD-backed frame reads as unknown and spreads") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val target = spark.sparkContext.defaultParallelism
+    val rdd = spark.sparkContext.parallelize((1 to 50).map(i => Row(i.toLong, i * 1.0)), 1)
+    val df = spark.createDataFrame(rdd,
+      StructType(Seq(StructField("id", LongType), StructField("x", DoubleType))))
+    assert(df.rdd.getNumPartitions === 1) // precondition: one core's worth
+    assert(SpatialOps.spreadForCross(df).rdd.getNumPartitions === target)
+    // the naive join over it still runs spread and exact
+    val r = Seq((7L, 3.0)).toDF("rid", "rx")
+    val got = df.knnJoinNaive(r, Seq("x"), Seq("rx"), 1, "id", Seq("rid"))
+    assert(got.count() === 50)
   }
 
   test("spatioTemporalJoin: pre-1970 timestamps cell with true floor " +
