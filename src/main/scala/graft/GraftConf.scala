@@ -22,15 +22,6 @@ object GraftConf {
   // starved sets larger than this take the bounded doubled-theta retry
   // before the cross-window fallback; smaller ones go straight to it
   val KnnRetryThreshold  = "spark.graft.knn.retryThreshold"
-  // eagerly checkpoint the kNN-join candidate exchange so the
-  // build-time starved-count job and the query share one candidate
-  // execution (the default); in the pivot joins the default ALSO
-  // enables the narrow-pair top-k (checkpointed right replicas with
-  // pinned row ids, winners hydrated after the window). Off trades
-  // the second execution for not holding candidate blocks in storage
-  // AND exposes the entire candidate pipeline to plan dumps (no
-  // ExistingRDD scans) — the diagnostic role
-  val KnnMaterialize     = "spark.graft.knn.materializeCandidates"
   // when the vector kNN join's admit-fraction gate trips (distance
   // concentration on isotropic high-d data defeats pivot pruning), take
   // a trained-IVF approximate probe route instead of the exact quadratic
@@ -98,7 +89,6 @@ object GraftConf {
   def knnSafety(s: SparkSession): Double = get(s, KnnSafety, "2.0").toDouble
   def knnMaxRefine(s: SparkSession): Int = get(s, KnnMaxRefine, "64").toInt
   def knnRetryThreshold(s: SparkSession): Long = get(s, KnnRetryThreshold, "1024").toLong
-  def knnMaterialize(s: SparkSession): Boolean = get(s, KnnMaterialize, "true").toBoolean
   def knnMaxPivots(s: SparkSession): Int = get(s, KnnMaxPivots, "65536").toInt
   def knnPivotCellSize(s: SparkSession): Int = get(s, KnnPivotCellSize, "64").toInt
   def knnNaivePairBudget(s: SparkSession): Long =

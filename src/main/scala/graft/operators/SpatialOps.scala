@@ -380,8 +380,7 @@ object SpatialOps {
           .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
       val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lS.count, theta)
       val (satisfied, satisfiedLeftIds) =
-        SpatialOps.topKWithCount(cand, leftId, k, tieBreak,
-          materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
+        SpatialOps.topKWithCount(cand, leftId, k, tieBreak, materialize = true)
       val starved = SpatialOps.minusByKey(l, satisfiedLeftIds, leftId)
         .localCheckpoint()
       // Doubled-theta retry BEFORE the cross fallback (the point join's
@@ -394,9 +393,14 @@ object SpatialOps {
       // exact cross-window. Only the starved left takes a stats pass again.
       val (sB, sN) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
       val cand2 = candidates(starved, sB, sN, theta * 2)
+      // Checkpointed, unlike topKWithCount's retry-phase default: left
+      // lazy, the count's id-only projection is pruned below the
+      // repartition onto an exchange of its own, and the action ran this
+      // candidate join twice — perfbench spatial_join on 4 cores, 10
+      // alternating pairs: shape_knn_join action +0.25 s median (slower
+      // in 10/10) against -0.34 s of build.
       val (satisfied2, satisfiedIds2) =
-        SpatialOps.topKWithCount(cand2, leftId, k, tieBreak,
-          materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
+        SpatialOps.topKWithCount(cand2, leftId, k, tieBreak, materialize = true)
       val still = SpatialOps.minusByKey(starved, satisfiedIds2, leftId)
       val w = Window.partitionBy(col(leftId))
         .orderBy((col(DIST) +: tieBreak.map(col)).map(_.asc): _*)
@@ -601,7 +605,7 @@ object SpatialOps {
                           r: Double): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty, "need disjoint column names")
+      SpatialOps.requireDisjoint("distanceJoinNaive", l, rt)
       SpatialOps.spreadForCross(l).crossJoin(SpatialOps.spreadForCross(rt))
         .filter(pointDistance(lKeys.map(col), rKeys.map(col)) <= r)
     }
@@ -622,7 +626,7 @@ object SpatialOps {
                      k: Int, leftId: String, tieBreak: Seq[String]): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty, "need disjoint column names")
+      SpatialOps.requireDisjoint("knnJoinNaive", l, rt)
       val joined = SpatialOps.spreadForCross(l)
         .crossJoin(SpatialOps.spreadForCross(rt))
         .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
@@ -657,6 +661,7 @@ object SpatialOps {
                 retryThreshold: Long = 1024L): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
+      SpatialOps.requireDisjoint("knnJoin", l, rt)
 
       val SpatialOps.KnnSample(lPts, radii, theta, nRight, _) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
@@ -667,18 +672,13 @@ object SpatialOps {
 
       val cand = gridCandidates(l, rt, lKeys, rKeys, theta, cellThetas, maxRefine)
         .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
-      if (ds.sparkSession.conf.getOption("spark.graft.debugStats").exists(_.toBoolean))
-        System.err.println(s"[graft-knn] gridKnn: theta=$theta cells=" +
-          s"${lPts.map(gridCell).distinct.length} cellThetas=${cellThetas.size} " +
-          s"candidates=${cand.count()}")
 
       // Starved lefts (< k candidates within theta) take the exact
       // fallback for ALL of their k rows, so their partial candidates
       // must be excluded or they'd appear twice in the union — same
       // guard as pivotCellKnn / zknnJoinImpl.
       val (satisfied, satisfiedLeftIds) =
-        SpatialOps.topKWithCount(cand, leftId, k, tieBreak,
-          materialize = graft.GraftConf.knnMaterialize(ds.sparkSession))
+        SpatialOps.topKWithCount(cand, leftId, k, tieBreak, materialize = true)
       val starved = SpatialOps.minusByKey(l, satisfiedLeftIds, leftId)
 
       val fallback = SpatialOps.starvedFallback(starved, rt, lKeys, rKeys,
@@ -715,7 +715,7 @@ object SpatialOps {
                      retryThreshold: Long = 1024L): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty, "need disjoint column names")
+      SpatialOps.requireDisjoint("knnJoinPivot", l, rt)
 
       val SpatialOps.KnnSample(lPts, radii, theta, nRight, rSample) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
@@ -936,7 +936,7 @@ object SpatialOps {
   def zknnJoinImpl(l0: DataFrame, r0: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
                    k: Int, leftId: String, rightId: String, tieBreak: Seq[String],
                    shifts: Int, bits: Int, numPartitions: Int, seed: Long): DataFrame = {
-    require(l0.columns.intersect(r0.columns).isEmpty, "need disjoint column names")
+    requireDisjoint("zknnJoin", l0, r0)
     // null coordinates can't ride the curve (null z) and must not rank
     // as null-distance "neighbors" in the exact re-rank — excluded up
     // front, same semantics as every other kNN-join variant
@@ -1043,8 +1043,7 @@ object SpatialOps {
     // "k rows per left" contract holds even when the curve misses;
     // they must come ONLY from the fallback or they'd be double-counted.
     // Split rides the window's own shuffle — see topKWithCount.
-    val (kept, keptIds) = topKWithCount(joined, "__lid", k, tieBreak,
-      materialize = graft.GraftConf.knnMaterialize(spark))
+    val (kept, keptIds) = topKWithCount(joined, "__lid", k, tieBreak, materialize = true)
     val ranked = kept.drop("__lid", "__rid")
     // eager checkpoint + count-routed fallback, same discipline as
     // starvedFallback; the curve has no radius of its own, so the
@@ -1190,8 +1189,8 @@ object SpatialOps {
     * Picks pivot iff its per-row estimate is cheaper; ties and empty
     * samples default to grid (the measured winner at low dimensions,
     * even under heavy skew — per-cell thetas + dense-cell refinement
-    * keep it near uniform-data cost, AbBench b5s grid 3.3 s vs pivot
-    * 5.3 s). Past d=8 the model short-circuits: 3^d is astronomical and
+    * keep it near uniform-data cost, in-JVM A/B b5s grid 3.3 s vs
+    * pivot 5.3 s). Past d=8 the model short-circuits: 3^d is astronomical and
     * computing admission stats would only confirm it. NEVER picks
     * zorder: it is approximate in recall, and a cost gate must choose
     * among plans with identical result semantics. */
@@ -1496,7 +1495,6 @@ object SpatialOps {
       l: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       theta: Double, cellThetas: Map[Seq[Long], Double],
       maxRefine: Int = 64): DataFrame = {
-    requireDisjoint("knnJoin", l, rt)
     val dims = lKeys.length
     val spark = l.sparkSession
 
@@ -1844,19 +1842,6 @@ object SpatialOps {
       retryThreshold: Long = 1024L,
       hier: Option[PivotHierarchy] = None,
       rightCount: Long = -1L): DataFrame = {
-    // measurement aid, off by default: stage-volume stats to stderr
-    // (each stat is an extra count job — never enable in production)
-    val debug = l.sparkSession.conf
-      .getOption("spark.graft.debugStats").exists(_.toBoolean)
-    def dbg(msg: => String): Unit = if (debug) System.err.println(s"[graft-knn] $msg")
-    def timed[A](name: String)(f: => A): A =
-      if (!debug) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[graft-knn]   $name%-26s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-    dbg(s"pivotCellKnn: numPivots=$numPivots dim=$dim theta=$theta " +
-      s"cellThetas=${cellThetas.size} hierGroups=${hier.map(_.offsets.length - 1)}")
     // two-level vs flat kernels: same emitted cells/distances; the hier
     // form's assignment is a hierarchical approximation whose bounds
     // stay exact because maxDl is measured from the ACTUAL assignment
@@ -1887,11 +1872,9 @@ object SpatialOps {
       .drop("__graft_asgn")
 
     // per-cell radius bound (numPivots rows to the driver)
-    val maxDl = timed("maxDl agg+collect") {
-      lAug.groupBy(col("__graft_cell"))
-        .agg(max(col("__graft_dl")).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    }
+    val maxDl = lAug.groupBy(col("__graft_cell"))
+      .agg(max(col("__graft_dl")).as("__m"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     // empty left -> no cells; the fallback IS the correct empty result
     if (maxDl.isEmpty) return fallback(l)
 
@@ -1900,84 +1883,54 @@ object SpatialOps {
     // nothing (skipped inside the kernel, its rows never materialized)
     val bands = Array.tabulate(numPivots)(i =>
       maxDl.get(i + 1).map(_ + thetaOf(i + 1)).getOrElse(Double.NegativeInfinity))
-    // NARROW-PAIR top-k (the materializeCandidates=true default): the
-    // admitted (right-row × cell) replicas are eagerly checkpointed
-    // with a synthetic row id so the top-k winners can HYDRATE their
-    // right payload afterwards — the candidate pairs then ride the
-    // top-k machinery (repartition + checkpoint + count + window sort)
-    // as NARROW (lId, __graft_rrow, dist, tieBreak) rows instead of
-    // full left+right width. Measured on the 2-D 100x slice: the wide
-    // 35M-pair exchange + checkpoint + sort was the join's dominant
-    // term (the candidate VOLUME was already near-optimal at ~23/left)
-    // — payload width, not pair count, was the asymptote's constant.
-    // The admitted checkpoint (size ~admission-factor·|right|) also
+    // NARROW-PAIR top-k: the admitted (right-row × cell) replicas are
+    // eagerly checkpointed with a synthetic row id so the top-k winners
+    // can HYDRATE their right payload afterwards — the candidate pairs
+    // then ride the top-k machinery (repartition + checkpoint + count +
+    // window sort) as NARROW (lId, __graft_rrow, dist, tieBreak) rows
+    // instead of full left+right width. Measured on the 2-D 100x slice:
+    // the wide 35M-pair exchange + checkpoint + sort was the join's
+    // dominant term (the candidate VOLUME was already near-optimal at
+    // ~23/left) — payload width, not pair count, was the asymptote's
+    // constant. The checkpoint (size ~admission-factor·|right|) also
     // pins monotonically_increasing_id, which is only stable once
-    // materialized — which is why materializeCandidates=off takes the
-    // WIDE path below instead: it needs no row ids, so the conf keeps
-    // its diagnostic role of exposing the ENTIRE candidate pipeline
-    // (argmin projection, admission explode, cell join) to plan dumps
-    // (VERDICT r15 what's-wrong #1), and stays correct both ways.
-    val materialize = graft.GraftConf.knnMaterialize(l.sparkSession)
-    val (satisfied, keptIds) = if (materialize) {
-      val admitted = timed("admitted checkpoint") {
-        rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
-          .withColumn("__graft_rrow", monotonically_increasing_id())
-          .localCheckpoint()
-      }
-      val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
-        .withColumn("__graft_d", exactDist)
-        .filter(col("__graft_d") <= col("__graft_ctheta"))
-      dbg {
-        val repl = admitted.count(); val pairs = cand.count()
-        s"right replication=$repl candidate pairs (post theta filter)=$pairs"
-      }
-      // wide join output narrows INSIDE its stage (project before the
-      // exchange — whole-stage codegen never materializes wide pairs)
-      val candNarrow = cand.select(
-        col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*)
-      val (keptN, ids) = timed("narrow top-k build") {
-        topKWithCount(candNarrow, lId, k, tieBreak,
-          distCol = "__graft_d", keepDist = true, materialize = true)
-      }
-      // hydrate the k·|left| winners: left payload by the (unique) lId,
-      // right payload by the checkpointed replica id — two bounded
-      // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
-      // are pinned to shuffle-hash: the payload sides are TABLE-sized,
-      // and Spark's static size estimate of a many-leg union of pruned
-      // parquet scans can undershoot the broadcast threshold —
-      // measured on the d=4 100x slice, the planner broadcast the full
-      // 1.5M-row left side and the driver OOM'd building the hashed
-      // relation. The hinted side is the per-key-unique build side
-      // (~|side|/parts rows per task); no sort, no broadcast,
-      // spill-safe.
-      // keepDist: outCols may reference __graft_d (the vec join's `l2`)
-      val sat = keptN
-        .select(col(lId), col("__graft_rrow"), col("__graft_d"))
-        .join(l.hint("shuffle_hash"), Seq(lId))
-        .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
-        .select(outCols: _*)
-      (sat, ids)
-    } else {
-      // WIDE path: no checkpoint anywhere in the candidate phase, so
-      // the dumped plan shows every stage; pairs carry full payload
-      val admitted = rt
-        .withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
-      val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
-        .withColumn("__graft_d", exactDist)
-        .filter(col("__graft_d") <= col("__graft_ctheta"))
-      val (kept, ids) = topKWithCount(cand, lId, k, tieBreak,
-        distCol = "__graft_d", keepDist = true, materialize = false)
-      (kept.select(outCols: _*), ids)
-    }
+    // materialized.
+    val admitted = rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
+      .withColumn("__graft_rrow", monotonically_increasing_id())
+      .localCheckpoint()
+    val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
+      .withColumn("__graft_d", exactDist)
+      .filter(col("__graft_d") <= col("__graft_ctheta"))
+    // wide join output narrows INSIDE its stage (project before the
+    // exchange — whole-stage codegen never materializes wide pairs)
+    val candNarrow = cand.select(
+      col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*)
+    val (keptN, keptIds) = topKWithCount(candNarrow, lId, k, tieBreak,
+      distCol = "__graft_d", keepDist = true, materialize = true)
+    // hydrate the k·|left| winners: left payload by the (unique) lId,
+    // right payload by the checkpointed replica id — two bounded
+    // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
+    // are pinned to shuffle-hash: the payload sides are TABLE-sized,
+    // and Spark's static size estimate of a many-leg union of pruned
+    // parquet scans can undershoot the broadcast threshold —
+    // measured on the d=4 100x slice, the planner broadcast the full
+    // 1.5M-row left side and the driver OOM'd building the hashed
+    // relation. The hinted side is the per-key-unique build side
+    // (~|side|/parts rows per task); no sort, no broadcast,
+    // spill-safe.
+    // keepDist: outCols may reference __graft_d (the vec join's `l2`)
+    val satisfied = keptN
+      .select(col(lId), col("__graft_rrow"), col("__graft_d"))
+      .join(l.hint("shuffle_hash"), Seq(lId))
+      .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
+      .select(outCols: _*)
     // eager checkpoint + count-routed fallback — same discipline as
     // starvedFallback: a small starved set (designed case) goes
     // straight to the caller's exact fallback (a retry would only add
     // a pass); a LARGE one (adversarial estimate failure) takes the
     // bounded doubled-theta retry below first
-    val starved = timed("starved checkpoint") {
-      minusByKey(l, keptIds, lId).localCheckpoint()
-    }
-    val nStarved = timed("starved count")(starved.count())
+    val starved = minusByKey(l, keptIds, lId).localCheckpoint()
+    val nStarved = starved.count()
     // Direct-naive is gated on PAIR VOLUME, not starved count alone:
     // the exact fallback costs starved · |right| window pairs, so a
     // "small" starved set against a huge right side is a hidden
@@ -1989,8 +1942,6 @@ object SpatialOps {
     val directNaive = nStarved <= retryThreshold && (rightCount < 0L ||
       nStarved <= graft.GraftConf.knnNaivePairBudget(l.sparkSession) /
         math.max(rightCount, 1L))
-    dbg(s"starved=$nStarved (retryThreshold=$retryThreshold rightCount=$rightCount -> " +
-      s"${if (directNaive) "direct fallback" else "doubled-theta retry"})")
     if (directNaive)
       return satisfied.unionByName(fallback(starved))
 
@@ -2043,7 +1994,6 @@ object SpatialOps {
       .join(admitted2.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
       .select(outCols: _*)
     val still = minusByKey(starved, kept2Ids, lId)
-    dbg(s"post-retry still-starved=${if (debug) still.count() else -1}")
 
     satisfied.unionByName(satisfied2).unionByName(fallback(still))
   }

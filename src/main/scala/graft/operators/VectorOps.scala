@@ -1459,7 +1459,7 @@ object VectorOps {
                    quantile: Double = 0.95, safety: Double = 2.0): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
-      require(l.columns.intersect(rt.columns).isEmpty, "need disjoint column names")
+      SpatialOps.requireDisjoint("knnJoinVec", l, rt)
 
       // bounded AND unbiased: small tables are taken whole (limit probe),
       // larger ones get a seeded random sample — a first-N slice of data

@@ -22,16 +22,6 @@ object DumpQueryPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_KNN_MATERIALIZE=false dumps the kNN joins' candidate phase
-    // un-checkpointed (the ExplainPlans discipline, VERDICT r15 #1 /
-    // r16 #7): the default eager checkpoint hides every upstream stage
-    // behind Scan ExistingRDD, so the argmin projection, admission
-    // explode, and cell equi-join would be invisible in the dump. The
-    // conf only changes how candidates MATERIALIZE, never the rows.
-    sys.env.get("GRAFT_KNN_MATERIALIZE").foreach { v =>
-      System.err.println(s"[dumpplans] ${graft.GraftConf.KnnMaterialize}=$v")
-      spark.conf.set(graft.GraftConf.KnnMaterialize, v)
-    }
     new java.io.File(outDir).mkdirs()
     def hit(n: String) = wanted.exists(w => n == w || n.startsWith(w))
     graft.SparkEntry.queries.filter(e => hit(e._1)).foreach { case (name, fn) =>

@@ -50,29 +50,20 @@ object ExplainPlans {
       customerPts(spark, d).distanceJoin(supplierPts(spark, d),
         Seq("cx", "cy"), Seq("sx", "sy"), 100.0, broadcastRight = true)
     }
-    // The pivot joins' candidate phase dumps with
-    // materializeCandidates=off (VERDICT r15 what's-wrong #1): the
-    // default eagerly checkpoints the admitted replicas + candidate
-    // exchange, which hides every upstream stage behind Scan
-    // ExistingRDD — off takes the un-checkpointed WIDE path, so the
-    // argmin projection, admission explode, and cell equi-join are all
-    // in the diffable record.
-    show("knn_join_pivot (expect pivot_argmin assignment projection, pivot_admitted explode, cell equi-join + theta filter + windowed top-k — no cross product; dumped un-materialized so the whole candidate phase is visible)") {
-      spark.conf.set(graft.GraftConf.KnnMaterialize, "false")
-      try customerPts(spark, d).knnJoinPivot(supplierPts(spark, d),
+    // The pivot joins checkpoint the admitted replicas and the narrow
+    // candidate exchange at build time, so the dump shows those as
+    // Scan ExistingRDD leaves under the windowed top-k and the hydrate
+    // joins; the argmin and admission kernels ran before the checkpoint.
+    show("knn_join_pivot (expect checkpointed narrow candidates -> windowed top-k, hydrated by shuffle-hash joins on c_custkey and __graft_rrow — no cross product outside the starved-left fallback)") {
+      customerPts(spark, d).knnJoinPivot(supplierPts(spark, d),
         Seq("cx", "cy"), Seq("sx", "sy"), 3, "c_custkey", Seq("s_suppkey"))
-      finally spark.conf.unset(graft.GraftConf.KnnMaterialize)
     }
-    show("knn_join_vec_pivot (expect the SAME pivot candidate shape over float vectors — pivot_argmin/pivot_admitted kernels, cell equi-join, l2 refine, windowed top-k; un-materialized dump)") {
-      import graft.operators.VectorOps._
-      spark.conf.set(graft.GraftConf.KnnMaterialize, "false")
-      try {
-        val left = embeddings(spark, d).select(col("vec_id"), col("embedding"))
-        val right = embeddings(spark, d).select(
-          col("vec_id").as("vec_id2"), col("embedding").as("embedding2"))
-        left.knnJoinVec(right, "embedding", "embedding2", "vec_id", 3,
-          Seq("vec_id2"))
-      } finally spark.conf.unset(graft.GraftConf.KnnMaterialize)
+    show("knn_join_vec_pivot (expect the pivot shape over float vectors — checkpointed narrow candidates, windowed top-k, hydrate joins — or, where the admit-fraction gate trips, the narrow exact cross: (vec_id, embedding) x (__graft_rrow, embedding2) -> windowed top-k -> the same hydrate joins; l2 carried from __graft_d)") {
+      val left = embeddings(spark, d).select(col("vec_id"), col("embedding"))
+      val right = embeddings(spark, d).select(
+        col("vec_id").as("vec_id2"), col("embedding").as("embedding2"))
+      left.knnJoinVec(right, "embedding", "embedding2", "vec_id", 3,
+        Seq("vec_id2"))
     }
     show("exact_dedup (expect partial HashAggregate before the digest shuffle)") {
       import graft.operators.DedupOps._
@@ -533,7 +524,7 @@ object ExplainPlans {
           array(col("cx"), col("cy")).as("coords")).as("cpt"))
       boxes.shapeDistanceJoin(pts, "nbox", "cpt", 100.37)
     }
-    show("shape_knn_join (expect BOTH candidate stages — theta pass and doubled-theta retry — as bbox-cell equi-joins with windowed top-k; the only cross form is the count-routed starved-left exact fallback branch; un-materialized dump so both stages' candidate plans are visible)") {
+    show("shape_knn_join (expect the theta pass as a checkpointed candidate exchange under a windowed top-k, the doubled-theta retry as a bbox-cell equi-join with windowed top-k; the only cross form is the starved-left exact fallback branch)") {
       import graft.spatial.ShapeCodec
       val ncx = col("n_nationkey").cast("double") * 400.0
       val ncy = col("n_nationkey").cast("double") * 40.0
@@ -544,10 +535,8 @@ object ExplainPlans {
       val pts = customerPts(spark, d).select(col("c_custkey"),
         struct(lit(ShapeCodec.TagPoint).as("tag"),
           array(col("cx"), col("cy")).as("coords")).as("cpt"))
-      spark.conf.set(graft.GraftConf.KnnMaterialize, "false")
-      try boxes.shapeKnnJoin(pts, "nbox", "cpt", 3, "n_nationkey",
+      boxes.shapeKnnJoin(pts, "nbox", "cpt", 3, "n_nationkey",
         tieBreak = Seq("c_custkey"))
-      finally spark.conf.unset(graft.GraftConf.KnnMaterialize)
     }
     show("phrase_bool (expect ONE term-pruned posting sliver — PushedFilters In(term, all query terms) — feeding per-alternative conjunctive aggs; adjacency text read only via the pushed id IN; OR = union distinct, AND = semi-join chain)") {
       import graft.operators.CorpusOps

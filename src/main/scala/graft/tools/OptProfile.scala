@@ -14,7 +14,7 @@ import graft.operators.VectorOps._
   * measurement harness like [[ExplainPlans]] / [[ScaleTrend]].
   *
   * Usage: OptProfile <entry> [conf=value ...]
-  *   e.g. OptProfile b6v spark.graft.debugStats=true
+  *   e.g. OptProfile b6v spark.graft.knn.maxPivots=4096
   */
 object OptProfile {
   def main(args: Array[String]): Unit = {

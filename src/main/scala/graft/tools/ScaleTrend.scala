@@ -71,10 +71,6 @@ object ScaleTrend {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // stage-volume diagnosis (extra count jobs — never for recorded
-      // exponents, only for reading WHERE a slice's time goes)
-      .config("spark.graft.debugStats",
-        sys.env.getOrElse("GRAFT_DEBUG", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -13,13 +13,42 @@ import org.apache.spark.sql.functions._
   * (see BASELINE.md round-15 addenda): biased pivots once drained 72% of
   * a 10x slice's lefts into one Voronoi cell, and an extrapolated
   * density correction misestimated theta in BOTH directions at a 0.0013
-  * sampling fraction.
+  * sampling fraction. The job-count tests pin how many Spark jobs the
+  * joins start while their plans are built.
   */
 class SamplerSpec extends SparkSpec {
   import spark.implicits._
 
   private def dist(a: Array[Double], b: Array[Double]): Double =
     math.sqrt(math.pow(a(0) - b(0), 2) + math.pow(a(1) - b(1), 2))
+
+  // jobs launched by `body` on this thread, tagged by a job group; a
+  // marker job closes the count, since the listener bus delivers job
+  // starts in order
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(p.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      body
+      sc.setJobGroup(group, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+      seen.toArray.count(_ == "body")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("stats pass: uniform cap reaches every partition band") {
     // 10 partitions, each a distinct x-band — the ingest-ordered shape.
@@ -172,33 +201,6 @@ class SamplerSpec extends SparkSpec {
 
   test("stats pass: one Spark job per input") {
     import graft.spatial.{MBR, Point, ShapeCodec}
-    val sc = spark.sparkContext
-    // jobs launched by `body` on this thread, tagged by a job group; a
-    // marker job closes the count, since the listener bus delivers job
-    // starts in order
-    def jobsOf(body: => Unit): Int = {
-      val group = s"stats-pass-jobs-${java.util.UUID.randomUUID}"
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-            .foreach(p => seen.add(p.getProperty("spark.job.description")))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "body")
-        body
-        sc.setJobGroup(group, "marker")
-        sc.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(seen.contains("marker"), "listener never saw the marker job")
-        seen.toArray.count(_ == "body")
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    }
     // over the cap on both sides, two partitions each
     def pts(n: Int, x: String, y: String) = spark.range(0, n, 1, 2)
       .select((col("id") % 101).cast("double").as(x), (col("id") % 89).cast("double").as(y))
@@ -211,6 +213,53 @@ class SamplerSpec extends SparkSpec {
       (tag, c.toSeq)
     }.toDF("tag", "coords").select(struct(col("tag"), col("coords")).as("shp"))
     assert(jobsOf(SpatialOps.sampleBoxes(boxes, "shp", cap = 512, seed = 7)) == 1)
+  }
+
+  test("joins reject shared column names, naming verb and column, before any job") {
+    import graft.operators.VectorOps._
+    val (l, r) = (Seq((1L, 0.0, 0.0)).toDF("lid", "x", "ly"),
+      Seq((2L, 1.0, 1.0)).toDF("rid", "x", "ry"))
+    val (lv, rv) = (Seq((1L, Seq(0f, 1f), 0.0)).toDF("lid", "lv", "x"),
+      Seq((2L, Seq(1f, 0f), 1.0)).toDF("rid", "rv", "x"))
+    val (lk, rk) = (Seq("x", "ly"), Seq("x", "ry"))
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "knnJoin" -> (() => l.knnJoin(r, lk, rk, 1, "lid", Seq("rid"))),
+      "knnJoinPivot" -> (() => l.knnJoinPivot(r, lk, rk, 1, "lid", Seq("rid"))),
+      "zknnJoin" -> (() => l.zknnJoin(r, lk, rk, 1, "lid", "rid", Seq("rid"))),
+      "knnJoinNaive" -> (() => l.knnJoinNaive(r, lk, rk, 1, "lid", Seq("rid"))),
+      "knnJoinVec" -> (() => lv.knnJoinVec(rv, "lv", "rv", "lid", 1, Seq("rid"))),
+      "distanceJoinNaive" -> (() => l.distanceJoinNaive(r, lk, rk, 1.0)))
+    for ((verb, call) <- verbs) {
+      var msg = ""
+      val jobs = jobsOf {
+        msg = intercept[IllegalArgumentException](call()).getMessage
+      }
+      assert(msg == s"requirement failed: $verb requires disjoint column names, shared: x")
+      assert(jobs == 0, s"$verb started $jobs jobs before rejecting")
+    }
+  }
+
+  test("kNN joins start a fixed number of jobs at build time") {
+    import graft.spatial.{MBR, Point, ShapeCodec}
+    // two partitions per side, distinct points (the lattice period
+    // lcm(101, 89) exceeds both sizes)
+    def pts(n: Int, id: String, x: String, y: String) = spark.range(0, n, 1, 2)
+      .select(col("id").as(id), (col("id") * 37 % 101).cast("double").as(x),
+        (col("id") * 53 % 89).cast("double").as(y))
+    val (l, r) = (pts(600, "lid", "lx", "ly"), pts(800, "rid", "rx", "ry"))
+    val (lk, rk) = (Seq("lx", "ly"), Seq("rx", "ry"))
+    assert(jobsOf(l.knnJoin(r, lk, rk, 3, "lid", Seq("rid"))) == 14)
+    assert(jobsOf(l.knnJoinPivot(r, lk, rk, 3, "lid", Seq("rid"))) == 13)
+    val boxes = spark.range(0, 300, 1, 2).as[Long].map { i =>
+      val (tag, c) = ShapeCodec.encode(MBR(Point(i * 37 % 101 * 1.0, i * 53 % 89 * 1.0),
+        Point(i * 37 % 101 + 2.0, i * 53 % 89 + 3.0)))
+      (i, tag, c.toSeq)
+    }.toDF("lid", "tag", "coords")
+      .select(col("lid"), struct(col("tag"), col("coords")).as("lshape"))
+    val shapePts = r.select(col("rid"), struct(lit(ShapeCodec.TagPoint).as("tag"),
+      array(col("rx"), col("ry")).as("coords")).as("rshape"))
+    assert(jobsOf(boxes.shapeKnnJoin(shapePts, "lshape", "rshape", 3, "lid",
+      Seq("rid"))) == 12)
   }
 
   test("perCellQuantile: minSamples gates sparse-sampled cells, default keeps all") {

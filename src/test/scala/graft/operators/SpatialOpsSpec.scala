@@ -302,16 +302,20 @@ class SpatialOpsSpec extends SparkSpec {
       centers6(i % 8).map(_ + rng.nextGaussian() * 0.1))
     assert(SpatialOps.chooseKnnAlgo(clus6, clus6, theta = 1.0, dims = 6) === "pivot")
 
-    // end-to-end: conf 'auto' dispatches on the gate. Materialization
-    // off so the phase-1 plan markers stay visible (grid cells vs pivot
-    // cells); exactness pinned against the naive window either way.
+    // end-to-end: conf 'auto' dispatches on the gate; exactness pinned
+    // against the naive window either way. The grid candidates sit
+    // behind a checkpoint, so the grid route is witnessed by the gate's
+    // own verdict on the same inputs plus the absence of the pivot's
+    // __graft_rcell, which stays visible over the admitted checkpoint.
     try {
       spark.conf.set(graft.GraftConf.KnnJoinAlgo, "auto")
-      spark.conf.set(graft.GraftConf.KnnMaterialize, "false")
+      assert(SpatialOps.chooseKnnAlgoSampled(cust, supp, Seq("cx", "cy"),
+        Seq("sx", "sy"), 3, graft.GraftConf.knnQuantile(spark),
+        graft.GraftConf.knnSafety(spark)) === "grid")
       val got2d = cust.knnJoinAuto(supp, Seq("cx", "cy"), Seq("sx", "sy"),
         3, "c_custkey", "s_suppkey", Seq("s_suppkey"))
       val p2 = got2d.queryExecution.optimizedPlan.toString
-      assert(p2.contains("__graft_cell_lc0") && !p2.contains("__graft_rcell"),
+      assert(!p2.contains("__graft_rcell"),
         s"uniform-ish 2-D must take the grid plan:\n$p2")
       assert(pairSet(got2d) === pairSet(cust.knnJoinNaive(supp,
         Seq("cx", "cy"), Seq("sx", "sy"), 3, "c_custkey", Seq("s_suppkey"))))
@@ -325,9 +329,13 @@ class SpatialOpsSpec extends SparkSpec {
         (0 until 64).map(i => element_at(col("v"), i + 1).as(s"e$i")): _*)
       val lk = (0 until 64).map(i => s"d$i")
       val rk = (0 until 64).map(i => s"e$i")
+      assert(SpatialOps.chooseKnnAlgoSampled(l64, r64, lk, rk, 2,
+        graft.GraftConf.knnQuantile(spark), graft.GraftConf.knnSafety(spark)) === "pivot")
       val gotHd = l64.knnJoinAuto(r64, lk, rk, 2, "lid", "rid", Seq("rid"))
       val pHd = gotHd.queryExecution.optimizedPlan.toString
-      assert(pHd.contains("__graft_rcell"),
+      // the admitted checkpoint's 67 columns are cut from the plan
+      // string before __graft_rcell; the hydrate join key is not
+      assert(pHd.contains("__graft_rrow"),
         s"clustered 64-D must take the pivot plan:\n$pHd")
       val gotSet = gotHd.select("lid", "rid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -355,10 +363,7 @@ class SpatialOpsSpec extends SparkSpec {
             Seq("rx", "ry", "rz", "rw"), 2, "lid", Seq("rid"))
           .select("lid", "rid").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet)
-    } finally {
-      spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
-      spark.conf.unset(graft.GraftConf.KnnMaterialize)
-    }
+    } finally spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
   }
 
   test("the auto gate matches the measured-best algorithm on the bench " +
@@ -372,11 +377,13 @@ class SpatialOpsSpec extends SparkSpec {
     val (sl, sr) = (Tables.skewedPts(spark, sf(), "l"), Tables.skewedPts(spark, sf(), "r"))
     try {
       spark.conf.set(graft.GraftConf.KnnJoinAlgo, "auto")
-      spark.conf.set(graft.GraftConf.KnnMaterialize, "false")
+      assert(SpatialOps.chooseKnnAlgoSampled(sl, sr, Seq("lx", "ly"),
+        Seq("rx", "ry"), 3, graft.GraftConf.knnQuantile(spark),
+        graft.GraftConf.knnSafety(spark)) === "grid")
       val got = sl.knnJoinAuto(sr, Seq("lx", "ly"),
         Seq("rx", "ry"), 3, "lid", "rid", Seq("rid"))
       val p = got.queryExecution.optimizedPlan.toString
-      assert(p.contains("__graft_cell_lc0") && !p.contains("__graft_rcell"),
+      assert(!p.contains("__graft_rcell"),
         s"the skew fixture must take the grid plan (measured-best):\n$p")
       val gotSet = got.select("lid", "rid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -385,10 +392,7 @@ class SpatialOpsSpec extends SparkSpec {
         .select("lid", "rid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(gotSet === wantSet && gotSet.nonEmpty)
-    } finally {
-      spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
-      spark.conf.unset(graft.GraftConf.KnnMaterialize)
-    }
+    } finally spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
   }
 
   test("spark.graft.knn.retryThreshold reaches the zorder path") {
