@@ -1154,7 +1154,7 @@ object SpatialDisk {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(leftId))
       .orderBy(dist.asc +: tieBreak.map(col(_).asc): _*)
     // materialize the candidate top-k ONCE (the in-memory join's
-    // topKWithCount discipline): okIds, the satisfied branch, and the
+    // top-k checkpoint discipline): okIds, the satisfied branch, and the
     // starved anti-join all read these blocks instead of re-running
     // the candidate pipeline per consumer
     val ranked = leftCelled

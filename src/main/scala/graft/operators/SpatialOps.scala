@@ -321,10 +321,14 @@ object SpatialOps {
       *     second draw) — dilated-bbox grid, reference-point dedup,
       *     exact refine;
       *  3. per-left windowed top-k over candidates (satisfied = lefts
-      *     with >= k candidates inside theta);
-      *  4. starved lefts take the exact cross-window fallback (the
-      *     CKJSpark shape) — bounded because the sampled theta leaves
-      *     only estimate-miss lefts starved (spec-pinned).
+      *     with >= k candidates inside theta), counted by its own
+      *     checkpoint job;
+      *  4. starved lefts — the left's row count minus the satisfied,
+      *     no job of its own — take the point joins' route
+      *     ([[SpatialOps.routeStarved]], gated by
+      *     `spark.graft.knn.retryThreshold`): none, no fallback at all;
+      *     a few, the exact cross-window (the CKJSpark shape); many, a
+      *     doubled-theta candidate pass first.
       * Output: every left column + the matched right columns, k rows
       * per left (fewer only if |right| < k). */
     def shapeKnnJoin(right: Dataset[_], lShapeCol: String, rShapeCol: String,
@@ -379,38 +383,38 @@ object SpatialOps {
           stDistance(col(lShapeCol), col(rShapeCol)) <= d)
           .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
       val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lS.count, theta)
-      val (satisfied, satisfiedLeftIds) =
-        SpatialOps.topKWithCount(cand, leftId, k, tieBreak, materialize = true)
-      val starved = SpatialOps.minusByKey(l, satisfiedLeftIds, leftId)
-        .localCheckpoint()
-      // Doubled-theta retry BEFORE the cross fallback (the point join's
-      // starvedFallback discipline): the 0.95-quantile theta leaves up
-      // to ~5% of lefts starved BY CONSTRUCTION, and at scale that
-      // fraction crossed with the full right is the detonation (the
-      // 10x trend measured 38 GB of shuffle without this pass). The 2x
-      // grid pass rescues every left whose radius estimate was off by
-      // less than 2x; only the genuinely adversarial remainder pays the
-      // exact cross-window. Only the starved left takes a stats pass again.
-      val (sB, sN) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
-      val cand2 = candidates(starved, sB, sN, theta * 2)
-      // Checkpointed, unlike topKWithCount's retry-phase default: left
-      // lazy, the count's id-only projection is pruned below the
-      // repartition onto an exchange of its own, and the action ran this
-      // candidate join twice — perfbench spatial_join on 4 cores, 10
-      // alternating pairs: shape_knn_join action +0.25 s median (slower
-      // in 10/10) against -0.34 s of build.
-      val (satisfied2, satisfiedIds2) =
-        SpatialOps.topKWithCount(cand2, leftId, k, tieBreak, materialize = true)
-      val still = SpatialOps.minusByKey(starved, satisfiedIds2, leftId)
-      val w = Window.partitionBy(col(leftId))
-        .orderBy((col(DIST) +: tieBreak.map(col)).map(_.asc): _*)
-      val fallback = still.crossJoin(rt)
-        .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
-        .filter(col(DIST).isNotNull)
-        .withColumn("__graft_rn", row_number().over(w))
-        .filter(col("__graft_rn") <= k)
-        .drop("__graft_rn", DIST)
-      satisfied.unionByName(satisfied2).unionByName(fallback)
+      val top = SpatialOps.topKCounted(cand, leftId, k, tieBreak)
+      val nStarved = lS.allRows - top.nSatisfied
+      // the exact cross-window (the CKJSpark shape)
+      def naive(left: DataFrame): DataFrame = {
+        val w = Window.partitionBy(col(leftId))
+          .orderBy((col(DIST) +: tieBreak.map(col)).map(_.asc): _*)
+        left.crossJoin(rt)
+          .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
+          .filter(col(DIST).isNotNull)
+          .withColumn("__graft_rn", row_number().over(w))
+          .filter(col("__graft_rn") <= k)
+          .drop("__graft_rn", DIST)
+      }
+      // The point joins' starved route: a small starved set goes straight
+      // to the cross-window; a large one takes a doubled-theta retry
+      // first. The 0.95-quantile theta leaves up to ~5% of lefts starved
+      // BY CONSTRUCTION, and at scale that fraction crossed with the full
+      // right is the detonation (the 10x trend measured 38 GB of shuffle
+      // without the retry). The 2x grid pass rescues every left whose
+      // radius estimate was off by less than 2x; only the genuinely
+      // adversarial remainder pays the exact cross-window. Only the
+      // starved left takes a stats pass again.
+      SpatialOps.routeStarved(top.rows, nStarved,
+          SpatialOps.minusByKey(l, top.ids, leftId),
+          graft.GraftConf.knnRetryThreshold(l.sparkSession), rS.count)(
+        naive, starved => {
+          val (sB, sN) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
+          val top2 = SpatialOps.topKCounted(candidates(starved, sB, sN, theta * 2),
+            leftId, k, tieBreak)
+          SpatialOps.withStarved(top2.rows, nStarved - top2.nSatisfied)(
+            naive(SpatialOps.minusByKey(starved, top2.ids, leftId)))
+        })
     }
 
     /** Distance join, grid algorithm: left rows hash to their own cell
@@ -663,7 +667,7 @@ object SpatialOps {
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoin", l, rt)
 
-      val SpatialOps.KnnSample(lPts, radii, theta, nRight, _) =
+      val SpatialOps.KnnSample(lPts, radii, theta, nLeft, nRight, _) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
       val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
       val cellThetas: Map[Seq[Long], Double] =
@@ -677,15 +681,13 @@ object SpatialOps {
       // fallback for ALL of their k rows, so their partial candidates
       // must be excluded or they'd appear twice in the union — same
       // guard as pivotCellKnn / zknnJoinImpl.
-      val (satisfied, satisfiedLeftIds) =
-        SpatialOps.topKWithCount(cand, leftId, k, tieBreak, materialize = true)
-      val starved = SpatialOps.minusByKey(l, satisfiedLeftIds, leftId)
-
-      val fallback = SpatialOps.starvedFallback(starved, rt, lKeys, rKeys,
-        k, leftId, tieBreak, theta,
-        SpatialOps.retryCellThetas(lPts, radii, quantile, theta), retryThreshold,
-        rightCount = nRight)
-      satisfied.unionByName(fallback)
+      val top = SpatialOps.topKCounted(cand, leftId, k, tieBreak)
+      val nStarved = nLeft - top.nSatisfied
+      SpatialOps.routeStarved(top.rows, nStarved,
+        SpatialOps.minusByKey(l, top.ids, leftId), retryThreshold, nRight)(
+        new DatasetSpatialOps(_).knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak),
+        SpatialOps.gridRetryThenNaive(_, nStarved, rt, lKeys, rKeys, k, leftId,
+          tieBreak, theta, SpatialOps.retryCellThetas(lPts, radii, quantile, theta)))
     }
 
     /** kNN join, pivot (Voronoi) algorithm — the rebuild of the
@@ -717,7 +719,7 @@ object SpatialOps {
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoinPivot", l, rt)
 
-      val SpatialOps.KnnSample(lPts, radii, theta, nRight, rSample) =
+      val SpatialOps.KnnSample(lPts, radii, theta, _, nRight, rSample) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
       // a uniform right sample of `n` rows: a prefix of the stats pass's
       // own sample when it is large enough, else one more pass
@@ -952,21 +954,22 @@ object SpatialOps {
     val spark = l.sparkSession
     import spark.implicits._
 
-    // common bounds across both sides (exact two tiny aggs); a null min
-    // means that side is empty -> the naive plan IS the correct empty
-    // result (right-empty also short-circuits: no neighbors exist)
-    def bounds(df: DataFrame, keys: Seq[String]): Option[(Array[Double], Array[Double])] = {
+    // common bounds and row counts across both sides (exact two tiny
+    // aggs); a null min means that side is empty -> the naive plan IS
+    // the correct empty result (right-empty also short-circuits: no
+    // neighbors exist)
+    def bounds(df: DataFrame, keys: Seq[String]): Option[(Array[Double], Array[Double], Long)] = {
       val aggs = keys.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      if (row.isNullAt(0)) None
-      else Some((keys.indices.map(i => row.getDouble(2 * i)).toArray,
-        keys.indices.map(i => row.getDouble(2 * i + 1)).toArray))
+      val row = df.agg(count(lit(1)), aggs: _*).head()
+      if (row.isNullAt(1)) None
+      else Some((keys.indices.map(i => row.getDouble(2 * i + 1)).toArray,
+        keys.indices.map(i => row.getDouble(2 * i + 2)).toArray, row.getLong(0)))
     }
     val (lBounds, rBounds) = (bounds(l, lKeys), bounds(r, rKeys))
     if (lBounds.isEmpty || rBounds.isEmpty)
       return new DatasetSpatialOps(l).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak)
-    val (llo, lhi) = lBounds.get
-    val (rlo, rhi) = rBounds.get
+    val (llo, lhi, nLeft) = lBounds.get
+    val (rlo, rhi, nRight) = rBounds.get
     val lo = llo.zip(rlo).map(t => math.min(t._1, t._2))
     val hi = lhi.zip(rhi).map(t => math.max(t._1, t._2))
     val span = lo.indices.map(i => hi(i) - lo(i)).toArray
@@ -1042,32 +1045,26 @@ object SpatialOps {
     // partition edges) fall back to the exact windowed join, so the
     // "k rows per left" contract holds even when the curve misses;
     // they must come ONLY from the fallback or they'd be double-counted.
-    // Split rides the window's own shuffle — see topKWithCount.
-    val (kept, keptIds) = topKWithCount(joined, "__lid", k, tieBreak, materialize = true)
-    val ranked = kept.drop("__lid", "__rid")
-    // eager checkpoint + count-routed fallback, same discipline as
-    // starvedFallback; the curve has no radius of its own, so the
-    // retry's theta comes from the grid join's capped sampling estimate
-    // — run ONLY when the retry actually engages (mass starvation), so
-    // the common path pays neither the sampling nor the retry pass.
-    // Threshold and sampling params come from GraftConf like the
-    // grid/pivot paths (ADVICE r7: these were hardcoded here, so
+    val top = topKCounted(joined, leftId, k, tieBreak)
+    val nStarved = nLeft - top.nSatisfied
+    // the shared starved route (routeStarved); the curve has no radius
+    // of its own, so the retry's theta comes from the grid join's capped
+    // sampling estimate — run ONLY when the retry actually engages (mass
+    // starvation), so the common path pays neither the sampling nor the
+    // retry pass. Threshold and sampling params come from GraftConf like
+    // the grid/pivot paths (ADVICE r7: these were hardcoded here, so
     // spark.graft.knn.retryThreshold silently skipped the zorder algo).
-    val starved = l.join(keptIds,
-      col(leftId).cast("long") === col("__lid"), "left_anti")
-      .localCheckpoint()
-    val fallback =
-      if (starved.count() <= graft.GraftConf.knnRetryThreshold(spark))
-        new DatasetSpatialOps(starved).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak)
-      else {
+    routeStarved(top.rows.drop("__lid", "__rid"), nStarved,
+      minusByKey(l, top.ids, leftId), graft.GraftConf.knnRetryThreshold(spark), nRight)(
+      new DatasetSpatialOps(_).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak),
+      starved => {
         val quantile = graft.GraftConf.knnQuantile(spark)
-        val KnnSample(lPts, radii, theta, _, _) = sampleKnnRadii(l, r, lKeys, rKeys, k,
+        val KnnSample(lPts, radii, theta, _, _, _) = sampleKnnRadii(l, r, lKeys, rKeys, k,
           cap = graft.GraftConf.sampleCap(spark), quantile = quantile,
           safety = graft.GraftConf.knnSafety(spark))
-        gridRetryThenNaive(starved, r, lKeys, rKeys, k, leftId, tieBreak,
+        gridRetryThenNaive(starved, nStarved, r, lKeys, rKeys, k, leftId, tieBreak,
           theta, retryCellThetas(lPts, radii, quantile, theta))
-      }
-    ranked.unionByName(fallback)
+      })
   }
 
   /** Per-cell refinement of the sampled kNN radius: returns the global
@@ -1085,12 +1082,13 @@ object SpatialOps {
     * cell's theta. */
   /** The kNN joins' plan-build statistics: the left sample, each sampled
     * point's exact, safety'd kth-NN radius against the full right side,
-    * the global quantile `theta`, the right side's exact row count and
-    * its uniform sample (ascending priority, so a prefix is a smaller
-    * uniform sample). */
+    * the global quantile `theta`, the left side's exact row count (null
+    * keys included: the starved count is `nLeft` minus the satisfied),
+    * the right side's exact non-null row count and its uniform sample
+    * (ascending priority, so a prefix is a smaller uniform sample). */
   private[operators] final case class KnnSample(
       lPts: Array[Array[Double]], radii: Array[Double], theta: Double,
-      nRight: Long, rPts: Array[Array[Double]])
+      nLeft: Long, nRight: Long, rPts: Array[Array[Double]])
 
   /** [[KnnSample]] from TWO stats passes ([[statsPass]]): the left, then
     * the right carrying the left sample as probes — the shared front
@@ -1106,7 +1104,8 @@ object SpatialOps {
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
   ): KnnSample = {
-    val lPts = pointStats(l, lKeys, cap).sample
+    val left = pointStats(l, lKeys, cap)
+    val lPts = left.sample
     // Radii are EXACT: the right side's stats pass carries the left
     // sample as probes, so each sampled left's kth-NN distance comes
     // from the FULL right side in the same scan that counts and samples
@@ -1126,7 +1125,8 @@ object SpatialOps {
     val right = pointStats(r, rKeys, cap, probes = lPts, k = k)
     require(right.count > 0, "kNN join: right side is empty")
     // empty left: any radius yields the correct empty result downstream
-    if (lPts.isEmpty) return KnnSample(Array.empty, Array.empty, 1e-9, right.count, right.sample)
+    if (lPts.isEmpty)
+      return KnnSample(Array.empty, Array.empty, 1e-9, left.allRows, right.count, right.sample)
     // Volume-calibrated safety (guide §2.3 shuffle fewer bytes): the
     // safety margin exists to cover unsampled lefts whose kth radius
     // exceeds the sampled quantile, and what it costs downstream is
@@ -1143,7 +1143,8 @@ object SpatialOps {
       if (lKeys.length <= 2) safety
       else math.pow(safety, 2.0 / lKeys.length)
     val radii = right.kth.map(d => math.max(d * effSafety, 1e-9))
-    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), right.count, right.sample)
+    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), left.allRows, right.count,
+      right.sample)
   }
 
   /** Insert `x` into the ascending k-smallest array `best` (slots not
@@ -1439,7 +1440,7 @@ object SpatialOps {
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
   ): (Double, Map[Seq[Long], Double]) = {
-    val KnnSample(lPts, radii, theta, _, _) =
+    val KnnSample(lPts, radii, theta, _, _, _) =
       sampleKnnRadii(l, r, lKeys, rKeys, k, cap, quantile, safety)
     if (lPts.isEmpty) return (theta, Map.empty)
     val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
@@ -1596,10 +1597,11 @@ object SpatialOps {
     * 160 s 2-D 100x pivot join, re-running the candidate-checkpoint
     * aggregation 100 times. The left-outer + null-filter form is
     * semantically identical when `ids` is key-unique (every satisfied-id
-    * frame here is a groupBy output), does not match the pushdown rule,
-    * and plans as ONE shuffle-hash join however many legs the left side
-    * has (the marks side is hinted: its static size estimate comes from
-    * an ExistingRDD and must never elect a table-sized broadcast). */
+    * frame here holds one rank-1 row per left), does not match the
+    * pushdown rule, and plans as ONE shuffle-hash join however many legs
+    * the left side has (the marks side is hinted: its static size
+    * estimate comes from an ExistingRDD and must never elect a
+    * table-sized broadcast). */
   private[graft] def minusByKey(l: DataFrame, ids: DataFrame,
                                     key: String): DataFrame =
     l.join(
@@ -1609,110 +1611,109 @@ object SpatialOps {
       .filter(col("__graft_sat").isNull)
       .drop("__graft_sat")
 
-  /** Windowed top-k with a shared-exchange satisfied/starved split.
-    * The candidate set is explicitly hash-partitioned on `leftId` ONCE:
-    * the top-k window, the per-left candidate count, and every
-    * downstream branch (semi-join, anti-join, retry) all sit on that
-    * one exchange, which ReuseExchange/AQE dedups across the final
-    * union's branches — without it, each branch re-executed the whole
-    * candidate pipeline, and at a 10x slice that re-execution (not the
-    * candidate work itself) dominated the join. The >= k test counts
-    * candidates BEFORE the rank filter (equivalent, since the rank
-    * limit only drops rows past k), so the count path is a cheap
-    * aggregate and the rank filter stays a WindowGroupLimit.
-    * Returns (top-k rows of satisfied lefts, satisfied left ids).
-    * `keepDist` keeps `distCol` in the kept rows — required when the
-    * caller's output projection references the distance (the vector
-    * join exposes it as `l2`); the default drops it, matching the
-    * spatial verbs whose contract is exactly left++right columns.
-    * `materialize` checkpoints the shared exchange EAGERLY (one local
-    * checkpoint; partitioning survives, so the window and the count
-    * agg still run shuffle-free on top). The verbs' count-routed
-    * fallback executes a job at build time; without materialization
-    * that job ran the whole candidate phase once at build and AGAIN at
-    * query time (ReuseExchange only dedups within one execution) —
-    * the r7 sf0.1 regression on the b5 bench family (+0.7..2.7 s).
-    * With it, build pays the candidate phase once and every later
-    * consumer — satisfied branch, anti-join, retry, the query itself —
-    * reads the checkpointed blocks. Retry-phase splits skip it: they
-    * run inside a single execution with no build-time count on top. */
-  private[operators] def topKWithCount(
+  /** A counted per-left top-k: see [[topKCounted]]. */
+  private[operators] final case class TopK(rows: DataFrame, ids: DataFrame,
+                                           nSatisfied: Long)
+
+  private val SatisfiedMetric = "__graft_satisfied"
+
+  /** Per-left top-k of a candidate set, checkpointed and counted in ONE
+    * job: `rows` (the top-k rows of every satisfied left — one with >= k
+    * candidates), `ids` (those lefts) and `nSatisfied` (how many there
+    * are). The candidate set is hash-partitioned on `leftId` once; the
+    * rank and the per-left candidate count are one window over that
+    * exchange (the count over the full frame counts candidates BEFORE
+    * the rank filter), and the checkpoint holds only the kept rows.
+    * `rows` and `ids` are filters over the checkpoint, so the build-time
+    * job runs the candidate phase exactly once and every later consumer
+    * — kept rows, starved split, the query itself — reads its blocks.
+    * `nSatisfied` is observed on the kept rows of rank 1 by that same
+    * job (`localCheckpoint` runs as an SQL action, so the observed
+    * metric arrives with it): the starved count is the input's row count
+    * minus it, with no job of its own. `keepDist` keeps `distCol` in
+    * `rows` — required when the caller's output projection references
+    * the distance (the vector join exposes it as `l2`); the default
+    * drops it, matching the spatial verbs whose contract is exactly
+    * left++right columns. */
+  private[operators] def topKCounted(
       cand: DataFrame, leftId: String, k: Int, tieBreak: Seq[String],
-      distCol: String = DIST, keepDist: Boolean = false,
-      materialize: Boolean = false): (DataFrame, DataFrame) = {
-    val shared0 = cand.repartition(col(leftId))
-    val shared = if (materialize) shared0.localCheckpoint() else shared0
-    val ids = shared.groupBy(col(leftId)).agg(count(lit(1)).as("__graft_nc"))
-      .filter(col("__graft_nc") >= k).select(col(leftId))
+      distCol: String = DIST, keepDist: Boolean = false): TopK = {
     val w = Window.partitionBy(col(leftId))
       .orderBy((col(distCol) +: tieBreak.map(col)).map(_.asc): _*)
-    val kept0 = shared.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") <= k)
-      .join(ids, Seq(leftId), "left_semi")
-      .drop("__graft_rn")
-    (if (keepDist) kept0 else kept0.drop(distCol), ids)
+    val rn = col("__graft_rn")
+    val observed = cand.repartition(col(leftId))
+      .withColumn("__graft_rn", row_number().over(w))
+      .withColumn("__graft_nc", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(rn <= k && col("__graft_nc") >= k)
+      .drop("__graft_nc")
+      .observe(SatisfiedMetric, count(when(rn === 1, lit(1))).as("n"))
+    val kept = observed.localCheckpoint()
+    val n = observed.queryExecution.observedMetrics.getOrElse(SatisfiedMetric,
+      throw new IllegalStateException(
+        s"kNN top-k checkpoint reported no $SatisfiedMetric metric")).getLong(0)
+    val rows = kept.drop("__graft_rn")
+    TopK(if (keepDist) rows else rows.drop(distCol),
+      kept.filter(rn === 1).select(col(leftId)), n)
   }
 
-  /** Materialize the starved set (one EAGER local checkpoint — blocks
-    * are shared by every consuming branch and auto-cleaned with the
-    * RDD; without materialization each branch re-executed the whole
-    * candidate pipeline, which dominated the join at a 10x slice) and
-    * route the fallback on the ACTUAL starved count (VERDICT r6 #4):
-    *
-    *  - `<= retryThreshold` rows (the designed <= ~5% case): straight
-    *    to the exact cross-window — its pair count is bounded by
-    *    threshold * |right|, and a retry would only add a pass (under
-    *    skew the stubborn starved lefts are exactly the ones whose
-    *    radius estimate is off by MORE than 2x, so the retry rarely
-    *    rescues them — measured +2 s of pure overhead at sf0.1);
-    *  - above it (adversarial estimate failure — mass starvation from
-    *    an unlucky sample): the bounded doubled-theta grid retry first,
-    *    so only rows still starved at 2x pay the cross plan.
-    *
-    * The count makes the verb eager at build time, but the candidate
-    * exchange is materialized upstream (topKWithCount materialize) —
-    * this job and every query-time branch read those blocks, so the
-    * candidate phase itself runs exactly once across build + query. */
-  private[operators] def starvedFallback(
-      starved0: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
-      k: Int, leftId: String, tieBreak: Seq[String], theta: Double,
-      cellThetas2: Map[Seq[Long], Double], retryThreshold: Long,
-      rightCount: Long = -1L): DataFrame = {
-    val starved = starved0.localCheckpoint()
-    val nStarved = starved.count()
-    // pair-volume gate, same rationale as pivotCellKnn's: direct-naive
-    // costs starved · |right| window pairs, so the count-only threshold
-    // alone hides a quadratic bomb on huge right sides
-    val directNaive = nStarved <= retryThreshold && (rightCount < 0L ||
-      nStarved <= graft.GraftConf.knnNaivePairBudget(rt.sparkSession) /
-        math.max(rightCount, 1L))
-    if (directNaive)
-      new DatasetSpatialOps(starved).knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak)
-    else
-      gridRetryThenNaive(starved, rt, lKeys, rKeys, k, leftId, tieBreak,
-        theta, cellThetas2)
+  /** `kept` plus `fallback`, the rows of `nStarved` starved lefts —
+    * `kept` alone when none is starved, so no fallback plan is built
+    * over an empty set. */
+  private[operators] def withStarved(kept: DataFrame, nStarved: Long)(
+      fallback: => DataFrame): DataFrame = {
+    require(nStarved >= 0,
+      s"kNN join: $nStarved starved lefts (a left input that changed between passes?)")
+    if (nStarved == 0) kept else kept.unionByName(fallback)
   }
 
-  /** Bounded retry for starved lefts before the cross-window plan
-    * (VERDICT r6 #4): one grid pass at DOUBLED per-cell thetas — the
-    * retry keeps the per-cell skew discipline via [[retryCellThetas]];
-    * with only the global 2*theta a dense cluster's cells filter at the
-    * sparse-region-sized radius and the candidate set detonates — then
-    * the exact cross-window only for the rows that stay starved at 2x.
-    * Exactness: every per-cell radius is capped at the grid side
-    * 2*theta, so the 3^d neighborhood covers every filter ball — a left
-    * with >= k candidates here provably has its true k nearest among
-    * them, same argument as the main grid phase. */
+  /** The starved-left route every kNN join shares: direct to the exact
+    * cross-window when the starved set is small (the designed <= ~5%
+    * case — a retry would only add a pass: under skew the stubborn
+    * starved lefts are exactly the ones whose radius estimate is off by
+    * MORE than 2x, measured +2 s of pure overhead at sf0.1), else the
+    * bounded doubled-theta retry first (adversarial estimate failure —
+    * mass starvation from an unlucky sample), so only rows still starved
+    * at 2x pay the cross plan. Direct-naive is gated on PAIR VOLUME, not
+    * starved count alone: the exact fallback costs starved · |right|
+    * window pairs, so a "small" starved set against a huge right side is
+    * a hidden quadratic — 1000 starved lefts (under the 1024 threshold)
+    * against the 1.5M-row d=4 100x slice put a 1.5e9-pair cross at
+    * ~170 s where the retry rescues them in one cheap candidate pass.
+    * Unknown `rightCount` (-1) keeps the count-only gate. `starved` is
+    * lazy: the direct route reads it once, inside the query; only the
+    * retry, which reads it three times, checkpoints it. */
+  private[operators] def routeStarved(
+      kept: DataFrame, nStarved: Long, starved: => DataFrame,
+      retryThreshold: Long, rightCount: Long)(
+      naive: DataFrame => DataFrame, retry: DataFrame => DataFrame): DataFrame =
+    withStarved(kept, nStarved) {
+      val direct = nStarved <= retryThreshold && (rightCount < 0L ||
+        nStarved <= graft.GraftConf.knnNaivePairBudget(kept.sparkSession) /
+          math.max(rightCount, 1L))
+      if (direct) naive(starved) else retry(starved.localCheckpoint())
+    }
+
+  /** Bounded retry for `nStarved` checkpointed starved lefts before the
+    * cross-window plan (VERDICT r6 #4): one grid pass at DOUBLED per-cell
+    * thetas — the retry keeps the per-cell skew discipline via
+    * [[retryCellThetas]]; with only the global 2*theta a dense cluster's
+    * cells filter at the sparse-region-sized radius and the candidate set
+    * detonates — then the exact cross-window only for the rows that stay
+    * starved at 2x. Exactness: every per-cell radius is capped at the
+    * grid side 2*theta, so the 3^d neighborhood covers every filter ball
+    * — a left with >= k candidates here provably has its true k nearest
+    * among them, same argument as the main grid phase. */
   private[operators] def gridRetryThenNaive(
-      starved: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
-      k: Int, leftId: String, tieBreak: Seq[String], theta: Double,
+      starved: DataFrame, nStarved: Long, rt: DataFrame, lKeys: Seq[String],
+      rKeys: Seq[String], k: Int, leftId: String, tieBreak: Seq[String], theta: Double,
       cellThetas2: Map[Seq[Long], Double]): DataFrame = {
     val cand = gridCandidates(starved, rt, lKeys, rKeys, 2 * theta, cellThetas2)
       .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
-    val (ok, okIds) = topKWithCount(cand, leftId, k, tieBreak)
-    val still = minusByKey(starved, okIds, leftId)
-    ok.unionByName(
-      new DatasetSpatialOps(still).knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak))
+    val top = topKCounted(cand, leftId, k, tieBreak)
+    withStarved(top.rows, nStarved - top.nSatisfied)(
+      new DatasetSpatialOps(minusByKey(starved, top.ids, leftId))
+        .knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak))
   }
 
   /** Two-level pivot layout for the Voronoi kNN joins' p ∝ n scale
@@ -1859,143 +1860,114 @@ object SpatialOps {
         vecIsFloat)
     }
     def thetaOf(cell1Based: Int): Double = cellThetas.getOrElse(cell1Based, theta)
-    val thetaArr = lit((1 to numPivots).map(thetaOf).toArray)
-    // null-keyed lefts get a null cell: dropped from the candidate pass
-    // here (a null cell would NPE the bound collection), landing in the
-    // starved set where the fallback applies its own null semantics
-    val lAug = l
+    // each left's nearest pivot cell and its distance to that pivot;
+    // null-keyed lefts get a null cell
+    def assigned(left: DataFrame): DataFrame = left
       .withColumn("__graft_asgn", argminCol(lVec))
       .withColumn("__graft_cell", col("__graft_asgn.cell"))
-      .filter(col("__graft_cell").isNotNull)
       .withColumn("__graft_dl", col("__graft_asgn.dist"))
-      .withColumn("__graft_ctheta", element_at(thetaArr, col("__graft_cell")))
       .drop("__graft_asgn")
-
-    // per-cell radius bound (numPivots rows to the driver)
-    val maxDl = lAug.groupBy(col("__graft_cell"))
-      .agg(max(col("__graft_dl")).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    // empty left -> no cells; the fallback IS the correct empty result
-    if (maxDl.isEmpty) return fallback(l)
-
-    // right rows fan out only to admitting cells; each cell's admission
+    // per-cell radius bound (numPivots rows to the driver) and, from the
+    // same aggregate, the left's row count: the null cell's group counts
+    // the null-keyed lefts, which the candidate pass drops
+    def cellBounds(lAsg: DataFrame): (Map[Int, Double], Long) = {
+      val rows = lAsg.groupBy(col("__graft_cell"))
+        .agg(max(col("__graft_dl")), count(lit(1))).collect()
+      (rows.filterNot(_.isNullAt(0)).map(r => r.getInt(0) -> r.getDouble(1)).toMap,
+        rows.map(_.getLong(2)).sum)
+    }
+    // One candidate pass of `left` at per-cell thetas `mul`·theta_i,
+    // returning its hydrated top-k rows and the counted split.
+    //
+    // Right rows fan out only to admitting cells; each cell's admission
     // band uses ITS radius, and a left-less cell's -inf band admits
-    // nothing (skipped inside the kernel, its rows never materialized)
-    val bands = Array.tabulate(numPivots)(i =>
-      maxDl.get(i + 1).map(_ + thetaOf(i + 1)).getOrElse(Double.NegativeInfinity))
+    // nothing (skipped inside the kernel, its rows never materialized).
     // NARROW-PAIR top-k: the admitted (right-row × cell) replicas are
     // eagerly checkpointed with a synthetic row id so the top-k winners
     // can HYDRATE their right payload afterwards — the candidate pairs
-    // then ride the top-k machinery (repartition + checkpoint + count +
-    // window sort) as NARROW (lId, __graft_rrow, dist, tieBreak) rows
-    // instead of full left+right width. Measured on the 2-D 100x slice:
-    // the wide 35M-pair exchange + checkpoint + sort was the join's
-    // dominant term (the candidate VOLUME was already near-optimal at
-    // ~23/left) — payload width, not pair count, was the asymptote's
-    // constant. The checkpoint (size ~admission-factor·|right|) also
-    // pins monotonically_increasing_id, which is only stable once
+    // then ride the top-k machinery (repartition + window + checkpoint)
+    // as NARROW (lId, __graft_rrow, dist, tieBreak) rows instead of full
+    // left+right width. Measured on the 2-D 100x slice: the wide
+    // 35M-pair exchange + checkpoint + sort was the join's dominant term
+    // (the candidate VOLUME was already near-optimal at ~23/left) —
+    // payload width, not pair count, was the asymptote's constant. The
+    // checkpoint (size ~admission-factor·|right|) also pins
+    // monotonically_increasing_id, which is only stable once
     // materialized.
-    val admitted = rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
-      .withColumn("__graft_rrow", monotonically_increasing_id())
-      .localCheckpoint()
-    val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
-      .withColumn("__graft_d", exactDist)
-      .filter(col("__graft_d") <= col("__graft_ctheta"))
-    // wide join output narrows INSIDE its stage (project before the
-    // exchange — whole-stage codegen never materializes wide pairs)
-    val candNarrow = cand.select(
-      col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*)
-    val (keptN, keptIds) = topKWithCount(candNarrow, lId, k, tieBreak,
-      distCol = "__graft_d", keepDist = true, materialize = true)
-    // hydrate the k·|left| winners: left payload by the (unique) lId,
-    // right payload by the checkpointed replica id — two bounded
-    // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
-    // are pinned to shuffle-hash: the payload sides are TABLE-sized,
-    // and Spark's static size estimate of a many-leg union of pruned
-    // parquet scans can undershoot the broadcast threshold —
-    // measured on the d=4 100x slice, the planner broadcast the full
-    // 1.5M-row left side and the driver OOM'd building the hashed
-    // relation. The hinted side is the per-key-unique build side
-    // (~|side|/parts rows per task); no sort, no broadcast,
-    // spill-safe.
-    // keepDist: outCols may reference __graft_d (the vec join's `l2`)
-    val satisfied = keptN
-      .select(col(lId), col("__graft_rrow"), col("__graft_d"))
-      .join(l.hint("shuffle_hash"), Seq(lId))
-      .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
-      .select(outCols: _*)
-    // eager checkpoint + count-routed fallback — same discipline as
-    // starvedFallback: a small starved set (designed case) goes
-    // straight to the caller's exact fallback (a retry would only add
-    // a pass); a LARGE one (adversarial estimate failure) takes the
-    // bounded doubled-theta retry below first
-    val starved = minusByKey(l, keptIds, lId).localCheckpoint()
-    val nStarved = starved.count()
-    // Direct-naive is gated on PAIR VOLUME, not starved count alone:
-    // the exact fallback costs starved · |right| window pairs, so a
-    // "small" starved set against a huge right side is a hidden
-    // quadratic bomb — 1000 starved lefts (under the 1024 threshold)
-    // against the 1.5M-row d=4 100x slice put a 1.5e9-pair cross at
-    // ~170 s where the doubled-theta retry rescues them in one cheap
-    // candidate pass. Unknown rightCount (-1) keeps the count-only
-    // routing.
-    val directNaive = nStarved <= retryThreshold && (rightCount < 0L ||
-      nStarved <= graft.GraftConf.knnNaivePairBudget(l.sparkSession) /
-        math.max(rightCount, 1L))
-    if (directNaive)
-      return satisfied.unionByName(fallback(starved))
+    def pass(left: DataFrame, lAsg: DataFrame, maxDl: Map[Int, Double],
+             mul: Double): (DataFrame, TopK) = {
+      val thetaArr = lit((1 to numPivots).map(thetaOf(_) * mul).toArray)
+      val lAug = lAsg.filter(col("__graft_cell").isNotNull)
+        .withColumn("__graft_ctheta", element_at(thetaArr, col("__graft_cell")))
+      val bands = Array.tabulate(numPivots)(i =>
+        maxDl.get(i + 1).map(_ + thetaOf(i + 1) * mul).getOrElse(Double.NegativeInfinity))
+      val admitted = rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
+        .withColumn("__graft_rrow", monotonically_increasing_id())
+        .localCheckpoint()
+      val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
+        .withColumn("__graft_d", exactDist)
+        .filter(col("__graft_d") <= col("__graft_ctheta"))
+      // wide join output narrows INSIDE its stage (project before the
+      // exchange — whole-stage codegen never materializes wide pairs);
+      // keepDist: outCols may reference __graft_d (the vec join's `l2`)
+      val top = topKCounted(
+        cand.select(col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*),
+        lId, k, tieBreak, distCol = "__graft_d", keepDist = true)
+      // hydrate the k·|left| winners: left payload by the (unique) lId,
+      // right payload by the checkpointed replica id — two bounded
+      // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
+      // are pinned to shuffle-hash: the payload sides are TABLE-sized,
+      // and Spark's static size estimate of a many-leg union of pruned
+      // parquet scans can undershoot the broadcast threshold —
+      // measured on the d=4 100x slice, the planner broadcast the full
+      // 1.5M-row left side and the driver OOM'd building the hashed
+      // relation. The hinted side is the per-key-unique build side
+      // (~|side|/parts rows per task); no sort, no broadcast,
+      // spill-safe.
+      val hydrated = top.rows
+        .select(col(lId), col("__graft_rrow"), col("__graft_d"))
+        .join(left.hint("shuffle_hash"), Seq(lId))
+        .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
+        .select(outCols: _*)
+      (hydrated, top)
+    }
 
-    // Bounded retry before the cross-window fallback (VERDICT r6 #4):
-    // one more candidate pass over the starved lefts at DOUBLED
-    // per-cell thetas. Every plan-time piece (pivot array, maxDl
-    // bounds — maxDl over the full left upper-bounds the starved
-    // subset) is reused; it is metric-generic, so the vector kNN join
-    // gets the same cap.
-    // Exactness: a right within 2*theta_i of a starved left in cell i
-    // has d(r, p_i) <= maxDl_i + 2*theta_i by the triangle inequality,
-    // so the doubled band admits every such right — >= k candidates
-    // here provably contain the true k nearest.
-    val thetaArr2 = lit((1 to numPivots).map(thetaOf(_) * 2).toArray)
-    val lAug2 = starved
-      .withColumn("__graft_asgn", argminCol(lVec))
-      .withColumn("__graft_cell", col("__graft_asgn.cell"))
-      .filter(col("__graft_cell").isNotNull)
-      .withColumn("__graft_dl", col("__graft_asgn.dist"))
-      .withColumn("__graft_ctheta", element_at(thetaArr2, col("__graft_cell")))
-      .drop("__graft_asgn")
-    // retry bands from the STARVED lefts' own cells (one tiny agg over
-    // the checkpointed starved set): the full-left maxDl upper-bounds
-    // correctly but admits rights into every populated cell — at the
-    // 100x slice the doubled bands over all cells re-replicated most of
-    // the right side to serve a few hundred starved rows. A right
-    // serving starved left l in cell i satisfies
-    // d(r, p_i) <= d(l, p_i) + 2·theta_i <= maxDl2_i + 2·theta_i, so
-    // starved-only bands stay exact; starved-free cells go -inf (no
-    // replicas materialize).
-    val maxDl2 = lAug2.groupBy(col("__graft_cell"))
-      .agg(max(col("__graft_dl")).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val bands2 = Array.tabulate(numPivots)(i =>
-      maxDl2.get(i + 1).map(_ + thetaOf(i + 1) * 2).getOrElse(Double.NegativeInfinity))
-    val admitted2 = rt
-      .withColumn("__graft_rcell", explode(admittedCol(rVec, bands2)))
-      .withColumn("__graft_rrow", monotonically_increasing_id())
-      .localCheckpoint()
-    val cand2 = lAug2.join(admitted2, col("__graft_cell") === col("__graft_rcell"))
-      .withColumn("__graft_d", exactDist)
-      .filter(col("__graft_d") <= col("__graft_ctheta"))
-    val cand2Narrow = cand2.select(
-      col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*)
-    val (kept2N, kept2Ids) =
-      topKWithCount(cand2Narrow, lId, k, tieBreak, distCol = "__graft_d", keepDist = true)
-    val satisfied2 = kept2N
-      .select(col(lId), col("__graft_rrow"), col("__graft_d"))
-      .join(starved.hint("shuffle_hash"), Seq(lId))
-      .join(admitted2.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
-      .select(outCols: _*)
-    val still = minusByKey(starved, kept2Ids, lId)
-
-    satisfied.unionByName(satisfied2).unionByName(fallback(still))
+    val lAsg = assigned(l)
+    val (maxDl, nLeft) = cellBounds(lAsg)
+    // empty left -> no cells; the fallback IS the correct empty result
+    if (maxDl.isEmpty) return fallback(l)
+    val (satisfied, top) = pass(l, lAsg, maxDl, 1.0)
+    val nStarved = nLeft - top.nSatisfied
+    // the shared starved route: the caller's exact fallback for a small
+    // starved set, else the bounded doubled-theta retry below first
+    routeStarved(satisfied, nStarved, minusByKey(l, top.ids, lId),
+        retryThreshold, rightCount)(fallback, starved => {
+      // Bounded retry before the cross-window fallback (VERDICT r6 #4):
+      // one more candidate pass over the starved lefts at DOUBLED
+      // per-cell thetas. The pivot array is reused; it is
+      // metric-generic, so the vector kNN join gets the same cap.
+      // Exactness: a right within 2*theta_i of a starved left in cell i
+      // has d(r, p_i) <= maxDl_i + 2*theta_i by the triangle inequality,
+      // so the doubled band admits every such right — >= k candidates
+      // here provably contain the true k nearest.
+      // Retry bands come from the STARVED lefts' own cells (one tiny agg
+      // over the checkpointed starved set): the full-left maxDl
+      // upper-bounds correctly but admits rights into every populated
+      // cell — at the 100x slice the doubled bands over all cells
+      // re-replicated most of the right side to serve a few hundred
+      // starved rows. A right serving starved left l in cell i satisfies
+      // d(r, p_i) <= d(l, p_i) + 2·theta_i <= maxDl2_i + 2·theta_i, so
+      // starved-only bands stay exact; starved-free cells go -inf (no
+      // replicas materialize).
+      val sAsg = assigned(starved)
+      val (maxDl2, _) = cellBounds(sAsg)
+      if (maxDl2.isEmpty) fallback(starved)
+      else {
+        val (satisfied2, top2) = pass(starved, sAsg, maxDl2, 2.0)
+        withStarved(satisfied2, nStarved - top2.nSatisfied)(
+          fallback(minusByKey(starved, top2.ids, lId)))
+      }
+    })
   }
 
   /** Ensure at least the cluster's default parallelism of partitions on
@@ -2210,15 +2182,17 @@ object SpatialOps {
       spans(spans.length / 2)
     }
 
-  /** One input's plan-build statistics, from ONE bounded Spark job. */
-  private[graft] final case class InputStats[T](count: Long, sample: Array[T],
-                                                kth: Array[Double])
+  /** One input's plan-build statistics, from ONE bounded Spark job:
+    * `count` rows with every key non-null, `allRows` rows in all. */
+  private[graft] final case class InputStats[T](count: Long, allRows: Long,
+                                                sample: Array[T], kth: Array[Double])
 
   /** The stats pass: every plan-build statistic of one join input from
     * a single `mapPartitionsWithIndex` + `treeAggregate` job over the
-    * null-dropped projection — many aggregates sharing one scan (LMFAO),
-    * the count-with-sample of Spark's own RangePartitioner sketch:
-    *  - `count`: the exact row count;
+    * projection — many aggregates sharing one scan (LMFAO), the
+    * count-with-sample of Spark's own RangePartitioner sketch:
+    *  - `allRows`: the exact row count; `count`: the exact count of rows
+    *    with no null key — a row with a null is counted, then skipped;
     *  - `sample`: a UNIFORM bounded sample — the `cap` rows with the
     *    smallest per-row priority, drawn per partition from a
     *    `SplittableRandom` seeded by (seed, partition index). That is the
@@ -2243,12 +2217,12 @@ object SpatialOps {
   private def statsPass[T: scala.reflect.ClassTag, P: scala.reflect.ClassTag](
       projected: DataFrame, cap: Int, seed: Long, decode: Row => T,
       probes: Array[P], k: Int, dist: (P, T) => Double): InputStats[T] = {
-    type Part = (Long, Array[(Double, T)], Array[Array[Double]])
+    type Part = (Long, Long, Array[(Double, T)], Array[Array[Double]])
     val bc = projected.sparkSession.sparkContext.broadcast(probes)
     val byPriority = Ordering.by[(Double, T), Double](_._1)
     def merge(a: Part, b: Part): Part = {
-      a._3.zip(b._3).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
-      (a._1 + b._1, (a._2 ++ b._2).sorted(byPriority).take(cap), a._3)
+      a._4.zip(b._4).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
+      (a._1 + b._1, a._2 + b._2, (a._3 ++ b._3).sorted(byPriority).take(cap), a._4)
     }
     val partials = projected.rdd.mapPartitionsWithIndex { (idx, rows) =>
       val ps = bc.value
@@ -2256,53 +2230,58 @@ object SpatialOps {
       val heap = new java.util.PriorityQueue[(Double, T)](
         math.max(cap, 1), byPriority.reverse)
       val best = Array.fill(ps.length)(Array.fill(k)(Double.MaxValue))
-      var n = 0L
+      var n, all = 0L
       rows.foreach { row =>
-        n += 1
-        val pri = rng.nextDouble()
-        val keep = cap > 0 && (heap.size < cap || pri < heap.peek._1)
-        if (keep || ps.nonEmpty) {
-          val t = decode(row)
-          if (keep) {
-            if (heap.size == cap) heap.poll()
-            heap.add((pri, t))
+        all += 1
+        if (!row.anyNull) {
+          n += 1
+          val pri = rng.nextDouble()
+          val keep = cap > 0 && (heap.size < cap || pri < heap.peek._1)
+          if (keep || ps.nonEmpty) {
+            val t = decode(row)
+            if (keep) {
+              if (heap.size == cap) heap.poll()
+              heap.add((pri, t))
+            }
+            var i = 0
+            while (i < ps.length) { mergeInto(best(i), dist(ps(i), t)); i += 1 }
           }
-          var i = 0
-          while (i < ps.length) { mergeInto(best(i), dist(ps(i), t)); i += 1 }
         }
       }
       val sample = Array.fill(heap.size)(heap.poll()).reverse
-      Iterator.single[Part]((n, sample, best))
+      Iterator.single[Part]((n, all, sample, best))
     }
-    val zero: Part = (0L, Array.empty[(Double, T)],
+    val zero: Part = (0L, 0L, Array.empty[(Double, T)],
       Array.fill(probes.length)(Array.fill(k)(Double.MaxValue)))
-    val (n, sample, best) = partials.treeAggregate(zero)(merge, merge)
+    val (n, all, sample, best) = partials.treeAggregate(zero)(merge, merge)
     bc.destroy()
-    InputStats(n, sample.map(_._2),
+    InputStats(n, all, sample.map(_._2),
       if (n == 0) Array.empty else best.map(_(math.min(k.toLong, n).toInt - 1)))
   }
 
   /** [[statsPass]] over coordinate columns cast to double (rows with a
-    * null key dropped); probes are points, distances Euclidean. */
+    * null key counted in `allRows` only); probes are points, distances
+    * Euclidean. */
   private[graft] def pointStats(df: DataFrame, keys: Seq[String], cap: Int,
                                 seed: Long = 42,
                                 probes: Array[Array[Double]] = Array.empty,
                                 k: Int = 1): InputStats[Array[Double]] = {
     val dims = keys.length
     statsPass[Array[Double], Array[Double]](
-      df.select(keys.map(c => col(c).cast("double")): _*).na.drop("any"),
+      df.select(keys.map(c => col(c).cast("double")): _*),
       cap, seed, row => Array.tabulate(dims)(row.getDouble), probes, k,
       graft.spatial.Dist.pointToPoint)
   }
 
-  /** [[statsPass]] over a ShapeCodec struct column (null shapes dropped),
+  /** [[statsPass]] over a ShapeCodec struct column (null shapes counted
+    * in `allRows` only),
     * sampled rows decoded to ADT shapes; probes are shapes, distances
     * the exact `minDist`. */
   private[graft] def shapeStats(df: DataFrame, c: String, cap: Int, seed: Long,
                                 probes: Array[graft.spatial.Shape] = Array.empty,
                                 k: Int = 1): InputStats[graft.spatial.Shape] =
     statsPass[graft.spatial.Shape, graft.spatial.Shape](
-      df.select(col(s"$c.tag"), col(s"$c.coords")).na.drop("any"), cap, seed,
+      df.select(col(s"$c.tag"), col(s"$c.coords")), cap, seed,
       row => graft.spatial.ShapeCodec.decode(row.getInt(0), row.getSeq[Double](1).toArray),
       probes, k, (p, s) => p.minDist(s))
 }

@@ -51,14 +51,15 @@ object ExplainPlans {
         Seq("cx", "cy"), Seq("sx", "sy"), 100.0, broadcastRight = true)
     }
     // The pivot joins checkpoint the admitted replicas and the narrow
-    // candidate exchange at build time, so the dump shows those as
-    // Scan ExistingRDD leaves under the windowed top-k and the hydrate
-    // joins; the argmin and admission kernels ran before the checkpoint.
-    show("knn_join_pivot (expect checkpointed narrow candidates -> windowed top-k, hydrated by shuffle-hash joins on c_custkey and __graft_rrow — no cross product outside the starved-left fallback)") {
+    // per-left top-k at build time, so the dump shows those as Scan
+    // ExistingRDD leaves under the hydrate joins; the argmin and
+    // admission kernels, the candidate exchange and the window ran
+    // before the checkpoints.
+    show("knn_join_pivot (expect the checkpointed narrow top-k hydrated by shuffle-hash joins on c_custkey and __graft_rrow — a union with the exact cross fallback only when some left is starved)") {
       customerPts(spark, d).knnJoinPivot(supplierPts(spark, d),
         Seq("cx", "cy"), Seq("sx", "sy"), 3, "c_custkey", Seq("s_suppkey"))
     }
-    show("knn_join_vec_pivot (expect the pivot shape over float vectors — checkpointed narrow candidates, windowed top-k, hydrate joins — or, where the admit-fraction gate trips, the narrow exact cross: (vec_id, embedding) x (__graft_rrow, embedding2) -> windowed top-k -> the same hydrate joins; l2 carried from __graft_d)") {
+    show("knn_join_vec_pivot (expect the pivot shape over float vectors — the checkpointed narrow top-k and its hydrate joins — or, where the admit-fraction gate trips, the narrow exact cross: (vec_id, embedding) x (__graft_rrow, embedding2) -> windowed top-k -> the same hydrate joins; l2 carried from __graft_d)") {
       val left = embeddings(spark, d).select(col("vec_id"), col("embedding"))
       val right = embeddings(spark, d).select(
         col("vec_id").as("vec_id2"), col("embedding").as("embedding2"))
@@ -524,7 +525,7 @@ object ExplainPlans {
           array(col("cx"), col("cy")).as("coords")).as("cpt"))
       boxes.shapeDistanceJoin(pts, "nbox", "cpt", 100.37)
     }
-    show("shape_knn_join (expect the theta pass as a checkpointed candidate exchange under a windowed top-k, the doubled-theta retry as a bbox-cell equi-join with windowed top-k; the only cross form is the starved-left exact fallback branch)") {
+    show("shape_knn_join (expect the theta pass's checkpointed top-k; a union with a starved-left branch only when some left is starved — the exact cross-window for a few, the doubled-theta retry's checkpointed top-k plus that cross for many)") {
       import graft.spatial.ShapeCodec
       val ncx = col("n_nationkey").cast("double") * 400.0
       val ncy = col("n_nationkey").cast("double") * 40.0

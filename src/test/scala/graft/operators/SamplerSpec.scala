@@ -142,6 +142,7 @@ class SamplerSpec extends SparkSpec {
     for (cap <- Seq(0, 10, 5000)) {
       val st = SpatialOps.pointStats(df, Seq("x", "y"), cap)
       assert(st.count == nonNull, s"cap $cap")
+      assert(st.allRows == 1000, s"cap $cap: null-key rows count in allRows")
       assert(st.sample.length == math.min(cap, nonNull), s"cap $cap")
       assert(st.sample.forall(p => !p(0).isNaN && p(1) == 2 * p(0)))
     }
@@ -248,8 +249,8 @@ class SamplerSpec extends SparkSpec {
         (col("id") * 53 % 89).cast("double").as(y))
     val (l, r) = (pts(600, "lid", "lx", "ly"), pts(800, "rid", "rx", "ry"))
     val (lk, rk) = (Seq("lx", "ly"), Seq("rx", "ry"))
-    assert(jobsOf(l.knnJoin(r, lk, rk, 3, "lid", Seq("rid"))) == 14)
-    assert(jobsOf(l.knnJoinPivot(r, lk, rk, 3, "lid", Seq("rid"))) == 13)
+    val grid = jobsOf(l.knnJoin(r, lk, rk, 3, "lid", Seq("rid")))
+    val pivot = jobsOf(l.knnJoinPivot(r, lk, rk, 3, "lid", Seq("rid")))
     val boxes = spark.range(0, 300, 1, 2).as[Long].map { i =>
       val (tag, c) = ShapeCodec.encode(MBR(Point(i * 37 % 101 * 1.0, i * 53 % 89 * 1.0),
         Point(i * 37 % 101 + 2.0, i * 53 % 89 + 3.0)))
@@ -258,8 +259,9 @@ class SamplerSpec extends SparkSpec {
       .select(col("lid"), struct(col("tag"), col("coords")).as("lshape"))
     val shapePts = r.select(col("rid"), struct(lit(ShapeCodec.TagPoint).as("tag"),
       array(col("rx"), col("ry")).as("coords")).as("rshape"))
-    assert(jobsOf(boxes.shapeKnnJoin(shapePts, "lshape", "rshape", 3, "lid",
-      Seq("rid"))) == 12)
+    val shape = jobsOf(boxes.shapeKnnJoin(shapePts, "lshape", "rshape", 3, "lid",
+      Seq("rid")))
+    assert((grid, pivot, shape) == (9, 8, 5))
   }
 
   test("perCellQuantile: minSamples gates sparse-sampled cells, default keeps all") {

@@ -114,17 +114,16 @@ class SpatialOpsSpec extends SparkSpec {
       val tuned = l.knnJoinAuto(r, Seq("lx", "ly"), Seq("rx", "ry"),
         2, "lid", "rid", Seq("rid"))
       assert(tuned.count() === 100) // exactness preserved (fallback)
-      // theta = 2nd-NN(50) * quantile-pick * safety(0.05) = 2.5. The
-      // phase-1 grid divisor is hidden behind the materialized
-      // candidate checkpoint (LogicalRDD), but with retryThreshold 0
-      // the doubled-theta retry branch is built lazily into the plan —
+      // theta = 2nd-NN(50) * quantile-pick * safety(0.05) = 2.5. Both
+      // grid passes sit behind their top-k checkpoints, so the witness
+      // is the plan the retry's checkpoint ran with retryThreshold 0:
       // its grid divisor `floor(<key> / (2*theta))` = `/ 5.0)` is a
       // fragment specific enough that it can only come from the
       // conf-driven theta (sampleCap, quantile, AND safety plumbed)
       spark.conf.set(graft.GraftConf.KnnRetryThreshold, "0")
-      val retried = l.knnJoinAuto(r, Seq("lx", "ly"), Seq("rx", "ry"),
-        2, "lid", "rid", Seq("rid"))
-      assert(retried.queryExecution.optimizedPlan.toString.contains("/ 5.0)"),
+      val (retried, plans) = withBuildPlans(l.knnJoinAuto(r, Seq("lx", "ly"),
+        Seq("rx", "ry"), 2, "lid", "rid", Seq("rid")))
+      assert(plans.exists(_.contains("/ 5.0)")),
         "expected conf-driven doubled theta 5.0 as the retry grid divisor")
       assert(retried.count() === 100)
     } finally {
@@ -245,12 +244,108 @@ class SpatialOpsSpec extends SparkSpec {
     assert(got === want)
   }
 
+  // Route witnesses for the starved-left tests: the distinct
+  // checkpoints a kNN join's plan reads (each top-k and pivot admission
+  // pass is one; the retry route adds the starved set and its own
+  // passes) and whether a fallback branch was unioned in at all.
+  private def checkpoints(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+  }.distinct.size
+  private def hasFallback(df: DataFrame): Boolean = df.queryExecution.analyzed.collect {
+    case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+  }.nonEmpty
+  // every column of every row, as a sorted multiset
+  private def rowsOf(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  // A kNN verb under test: its route through `run(l, r, k, quantile,
+  // safety, retryThreshold)`, its naive twin, and how many checkpoints
+  // its main phase reads.
+  private case class KnnVerb(name: String, dims: Int, shapes: Boolean, base: Int,
+      run: (DataFrame, DataFrame, Int, Double, Double, Long) => DataFrame)
+
+  // Seeded lattice inputs (integer coordinates, so k-th distances tie
+  // and the right-id tie-break decides), optionally with an outlier
+  // left, null-key lefts, or shapes (left boxes, right points).
+  private def knnInputs(v: KnnVerb, seed: Int, nL: Int, nR: Int,
+                        outlier: Boolean, nulls: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.spatial.{MBR, Point, ShapeCodec}
+    val rng = new scala.util.Random(seed)
+    val span = if (v.dims <= 2) 40 else 8
+    def pt() = Array.fill(v.dims)(rng.nextInt(span).toDouble)
+    val lPts: Seq[Option[Array[Double]]] = Seq.fill(nL)(Some(pt())) ++
+      (if (outlier) Seq(Some(Array.fill(v.dims)(1e4))) else Nil) ++ Seq.fill(nulls)(None)
+    val rPts = Seq.fill(nR)(pt())
+    if (v.shapes) {
+      val shp = StructType(Seq(StructField("tag", IntegerType),
+        StructField("coords", ArrayType(DoubleType))))
+      def enc(s: graft.spatial.Shape) = { val (t, c) = ShapeCodec.encode(s); Row(t, c.toSeq) }
+      val l = spark.createDataFrame(java.util.Arrays.asList(lPts.zipWithIndex.map {
+        case (p, i) => Row(i.toLong, p.map(a => enc(MBR(Point(a(0), a(1)),
+          Point(a(0) + i % 3, a(1) + i % 2)))).orNull)
+      }: _*), StructType(Seq(StructField("lid", LongType), StructField("lshape", shp))))
+      val r = spark.createDataFrame(java.util.Arrays.asList(rPts.zipWithIndex.map {
+        case (p, i) => Row(1000L + i, enc(Point(p(0), p(1))))
+      }: _*), StructType(Seq(StructField("rid", LongType), StructField("rshape", shp))))
+      (l, r)
+    } else {
+      def schema(id: String, p: String) = StructType(StructField(id, LongType) +:
+        (0 until v.dims).map(d => StructField(s"$p$d", DoubleType)))
+      val l = spark.createDataFrame(java.util.Arrays.asList(lPts.zipWithIndex.map {
+        case (p, i) => Row.fromSeq(i.toLong +: p.map(_.toSeq.map(Double.box))
+          .getOrElse(Seq.fill(v.dims)(null)))
+      }: _*), schema("lid", "lx"))
+      val r = spark.createDataFrame(java.util.Arrays.asList(rPts.zipWithIndex.map {
+        case (p, i) => Row.fromSeq((1000L + i) +: p.toSeq)
+      }: _*), schema("rid", "rx"))
+      (l, r)
+    }
+  }
+
+  private def naiveTwin(v: KnnVerb, l: DataFrame, r: DataFrame, k: Int): DataFrame =
+    if (v.shapes) {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("lid")).orderBy(col("__d").asc, col("rid").asc)
+      l.crossJoin(r).withColumn("__d", graft.functions.stDistance(col("lshape"), col("rshape")))
+        .filter(col("__d").isNotNull)
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+        .drop("__d", "__rn")
+    } else l.knnJoinNaive(r, (0 until v.dims).map(d => s"lx$d"),
+      (0 until v.dims).map(d => s"rx$d"), k, "lid", Seq("rid"))
+
+  private lazy val knnVerbs: Seq[KnnVerb] = {
+    def keys(p: String, d: Int) = (0 until d).map(i => s"$p$i")
+    Seq(
+      KnnVerb("grid", 2, shapes = false, base = 1, (l, r, k, q, s, t) =>
+        l.knnJoin(r, keys("lx", 2), keys("rx", 2), k, "lid", Seq("rid"),
+          quantile = q, safety = s, retryThreshold = t)),
+      KnnVerb("pivot flat d=4", 4, shapes = false, base = 2, (l, r, k, q, s, t) =>
+        l.knnJoinPivot(r, keys("lx", 4), keys("rx", 4), k, "lid", Seq("rid"),
+          numPivots = 8, quantile = q, safety = s, retryThreshold = t)),
+      // cell size 1: pTarget = |right| > HierPivotThreshold
+      KnnVerb("pivot hierarchical", 2, shapes = false, base = 2, (l, r, k, q, s, t) => {
+        spark.conf.set(graft.GraftConf.KnnPivotCellSize, "1")
+        try l.knnJoinPivot(r, keys("lx", 2), keys("rx", 2), k, "lid", Seq("rid"),
+          quantile = q, safety = s, retryThreshold = t)
+        finally spark.conf.unset(graft.GraftConf.KnnPivotCellSize)
+      }),
+      KnnVerb("shape", 2, shapes = true, base = 1, (l, r, k, q, s, t) => {
+        spark.conf.set(graft.GraftConf.KnnRetryThreshold, t.toString)
+        try l.shapeKnnJoin(r, "lshape", "rshape", k, "lid", Seq("rid"),
+          quantile = q, safety = s)
+        finally spark.conf.unset(graft.GraftConf.KnnRetryThreshold)
+      }))
+  }
+
   test("starved routing: naive-pair budget forces the doubled-theta retry, results exact") {
     // tiny safety starves most lefts; budget=1 makes ANY starved count
     // exceed the pair budget, so the route MUST take the doubled-theta
     // retry (the 100x defense: starved · |right| crosses are a hidden
     // quadratic, r16) — and the result must still equal the oracle
-    // through retry + residual naive, for both the pivot and grid verbs
+    // through retry + residual naive, for every verb: grid, flat and
+    // hierarchical pivot, shape
     spark.conf.set(graft.GraftConf.KnnNaivePairBudget, "1")
     try {
       val want = pairSet(cust.knnJoinNaive(supp, Seq("cx", "cy"), Seq("sx", "sy"),
@@ -263,7 +358,60 @@ class SpatialOpsSpec extends SparkSpec {
         k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey"),
         safety = 0.2))
       assert(grid === want)
+      val nR = SpatialOps.HierPivotThreshold + 14
+      for (v <- knnVerbs) {
+        val (l, r) = knnInputs(v, 8, 60, nR, false, 0)
+        val got = v.run(l, r, 3, 0.95, 0.2, 1024L)
+        val twin = naiveTwin(v, l, r, 3)
+        assert(rowsOf(got, twin.columns) == rowsOf(twin, twin.columns), v.name)
+        assert(checkpoints(got) > v.base, s"${v.name} never retried")
+      }
     } finally spark.conf.unset(graft.GraftConf.KnnNaivePairBudget)
+  }
+
+  test("starved routing: every exact kNN verb equals its naive twin on each route") {
+    val nR = SpatialOps.HierPivotThreshold + 14
+    for (v <- knnVerbs) {
+      // (case, inputs, k, quantile, safety, retryThreshold, expected route)
+      val cases = Seq(
+        // quantile 1 over a whole-left sample: theta covers every left
+        ("none starved", knnInputs(v, 1, 60, nR, false, 0), 3, 1.0, 2.0, 1024L, "none"),
+        ("a few starved", knnInputs(v, 2, 60, nR, true, 0), 3, 0.95, 2.0, 1024L, "direct"),
+        ("retry forced", knnInputs(v, 3, 60, nR, false, 0), 3, 0.95, 0.5, 0L, "retry"),
+        ("null-key lefts", knnInputs(v, 4, 60, nR, false, 3), 3, 1.0, 2.0, 1024L, "direct"),
+        ("k >= |right|", knnInputs(v, 5, 30, nR, false, 0), nR + 2, 0.95, 2.0, 1024L,
+          "direct"),
+        ("empty left", knnInputs(v, 6, 0, nR, false, 0), 3, 0.95, 2.0, 1024L, "any"))
+      for ((name, (l, r), k, q, s, t, route) <- cases) {
+        val got = v.run(l, r, k, q, s, t)
+        val want = naiveTwin(v, l, r, k)
+        assert(rowsOf(got, want.columns) == rowsOf(want, want.columns), s"${v.name}: $name")
+        route match {
+          case "none" => assert(!hasFallback(got), s"${v.name}: $name built a fallback")
+          case "direct" => assert(hasFallback(got) && checkpoints(got) == v.base,
+            s"${v.name}: $name took ${checkpoints(got)} checkpoints, want ${v.base}")
+          case "retry" => assert(checkpoints(got) > v.base, s"${v.name}: $name never retried")
+          case _ =>
+        }
+      }
+    }
+  }
+
+  test("counted top-k: the derived starved count equals the minus-by-key count") {
+    val v = knnVerbs.head
+    for ((safety, nulls) <- Seq((2.0, 0), (0.5, 3), (0.1, 5))) {
+      val (l, r) = knnInputs(v, 7, 80, 120, true, nulls)
+      val (lk, rk) = (Seq("lx0", "lx1"), Seq("rx0", "rx1"))
+      val ks = SpatialOps.sampleKnnRadii(l, r, lk, rk, 3, 2000, 0.95, safety)
+      val cand = SpatialOps.gridCandidates(l, r, lk, rk, ks.theta, Map.empty)
+        .withColumn("__d", graft.functions.pointDistance(lk.map(col), rk.map(col)))
+      val top = SpatialOps.topKCounted(cand, "lid", 3, Seq("rid"), distCol = "__d")
+      assert(ks.nLeft == 81 + nulls)
+      assert(top.nSatisfied == top.ids.count(), s"safety $safety")
+      assert(ks.nLeft - top.nSatisfied == SpatialOps.minusByKey(l, top.ids, "lid").count(),
+        s"safety $safety")
+      assert(top.rows.count() == 3 * top.nSatisfied, s"safety $safety")
+    }
   }
 
   test("zknnJoin: exact distances, high recall vs exact kNN join") {
@@ -406,16 +554,19 @@ class SpatialOpsSpec extends SparkSpec {
     val r = Seq((1000L, 5.0, 0.0), (1001L, 15.0, 0.0)).toDF("rid", "rx", "ry")
     def plan(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.optimizedPlan.toString
-    val dflt = l.zknnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"),
-      3, "lid", "rid", Seq("rid"))
+    val (dflt, dfltBuilt) = withBuildPlans(l.zknnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"),
+      3, "lid", "rid", Seq("rid")))
     // 20 starved lefts <= default 1024: straight to the cross fallback,
-    // no grid-retry cell columns anywhere in the plan
+    // no grid-retry cell columns anywhere in the plan or its build
     assert(!plan(dflt).contains("__graft_cell_lc0"), plan(dflt))
+    assert(!dfltBuilt.exists(_.contains("__graft_cell_lc0")))
     try {
       spark.conf.set(graft.GraftConf.KnnRetryThreshold, "0")
-      val retried = l.zknnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"),
-        3, "lid", "rid", Seq("rid"))
-      assert(plan(retried).contains("__graft_cell_lc0"),
+      // the retry's grid candidates sit behind its top-k checkpoint: the
+      // witness is the plan that checkpoint ran
+      val (retried, built) = withBuildPlans(l.zknnJoin(r, Seq("lx", "ly"),
+        Seq("rx", "ry"), 3, "lid", "rid", Seq("rid")))
+      assert(built.exists(_.contains("__graft_cell_lc0")),
         s"threshold 0 must route the zorder starved set through the grid retry:\n${plan(retried)}")
       // exactness unchanged either way: 2 rights -> 2 neighbors per left
       assert(dflt.count() === 40 && retried.count() === 40)

@@ -180,7 +180,7 @@ class VectorOpsSpec extends SparkSpec {
       .select("vid", "vid2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want)
     // the exposed distance column must survive the pivot path (the r7
-    // break: topKWithCount dropped __graft_d before outCols selected it)
+    // break: the top-k split dropped __graft_d before outCols selected it)
     val l2s = joined.filter(col("vid") === col("vid2")).select("l2").collect()
     assert(l2s.nonEmpty && l2s.forall(_.getDouble(0) === 0.0))
   }
