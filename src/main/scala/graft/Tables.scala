@@ -11,8 +11,42 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `$dir/$name.parquet`, read with the schema Spark recorded in its
+    * first data file's footer, so the read starts no schema-inference
+    * job. Reads by inference, exactly as `spark.read.parquet`, where that
+    * schema could differ or is not there: schema merging on, a summary
+    * file, no data file, nested directories, or a footer without Spark's
+    * schema key (a file another writer wrote). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
+  }
+
+  private def footerSchema(spark: SparkSession,
+                           path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return None
+    val listed = if (fs.getFileStatus(p).isFile) Array(fs.getFileStatus(p)) else fs.listStatus(p)
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    val names = listed.map(_.getPath.getName)
+    if (listed.exists(_.isDirectory) ||
+        names.exists(n => n == "_metadata" || n == "_common_metadata")) return None
+    listed.filter(s => !hidden(s.getPath.getName)).sortBy(_.getPath.getName).headOption
+      .flatMap { first =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
+      .collect { case t: org.apache.spark.sql.types.StructType => t }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

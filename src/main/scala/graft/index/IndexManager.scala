@@ -48,6 +48,10 @@ object IndexManager {
   /** Global-level entry: everything the driver knows about partition p. */
   final case class PartitionStat(mbr: MBR, count: Long, zMin: Long, zMax: Long)
 
+  /** A global level and the id of the cached-batch RDD it was computed
+    * from: its partition ids name that RDD's partitions and no other. */
+  final case class GlobalLevel[S](parts: Map[Int, S], cacheRdd: Option[Int])
+
   /** A quadtree leaf: its cell is the CONTIGUOUS Morton interval
     * [zLo, zHi] (a node at depth L is a dims*L-bit z-prefix), `mbr` the
     * TRUE bounds of the rows inside (tighter than the cell rectangle —
@@ -238,18 +242,54 @@ object IndexManager {
   }
 
   private def rangeBounds(clustered: DataFrame,
-                          keyCol: String): Map[Int, (Double, Double, Long)] =
-    clustered
+                          keyCol: String): GlobalLevel[(Double, Double, Long)] = {
+    val byPartition = clustered
       .groupBy(spark_partition_id().as("__pid"))
       // count(keyCol) counts KEYED rows only — null keys in a partition
       // must not inflate the driver-answered side of `rank`
       .agg(min(col(keyCol)).cast("double"), max(col(keyCol)).cast("double"),
         count(col(keyCol)))
-      .collect()
+    val parts = byPartition.collect()
       .flatMap(r => // an all-null-key partition has no usable bounds
         if (r.isNullAt(1)) None
         else Some(r.getInt(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))))
       .toMap
+    GlobalLevel(parts, cachedBatches(byPartition).map(_.id))
+  }
+
+  /** The materialized cached-batch RDD `df`'s plan reads, if any. Only
+    * a loaded cache is reported, so asking never starts a job. */
+  private def cachedBatches(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.cachedColumnBuffers
+    }
+  }
+
+  /** `df`, a filter over an index's cache, scheduled on the cached
+    * partitions in `hit` only — the global level pruning partitions
+    * before any task runs (the reference's IndexedRelationScan).
+    * Partition ids name partitions of the cached RDD the global level
+    * was computed from (`cacheRdd`) and nothing else: a cleared or
+    * re-persisted cache re-runs the clustering shuffle with freshly
+    * sampled bounds. So this is None unless `df` reads that very RDD,
+    * and the caller scans every partition. `df` itself when every
+    * partition is hit. */
+  private[index] def onPartitions(df: DataFrame, cacheRdd: Option[Int],
+                                  hit: Set[Int]): Option[DataFrame] =
+    cachedBatches(df).filter(c => cacheRdd.contains(c.id)).flatMap { cached =>
+      val n = cached.getNumPartitions
+      if (hit.size >= n) Some(df)
+      else {
+        val rows = df.rdd
+        // the scan over the cache is narrow, so row partition i is cached
+        // partition i; anything else is not a plan this can prune
+        if (rows.getNumPartitions != n) None
+        else Some(df.sparkSession.createDataFrame(
+          org.apache.spark.rdd.PartitionPruningRDD.create(rows, hit.contains), df.schema))
+      }
+    }
 
   /** Build (or return) a hash index: hash-clustered on the key, cached
     * (reference HashMapIndexedRelation analogue,
@@ -459,22 +499,23 @@ object IndexManager {
   /** Global level — per-partition stats (numPartitions rows to driver).
     * Computed from whatever partitioning the data actually has, so it is
     * equally valid for a freshly built clustering and a parquet-loaded
-    * one (where partitions are the read splits). */
+    * one (where partitions are the read splits). The job that computes
+    * it fills the cache, whose RDD id the level records. */
   private def partitionStats(clustered: DataFrame,
-                             keyCols: Seq[String]): Map[Int, PartitionStat] = {
+                             keyCols: Seq[String]): GlobalLevel[PartitionStat] = {
     val statAggs = keyCols.flatMap(c =>
       Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))) ++
       Seq(count(lit(1)), min(col(ZCol)), max(col(ZCol)))
-    val statRows = clustered.groupBy(spark_partition_id().as("__pid"))
+    val byPartition = clustered.groupBy(spark_partition_id().as("__pid"))
       .agg(statAggs.head, statAggs.tail: _*)
-      .collect()
-    statRows.map { r =>
+    val parts = byPartition.collect().map { r =>
       val lo = keyCols.indices.map(i => r.getDouble(1 + 2 * i)).toArray
       val hi = keyCols.indices.map(i => r.getDouble(2 + 2 * i)).toArray
       val base = 1 + 2 * keyCols.length
       r.getInt(0) -> PartitionStat(MBR(Point(lo), Point(hi)),
         r.getLong(base), r.getLong(base + 1), r.getLong(base + 2))
     }.toMap
+    GlobalLevel(parts, cachedBatches(byPartition).map(_.id))
   }
 
   /** Persist an index as sorted parquet + JSON metadata; `load` restores
@@ -593,8 +634,10 @@ object IndexManager {
   /** Re-cache the named index (any kind, this session) at `level` —
     * the reference's `setStorageLevel` (reference: IndexManager.scala:
     * 179-187). Spark refuses to change a live cache's level, so the data
-    * is unpersisted and lazily re-persisted; the next action rebuilds
-    * the cache at the new level from the same clustered plan. */
+    * is unpersisted and re-persisted. The new cache re-runs the
+    * clustering shuffle, whose partitions the old global level does not
+    * describe, so the z-order and range kinds recompute theirs (one job,
+    * which also fills the new cache); the other kinds re-fill lazily. */
   def setStorageLevel(spark: SparkSession, name: String,
                       level: org.apache.spark.storage.StorageLevel): Unit = {
     val key = (skey(spark), name)
@@ -603,6 +646,8 @@ object IndexManager {
       quadRegistry.get(key).map(_.data)
     require(datas.nonEmpty, s"no index named '$name' in this session")
     datas.foreach { d => d.unpersist(); d.persist(level) }
+    registry.get(key).foreach(i => i.global = partitionStats(i.data, i.keyCols))
+    rangeRegistry.get(key).foreach(i => i.global = rangeBounds(i.data, i.keyCol))
   }
 
   /** Persist the named index of whatever kind is registered under it
@@ -696,9 +741,20 @@ final class IndexedTable(
     val lows: Array[Double],
     val highs: Array[Double],
     val bits: Int,
-    val stats: Map[Int, IndexManager.PartitionStat]) extends Serializable {
+    @volatile private[index] var global: IndexManager.GlobalLevel[IndexManager.PartitionStat])
+    extends Serializable {
 
   import IndexManager.ZCol
+
+  /** The global level: partition id -> stats of that cached partition. */
+  def stats: Map[Int, IndexManager.PartitionStat] = global.parts
+
+  /** Partitions of `g` whose MBR intersects the box [lo, hi]. */
+  private def hitOf(g: IndexManager.GlobalLevel[IndexManager.PartitionStat],
+                    lo: Array[Double], hi: Array[Double]): Set[Int] = {
+    val box = MBR(Point(lo), Point(hi))
+    g.parts.collect { case (p, s) if s.mbr.intersects(box) => p }.toSet
+  }
 
   private def zOf(p: Array[Double]): Long =
     ZValue.interleave(
@@ -719,27 +775,46 @@ final class IndexedTable(
     * (reference: IndexedRelationScan.scala:172-180, gated by
     * SimbaConf.scala:132-146). Semantics-free either way — the caller
     * always re-applies the exact predicate. */
-  private def zPreFilter(lo: Array[Double], hi: Array[Double]): DataFrame = {
+  private def zInterval(lo: Array[Double], hi: Array[Double]): Option[Column] = {
     val spark = data.sparkSession
     val covered = MBR(Point(lows), Point(highs))
       .calcRatio(MBR(Point(lo), Point(hi)))
     if (graft.GraftConf.indexSelectivityEnable(spark) &&
-        covered >= graft.GraftConf.indexSelectivityThreshold(spark)) data
+        covered >= graft.GraftConf.indexSelectivityThreshold(spark)) None
     else {
       val (zlo, zhi) = zRange(lo, hi)
-      data.filter(col(ZCol) >= zlo && col(ZCol) <= zhi)
+      Some(col(ZCol) >= zlo && col(ZCol) <= zhi)
     }
   }
 
-  /** Indexed box range: z-interval pre-filter (batch/row-group pruning)
-    * + exact predicate (the widen-then-refilter discipline). */
+  /** The rows a probe with bbox [lo, hi] reads: the cached partitions the
+    * global level says the box can hit — all of them without stats, or
+    * once the cache is no longer the one they describe — with the
+    * z-interval pre-filter pruning cached batches inside them. Over a
+    * pruned leaf the interval is stated again, so the plan still shows
+    * the pre-filter (over an unpruned scan Spark merges the two). */
+  private def scan(lo: Array[Double], hi: Array[Double]): DataFrame = {
+    val z = zInterval(lo, hi)
+    val pre = z.fold(data)(data.filter(_))
+    val g = global
+    val kept =
+      if (g.parts.isEmpty) pre
+      else IndexManager.onPartitions(pre, g.cacheRdd, hitOf(g, lo, hi)).getOrElse(pre)
+    z.fold(kept)(kept.filter(_))
+  }
+
+  /** Indexed box range: partitions pruned by the global level, then the
+    * z-interval pre-filter (batch/row-group pruning) and the exact
+    * predicate (the widen-then-refilter discipline). */
   def boxRange(lo: Array[Double], hi: Array[Double]): DataFrame =
-    zPreFilter(lo, hi)
+    scan(lo, hi)
       .filter(inBox(keyCols.map(col), lo.toSeq, hi.toSeq))
       .select(output: _*)
 
+  /** Indexed circle range: the circle's bbox prunes, the exact distance
+    * predicate decides. */
   def circleRange(center: Array[Double], r: Double): DataFrame =
-    zPreFilter(center.map(_ - r), center.map(_ + r))
+    scan(center.map(_ - r), center.map(_ + r))
       .filter(inCircle(keyCols.map(col), center.toSeq, r))
       .select(output: _*)
 
@@ -781,12 +856,11 @@ final class IndexedTable(
     ordered(circleRange(center, r))
   }
 
-  /** Partitions whose MBR intersects the query box — exposes the
-    * global-level pruning decision for tests/metrics. */
+  /** Partitions whose MBR intersects the query box, out of all — the
+    * partitions a box probe (or a circle probe, by its bbox) schedules. */
   def prunedPartitionCount(lo: Array[Double], hi: Array[Double]): (Int, Int) = {
-    val box = MBR(Point(lo), Point(hi))
-    val hit = stats.values.count(_.mbr.intersects(box))
-    (hit, stats.size)
+    val g = global
+    (hitOf(g, lo, hi).size, g.parts.size)
   }
 }
 
@@ -796,10 +870,26 @@ final class RangeIndexedTable(
     val name: String,
     private[index] val data: DataFrame,
     val keyCol: String,
-    /** partition id -> (min, max, count) of the key. */
-    val bounds: Map[Int, (Double, Double, Long)]) extends Serializable {
+    @volatile private[index] var global: IndexManager.GlobalLevel[(Double, Double, Long)])
+    extends Serializable {
 
-  import org.apache.spark.sql.functions.{col, spark_partition_id}
+  import org.apache.spark.sql.functions.col
+
+  /** partition id -> (min, max, count) of the key. */
+  def bounds: Map[Int, (Double, Double, Long)] = global.parts
+
+  /** `known` (rows of the partitions outside `scan`, answered by `g`)
+    * plus the rows matching `pred` in the partitions `scan` — scanned
+    * alone. When the cache is no longer the one `g` describes, its
+    * partition ids mean nothing, and `pred` is counted over every
+    * partition instead. */
+  private def countOn(g: IndexManager.GlobalLevel[(Double, Double, Long)],
+                      known: Long, scan: Set[Int], pred: Column): Long =
+    if (scan.isEmpty) known
+    else {
+      val pre = data.filter(pred)
+      IndexManager.onPartitions(pre, g.cacheRdd, scan).fold(pre.count())(known + _.count())
+    }
 
   /** key in [lo, hi] (inclusive): sorted cached batches prune by min/max. */
   def range(lo: Double, hi: Double): DataFrame =
@@ -819,14 +909,12 @@ final class RangeIndexedTable(
     * partitions whose range straddles k are scanned (one pruned count
     * over the sorted cache). Null keys never count. */
   def rank(k: Double): Long = {
-    val below = bounds.values.collect { case (_, mx, cnt) if mx <= k => cnt }.sum
-    val straddlers = bounds.collect {
+    val g = global
+    val below = g.parts.values.collect { case (_, mx, cnt) if mx <= k => cnt }.sum
+    val straddlers = g.parts.collect {
       case (pid, (mn, mx, _)) if mn <= k && mx > k => pid
-    }.toSeq
-    if (straddlers.isEmpty) below
-    else below + data
-      .filter(spark_partition_id().isin(straddlers: _*) && col(keyCol) <= k)
-      .count()
+    }.toSet
+    countOn(g, below, straddlers, col(keyCol) <= k)
   }
 
   /** Multiplicity of exactly `k` — the reference treap's `getCount`
@@ -834,30 +922,25 @@ final class RangeIndexedTable(
     * becomes the natural 0). Scans only partitions whose bounds admit
     * the key. */
   def getCount(k: Double): Long = {
-    val hits = bounds.collect {
+    val g = global
+    val hits = g.parts.collect {
       case (pid, (mn, mx, _)) if mn <= k && k <= mx => pid
-    }.toSeq
-    if (hits.isEmpty) 0L
-    else data
-      .filter(spark_partition_id().isin(hits: _*) && col(keyCol) === k)
-      .count()
+    }.toSet
+    countOn(g, 0L, hits, col(keyCol) === k)
   }
 
   /** Number of rows with key in [lo, hi] (inclusive) = rank algebra
     * over the same two-level structure: interior partitions from the
     * driver bounds, boundary partitions scanned. */
   def countRange(lo: Double, hi: Double): Long = {
-    val interior = bounds.values.collect {
+    val g = global
+    val interior = g.parts.values.collect {
       case (mn, mx, cnt) if mn >= lo && mx <= hi => cnt
     }.sum
-    val boundary = bounds.collect {
+    val boundary = g.parts.collect {
       case (pid, (mn, mx, _)) if mn <= hi && mx >= lo && (mn < lo || mx > hi) => pid
-    }.toSeq
-    if (boundary.isEmpty) interior
-    else interior + data
-      .filter(spark_partition_id().isin(boundary: _*) &&
-        col(keyCol) >= lo && col(keyCol) <= hi)
-      .count()
+    }.toSet
+    countOn(g, interior, boundary, col(keyCol) >= lo && col(keyCol) <= hi)
   }
 
   /** Straddling-partition count for a rank probe (scanned, total) —

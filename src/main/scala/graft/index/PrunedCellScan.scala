@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Pre-listing directory pruning for cell-partitioned at-rest layouts —
   * the shared mechanics behind [[SpatialDisk]]'s pruned scan and the
@@ -52,11 +53,16 @@ object PrunedCellScan {
     * where plan introspection can no longer see it. */
   private[graft] val lastPathCount = new ThreadCounter(-1L)
 
+  /** `schema`, when given, is the data schema (the cell column aside)
+    * both branches read with instead of inferring one — which would
+    * cost a job per read. */
   def apply(spark: SparkSession, dataPath: String, cellCol: String,
-            cells: Seq[Any], maxExplicit: Int = 1024): DataFrame = {
+            cells: Seq[Any], maxExplicit: Int = 1024,
+            schema: Option[StructType] = None): DataFrame = {
+    def reader = schema.fold(spark.read)(spark.read.schema(_))
     def full() = {
       lastPathCount.set(-1L)
-      spark.read.parquet(dataPath).filter(col(cellCol).isin(cells: _*))
+      reader.parquet(dataPath).filter(col(cellCol).isin(cells: _*))
     }
     if (cells.isEmpty || cells.length > maxExplicit) return full()
     val base = new org.apache.hadoop.fs.Path(dataPath)
@@ -78,7 +84,7 @@ object PrunedCellScan {
       .map(v => s"$dataPath/$cellCol=$v")
     if (existing.isEmpty) return full().filter(lit(false))
     lastPathCount.set(existing.length.toLong)
-    spark.read.option("basePath", dataPath).parquet(existing: _*)
+    reader.option("basePath", dataPath).parquet(existing: _*)
       .filter(col(cellCol).isin(cells: _*))
   }
 }

@@ -27,7 +27,7 @@ import graft.spatial.ZValue
   * Layout: `$path/data` (cell-partitioned parquet, fine z column
   * `__graft_z`, write token `__graft_token`) + `$path/meta` (tagged
   * text lines: key columns, quantization bounds, bit widths, token).
-  * Data and meta are two independent jobs, so both carry one per-write
+  * Data and meta are two independent writes, so both carry one per-write
   * token and readers refuse a mismatched pair (the writeIvfPq
   * discipline) — stale bounds against fresh cells would route queries
   * to the wrong directories and silently drop matches.
@@ -93,34 +93,58 @@ object SpatialDisk {
     val token = java.util.UUID.randomUUID().toString
     val cell = zorder(keyCols.map(col), lows.toSeq, highs.toSeq, cellBits)
     val z = zorder(keyCols.map(col), lows.toSeq, highs.toSeq, bits)
-    // one range shuffle clusters cells together; the within-partition
-    // sort puts each directory's files in fine-z order so parquet
-    // row-group min/max stats on __graft_z are tight
-    df.withColumn(CellCol, cell)
+    val celled = df.withColumn(CellCol, cell)
       .withColumn(ZCol, z)
       .withColumn(TokenCol, lit(token))
-      .repartitionByRange(col(CellCol), col(ZCol))
-      .sortWithinPartitions(col(CellCol), col(ZCol))
-      .write.mode("overwrite").partitionBy(CellCol).parquet(s"$path/data")
+    val cells = writeCells(celled, keyCols, s"$path/data", "overwrite")
     // a fresh full write starts a new generation: stale tombstones from
     // the previous one must not shadow it (readers would refuse anyway
     // on the token, but the dir must not leak into the new meta)
     graft.operators.DedupOps.deleteDir(df.sparkSession, s"$path/tombstones")
-    writeStatsMeta(df.sparkSession, path, keyCols, lows, highs, cellBits,
-      bits, token)
+    writeMetaLines(df.sparkSession, path, keyCols, lows, highs, cellBits,
+      bits, token, cells, Some(celled.drop(CellCol).schema))
   }
 
-  /** Refresh `$path/meta` with per-cell TRUE stats (count + tight MBR)
-    * read back from the WRITTEN files, so published stats are on-disk
-    * stats — one bounded aggregation (<= 2^(d*cellBits) <= 2^16 rows
-    * to the driver). They serve kNN's guaranteed-radius walk, the
-    * IndexManager PartitionStat design at the directory level. */
-  private def writeStatsMeta(spark: SparkSession, path: String,
-                             keyCols: Seq[String], lows: Array[Double],
-                             highs: Array[Double], cellBits: Int,
-                             bits: Int, token: String): Unit =
-    writeMetaLines(spark, path, keyCols, lows, highs, cellBits, bits, token,
-      collectCellStats(spark.read.parquet(s"$path/data"), keyCols))
+  /** Write `celled` (rows carrying the cell, fine z and token columns)
+    * into the cell directories under `dataPath` and return the per-cell
+    * stats (count + tight MBR) of exactly the rows written. One range
+    * shuffle clusters cells together; the within-partition sort puts
+    * each directory's files in fine-z order so parquet row-group min/max
+    * stats on __graft_z are tight. The stats come from the write job
+    * itself (the Shark idea: statistics from the stage that runs
+    * anyway): an observed bounded aggregate sits on the result stage,
+    * where each task's accumulator update merges once — no read-back of
+    * the written files and no second evaluation of the input. They
+    * serve kNN's guaranteed-radius walk, the IndexManager
+    * PartitionStat design at the directory level. */
+  private def writeCells(celled: DataFrame, keyCols: Seq[String],
+                         dataPath: String, mode: String): Seq[CellStat] = {
+    val obs = org.apache.spark.sql.Observation()
+    val stats = udaf(new CellStatsAggregator(keyCols.length),
+      org.apache.spark.sql.Encoders.product[CellPoint])
+    celled
+      .repartitionByRange(col(CellCol), col(ZCol))
+      .sortWithinPartitions(col(CellCol), col(ZCol))
+      .observe(obs, stats(col(CellCol).cast("long"),
+        array(keyCols.map(col(_).cast("double")): _*)).as("cells"))
+      .write.mode(mode).partitionBy(CellCol).parquet(dataPath)
+    // the observation completes from the listener bus, just after the
+    // write returns; a write that reports none publishes no meta
+    val row = try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(60, "s"))
+      catch { case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"SpatialDisk: the write to $dataPath reported no per-cell stats") }
+    val out = row.getStruct(0)
+    val (ids, counts) = (out.getSeq[Long](0), out.getSeq[Long](1))
+    val (los, his) = (out.getSeq[Double](2), out.getSeq[Double](3))
+    val d = keyCols.length
+    ids.indices.map { i =>
+      CellStat(ids(i), counts(i), graft.spatial.MBR(
+        graft.spatial.Point(los.slice(i * d, (i + 1) * d).toArray),
+        graft.spatial.Point(his.slice(i * d, (i + 1) * d).toArray)))
+    }
+  }
 
   /** Per-cell stats (count + tight MBR) of a frame that carries the
     * routing cell column — ONE bounded aggregation (<= 2^(d*cellBits)
@@ -139,10 +163,14 @@ object SpatialDisk {
       }
   }
 
+  /** `schema` is the written data schema (every column but the cell,
+    * which the directory names carry): readers take it instead of
+    * inferring one from a footer, which costs a job per read. */
   private def writeMetaLines(spark: SparkSession, path: String,
                              keyCols: Seq[String], lows: Array[Double],
                              highs: Array[Double], cellBits: Int, bits: Int,
                              token: String, cells: Seq[CellStat],
+                             schema: Option[org.apache.spark.sql.types.StructType],
                              tombs: Seq[String] = Seq.empty,
                              tombIdCol: Option[String] = None,
                              tombCells: Boolean = false): Unit = {
@@ -159,6 +187,7 @@ object SpatialDisk {
       s"params=cellBits:$cellBits,bits:$bits",
       "cells=" + cellStats,
       "token=" + token) ++
+      schema.map("schema=" + _.json) ++
       (if (tombs.isEmpty) Seq.empty
        else Seq("tombs=" + tombs.mkString(";"),
          "tombIdCol=" + tombIdCol.get) ++
@@ -246,24 +275,26 @@ object SpatialDisk {
     val celled = df.withColumn(CellCol, cell)
       .withColumn(ZCol, z)
       .withColumn(TokenCol, lit(m.token))
-    celled
-      .repartitionByRange(col(CellCol), col(ZCol))
-      .sortWithinPartitions(col(CellCol), col(ZCol))
-      .write.mode("append").partitionBy(CellCol).parquet(s"$path/data")
+    val wave = writeCells(celled, m.keyCols, s"$path/data", "append")
+    // a wave of another shape leaves files the recorded schema does not
+    // describe: the meta then drops it, and reads infer as before it
+    def shape(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => (f.name, f.dataType.catalogString))
+    val schema = m.schema.filter(t => shape(t) == shape(celled.drop(CellCol).schema))
     // merge the wave's stats into the published meta: counts ADD, MBRs
     // UNION — both operations only ever widen, so a merged meta makes
     // the same guarantees the read-back one did (counts are exact over
     // data written through this API; MBRs cover every claimed row)
     val merged = scala.collection.mutable.LinkedHashMap.empty[Long, CellStat]
     m.cells.foreach(s => merged(s.id) = s)
-    collectCellStats(celled, m.keyCols).foreach { w =>
+    wave.foreach { w =>
       merged(w.id) = merged.get(w.id) match {
         case Some(e) => CellStat(w.id, e.count + w.count, e.mbr.union(w.mbr))
         case None    => w
       }
     }
     writeMetaLines(spark, path, m.keyCols, m.lows, m.highs, m.cellBits,
-      m.bits, m.token, merged.values.toIndexedSeq, m.tombs, m.tombIdCol,
+      m.bits, m.token, merged.values.toIndexedSeq, schema, m.tombs, m.tombIdCol,
       m.tombCells)
   }
 
@@ -337,7 +368,7 @@ object SpatialDisk {
       case None    => s
     })
     writeMetaLines(spark, path, m.keyCols, m.lows, m.highs, m.cellBits,
-      m.bits, m.token, decremented, m.tombs :+ token, Some(idCol),
+      m.bits, m.token, decremented, m.schema, m.tombs :+ token, Some(idCol),
       m.tombCells)
   }
 
@@ -459,7 +490,7 @@ object SpatialDisk {
       case None    => s
     })
     writeMetaLines(spark, path, m.keyCols, m.lows, m.highs, m.cellBits,
-      m.bits, m.token, decremented, m.tombs :+ token, Some(idCol),
+      m.bits, m.token, decremented, m.schema, m.tombs :+ token, Some(idCol),
       tombCells = true)
   }
 
@@ -627,7 +658,7 @@ object SpatialDisk {
             s"$path/meta and $path/data")).isNull),
       spark, path, m, forceMerge = true)
     writeMetaLines(spark, path, m.keyCols, m.lows, m.highs, m.cellBits,
-      m.bits, m.token, collectCellStats(live, m.keyCols), m.tombs,
+      m.bits, m.token, collectCellStats(live, m.keyCols), m.schema, m.tombs,
       m.tombIdCol, locFlag)
   }
 
@@ -640,7 +671,8 @@ object SpatialDisk {
                                 bits: Int, cells: Seq[CellStat], token: String,
                                 tombs: Seq[String] = Seq.empty,
                                 tombIdCol: Option[String] = None,
-                                tombCells: Boolean = false)
+                                tombCells: Boolean = false,
+                                schema: Option[org.apache.spark.sql.types.StructType] = None)
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
     val lines = graft.operators.DedupOps.readMetaLines(spark, path,
@@ -665,12 +697,16 @@ object SpatialDisk {
       .getOrElse(Seq.empty)
     val tombIdCol = lines.find(_.startsWith("tombIdCol="))
       .map(_.substring(10)).filter(_.nonEmpty)
+    // a layout written before the schema line reads by inference
+    val schema = lines.find(_.startsWith("schema=")).map(l =>
+      org.apache.spark.sql.types.DataType.fromJson(l.substring(7))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
     Meta(line("keyCols").split(",").toSeq,
       line("lows").split(",").map(_.toDouble),
       line("highs").split(",").map(_.toDouble),
       params("cellBits").toInt, params("bits").toInt, cells, line("token"),
       tombs, tombIdCol,
-      lines.exists(_ == "tombCells=yes"))
+      lines.exists(_ == "tombCells=yes"), schema)
   }
 
   /** Non-throwing audit of a spatial layout — the
@@ -888,9 +924,19 @@ object SpatialDisk {
     subtractTombstones(checked, df.sparkSession, path, m)
   }
 
+  /** The data schema the meta records, where reading with it gives what
+    * inference would: the cell column then comes from the directory
+    * names with the type partition inference gives it. With that
+    * inference off, or without the line, readers infer as before. */
+  private def dataSchema(spark: SparkSession, m: Meta)
+      : Option[org.apache.spark.sql.types.StructType] =
+    m.schema.filter(_ => spark.conf.get(
+      "spark.sql.sources.partitionColumnTypeInference.enabled", "true").toBoolean)
+
   /** Token-validated scan of the whole layout. */
   private def validated(spark: SparkSession, path: String, m: Meta): DataFrame =
-    tokenChecked(spark.read.parquet(s"$path/data"), path, m)
+    tokenChecked(dataSchema(spark, m).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$path/data"), path, m)
 
   /** Cell-pruned scan where the pruning happens BEFORE file listing:
     * candidate cell ids become EXPLICIT directory paths handed to the
@@ -907,7 +953,8 @@ object SpatialDisk {
   private def prunedScan(spark: SparkSession, path: String, m: Meta,
                          cells: Seq[Long]): DataFrame =
     tokenChecked(
-      PrunedCellScan(spark, s"$path/data", CellCol, cells.map(Long.box)),
+      PrunedCellScan(spark, s"$path/data", CellCol, cells.map(Long.box),
+        schema = dataSchema(spark, m)),
       path, m)
 
   private def scanBox(spark: SparkSession, path: String, m: Meta,
@@ -1176,8 +1223,10 @@ object SpatialDisk {
       .select(outCols: _*)
     // left-outer + null-filter, not LeftAnti: the anti form pushes
     // through a union-shaped wave and re-executes okIds per leg
-    // (SpatialOps.minusByKey — the 2-D 100x pivot lesson)
-    val starved = graft.operators.SpatialOps.minusByKey(left, okIds, leftId)
+    // (SpatialOps.minusByKey — the 2-D 100x pivot lesson). A left with a
+    // null key has no neighbours (as in the naive join): it never starves
+    val starved = graft.operators.SpatialOps.minusByKey(
+        left.filter(leftKeys.map(col(_).isNotNull).reduce(_ && _)), okIds, leftId)
       .localCheckpoint()
     if (starved.isEmpty) return good
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col(leftId))
@@ -1267,4 +1316,69 @@ object SpatialDisk {
     }
     ordered(circleRange(spark, path, center, r))
   }
+}
+
+/** One written row as the cell-stats aggregate sees it. */
+private[index] final case class CellPoint(cell: Long, coords: Array[Double])
+
+/** Per-cell stats in cell order: cell `ids(i)` holds `counts(i)` rows
+  * inside the box `lo(i*d until (i+1)*d)`–`hi(...)`. */
+private[index] final case class CellStatsOut(ids: Array[Long], counts: Array[Long],
+                                             lo: Array[Double], hi: Array[Double])
+
+/** Row count and MBR per cell — the typed, bounded aggregate a layout
+  * write observes on its own rows ([[graft.functions.BoundsAggregator]]
+  * is the pattern). The buffer maps each cell seen to
+  * `[count, lo_0..lo_d-1, hi_0..hi_d-1]`: at most 2^(d*cellBits) <=
+  * 2^16 entries, whatever the row count. */
+private[index] final class CellStatsAggregator(dims: Int)
+    extends org.apache.spark.sql.expressions.Aggregator[CellPoint,
+      java.util.HashMap[java.lang.Long, Array[Double]], CellStatsOut] {
+  private type Buf = java.util.HashMap[java.lang.Long, Array[Double]]
+
+  override def zero: Buf = new java.util.HashMap[java.lang.Long, Array[Double]]()
+
+  override def reduce(b: Buf, p: CellPoint): Buf = {
+    val s = b.get(p.cell)
+    if (s == null) b.put(p.cell, 1.0 +: (p.coords ++ p.coords))
+    else {
+      s(0) += 1.0
+      var i = 0
+      while (i < dims) {
+        s(1 + i) = math.min(s(1 + i), p.coords(i))
+        s(1 + dims + i) = math.max(s(1 + dims + i), p.coords(i))
+        i += 1
+      }
+    }
+    b
+  }
+
+  override def merge(a: Buf, b: Buf): Buf = {
+    b.forEach { (cell, t) =>
+      val s = a.get(cell)
+      if (s == null) a.put(cell, t)
+      else {
+        s(0) += t(0)
+        var i = 0
+        while (i < dims) {
+          s(1 + i) = math.min(s(1 + i), t(1 + i))
+          s(1 + dims + i) = math.max(s(1 + dims + i), t(1 + dims + i))
+          i += 1
+        }
+      }
+    }
+    a
+  }
+
+  override def finish(b: Buf): CellStatsOut = {
+    val ids = b.keySet.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
+    val st = ids.map(c => b.get(c))
+    CellStatsOut(ids, st.map(_(0).toLong),
+      st.flatMap(_.slice(1, 1 + dims)), st.flatMap(_.slice(1 + dims, 1 + 2 * dims)))
+  }
+
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Buf] =
+    org.apache.spark.sql.Encoders.kryo[Buf]
+  override def outputEncoder: org.apache.spark.sql.Encoder[CellStatsOut] =
+    org.apache.spark.sql.Encoders.product[CellStatsOut]
 }

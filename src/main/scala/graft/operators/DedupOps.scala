@@ -67,7 +67,9 @@ object DedupOps {
 
   /** Publish a layout's meta as close to atomically as a filesystem
     * allows: the complete new lines land at `$path/meta_tmp` first
-    * (a Spark job), then ONE delete + rename replaces `$path/meta` —
+    * (one `part-00000` file, then the `_SUCCESS` marker, both written
+    * from the driver — the layout the text writer leaves, without a
+    * Spark job), then ONE delete + rename replaces `$path/meta` —
     * the vulnerable window shrinks from a whole job (during which a
     * crash leaves NO meta and bricks every reader, repair included)
     * to two filesystem metadata ops. A crash inside even that window
@@ -79,12 +81,16 @@ object DedupOps {
   private[graft] def publishMeta(spark: org.apache.spark.sql.SparkSession,
                                  path: String, lines: Seq[String],
                                  dir: String = "meta"): Unit = {
-    import spark.implicits._
-    lines.toDS().coalesce(1).write.mode("overwrite").text(s"$path/${dir}_tmp")
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = new org.apache.hadoop.fs.Path(s"$path/${dir}_tmp")
     val dst = new org.apache.hadoop.fs.Path(s"$path/$dir")
     val fs = dst.getFileSystem(conf)
+    fs.delete(tmp, true)
+    val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "part-00000"), false)
+    try out.write(lines.map(_ + "\n").mkString.getBytes(
+      java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false).close()
     if (fs.exists(dst)) fs.delete(dst, true)
     require(fs.rename(tmp, dst),
       s"publishMeta: rename $tmp -> $dst failed; the complete new $dir " +
@@ -234,7 +240,18 @@ object DedupOps {
         s"$what: $path/meta is missing and promoting the complete " +
           "meta_tmp failed — rename $path/meta_tmp to $path/meta manually")
     }
-    spark.read.textFile(s"$path/meta").collect()
+    // the data files of the meta directory, in name order — the files
+    // the text reader would read (`_SUCCESS`, `.crc` and other hidden
+    // names skipped), read here on the driver instead of by a job
+    fs.listStatus(dst).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getPath).sortBy(_.getName).flatMap { f =>
+      val r = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(f),
+        java.nio.charset.StandardCharsets.UTF_8))
+      try Iterator.continually(r.readLine()).takeWhile(_ != null).toArray
+      finally r.close()
+    }
   }
 
   /** Parse an at-rest layout's `$path/meta` (the `params=`/`token=`

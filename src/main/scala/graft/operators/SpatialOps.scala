@@ -384,7 +384,9 @@ object SpatialOps {
           .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
       val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lS.count, theta)
       val top = SpatialOps.topKCounted(cand, leftId, k, tieBreak)
-      val nStarved = lS.allRows - top.nSatisfied
+      // null-shape lefts have no neighbours and no candidates: only the
+      // `count` lefts with a shape can starve
+      val nStarved = lS.count - top.nSatisfied
       // the exact cross-window (the CKJSpark shape)
       def naive(left: DataFrame): DataFrame = {
         val w = Window.partitionBy(col(leftId))
@@ -1082,8 +1084,9 @@ object SpatialOps {
     * cell's theta. */
   /** The kNN joins' plan-build statistics: the left sample, each sampled
     * point's exact, safety'd kth-NN radius against the full right side,
-    * the global quantile `theta`, the left side's exact row count (null
-    * keys included: the starved count is `nLeft` minus the satisfied),
+    * the global quantile `theta`, the left side's exact count of rows
+    * with every key non-null (the starved count is `nLeft` minus the
+    * satisfied: a null-key left has no neighbours, so never starves),
     * the right side's exact non-null row count and its uniform sample
     * (ascending priority, so a prefix is a smaller uniform sample). */
   private[operators] final case class KnnSample(
@@ -1126,7 +1129,7 @@ object SpatialOps {
     require(right.count > 0, "kNN join: right side is empty")
     // empty left: any radius yields the correct empty result downstream
     if (lPts.isEmpty)
-      return KnnSample(Array.empty, Array.empty, 1e-9, left.allRows, right.count, right.sample)
+      return KnnSample(Array.empty, Array.empty, 1e-9, left.count, right.count, right.sample)
     // Volume-calibrated safety (guide §2.3 shuffle fewer bytes): the
     // safety margin exists to cover unsampled lefts whose kth radius
     // exceeds the sampled quantile, and what it costs downstream is
@@ -1143,7 +1146,7 @@ object SpatialOps {
       if (lKeys.length <= 2) safety
       else math.pow(safety, 2.0 / lKeys.length)
     val radii = right.kth.map(d => math.max(d * effSafety, 1e-9))
-    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), left.allRows, right.count,
+    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), left.count, right.count,
       right.sample)
   }
 
@@ -1868,13 +1871,13 @@ object SpatialOps {
       .withColumn("__graft_dl", col("__graft_asgn.dist"))
       .drop("__graft_asgn")
     // per-cell radius bound (numPivots rows to the driver) and, from the
-    // same aggregate, the left's row count: the null cell's group counts
-    // the null-keyed lefts, which the candidate pass drops
+    // same aggregate, the count of lefts that can starve: the null
+    // cell's group holds the null-keyed lefts, which have no neighbours
     def cellBounds(lAsg: DataFrame): (Map[Int, Double], Long) = {
       val rows = lAsg.groupBy(col("__graft_cell"))
         .agg(max(col("__graft_dl")), count(lit(1))).collect()
-      (rows.filterNot(_.isNullAt(0)).map(r => r.getInt(0) -> r.getDouble(1)).toMap,
-        rows.map(_.getLong(2)).sum)
+        .filterNot(_.isNullAt(0))
+      (rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap, rows.map(_.getLong(2)).sum)
     }
     // One candidate pass of `left` at per-cell thetas `mul`·theta_i,
     // returning its hydrated top-k rows and the counted split.
@@ -2183,16 +2186,16 @@ object SpatialOps {
     }
 
   /** One input's plan-build statistics, from ONE bounded Spark job:
-    * `count` rows with every key non-null, `allRows` rows in all. */
-  private[graft] final case class InputStats[T](count: Long, allRows: Long,
-                                                sample: Array[T], kth: Array[Double])
+    * `count` rows with every key non-null. */
+  private[graft] final case class InputStats[T](count: Long, sample: Array[T],
+                                                kth: Array[Double])
 
   /** The stats pass: every plan-build statistic of one join input from
     * a single `mapPartitionsWithIndex` + `treeAggregate` job over the
     * projection — many aggregates sharing one scan (LMFAO), the
     * count-with-sample of Spark's own RangePartitioner sketch:
-    *  - `allRows`: the exact row count; `count`: the exact count of rows
-    *    with no null key — a row with a null is counted, then skipped;
+    *  - `count`: the exact count of rows with no null key — a row with
+    *    a null is skipped;
     *  - `sample`: a UNIFORM bounded sample — the `cap` rows with the
     *    smallest per-row priority, drawn per partition from a
     *    `SplittableRandom` seeded by (seed, partition index). That is the
@@ -2217,12 +2220,12 @@ object SpatialOps {
   private def statsPass[T: scala.reflect.ClassTag, P: scala.reflect.ClassTag](
       projected: DataFrame, cap: Int, seed: Long, decode: Row => T,
       probes: Array[P], k: Int, dist: (P, T) => Double): InputStats[T] = {
-    type Part = (Long, Long, Array[(Double, T)], Array[Array[Double]])
+    type Part = (Long, Array[(Double, T)], Array[Array[Double]])
     val bc = projected.sparkSession.sparkContext.broadcast(probes)
     val byPriority = Ordering.by[(Double, T), Double](_._1)
     def merge(a: Part, b: Part): Part = {
-      a._4.zip(b._4).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
-      (a._1 + b._1, a._2 + b._2, (a._3 ++ b._3).sorted(byPriority).take(cap), a._4)
+      a._3.zip(b._3).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
+      (a._1 + b._1, (a._2 ++ b._2).sorted(byPriority).take(cap), a._3)
     }
     val partials = projected.rdd.mapPartitionsWithIndex { (idx, rows) =>
       val ps = bc.value
@@ -2230,9 +2233,8 @@ object SpatialOps {
       val heap = new java.util.PriorityQueue[(Double, T)](
         math.max(cap, 1), byPriority.reverse)
       val best = Array.fill(ps.length)(Array.fill(k)(Double.MaxValue))
-      var n, all = 0L
+      var n = 0L
       rows.foreach { row =>
-        all += 1
         if (!row.anyNull) {
           n += 1
           val pri = rng.nextDouble()
@@ -2249,19 +2251,18 @@ object SpatialOps {
         }
       }
       val sample = Array.fill(heap.size)(heap.poll()).reverse
-      Iterator.single[Part]((n, all, sample, best))
+      Iterator.single[Part]((n, sample, best))
     }
-    val zero: Part = (0L, 0L, Array.empty[(Double, T)],
+    val zero: Part = (0L, Array.empty[(Double, T)],
       Array.fill(probes.length)(Array.fill(k)(Double.MaxValue)))
-    val (n, all, sample, best) = partials.treeAggregate(zero)(merge, merge)
+    val (n, sample, best) = partials.treeAggregate(zero)(merge, merge)
     bc.destroy()
-    InputStats(n, all, sample.map(_._2),
+    InputStats(n, sample.map(_._2),
       if (n == 0) Array.empty else best.map(_(math.min(k.toLong, n).toInt - 1)))
   }
 
   /** [[statsPass]] over coordinate columns cast to double (rows with a
-    * null key counted in `allRows` only); probes are points, distances
-    * Euclidean. */
+    * null key skipped); probes are points, distances Euclidean. */
   private[graft] def pointStats(df: DataFrame, keys: Seq[String], cap: Int,
                                 seed: Long = 42,
                                 probes: Array[Array[Double]] = Array.empty,
@@ -2273,10 +2274,9 @@ object SpatialOps {
       graft.spatial.Dist.pointToPoint)
   }
 
-  /** [[statsPass]] over a ShapeCodec struct column (null shapes counted
-    * in `allRows` only),
-    * sampled rows decoded to ADT shapes; probes are shapes, distances
-    * the exact `minDist`. */
+  /** [[statsPass]] over a ShapeCodec struct column (null shapes
+    * skipped), sampled rows decoded to ADT shapes; probes are shapes,
+    * distances the exact `minDist`. */
   private[graft] def shapeStats(df: DataFrame, c: String, cap: Int, seed: Long,
                                 probes: Array[graft.spatial.Shape] = Array.empty,
                                 k: Int = 1): InputStats[graft.spatial.Shape] =

@@ -25,6 +25,37 @@ object ExplainPlans {
       df.explain("formatted")
     }
 
+    // `show`, preceded by the plan of every SQL action that ran while the
+    // frame was built (the eager checkpoints of the kNN joins)
+    def showBuild(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
+      import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+      val built = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = built.add(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      // a marker action closes the capture: the listener bus delivers
+      // events in order, asynchronously
+      val marker = s"build_marker_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+      spark.listenerManager.register(listener)
+      val result = try {
+        val r = df
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!built.stream().anyMatch(isMarker(_)) && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        r
+      } finally spark.listenerManager.unregister(listener)
+      built.forEach { qe =>
+        if (!isMarker(qe)) {
+          println(s"\n------------- $name: build action -------------")
+          println(qe.explainString(ExplainMode.fromString("formatted")))
+        }
+      }
+      show(name)(result)
+    }
+
     show("box_range (expect PushedFilters on cx/cy)") {
       customerPts(spark, d).boxRange(Seq("cx", "cy"), Seq(2000.0, 100.0), Seq(4000.0, 300.0))
     }
@@ -59,12 +90,19 @@ object ExplainPlans {
       customerPts(spark, d).knnJoinPivot(supplierPts(spark, d),
         Seq("cx", "cy"), Seq("sx", "sy"), 3, "c_custkey", Seq("s_suppkey"))
     }
-    show("knn_join_vec_pivot (expect the pivot shape over float vectors — the checkpointed narrow top-k and its hydrate joins — or, where the admit-fraction gate trips, the narrow exact cross: (vec_id, embedding) x (__graft_rrow, embedding2) -> windowed top-k -> the same hydrate joins; l2 carried from __graft_d)") {
-      val left = embeddings(spark, d).select(col("vec_id"), col("embedding"))
-      val right = embeddings(spark, d).select(
-        col("vec_id").as("vec_id2"), col("embedding").as("embedding2"))
-      left.knnJoinVec(right, "embedding", "embedding2", "vec_id", 3,
-        Seq("vec_id2"))
+    // sf0.01's embeddings trip knnJoinVec's admit-fraction gate (their
+    // distances concentrate), which takes the narrow exact cross; 16 tight
+    // clusters in 8-D reach the pivot route. Its argmin, admission and
+    // cell join run in the build-time checkpoints, so those plans print
+    // first, then the result's.
+    showBuild("knn_join_vec_pivot (expect build plans with the argmin and admission kernels over float vectors, the candidate join on __graft_cell and the windowed top-k under the checkpoints; the result hydrates the narrow top-k by shuffle-hash joins on vec_id and __graft_rrow; l2 carried from __graft_d)") {
+      val vecs = spark.range(0, 2000, 1, 4).select(col("id").as("vec_id"),
+        array((0 until 8).map(i => ((col("id") % 16) * 10.0 +
+          pmod(hash(col("id"), lit(i)), lit(100)) / 1000.0).cast("float")): _*)
+          .as("embedding"))
+      vecs.knnJoinVec(vecs.select(col("vec_id").as("vec_id2"),
+          col("embedding").as("embedding2")),
+        "embedding", "embedding2", "vec_id", 3, Seq("vec_id2"))
     }
     show("exact_dedup (expect partial HashAggregate before the digest shuffle)") {
       import graft.operators.DedupOps._

@@ -8,6 +8,47 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Jobs launched by `body` on this thread. */
+  def jobsOf(body: => Unit): Int = listen(body)._1
+
+  /** Tasks of each stage `body` submitted on this thread, in order
+    * (stages whose shuffle output is reused never submit). */
+  def tasksOf(body: => Unit): Seq[Int] = listen(body)._2
+
+  // jobs and stage task counts of `body`, tagged by a job group; a
+  // marker job closes the count, since the listener bus delivers events
+  // in order
+  private def listen(body: => Unit): (Int, Seq[Int]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    def ours(p: java.util.Properties) =
+      Option(p).filter(_.getProperty("spark.jobGroup.id") == group)
+        .map(_.getProperty("spark.job.description"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        ours(e.properties).foreach(jobs.add)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties).contains("body")) tasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      body
+      sc.setJobGroup(group, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("marker"), "listener never saw the marker job")
+      (jobs.toArray.count(_ == "body"), tasks.toArray.toSeq.map(_.asInstanceOf[Integer].intValue))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** `body`'s result plus the optimized and physical plan of every SQL
     * action it ran while building it — the eager checkpoints of the kNN
     * joins, whose work no longer shows in the returned plan. A marker

@@ -335,4 +335,139 @@ class IndexManagerSpec extends SparkSpec {
     }
     IndexManager.dropIndex(other, "t_disk_only")
   }
+
+  // ---- partition-pruned probes: differential against brute force ----
+
+  /** 610 rows on a 20x20 lattice — every coordinate repeats, so
+    * partition MBR edges fall on tied values — plus rows with a null key. */
+  private lazy val lattice = {
+    import spark.implicits._
+    ((0 until 600).map(i => (i.toLong, Option((i * 7 % 20).toDouble),
+        Option((i * 13 % 20).toDouble))) ++
+      (600 until 610).map(i => (i.toLong, if (i % 2 == 0) None else Some(1.0),
+        if (i % 3 == 0) None else Some(2.0))))
+      .toDF("id", "x", "y")
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame, c: String = "id"): Seq[Long] =
+    df.select(c).collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Every probe kind at hostile places — no partition hit, the full
+    * extent, each partition's MBR, its corners, k past the row count —
+    * equals the unindexed verb over the source. */
+  private def assertProbesExact(idx: IndexedTable, state: String): Unit = {
+    val keys = Seq("x", "y")
+    val boxes = Seq((Array(100.0, 100.0), Array(200.0, 200.0)),
+        (Array(-1.0, -1.0), Array(25.0, 25.0)), (Array(3.5, 3.5), Array(3.6, 3.6))) ++
+      idx.stats.values.toSeq.flatMap { s =>
+        val (lo, hi) = (s.mbr.low.coord, s.mbr.high.coord)
+        Seq((lo, hi), (hi, hi), (lo, lo), (lo, lo.map(_ + 1.0)))
+      }
+    for ((lo, hi) <- boxes) {
+      assert(ids(idx.boxRange(lo, hi)) === ids(lattice.boxRange(keys, lo.toSeq, hi.toSeq)),
+        s"$state: box ${lo.toSeq} ${hi.toSeq}")
+      for (r <- Seq(0.0, 1.5)) assert(ids(idx.circleRange(hi, r)) ===
+          ids(lattice.circleRange(keys, hi.toSeq, r)), s"$state: circle ${hi.toSeq} $r")
+    }
+    for ((c, _) <- boxes.take(6); k <- Seq(1, 7, 50, 700))
+      assert(ids(idx.knn(c, k, Seq("id"))) === ids(lattice.knn(keys, c.toSeq, k, Seq("id"))),
+        s"$state: knn ${c.toSeq} k=$k")
+  }
+
+  test("pruned z-index probes equal brute force: fresh, loaded, re-cached, cleared") {
+    val idx = IndexManager.indexTable(spark, lattice, "t_pruned", Seq("x", "y"),
+      numPartitions = 8)
+    try {
+      assert(idx.stats.size > 2, s"want several partitions, got ${idx.stats.size}")
+      assertProbesExact(idx, "fresh")
+      IndexManager.setStorageLevel(spark, "t_pruned",
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      assertProbesExact(idx, "after setStorageLevel")
+      // a re-plan under the old global level: a new cache of the same plan
+      idx.data.unpersist(); idx.data.persist()
+      assertProbesExact(idx, "after unpersist + persist")
+      spark.catalog.clearCache()
+      assertProbesExact(idx, "after clearCache")
+    } finally IndexManager.dropIndex(spark, "t_pruned")
+
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_pruned").toString
+    val built = IndexManager.indexTable(spark, lattice, "t_pruned_src", Seq("x", "y"),
+      numPartitions = 8)
+    try IndexManager.persistIndex(built, path)
+    finally IndexManager.dropIndex(spark, "t_pruned_src")
+    val loaded = IndexManager.loadIndex(spark, "t_pruned_loaded", path)
+    try assertProbesExact(loaded, "loaded")
+    finally IndexManager.dropIndex(spark, "t_pruned_loaded")
+  }
+
+  test("a pruned probe schedules exactly the partitions its global level hits") {
+    withIndex("t_tasks") { idx =>
+      val (lo, hi) = (Array(2000.0, 100.0), Array(2600.0, 300.0))
+      val (hit, total) = idx.prunedPartitionCount(lo, hi)
+      assert(hit > 0 && hit < total, s"want a selective box, hit $hit of $total")
+      val probe = idx.boxRange(lo, hi)
+      assert(tasksOf(probe.collect()) === Seq(hit))
+      val c = Array(2300.0, 200.0)
+      val (cHit, _) = idx.prunedPartitionCount(c.map(_ - 150.0), c.map(_ + 150.0))
+      assert(cHit > 0 && tasksOf(idx.circleRange(c, 150.0).collect()) === Seq(cHit))
+      // a box outside the extent runs no task at all
+      assert(tasksOf(idx.boxRange(Array(1e6, 1e6), Array(2e6, 2e6)).collect()).sum === 0)
+      // after a re-cache the level is recomputed: still exact, still pruned
+      IndexManager.setStorageLevel(spark, "t_tasks",
+        org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      val (hit2, _) = idx.prunedPartitionCount(lo, hi)
+      assert(tasksOf(idx.boxRange(lo, hi).collect()) === Seq(hit2))
+      assert(ids(idx.boxRange(lo, hi), "c_custkey") ===
+        ids(cust.boxRange(Seq("cx", "cy"), lo.toSeq, hi.toSeq), "c_custkey"))
+    }
+  }
+
+  /** 500 keys with heavy ties (37 distinct values) plus 20 null keys. */
+  private lazy val tiedKeys = {
+    import spark.implicits._
+    ((0 until 500).map(i => Option((i * 11 % 37).toDouble)) ++ Seq.fill(20)(None))
+      .toDF("k")
+  }
+
+  private def assertOrderStatsExact(idx: RangeIndexedTable, state: String): Unit = {
+    val k = col("k")
+    val edges = idx.bounds.values.toSeq.flatMap { case (mn, mx, _) => Seq(mn, mx) }
+    for (v <- Seq(-1.0, 100.0, 18.5) ++ edges) {
+      assert(idx.rank(v) === tiedKeys.filter(k <= v).count(), s"$state: rank $v")
+      assert(idx.getCount(v) === tiedKeys.filter(k === v).count(), s"$state: getCount $v")
+    }
+    for (lo <- Seq(-1.0, 3.0) ++ edges.take(4); hi <- Seq(-0.5, 36.0, 100.0) ++ edges.take(4))
+      assert(idx.countRange(lo, hi) === tiedKeys.filter(k >= lo && k <= hi).count(),
+        s"$state: countRange $lo $hi")
+  }
+
+  test("pruned range order statistics equal brute force: fresh, loaded, re-cached, cleared") {
+    val idx = IndexManager.rangeIndexTable(spark, tiedKeys, "t_rank_pruned", "k",
+      numPartitions = 8)
+    try {
+      assert(idx.bounds.size > 2, s"want several partitions, got ${idx.bounds.size}")
+      assertOrderStatsExact(idx, "fresh")
+      // rank scans exactly its straddlers; a driver-answered rank none
+      val straddled = idx.bounds.values.collectFirst {
+        case (mn, mx, _) if mn < mx => (mn + mx) / 2
+      }.get
+      val (scanned, _) = idx.rankScanStats(straddled)
+      assert(tasksOf(idx.rank(straddled)).head === scanned)
+      assert(tasksOf(idx.rank(100.0)).isEmpty)
+      IndexManager.setStorageLevel(spark, "t_rank_pruned",
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      assertOrderStatsExact(idx, "after setStorageLevel")
+      spark.catalog.clearCache()
+      assertOrderStatsExact(idx, "after clearCache")
+    } finally IndexManager.dropIndex(spark, "t_rank_pruned")
+
+    val path = java.nio.file.Files.createTempDirectory("graft_rng_pruned").toString
+    val built = IndexManager.rangeIndexTable(spark, tiedKeys, "t_rank_src", "k",
+      numPartitions = 8)
+    try IndexManager.persistRangeIndex(built, path)
+    finally IndexManager.dropIndex(spark, "t_rank_src")
+    val loaded = IndexManager.loadRangeIndex(spark, "t_rank_loaded", path)
+    try assertOrderStatsExact(loaded, "loaded")
+    finally IndexManager.dropIndex(spark, "t_rank_loaded")
+  }
 }

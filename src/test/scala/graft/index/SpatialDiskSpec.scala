@@ -180,22 +180,99 @@ class SpatialDiskSpec extends SparkSpec {
     SpatialDisk.write(cust.filter(col("c_custkey") % 2 === 0), path,
       Seq("cx", "cy"))
     SpatialDisk.append(cust.filter(col("c_custkey") % 2 =!= 0), path)
-    val expected = spark.read.parquet(s"$path/data")
-      .groupBy(col("__graft_cell"))
-      .agg(count(lit(1)), min(col("cx")), max(col("cx")),
-        min(col("cy")), max(col("cy")))
-      .collect().map(r => r.getAs[Number](0).longValue() ->
-        (r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), r.getDouble(5))).toMap
-    val published = spark.read.textFile(s"$path/meta").collect()
-      .find(_.startsWith("cells=")).get.substring("cells=".length)
-      .split(";").map { s =>
-        val Array(id, n, bounds) = s.split(":")
-        val b = bounds.split(",").map(_.toDouble)
-        id.toLong -> ((n.toLong, b(0), b(1), b(2), b(3)))
-      }.toMap
-    assert(published === expected,
+    assert(publishedStats(path) === diskStats(path),
       "merged per-cell stats must equal the re-aggregated stats")
+  }
+
+  /** Per-cell (count, x range, y range) re-aggregated from the files. */
+  private def diskStats(path: String) = spark.read.parquet(s"$path/data")
+    .groupBy(col("__graft_cell"))
+    .agg(count(lit(1)), min(col("cx")), max(col("cx")),
+      min(col("cy")), max(col("cy")))
+    .collect().map(r => r.getAs[Number](0).longValue() ->
+      (r.getLong(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4), r.getDouble(5))).toMap
+
+  /** The per-cell stats the meta publishes, in [[diskStats]]' shape. */
+  private def publishedStats(path: String) = spark.read.textFile(s"$path/meta").collect()
+    .find(_.startsWith("cells=")).get.substring("cells=".length)
+    .split(";").map { s =>
+      val Array(id, n, bounds) = s.split(":")
+      val b = bounds.split(",").map(_.toDouble)
+      id.toLong -> ((n.toLong, b(0), b(1), b(2), b(3)))
+    }.toMap
+
+  private def fsckClean(path: String): Boolean =
+    SpatialDisk.fsck(spark, path).collect().forall(_.getBoolean(1))
+
+  test("write takes its per-cell stats from the write itself — equal to the files'") {
+    val path = freshLayout("write_stats")
+    assert(publishedStats(path) === diskStats(path))
+    assert(fsckClean(path), "fsck after write")
+    SpatialDisk.append(cust.filter(col("c_custkey") % 3 === 0)
+      .withColumn("c_custkey", col("c_custkey") + 100000L), path)
+    assert(publishedStats(path) === diskStats(path))
+    assert(fsckClean(path), "fsck after append")
+    SpatialDisk.compact(path, spark)
+    assert(publishedStats(path) === diskStats(path))
+    assert(fsckClean(path), "fsck after compact")
+    // an empty wave writes nothing and publishes the same stats
+    val before = publishedStats(path)
+    SpatialDisk.append(cust.limit(0), path)
+    assert(publishedStats(path) === before)
+  }
+
+  test("layout probes and Tables.table plan without jobs; a write runs only its data jobs") {
+    val path = freshLayout("jobs")
+    val (lo, hi) = (Array(2000.0, 100.0), Array(4000.0, 300.0))
+    assert(jobsOf(SpatialDisk.boxRange(spark, path, lo, hi)) === 0)
+    assert(jobsOf(SpatialDisk.circleRange(spark, path, Array(5000.0, 500.0), 500.0)) === 0)
+    assert(jobsOf(SpatialDisk.knn(spark, path, Array(5000.0, 500.0), 5,
+      Seq("c_custkey"))) === 0)
+    // bounds + null counts (2 jobs), the range sampler, the shuffle, the
+    // write; the meta and the cell stats add none
+    assert(jobsOf(SpatialDisk.write(cust, path, Seq("cx", "cy"))) === 5)
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables_jobs").toString
+    cust.write.parquet(s"$dir/pts.parquet")
+    assert(jobsOf(Tables.table(spark, dir, "pts")) === 0)
+  }
+
+  test("a layout whose meta has no schema line, split over part files, reads the same rows") {
+    import spark.implicits._
+    val path = freshLayout("legacy_meta")
+    val c = Array(5000.0, 500.0)
+    def answers() = Seq(
+        SpatialDisk.boxRange(spark, path, Array(2000.0, 100.0), Array(4000.0, 300.0)),
+        SpatialDisk.circleRange(spark, path, c, 500.0),
+        SpatialDisk.knn(spark, path, c, 7, Seq("c_custkey")))
+      .map(_.collect().map(_.toString).sorted.toSeq)
+    val fresh = answers()
+    assert(fresh.forall(_.nonEmpty))
+    val lines = graft.operators.DedupOps.readMetaLines(spark, path, "spec")
+    assert(lines.exists(_.startsWith("schema=")))
+    // what a writer before the schema line left: the text writer's part
+    // files, with their .crc siblings
+    lines.filterNot(_.startsWith("schema=")).toSeq.toDS().repartition(3)
+      .write.mode("overwrite").text(s"$path/meta")
+    val names = new java.io.File(s"$path/meta").list().toSeq
+    assert(names.count(_.startsWith("part-")) > 1 && names.exists(_.endsWith(".crc")),
+      s"want several part files with checksums: $names")
+    assert(answers() === fresh)
+    assert(fsckClean(path))
+  }
+
+  test("a null-key left takes no fallback in the layout kNN join and matches naive") {
+    val path = freshLayout("kj_null")
+    val supp = graft.Tables.supplierPts(spark, sf())
+      .withColumn("sx", when(col("s_suppkey") % 4 === 0, lit(null)).otherwise(col("sx")))
+    def pairs(df: org.apache.spark.sql.DataFrame) = df
+      .select("s_suppkey", "c_custkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val got = SpatialDisk.knnJoin(supp, Seq("sx", "sy"), path, 3,
+      leftId = "s_suppkey", tieBreak = Seq("c_custkey"))
+    val want = supp.knnJoinNaive(cust, Seq("sx", "sy"), Seq("cx", "cy"),
+      3, leftId = "s_suppkey", tieBreak = Seq("c_custkey"))
+    assert(pairs(got) === pairs(want) && pairs(want).nonEmpty)
   }
 
   test("pruning issues ONE filesystem listing, not per-cell probes") {
