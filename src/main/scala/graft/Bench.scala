@@ -925,36 +925,6 @@ object Bench {
       System.err.println(s"[bench] releaseRetained failed: $e") }
   }
 
-  /** BASELINE.md's own clean-state recipe, executed by the sweep itself
-    * (VERDICT r8 #2): `sync` + `echo 3 > /proc/sys/vm/drop_caches` when
-    * that file is writable (it is in the build sandbox), else a short
-    * cooldown sleep so an external burst can drain. Three rounds running,
-    * the checked-in artifact was contaminated by host page-cache state the
-    * recipe clears — the probes detected it every time but the retries
-    * re-ran into the same polluted state. Running the recipe BEFORE
-    * attempt 1 and between retries makes an attempt one that CAN pass. */
-  private def dropOsCaches(): Unit = {
-    try {
-      val rc = new ProcessBuilder("sync").inheritIO().start().waitFor()
-      if (rc != 0) System.err.println(s"[bench] sync exited $rc")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] sync failed: $e") }
-    val p = java.nio.file.Paths.get("/proc/sys/vm/drop_caches")
-    val dropped =
-      try {
-        if (java.nio.file.Files.isWritable(p)) {
-          java.nio.file.Files.write(p, "3\n".getBytes("UTF-8"))
-          System.err.println("[bench] dropped OS page/slab caches")
-          true
-        } else false
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] drop_caches write failed: $e"); false }
-    if (!dropped) {
-      System.err.println("[bench] drop_caches not writable; 10 s cooldown")
-      try Thread.sleep(10000) catch { case _: InterruptedException => }
-    }
-  }
-
   private def runSweep(spark: SparkSession, sfDir: String, cpus: Int,
                        listener: CpuListener): Sweep = {
     def cal(): Double =
@@ -1111,10 +1081,6 @@ object Bench {
     var attempt = 0
     while (attempt < maxAttempts && chosen == null) {
       attempt += 1
-      // clean-state recipe before EVERY attempt — the first included:
-      // the retries must run in a state that can pass, not merely
-      // re-observe the same polluted host (r6-r8 artifact history)
-      dropOsCaches()
       val s = runSweep(spark, sfDir, cpus.toInt, listener)
       // r11 verdict #2: after any rejected attempt the cold/steady bar
       // tightens — a retry must be cleaner than the sweeps it replaces,

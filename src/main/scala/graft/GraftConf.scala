@@ -19,15 +19,6 @@ object GraftConf {
   val KnnSafety          = "spark.graft.knn.radiusSafety"
   // dense-cell grid refinement cap for the grid kNN join (1 disables)
   val KnnMaxRefine       = "spark.graft.knn.maxRefine"
-  // starved sets larger than this take the bounded doubled-theta retry
-  // before the cross-window fallback; smaller ones go straight to it
-  val KnnRetryThreshold  = "spark.graft.knn.retryThreshold"
-  // when the vector kNN join's admit-fraction gate trips (distance
-  // concentration on isotropic high-d data defeats pivot pruning), take
-  // a trained-IVF approximate probe route instead of the exact quadratic
-  // cross-window plan. Default OFF: the exactness contract holds unless
-  // the session opts in; the approximate route's recall is governed by
-  // nprobe (see VectorOpsSpec's recall gate).
   // ceiling on the pivot kNN join's size-adaptive pivot budget: the
   // join scales its Voronoi cell count to hold per-cell right
   // population at ~pivotCellSize rows (p ∝ n — candidate volume then
@@ -40,14 +31,12 @@ object GraftConf {
   // target right rows per Voronoi cell for the pivot kNN joins'
   // size-adaptive budget (smaller = fewer candidate pairs, more pivots)
   val KnnPivotCellSize   = "spark.graft.knn.pivotCellSize"
-  // cross-pair budget for routing starved lefts STRAIGHT to the exact
-  // cross-window fallback: direct-naive only when starved · |right|
-  // stays under this (and starved <= retryThreshold); above it the
-  // bounded doubled-theta retry runs first, so a small starved count
-  // against a huge right side cannot detonate into a billions-of-pairs
-  // cross (measured: 1000 starved x 1.5M rights = 1.5e9 pairs was the
-  // dominant term of the d=4 100x slice)
-  val KnnNaivePairBudget = "spark.graft.knn.naivePairBudget"
+  // when the vector kNN join's admit-fraction gate trips (distance
+  // concentration on isotropic high-d data defeats pivot pruning), take
+  // a trained-IVF approximate probe route instead of the exact quadratic
+  // cross-window plan. Default OFF: the exactness contract holds unless
+  // the session opts in; the approximate route's recall is governed by
+  // nprobe (see VectorOpsSpec's recall gate).
   val KnnVecApprox       = "spark.graft.knn.vec.approx"
   val KnnVecApproxNlist  = "spark.graft.knn.vec.approx.nlist"
   val KnnVecApproxNprobe = "spark.graft.knn.vec.approx.nprobe"
@@ -88,11 +77,8 @@ object GraftConf {
   def knnQuantile(s: SparkSession): Double = get(s, KnnQuantile, "0.95").toDouble
   def knnSafety(s: SparkSession): Double = get(s, KnnSafety, "2.0").toDouble
   def knnMaxRefine(s: SparkSession): Int = get(s, KnnMaxRefine, "64").toInt
-  def knnRetryThreshold(s: SparkSession): Long = get(s, KnnRetryThreshold, "1024").toLong
   def knnMaxPivots(s: SparkSession): Int = get(s, KnnMaxPivots, "65536").toInt
   def knnPivotCellSize(s: SparkSession): Int = get(s, KnnPivotCellSize, "64").toInt
-  def knnNaivePairBudget(s: SparkSession): Long =
-    get(s, KnnNaivePairBudget, "33554432").toLong
   def knnVecApprox(s: SparkSession): Boolean = get(s, KnnVecApprox, "false").toBoolean
   def knnVecApproxNlist(s: SparkSession): Int = get(s, KnnVecApproxNlist, "16").toInt
   def knnVecApproxNprobe(s: SparkSession): Int = get(s, KnnVecApproxNprobe, "4").toInt

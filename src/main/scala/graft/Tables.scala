@@ -22,7 +22,7 @@ object Tables {
     footerSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
   }
 
-  private def footerSchema(spark: SparkSession,
+  private[graft] def footerSchema(spark: SparkSession,
                            path: String): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.hadoop.fs.Path
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) return None

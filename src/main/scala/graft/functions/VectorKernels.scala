@@ -207,6 +207,75 @@ object VectorKernels {
       Array[Any](best + 1, math.sqrt(bestSq)))
   }
 
+  /** Relative widening of a kNN rescue bound. Rounding can make a
+    * computed `d(l, r)` exceed the computed `d(l, s) + reach(s)` it is
+    * bounded by, by a few ulps per dimension, and a tied neighbour on
+    * the bound would then be dropped; this slack covers any dimension
+    * while admitting only candidates within a billionth of the bound. */
+  val RescueSlack = 1e-9
+
+  @inline private def widen(x: Double): Double = x + x * RescueSlack
+
+  /** The kNN joins' rescue step for one starved left `v`:
+    *  - `theta` = min over the sample rows s of `l2(v, s) + reach(s)`,
+    *    widened by [[RescueSlack]]. With `reach(s)` the exact k-th
+    *    distance from s to the right side, the triangle inequality
+    *    makes it an upper bound on v's own k-th distance;
+    *  - `cells`, the 1-based pivots p_j with
+    *    `l2(v, p_j) <= min_i l2(v, p_i) + 2·theta` (widened): a right r
+    *    within theta of v, assigned to its nearest pivot p_j
+    *    ([[pivotArgmin]]), has `d(r, p_j) <= d(r, p_near(v))
+    *    <= theta + d(v, p_near(v))`, so `d(v, p_j) <= d(v, p_near(v)) + 2·theta`.
+    * `sample` and `pivots` are flattened row-major n×d matrices. */
+  def knnRescue(v: ArrayData, sample: Array[Double], reach: Array[Double],
+                pivots: Array[Double], d: Int,
+                isFloat: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+    val n = v.numElements()
+    require(n == d, s"vector dimension mismatch: $n vs pivot dim $d")
+    var theta = Double.PositiveInfinity
+    var s = 0
+    while (s < reach.length) {
+      val t = math.sqrt(sqDistTo(v, sample, s * d, d, isFloat)) + reach(s)
+      if (t < theta) theta = t
+      s += 1
+    }
+    theta = widen(theta)
+    val np = pivots.length / d
+    val dp = Array.tabulate(np)(c => math.sqrt(sqDistTo(v, pivots, c * d, d, isFloat)))
+    val band = widen(dp.min + 2 * theta)
+    val out = new Array[Int](np)
+    var m = 0
+    var c = 0
+    while (c < np) {
+      if (dp(c) <= band) { out(m) = c + 1; m += 1 }
+      c += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](theta,
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(java.util.Arrays.copyOf(out, m))))
+  }
+
+  /** The shape twin of [[knnRescue]]'s bound: for a 2-D box
+    * `[lx, ly, hx, hy]`, the min over the sampled boxes s of
+    * `maxBoxDist(box, s) + reach(s)`, widened. Any point of a shape in
+    * `box` lies within maxBoxDist of every point of s, so its minDist to
+    * a right shape exceeds s's by at most that: the bound holds for any
+    * shape, convex or not. `boxes` is the flattened n×4 matrix. */
+  def boxReach(box: ArrayData, boxes: Array[Double], reach: Array[Double]): Double = {
+    val (lx, ly, hx, hy) = (box.getDouble(0), box.getDouble(1), box.getDouble(2),
+      box.getDouble(3))
+    var theta = Double.PositiveInfinity
+    var s = 0
+    while (s < reach.length) {
+      val o = 4 * s
+      val dx = math.max(math.abs(hx - boxes(o)), math.abs(boxes(o + 2) - lx))
+      val dy = math.max(math.abs(hy - boxes(o + 1)), math.abs(boxes(o + 3) - ly))
+      val t = math.sqrt(dx * dx + dy * dy) + reach(s)
+      if (t < theta) theta = t
+      s += 1
+    }
+    widen(theta)
+  }
+
   /** Two-level [[pivotAdmitted]]: a group whose coarse ball rejects the
     * vector (`d(v, c_g) > groupBands(g)`) is skipped WHOLE — by the
     * triangle inequality `d(v, p_i) >= d(v, c_g) - d(c_g, p_i)`, so

@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Nondeterministic,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -219,6 +221,80 @@ case class HierPivotAdmitted(child: Expression, coarse: Array[Double],
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.VectorKernels.hierPivotAdmitted($a, $refC, " +
         s"$refP, $refO, $refG, $refB, $dim, $isFloat);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `knn_rescue(vec) -> struct<theta:double, cells:array<int>>` — a
+  * starved left's proven k-th-distance bound and the pivot cells it
+  * replicates to ([[VectorKernels.knnRescue]]). The sample, its exact
+  * reaches and the pivots ride the plan as reference objects.
+  *
+  * Declared [[Nondeterministic]] (Spark's idiom for an expensive
+  * expression, like `asNondeterministic` on a UDF) so it is evaluated
+  * only where it is placed: on the starved lefts. Otherwise the filters
+  * Catalyst infers from its consumers (`size(cells) > 0`,
+  * `isnotnull(theta)`) hold copies of it and are pushed below the
+  * starved split, running the O(|sample|·d) loop on every left row. */
+case class KnnRescue(child: Expression, sample: Array[Double], reach: Array[Double],
+                     pivots: Array[Double], dim: Int,
+                     isFloat: Boolean) extends UnaryExpression with Nondeterministic {
+  require(reach.nonEmpty && sample.length == reach.length * dim &&
+    pivots.nonEmpty && pivots.length % dim == 0,
+    s"rescue layout mismatch: |sample|=${sample.length} |reach|=${reach.length} " +
+      s"|pivots|=${pivots.length} dim=$dim")
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("theta", DoubleType, nullable = false),
+    StructField("cells", ArrayType(IntegerType, containsNull = false), nullable = false)))
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "knn_rescue"
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+
+  override protected def evalInternal(input: InternalRow): Any = {
+    val a = child.eval(input)
+    if (a == null) null
+    else VectorKernels.knnRescue(a.asInstanceOf[ArrayData], sample, reach, pivots, dim, isFloat)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val refS = ctx.addReferenceObj("rescueSample", sample, "double[]")
+    val refR = ctx.addReferenceObj("rescueReach", reach, "double[]")
+    val refP = ctx.addReferenceObj("pivotMatrix", pivots, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.VectorKernels.knnRescue($a, $refS, $refR, " +
+        s"$refP, $dim, $isFloat);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `box_reach(array<double>[lx, ly, hx, hy]) -> double` — a starved
+  * left shape's proven k-th-distance bound ([[VectorKernels.boxReach]]);
+  * [[Nondeterministic]] for the reason [[KnnRescue]] gives. */
+case class BoxReach(child: Expression, boxes: Array[Double],
+                    reach: Array[Double]) extends UnaryExpression with Nondeterministic {
+  require(reach.nonEmpty && boxes.length == 4 * reach.length,
+    s"need one box per reach: |boxes|=${boxes.length} |reach|=${reach.length}")
+
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "box_reach"
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+
+  override protected def evalInternal(input: InternalRow): Any = {
+    val a = child.eval(input)
+    if (a == null) null else VectorKernels.boxReach(a.asInstanceOf[ArrayData], boxes, reach)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val refB = ctx.addReferenceObj("rescueBoxes", boxes, "double[]")
+    val refR = ctx.addReferenceObj("rescueReach", reach, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.VectorKernels.boxReach($a, $refB, $refR);")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

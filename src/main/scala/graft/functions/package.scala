@@ -218,6 +218,14 @@ package object functions {
     toCol(HierPivotAdmitted(toExpr(vec), coarse, pivots, offsets, groupBands,
       bands, dim, isFloat))
 
+  private[graft] def knnRescue(vec: Column, sample: Array[Double], reach: Array[Double],
+                               pivots: Array[Double], dim: Int, isFloat: Boolean): Column =
+    toCol(KnnRescue(toExpr(vec), sample, reach, pivots, dim, isFloat))
+
+  private[graft] def boxReach(box: Column, boxes: Array[Double],
+                              reach: Array[Double]): Column =
+    toCol(BoxReach(toExpr(box), boxes, reach))
+
   def hyperplaneSketch(v: Column, planes: Int = 16, seed: Long = 42L): Column =
     toCol(HyperplaneSketch(toExpr(v), planes, seed))
 

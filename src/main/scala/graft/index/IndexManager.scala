@@ -518,25 +518,38 @@ object IndexManager {
     GlobalLevel(parts, cachedBatches(byPartition).map(_.id))
   }
 
+  /** Persisted-index I/O without metadata jobs: the one JSON meta line
+    * is written and read on the driver through the Hadoop filesystem
+    * (any hadoop filesystem — hdfs://, s3a:// — not just local paths;
+    * the reader also reads the `part-*` text files older layouts wrote
+    * with a Spark job), and `data/` is read with its footer's schema, so
+    * no schema-inference job runs. */
+  private def writeLayout(data: DataFrame, path: String, meta: String): Unit = {
+    data.write.mode("overwrite").parquet(s"$path/data")
+    graft.operators.DedupOps.publishMeta(data.sparkSession, path, Seq(meta))
+  }
+
+  private def readMeta(spark: SparkSession, path: String): String =
+    graft.operators.DedupOps.readMetaLines(spark, path, "load index").headOption
+      .getOrElse(throw new IllegalArgumentException(s"index meta at $path/meta is empty"))
+
+  private def readData(spark: SparkSession, path: String): DataFrame = {
+    val data = s"$path/data"
+    graft.Tables.footerSchema(spark, data).fold(spark.read)(spark.read.schema(_)).parquet(data)
+      .persist(graft.GraftConf.indexStorageLevel(spark))
+  }
+
   /** Persist an index as sorted parquet + JSON metadata; `load` restores
     * it with pruning served by parquet row-group stats on the z key
     * (the reference serializes raw RDDs via saveAsObjectFile instead,
     * IndexManager.scala:122-176). */
-  def persistIndex(idx: IndexedTable, path: String): Unit = {
-    idx.data.write.mode("overwrite").parquet(s"$path/data")
-    // metadata through the Spark writer too, so persistence works on any
-    // hadoop filesystem (hdfs://, s3a://), not just local paths
-    val spark = idx.data.sparkSession
-    import spark.implicits._
-    Seq(ujsonish(idx)).toDS().coalesce(1).write.mode("overwrite").text(s"$path/meta")
-  }
+  def persistIndex(idx: IndexedTable, path: String): Unit =
+    writeLayout(idx.data, path, ujsonish(idx))
 
   def loadIndex(spark: SparkSession, name: String, path: String): IndexedTable = {
     evictStopped()
-    val meta = spark.read.textFile(s"$path/meta").head()
-    val (keyCols, lows, highs, bits) = parseMeta(meta)
-    val data = spark.read.parquet(s"$path/data")
-      .persist(graft.GraftConf.indexStorageLevel(spark))
+    val (keyCols, lows, highs, bits) = parseMeta(readMeta(spark, path))
+    val data = readData(spark, path)
     // the global level is recomputed from the loaded layout (one tiny
     // agg over the read splits, which inherit the sorted files), so a
     // loaded index serves `knn` with stats-driven radius pruning instead
@@ -552,20 +565,13 @@ object IndexManager {
   /** Persist/load parity for the 1-D range index: sorted parquet whose
     * row-group stats serve key-range pruning on disk; partition bounds
     * are recomputed on load. */
-  def persistRangeIndex(idx: RangeIndexedTable, path: String): Unit = {
-    idx.data.write.mode("overwrite").parquet(s"$path/data")
-    val spark = idx.data.sparkSession
-    import spark.implicits._
-    Seq(s"""{"kind": "range", "keyCol": ${jstr(idx.keyCol)}}""")
-      .toDS().coalesce(1).write.mode("overwrite").text(s"$path/meta")
-  }
+  def persistRangeIndex(idx: RangeIndexedTable, path: String): Unit =
+    writeLayout(idx.data, path, s"""{"kind": "range", "keyCol": ${jstr(idx.keyCol)}}""")
 
   def loadRangeIndex(spark: SparkSession, name: String, path: String): RangeIndexedTable = {
     evictStopped()
-    val meta = spark.read.textFile(s"$path/meta").head()
-    val keyCol = strField(meta, "keyCol")
-    val data = spark.read.parquet(s"$path/data")
-      .persist(graft.GraftConf.indexStorageLevel(spark))
+    val keyCol = strField(readMeta(spark, path), "keyCol")
+    val data = readData(spark, path)
     val idx = new RangeIndexedTable(name, data, keyCol, rangeBounds(data, keyCol))
     rangeRegistry.putIfAbsent((skey(spark), name), idx)
     idx
@@ -574,20 +580,13 @@ object IndexManager {
   /** Persist/load parity for the hash index: the clustered layout lands
     * one hash bucket per file, so an equality lookup on the loaded data
     * prunes to the files whose row-group stats admit the key. */
-  def persistHashIndex(idx: HashIndexedTable, path: String): Unit = {
-    idx.data.write.mode("overwrite").parquet(s"$path/data")
-    val spark = idx.data.sparkSession
-    import spark.implicits._
-    Seq(s"""{"kind": "hash", "keyCol": ${jstr(idx.keyCol)}}""")
-      .toDS().coalesce(1).write.mode("overwrite").text(s"$path/meta")
-  }
+  def persistHashIndex(idx: HashIndexedTable, path: String): Unit =
+    writeLayout(idx.data, path, s"""{"kind": "hash", "keyCol": ${jstr(idx.keyCol)}}""")
 
   def loadHashIndex(spark: SparkSession, name: String, path: String): HashIndexedTable = {
     evictStopped()
-    val meta = spark.read.textFile(s"$path/meta").head()
-    val keyCol = strField(meta, "keyCol")
-    val data = spark.read.parquet(s"$path/data")
-      .persist(graft.GraftConf.indexStorageLevel(spark))
+    val keyCol = strField(readMeta(spark, path), "keyCol")
+    val data = readData(spark, path)
     val idx = new HashIndexedTable(name, data, keyCol)
     hashRegistry.putIfAbsent((skey(spark), name), idx)
     idx
@@ -599,24 +598,19 @@ object IndexManager {
     * of (data, keyCols, bits, capacity), and the one bounded aggregation
     * is cheaper than serializing and trusting stale leaves. */
   def persistQuadIndex(idx: QuadTreeIndexedTable, path: String): Unit = {
-    idx.data.write.mode("overwrite").parquet(s"$path/data")
-    val spark = idx.data.sparkSession
-    import spark.implicits._
     val cols = idx.keyCols.map(jstr).mkString("[", ",", "]")
-    Seq(s"""{"kind": "quadtree", "keyCols": $cols, """ +
-        s""""lows": ${idx.lows.mkString("[", ",", "]")}, """ +
-        s""""highs": ${idx.highs.mkString("[", ",", "]")}, """ +
-        s""""bits": ${idx.bits}, "capacity": ${idx.capacity}}""")
-      .toDS().coalesce(1).write.mode("overwrite").text(s"$path/meta")
+    writeLayout(idx.data, path, s"""{"kind": "quadtree", "keyCols": $cols, """ +
+      s""""lows": ${idx.lows.mkString("[", ",", "]")}, """ +
+      s""""highs": ${idx.highs.mkString("[", ",", "]")}, """ +
+      s""""bits": ${idx.bits}, "capacity": ${idx.capacity}}""")
   }
 
   def loadQuadIndex(spark: SparkSession, name: String, path: String): QuadTreeIndexedTable = {
     evictStopped()
-    val meta = spark.read.textFile(s"$path/meta").head()
+    val meta = readMeta(spark, path)
     val (keyCols, lows, highs, bits) = parseMeta(meta)
     val capacity = """"capacity":\s*(\d+)""".r.findFirstMatchIn(meta).get.group(1).toLong
-    val data = spark.read.parquet(s"$path/data")
-      .persist(graft.GraftConf.indexStorageLevel(spark))
+    val data = readData(spark, path)
     // capacity in the meta is always the resolved value -> same tree
     val (leaves, _) = quadLeaves(data, keyCols, bits, capacity,
       graft.GraftConf.indexPartitions(spark))
@@ -666,7 +660,7 @@ object IndexManager {
     * `kind` tag (z-order metadata written before the tag existed has
     * none — those fall back on the `keyCols` shape). */
   def loadIndexAuto(spark: SparkSession, name: String, path: String): Unit = {
-    val meta = spark.read.textFile(s"$path/meta").head()
+    val meta = readMeta(spark, path)
     (""""kind":\s*"(\w+)"""".r).findFirstMatchIn(meta).map(_.group(1)) match {
       case Some("quadtree")           => loadQuadIndex(spark, name, path)
       case Some("zorder")             => loadIndex(spark, name, path)

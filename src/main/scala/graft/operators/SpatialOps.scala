@@ -23,7 +23,7 @@ import graft.functions._
   *    the DataFrame-native analogue of the reference's SJMR grid join
   *    (reference: execution/join/DJSpark.scala:36-117).
   *  - `knnJoin` (exact) = bounded-radius grid candidates + windowed top-k
-  *    + exact fallback for starved rows — the two-phase bound-then-refine
+  *    + one exact rescue pass for starved rows — the bound-then-refine
   *    shape of the reference's RKJSpark (reference: RKJSpark.scala:37-145)
   *    with sampling capped on the driver like RangePartitioner.sketch.
   */
@@ -324,11 +324,9 @@ object SpatialOps {
       *     with >= k candidates inside theta), counted by its own
       *     checkpoint job;
       *  4. starved lefts — the left's row count minus the satisfied,
-      *     no job of its own — take the point joins' route
-      *     ([[SpatialOps.routeStarved]], gated by
-      *     `spark.graft.knn.retryThreshold`): none, no fallback at all;
-      *     a few, the exact cross-window (the CKJSpark shape); many, a
-      *     doubled-theta candidate pass first.
+      *     no job of its own — take the one rescue pass
+      *     ([[SpatialOps.rescueShapes]]) at each left's proven bound;
+      *     none starved, no rescue is built at all.
       * Output: every left column + the matched right columns, k rows
       * per left (fewer only if |right| < k). */
     def shapeKnnJoin(right: Dataset[_], lShapeCol: String, rShapeCol: String,
@@ -351,72 +349,42 @@ object SpatialOps {
       // plain quantile degenerate: a box CONTAINING k points has k-th
       // distance exactly 0, so when most sampled boxes are
       // point-saturated the 0.95-quantile collapses to ~0, the grid
-      // pass (and its 2x retry — 2*0 = 0) rescues nothing, and every
-      // point-starved box detonates in the cross fallback (the 10x
-      // trend measured 80 GB of shuffle). The boxes that NEED reach are
+      // pass satisfies almost nothing, and every point-starved box falls
+      // to the starved route (as a cross fallback, the 10x trend
+      // measured 80 GB of shuffle). The boxes that NEED reach are
       // exactly the positive-radius samples, so theta also consults the
       // quantile of the POSITIVE radii — zero-radius lefts only gain
       // already-matching candidates from the wider grid.
       val rS = SpatialOps.shapeStats(rt, rShapeCol, sampleCap, seed = 42,
-        probes = lShapes, k = k)
+        probes = lShapes, k = k, extent = true)
       val rB = rS.sample.map(SpatialOps.sampleBox)
       val theta: Double =
         if (lShapes.isEmpty || rS.count < k) 0.0
         else {
+          // sorts a copy: `rS.kth` stays aligned with `lShapes` for the rescue
           def quant(xs: Array[Double]): Double =
             if (xs.isEmpty) 0.0
             else {
-              java.util.Arrays.sort(xs)
-              xs(math.min(xs.length - 1,
-                math.ceil(quantile * xs.length).toInt - 1).max(0))
+              val s = xs.sorted
+              s(math.min(s.length - 1, math.ceil(quantile * s.length).toInt - 1).max(0))
             }
           val q = math.max(quant(rS.kth), quant(rS.kth.filter(_ > 0)))
           math.max(q * safety, 1e-9)
         }
-      // shape-distance PBSM candidates within d, the cell side sized
-      // from left boxes `lB` of a `lN`-row left and the right sample
-      def candidates(left: DataFrame, lB: Array[Array[Double]], lN: Long,
-                     d: Double): DataFrame =
-        SpatialOps.pbsmJoin(left, SpatialOps.shapeBox(col(lShapeCol)),
-          rt, SpatialOps.shapeBox(col(rShapeCol)),
-          d, SpatialOps.pbsmSide(lB, lN, rB, rS.count, d),
-          stDistance(col(lShapeCol), col(rShapeCol)) <= d)
-          .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
-      val cand = candidates(l, lShapes.map(SpatialOps.sampleBox), lS.count, theta)
+      val lB = lShapes.map(SpatialOps.sampleBox)
+      val (lBox, rBox) = (SpatialOps.shapeBox(col(lShapeCol)), SpatialOps.shapeBox(col(rShapeCol)))
+      val cand = SpatialOps.pbsmJoin(l, lBox, rt, rBox, theta,
+          SpatialOps.pbsmSide(lB, lS.count, rB, rS.count, theta),
+          stDistance(col(lShapeCol), col(rShapeCol)) <= theta)
+        .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
       val top = SpatialOps.topKCounted(cand, leftId, k, tieBreak)
       // null-shape lefts have no neighbours and no candidates: only the
-      // `count` lefts with a shape can starve
-      val nStarved = lS.count - top.nSatisfied
-      // the exact cross-window (the CKJSpark shape)
-      def naive(left: DataFrame): DataFrame = {
-        val w = Window.partitionBy(col(leftId))
-          .orderBy((col(DIST) +: tieBreak.map(col)).map(_.asc): _*)
-        left.crossJoin(rt)
-          .withColumn(DIST, stDistance(col(lShapeCol), col(rShapeCol)))
-          .filter(col(DIST).isNotNull)
-          .withColumn("__graft_rn", row_number().over(w))
-          .filter(col("__graft_rn") <= k)
-          .drop("__graft_rn", DIST)
-      }
-      // The point joins' starved route: a small starved set goes straight
-      // to the cross-window; a large one takes a doubled-theta retry
-      // first. The 0.95-quantile theta leaves up to ~5% of lefts starved
-      // BY CONSTRUCTION, and at scale that fraction crossed with the full
-      // right is the detonation (the 10x trend measured 38 GB of shuffle
-      // without the retry). The 2x grid pass rescues every left whose
-      // radius estimate was off by less than 2x; only the genuinely
-      // adversarial remainder pays the exact cross-window. Only the
-      // starved left takes a stats pass again.
-      SpatialOps.routeStarved(top.rows, nStarved,
-          SpatialOps.minusByKey(l, top.ids, leftId),
-          graft.GraftConf.knnRetryThreshold(l.sparkSession), rS.count)(
-        naive, starved => {
-          val (sB, sN) = SpatialOps.sampleBoxes(starved, lShapeCol, sampleCap, seed = 7)
-          val top2 = SpatialOps.topKCounted(candidates(starved, sB, sN, theta * 2),
-            leftId, k, tieBreak)
-          SpatialOps.withStarved(top2.rows, nStarved - top2.nSatisfied)(
-            naive(SpatialOps.minusByKey(starved, top2.ids, leftId)))
-        })
+      // `count` lefts with a shape can starve, and none has a neighbour
+      // when the right is empty
+      if (rS.count == 0) return top.rows
+      SpatialOps.withStarved(top.rows, lS.count - top.nSatisfied)(
+        SpatialOps.rescueShapes(SpatialOps.minusByKey(l, top.ids, leftId), lShapeCol,
+          rt, rShapeCol, lB, lS.count, rB, rS, k, leftId, tieBreak))
     }
 
     /** Distance join, grid algorithm: left rows hash to their own cell
@@ -633,18 +601,14 @@ object SpatialOps {
       val l = ds.toDF
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoinNaive", l, rt)
-      val joined = SpatialOps.spreadForCross(l)
+      SpatialOps.firstK(SpatialOps.spreadForCross(l)
         .crossJoin(SpatialOps.spreadForCross(rt))
         .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
-        .filter(col(DIST).isNotNull)
-      val w = Window.partitionBy(col(leftId))
-        .orderBy((col(DIST) +: tieBreak.map(col)).map(_.asc): _*)
-      joined.withColumn("__graft_rn", row_number().over(w))
-        .filter(col("__graft_rn") <= k)
-        .drop(DIST, "__graft_rn")
+        .filter(col(DIST).isNotNull), leftId, k, tieBreak, DIST)
+        .drop(DIST)
     }
 
-    /** kNN join, bounded-radius grid + exact fallback.
+    /** kNN join, bounded-radius grid + one exact rescue pass.
       *
       * Phase 1 estimates radii from a driver-capped sample: a global
       * theta (the grid's cell side) such that most left rows find >= k
@@ -654,24 +618,24 @@ object SpatialOps {
       * candidates at their own much smaller radius instead of the global
       * quantile's. Phase 2 runs the grid equi-join at the global cell
       * side but keeps only pairs within the left cell's theta, then
-      * windows to each left row's k nearest. Phase 3 re-runs the exact
-      * windowed join for the starved left rows, so the result is exact
-      * regardless of both estimates. Skew behavior: a dense cell's
+      * windows to each left row's k nearest. Phase 3 rescues the starved
+      * left rows in one pass at each one's proven bound
+      * ([[SpatialOps.rescueKeys]]), so the result is exact regardless of
+      * both estimates. Skew behavior: a dense cell's
       * candidate set scales with its own density * theta_cell^d (bounded
       * by the sampled kth-NN distances there), not density * theta^d.
       */
     def knnJoin(right: Dataset[_], lKeys: Seq[String], rKeys: Seq[String],
                 k: Int, leftId: String, tieBreak: Seq[String],
                 sampleCap: Int = 2000, quantile: Double = 0.95,
-                safety: Double = 2.0, maxRefine: Int = 64,
-                retryThreshold: Long = 1024L): DataFrame = {
+                safety: Double = 2.0, maxRefine: Int = 64): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoin", l, rt)
 
-      val SpatialOps.KnnSample(lPts, radii, theta, nLeft, nRight, _) =
-        SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
-      val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
+      val ks = SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
+      val SpatialOps.KnnSample(lPts, radii, _, theta, nLeft, _, _) = ks
+      val gridCell = (p: Array[Double]) => p.toSeq.map(SpatialOps.cellId(_, theta))
       val cellThetas: Map[Seq[Long], Double] =
         if (lPts.isEmpty) Map.empty
         else SpatialOps.perCellQuantile(lPts.map(gridCell), radii, quantile, theta)
@@ -679,17 +643,14 @@ object SpatialOps {
       val cand = gridCandidates(l, rt, lKeys, rKeys, theta, cellThetas, maxRefine)
         .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
 
-      // Starved lefts (< k candidates within theta) take the exact
-      // fallback for ALL of their k rows, so their partial candidates
-      // must be excluded or they'd appear twice in the union — same
-      // guard as pivotCellKnn / zknnJoinImpl.
+      // Starved lefts (< k candidates within theta) take the rescue
+      // for ALL of their k rows, so their partial candidates must be
+      // excluded or they'd appear twice in the union — same guard as
+      // pivotCellKnn / zknnJoinImpl.
       val top = SpatialOps.topKCounted(cand, leftId, k, tieBreak)
-      val nStarved = nLeft - top.nSatisfied
-      SpatialOps.routeStarved(top.rows, nStarved,
-        SpatialOps.minusByKey(l, top.ids, leftId), retryThreshold, nRight)(
-        new DatasetSpatialOps(_).knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak),
-        SpatialOps.gridRetryThenNaive(_, nStarved, rt, lKeys, rKeys, k, leftId,
-          tieBreak, theta, SpatialOps.retryCellThetas(lPts, radii, quantile, theta)))
+      SpatialOps.withStarved(top.rows, nLeft - top.nSatisfied)(
+        SpatialOps.rescueKeys(SpatialOps.minusByKey(l, top.ids, leftId), rt, lKeys, rKeys,
+          lPts, ks.kth, k, leftId, tieBreak))
     }
 
     /** kNN join, pivot (Voronoi) algorithm — the rebuild of the
@@ -710,19 +671,20 @@ object SpatialOps {
       *     (triangle inequality: r can serve some l in cell i only if
       *     d(r, p_i) <= maxdl_i + theta);
       *  5. equi-join on cell id + exact distance <= theta, windowed
-      *     top-k, exact fallback for starved lefts.
-      * Correct for any theta (the fallback guarantees exactness). */
+      *     top-k, and the one rescue pass for starved lefts.
+      * Correct for any theta (the rescue guarantees exactness). */
     def knnJoinPivot(right: Dataset[_], lKeys: Seq[String], rKeys: Seq[String],
                      k: Int, leftId: String, tieBreak: Seq[String],
                      numPivots: Int = 32, sampleCap: Int = 2000,
-                     quantile: Double = 0.95, safety: Double = 2.0,
-                     retryThreshold: Long = 1024L): DataFrame = {
+                     quantile: Double = 0.95, safety: Double = 2.0): DataFrame = {
       val l = ds.toDF
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoinPivot", l, rt)
 
-      val SpatialOps.KnnSample(lPts, radii, theta, _, nRight, rSample) =
+      val SpatialOps.KnnSample(lPts, radii, kth, theta, _, nRight, rSample) =
         SpatialOps.sampleKnnRadii(l, rt, lKeys, rKeys, k, sampleCap, quantile, safety)
+      // no keyed left: the naive plan IS the correct empty result
+      if (lPts.isEmpty) return knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak)
       // a uniform right sample of `n` rows: a prefix of the stats pass's
       // own sample when it is large enough, else one more pass
       def rightSample(n: Int): Array[Array[Double]] =
@@ -761,26 +723,16 @@ object SpatialOps {
         graft.GraftConf.knnMaxPivots(ds.sparkSession),
         math.max(numPivots, budget))
 
-      // key columns packed as ONE array vector for the compiled argmin
-      // kernel (same Euclidean metric as pointDistance/exactDist — the
-      // triangle-inequality bounds need metric consistency); a null in
-      // ANY key nulls the whole vector so those rows route to the
-      // fallback's null semantics, as the old per-element form did
-      def keyVec(keys: Seq[String]): Column =
-        when(keys.map(col(_).isNotNull).reduce(_ && _),
-          array(keys.map(col(_).cast("double")): _*))
       def run(pivots: Array[Array[Double]], cellThetas: Map[Int, Double],
               hier: Option[SpatialOps.PivotHierarchy]): DataFrame =
-        pivotCellKnn(l, rt, keyVec(lKeys), keyVec(rKeys),
+        pivotCellKnn(l, rt, SpatialOps.keyVec(lKeys), SpatialOps.keyVec(rKeys),
           pivotsFlat = pivots.flatten, dim = lKeys.length, vecIsFloat = false,
           numPivots = pivots.length, theta = theta,
           exactDist = pointDistance(lKeys.map(col), rKeys.map(col)),
           lId = leftId, k = k, tieBreak = tieBreak,
           outCols = (l.columns ++ rt.columns).map(col),
-          fallback = starved =>
-            new DatasetSpatialOps(starved).knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak),
-          cellThetas = cellThetas,
-          retryThreshold = retryThreshold, hier = hier, rightCount = nRight)
+          rescue = SpatialOps.rescueKeys(_, rt, lKeys, rKeys, lPts, kth, k, leftId, tieBreak),
+          cellThetas = cellThetas, hier = hier)
 
       if (lKeys.length <= 3 && pTarget > SpatialOps.HierPivotThreshold) {
         // ---- two-level route (p ∝ n, d <= 3) ----
@@ -886,15 +838,13 @@ object SpatialOps {
             knnJoinPivot(right, lKeys, rKeys, k, leftId, tieBreak,
               sampleCap = graft.GraftConf.sampleCap(s),
               quantile = graft.GraftConf.knnQuantile(s),
-              safety = graft.GraftConf.knnSafety(s),
-              retryThreshold = graft.GraftConf.knnRetryThreshold(s))
+              safety = graft.GraftConf.knnSafety(s))
           else
             knnJoin(right, lKeys, rKeys, k, leftId, tieBreak,
               sampleCap = graft.GraftConf.sampleCap(s),
               quantile = graft.GraftConf.knnQuantile(s),
               safety = graft.GraftConf.knnSafety(s),
-              maxRefine = graft.GraftConf.knnMaxRefine(s),
-              retryThreshold = graft.GraftConf.knnRetryThreshold(s))
+              maxRefine = graft.GraftConf.knnMaxRefine(s))
         case "zorder" =>
           zknnJoin(right, lKeys, rKeys, k, leftId, rightId, tieBreak,
             shifts = graft.GraftConf.zknnShifts(s), bits = graft.GraftConf.zknnBits(s),
@@ -903,14 +853,12 @@ object SpatialOps {
         case "pivot" => knnJoinPivot(right, lKeys, rKeys, k, leftId, tieBreak,
           sampleCap = graft.GraftConf.sampleCap(s),
           quantile = graft.GraftConf.knnQuantile(s),
-          safety = graft.GraftConf.knnSafety(s),
-          retryThreshold = graft.GraftConf.knnRetryThreshold(s))
+          safety = graft.GraftConf.knnSafety(s))
         case "grid"  => knnJoin(right, lKeys, rKeys, k, leftId, tieBreak,
           sampleCap = graft.GraftConf.sampleCap(s),
           quantile = graft.GraftConf.knnQuantile(s),
           safety = graft.GraftConf.knnSafety(s),
-          maxRefine = graft.GraftConf.knnMaxRefine(s),
-          retryThreshold = graft.GraftConf.knnRetryThreshold(s))
+          maxRefine = graft.GraftConf.knnMaxRefine(s))
         case other => throw new IllegalArgumentException(
           s"${graft.GraftConf.KnnJoinAlgo}=$other; expected grid|zorder|pivot|naive|auto")
       }
@@ -971,7 +919,7 @@ object SpatialOps {
     if (lBounds.isEmpty || rBounds.isEmpty)
       return new DatasetSpatialOps(l).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak)
     val (llo, lhi, nLeft) = lBounds.get
-    val (rlo, rhi, nRight) = rBounds.get
+    val (rlo, rhi, _) = rBounds.get
     val lo = llo.zip(rlo).map(t => math.min(t._1, t._2))
     val hi = lhi.zip(rhi).map(t => math.max(t._1, t._2))
     val span = lo.indices.map(i => hi(i) - lo(i)).toArray
@@ -1044,29 +992,17 @@ object SpatialOps {
       .join(r, col("__rid") === col(rightId).cast("long"))
       .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
     // left rows that found < k curve candidates (sparse right side /
-    // partition edges) fall back to the exact windowed join, so the
-    // "k rows per left" contract holds even when the curve misses;
-    // they must come ONLY from the fallback or they'd be double-counted.
+    // partition edges) take the exact rescue, so the "k rows per left"
+    // contract holds even when the curve misses; they must come ONLY
+    // from the rescue or they'd be double-counted. The curve has no
+    // radius of its own, so the rescue's sample and exact radii come
+    // from one stats pass per side, run only when some left starved.
     val top = topKCounted(joined, leftId, k, tieBreak)
-    val nStarved = nLeft - top.nSatisfied
-    // the shared starved route (routeStarved); the curve has no radius
-    // of its own, so the retry's theta comes from the grid join's capped
-    // sampling estimate — run ONLY when the retry actually engages (mass
-    // starvation), so the common path pays neither the sampling nor the
-    // retry pass. Threshold and sampling params come from GraftConf like
-    // the grid/pivot paths (ADVICE r7: these were hardcoded here, so
-    // spark.graft.knn.retryThreshold silently skipped the zorder algo).
-    routeStarved(top.rows.drop("__lid", "__rid"), nStarved,
-      minusByKey(l, top.ids, leftId), graft.GraftConf.knnRetryThreshold(spark), nRight)(
-      new DatasetSpatialOps(_).knnJoinNaive(r, lKeys, rKeys, k, leftId, tieBreak),
-      starved => {
-        val quantile = graft.GraftConf.knnQuantile(spark)
-        val KnnSample(lPts, radii, theta, _, _, _) = sampleKnnRadii(l, r, lKeys, rKeys, k,
-          cap = graft.GraftConf.sampleCap(spark), quantile = quantile,
-          safety = graft.GraftConf.knnSafety(spark))
-        gridRetryThenNaive(starved, nStarved, r, lKeys, rKeys, k, leftId, tieBreak,
-          theta, retryCellThetas(lPts, radii, quantile, theta))
-      })
+    withStarved(top.rows.drop("__lid", "__rid"), nLeft - top.nSatisfied) {
+      val lS = pointStats(l, lKeys, graft.GraftConf.sampleCap(spark))
+      rescueKeys(minusByKey(l, top.ids, leftId), r, lKeys, rKeys, lS.sample,
+        pointStats(r, rKeys, 1, probes = lS.sample, k = k).kth, k, leftId, tieBreak)
+    }
   }
 
   /** Per-cell refinement of the sampled kNN radius: returns the global
@@ -1079,19 +1015,20 @@ object SpatialOps {
     * covers every cell's filter ball; cells the sample never saw fall
     * back to the global theta in [[gridCandidates]]. Driver memory is
     * bounded by the sample cap (<= cap cells). Like the global estimate,
-    * this only affects performance — the exact fallback in `knnJoin`
+    * this only affects performance — the exact rescue in `knnJoin`
     * restores any left row whose true kth neighbor lies beyond its
     * cell's theta. */
   /** The kNN joins' plan-build statistics: the left sample, each sampled
-    * point's exact, safety'd kth-NN radius against the full right side,
+    * point's exact, safety'd kth-NN radius against the full right side
+    * (`radii`) and the same radius unscaled (`kth`, the rescue's reach),
     * the global quantile `theta`, the left side's exact count of rows
     * with every key non-null (the starved count is `nLeft` minus the
     * satisfied: a null-key left has no neighbours, so never starves),
     * the right side's exact non-null row count and its uniform sample
     * (ascending priority, so a prefix is a smaller uniform sample). */
   private[operators] final case class KnnSample(
-      lPts: Array[Array[Double]], radii: Array[Double], theta: Double,
-      nLeft: Long, nRight: Long, rPts: Array[Array[Double]])
+      lPts: Array[Array[Double]], radii: Array[Double], kth: Array[Double],
+      theta: Double, nLeft: Long, nRight: Long, rPts: Array[Array[Double]])
 
   /** [[KnnSample]] from TWO stats passes ([[statsPass]]): the left, then
     * the right carrying the left sample as probes — the shared front
@@ -1101,8 +1038,8 @@ object SpatialOps {
     * so driver work is O(cap) rows regardless of table size, and callers
     * sizing pivot budgets from `nRight` or drawing pivots from `rPts`
     * add no job. The estimates only affect performance — the exact
-    * fallback in every kNN join guarantees correctness whatever comes
-    * out. Empty left → (empty, empty, 1e-9, ...). */
+    * rescue in every kNN join guarantees correctness whatever comes
+    * out. Empty left → (empty, empty, empty, 1e-9, ...). */
   private[operators] def sampleKnnRadii(
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
@@ -1129,7 +1066,8 @@ object SpatialOps {
     require(right.count > 0, "kNN join: right side is empty")
     // empty left: any radius yields the correct empty result downstream
     if (lPts.isEmpty)
-      return KnnSample(Array.empty, Array.empty, 1e-9, left.count, right.count, right.sample)
+      return KnnSample(Array.empty, Array.empty, Array.empty, 1e-9, left.count, right.count,
+        right.sample)
     // Volume-calibrated safety (guide §2.3 shuffle fewer bytes): the
     // safety margin exists to cover unsampled lefts whose kth radius
     // exceeds the sampled quantile, and what it costs downstream is
@@ -1141,13 +1079,13 @@ object SpatialOps {
     // (i.e. the 2-D behavior, unchanged there): eff = s^(2/d). kth-NN
     // radii concentrate as d grows, so the thinner radial margin still
     // covers stragglers; exactness never depends on it — starved lefts
-    // take the doubled-theta retry + exact fallback either way.
+    // take the exact rescue either way.
     val effSafety =
       if (lKeys.length <= 2) safety
       else math.pow(safety, 2.0 / lKeys.length)
     val radii = right.kth.map(d => math.max(d * effSafety, 1e-9))
-    KnnSample(lPts, radii, quantileOf(radii.sorted, quantile), left.count, right.count,
-      right.sample)
+    KnnSample(lPts, radii, right.kth, quantileOf(radii.sorted, quantile), left.count,
+      right.count, right.sample)
   }
 
   /** Insert `x` into the ascending k-smallest array `best` (slots not
@@ -1344,7 +1282,7 @@ object SpatialOps {
     * measured beneficial. Driver-only, on the already-capped samples:
     * O(iterations × (|lPool| + cells × |rPool|)) — a few ms. Pivot
     * placement only shapes performance; exactness always comes from the
-    * bounds + fallback downstream. */
+    * bounds + rescue downstream. */
   private[operators] def refinePivots[T](
       lPool: IndexedSeq[T], radii: Array[Double], rPool: IndexedSeq[T],
       dist: (T, T) => Double, initial: IndexedSeq[T],
@@ -1420,14 +1358,15 @@ object SpatialOps {
     *    lefts, so a cell's sample count is proportional to its left
     *    count — a sparse-sampled cell has few lefts and its
     *    underestimated theta can only starve those few into the exact
-    *    fallback, while the dense cluster's cells (many samples, tight
+    *    rescue, while the dense cluster's cells (many samples, tight
     *    thetas) are exactly the skew discipline. A floor of 8 here
     *    DOUBLED the skew-grid bench (330 cells / 2000 samples left 328
     *    cells on the sparse-sized global theta).
     *  - PIVOT cells (extent-sized, count scaling with ~sqrt(n)) pass 8:
     *    a 1-2-sample cell can hold THOUSANDS of lefts (cells ~ sample
     *    size at scale), so one low sampled radius mass-starves the
-    *    whole cell into the retry + fallback passes — the 100x d=4
+    *    whole cell into the starved route (then a retry and a cross
+    *    fallback) — the 100x d=4
     *    slice read 402 s / exponent 1.03 without the floor vs 287 s /
     *    0.88 with it. Sparse-sampled pivot cells fall back to the
     *    global theta: wider bands, zero estimation-noise starvation. */
@@ -1443,28 +1382,25 @@ object SpatialOps {
       l: DataFrame, r: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       k: Int, cap: Int, quantile: Double, safety: Double
   ): (Double, Map[Seq[Long], Double]) = {
-    val KnnSample(lPts, radii, theta, _, _, _) =
+    val KnnSample(lPts, radii, _, theta, _, _, _) =
       sampleKnnRadii(l, r, lKeys, rKeys, k, cap, quantile, safety)
     if (lPts.isEmpty) return (theta, Map.empty)
-    val gridCell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / theta).toLong)
+    val gridCell = (p: Array[Double]) => p.toSeq.map(cellId(_, theta))
     (theta, perCellQuantile(lPts.map(gridCell), radii, quantile, theta))
   }
 
-  /** Per-cell thetas for the doubled-radius retry grid (cell side
-    * 2*theta, radii doubled, capped at the side): the retry MUST keep
-    * the per-cell skew discipline — with only the global 2*theta, a
-    * dense cluster's cells filter at the sparse-region-sized radius and
-    * the retry's candidate set detonates exactly the way the r3 bench
-    * proved for phase 1 (measured again in r7: +2 s on the skew
-    * entries from a global-theta retry, gone with this map). */
-  private[operators] def retryCellThetas(
-      lPts: Array[Array[Double]], radii: Array[Double],
-      quantile: Double, theta: Double): Map[Seq[Long], Double] = {
-    if (lPts.isEmpty) return Map.empty
-    val side = 2 * theta
-    val cell = (p: Array[Double]) => p.toSeq.map(x => math.floor(x / side).toLong)
-    perCellQuantile(lPts.map(cell), radii.map(_ * 2), quantile, side)
-  }
+  /** Cell ids of the kNN grid and the PBSM core saturate at ±2^44 cells:
+    * past that, `floor(x / side)` loses whole cells to rounding and then
+    * overflows the long id. Clamping is monotone and never widens a gap,
+    * so cells within one of each other stay within one and far cells
+    * only merge — a candidate superset, still exact. */
+  private val CellLimit = 1L << 44
+
+  private[operators] def cellId(x: Column, side: Column): Column =
+    least(greatest(floor(x / side), lit(-CellLimit)), lit(CellLimit))
+
+  private[operators] def cellId(x: Double, side: Double): Long =
+    math.max(-CellLimit, math.min(CellLimit, math.floor(x / side).toLong))
 
   /** Candidate pairs for the grid kNN join: equi-join on cell id at cell
     * side `theta` (left rows keep their own cell, right rows replicate to
@@ -1493,7 +1429,7 @@ object SpatialOps {
     * the refined 3^d neighborhood still covers every cell's filter ball,
     * and the coarse 3^d neighborhood covers it since theta_C <= theta.
     * A left row with >= k candidates here provably has its true k
-    * nearest among them; starved lefts take the caller's exact fallback.
+    * nearest among them; starved lefts take the caller's exact rescue.
     * Output columns: left ++ right, no internals. */
   private[operators] def gridCandidates(
       l: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
@@ -1528,7 +1464,7 @@ object SpatialOps {
     // left: own coarse cell, (theta_C, rC) via broadcast, refined ids
     val lCellCols = (0 until dims).map(i => s"${CELL}_lc$i")
     val lCells = lKeys.zipWithIndex.map { case (k, i) =>
-      floor(col(k) / theta).cast("long").as(s"${CELL}_lc$i")
+      cellId(col(k), lit(theta)).as(s"${CELL}_lc$i")
     }
     val lTagged = l.select(l.columns.map(col) ++ lCells: _*)
     val lWithTheta = ctDf("lc", Some("__graft_ctheta"), "__graft_lrc") match {
@@ -1541,7 +1477,7 @@ object SpatialOps {
     }
     val lRefined = lKeys.zipWithIndex.foldLeft(lWithTheta) { case (df, (k, i)) =>
       df.withColumn(s"${CELL}_lf$i",
-        floor(col(k) * col("__graft_lrc") / theta).cast("long"))
+        cellId(col(k) * col("__graft_lrc"), lit(theta)))
     }
 
     // right: replicate to the 3^d coarse neighborhood, pick up the
@@ -1553,7 +1489,7 @@ object SpatialOps {
       .foldLeft(Seq(Seq.empty[Int]))((acc, cs) => for (a <- acc; c <- cs) yield a :+ c)
     val offArr = array(offsets.map(o => array(o.map(lit): _*)): _*)
     val rCoarse = rKeys.zipWithIndex.map { case (k, i) =>
-      (floor(col(k) / theta).cast("long") +
+      (cellId(col(k), lit(theta)) +
         element_at(col("__graft_off"), i + 1)).as(s"${CELL}_rc$i")
     }
     val rTagged = rt.withColumn("__graft_off", explode(offArr))
@@ -1577,7 +1513,7 @@ object SpatialOps {
             element_at(col("__graft_off"), i + 1)).reduce(_ && _))
     val rRefined = rKeys.zipWithIndex.foldLeft(rRefined0) { case (df, (k, i)) =>
       df.withColumn(s"${CELL}_rf$i",
-        floor(col(k) * col("__graft_rrc") / theta).cast("long") +
+        cellId(col(k) * col("__graft_rrc"), lit(theta)) +
           element_at(col("__graft_roff"), i + 1))
     }
 
@@ -1660,64 +1596,116 @@ object SpatialOps {
       kept.filter(rn === 1).select(col(leftId)), n)
   }
 
-  /** `kept` plus `fallback`, the rows of `nStarved` starved lefts —
-    * `kept` alone when none is starved, so no fallback plan is built
+  /** `kept` plus `rescue`, the rows of `nStarved` starved lefts —
+    * `kept` alone when none is starved, so no rescue plan is built
     * over an empty set. */
   private[operators] def withStarved(kept: DataFrame, nStarved: Long)(
-      fallback: => DataFrame): DataFrame = {
+      rescue: => DataFrame): DataFrame = {
     require(nStarved >= 0,
       s"kNN join: $nStarved starved lefts (a left input that changed between passes?)")
-    if (nStarved == 0) kept else kept.unionByName(fallback)
+    if (nStarved == 0) kept else kept.unionByName(rescue)
   }
 
-  /** The starved-left route every kNN join shares: direct to the exact
-    * cross-window when the starved set is small (the designed <= ~5%
-    * case — a retry would only add a pass: under skew the stubborn
-    * starved lefts are exactly the ones whose radius estimate is off by
-    * MORE than 2x, measured +2 s of pure overhead at sf0.1), else the
-    * bounded doubled-theta retry first (adversarial estimate failure —
-    * mass starvation from an unlucky sample), so only rows still starved
-    * at 2x pay the cross plan. Direct-naive is gated on PAIR VOLUME, not
-    * starved count alone: the exact fallback costs starved · |right|
-    * window pairs, so a "small" starved set against a huge right side is
-    * a hidden quadratic — 1000 starved lefts (under the 1024 threshold)
-    * against the 1.5M-row d=4 100x slice put a 1.5e9-pair cross at
-    * ~170 s where the retry rescues them in one cheap candidate pass.
-    * Unknown `rightCount` (-1) keeps the count-only gate. `starved` is
-    * lazy: the direct route reads it once, inside the query; only the
-    * retry, which reads it three times, checkpoints it. */
-  private[operators] def routeStarved(
-      kept: DataFrame, nStarved: Long, starved: => DataFrame,
-      retryThreshold: Long, rightCount: Long)(
-      naive: DataFrame => DataFrame, retry: DataFrame => DataFrame): DataFrame =
-    withStarved(kept, nStarved) {
-      val direct = nStarved <= retryThreshold && (rightCount < 0L ||
-        nStarved <= graft.GraftConf.knnNaivePairBudget(kept.sparkSession) /
-          math.max(rightCount, 1L))
-      if (direct) naive(starved) else retry(starved.localCheckpoint())
-    }
+  /** Pivots of the rescue pass's Voronoi cells: enough to keep a
+    * starved left's replicas and candidates local, few enough that the
+    * per-row kernels and the driver's maximin stay trivial. */
+  private val RescuePivots = 64
 
-  /** Bounded retry for `nStarved` checkpointed starved lefts before the
-    * cross-window plan (VERDICT r6 #4): one grid pass at DOUBLED per-cell
-    * thetas — the retry keeps the per-cell skew discipline via
-    * [[retryCellThetas]]; with only the global 2*theta a dense cluster's
-    * cells filter at the sparse-region-sized radius and the candidate set
-    * detonates — then the exact cross-window only for the rows that stay
-    * starved at 2x. Exactness: every per-cell radius is capped at the
-    * grid side 2*theta, so the 3^d neighborhood covers every filter ball
-    * — a left with >= k candidates here provably has its true k nearest
-    * among them, same argument as the main grid phase. */
-  private[operators] def gridRetryThenNaive(
-      starved: DataFrame, nStarved: Long, rt: DataFrame, lKeys: Seq[String],
-      rKeys: Seq[String], k: Int, leftId: String, tieBreak: Seq[String], theta: Double,
-      cellThetas2: Map[Seq[Long], Double]): DataFrame = {
-    val cand = gridCandidates(starved, rt, lKeys, rKeys, 2 * theta, cellThetas2)
-      .withColumn(DIST, pointDistance(lKeys.map(col), rKeys.map(col)))
-    val top = topKCounted(cand, leftId, k, tieBreak)
-    withStarved(top.rows, nStarved - top.nSatisfied)(
-      new DatasetSpatialOps(minusByKey(starved, top.ids, leftId))
-        .knnJoinNaive(rt, lKeys, rKeys, k, leftId, tieBreak))
+  /** The one rescue pass for starved lefts — Simba's RKJSpark
+    * bound-then-refine (reference: RKJSpark.scala:105-110) at a PROVEN
+    * per-left bound. `sample` holds left points with `reach`, their
+    * exact, unscaled k-th distances to the whole right side. For a left
+    * l and any sample point s, the triangle inequality bounds l's k-th
+    * distance by `d(l, s) + reach(s)`, so θ_l, the minimum over the
+    * sample, leaves no left starved: one pass, no retry, no cross.
+    *
+    * Rights go to their nearest of <= 64 maximin pivots over the sample
+    * ([[graft.functions.pivotArgmin]]); each starved left replicates to
+    * the cells that can hold a right within θ_l
+    * ([[graft.functions.knnRescue]]); the cell equi-join keeps pairs
+    * within θ_l and a plain per-left `row_number <= k` ranks them —
+    * every right at or below l's k-th distance is a candidate, so the
+    * top-k and its tie-break equal the naive twin's. Built from driver
+    * values only, so no job runs until the query does. `lVec`/`rVec`
+    * are NULL for rows with a null key: those never join. */
+  private[operators] def rescueStarved(
+      starved: DataFrame, rt: DataFrame, lVec: Column, rVec: Column, dim: Int,
+      vecIsFloat: Boolean, sample: Array[Array[Double]], reach: Array[Double],
+      exactDist: Column, lId: String, k: Int, tieBreak: Seq[String],
+      outCols: Seq[Column]): DataFrame = {
+    val pivots = farthestPointPivots[Array[Double]](sample.toIndexedSeq,
+      graft.spatial.Dist.pointToPoint, RescuePivots).flatten.toArray
+    val lCells = starved
+      .withColumn("__graft_rescue", knnRescue(lVec, sample.flatten, reach, pivots, dim,
+        vecIsFloat))
+      .withColumn("__graft_theta", col("__graft_rescue.theta"))
+      .withColumn("__graft_lvc", explode(col("__graft_rescue.cells")))
+      .drop("__graft_rescue")
+    val rCells = rt.withColumn("__graft_rvc",
+      pivotArgmin(rVec, pivots, dim, vecIsFloat).getField("cell"))
+    firstK(lCells.join(rCells, col("__graft_lvc") === col("__graft_rvc"))
+      .withColumn("__graft_d", exactDist)
+      .filter(col("__graft_d") <= col("__graft_theta")), lId, k, tieBreak, "__graft_d")
+      .select(outCols: _*)
   }
+
+  /** [[rescueStarved]] for coordinate-keyed joins: output left ++ right. */
+  private[operators] def rescueKeys(
+      starved: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
+      sample: Array[Array[Double]], reach: Array[Double], k: Int, lId: String,
+      tieBreak: Seq[String]): DataFrame =
+    rescueStarved(starved, rt, keyVec(lKeys), keyVec(rKeys), lKeys.length,
+      vecIsFloat = false, sample, reach, pointDistance(lKeys.map(col), rKeys.map(col)),
+      lId, k, tieBreak, (starved.columns ++ rt.columns).map(col))
+
+  /** The shape kNN join's rescue: the PBSM core ([[pbsmJoin]]) with
+    * each starved left's bbox dilated by its own proven bound
+    * θ_l = min over the left sample s of maxBoxDist(bbox l, bbox s) +
+    * reach(s) ([[graft.functions.boxReach]]; reach = `rS.kth`, exact and
+    * unscaled), then the θ_l filter and a plain per-left top-k — the
+    * [[rescueStarved]] argument with boxes for points. A far outlier's
+    * dilated box would cover unboundedly many cells, so the box is
+    * clamped to the right side's bbox extent (`rS.extent`, from the
+    * stats pass that computed the reaches) and the cell side is at
+    * least 1/64 of that extent's span: <= 65² cells per left. `rS`
+    * holds at least one right. */
+  private[operators] def rescueShapes(
+      starved: DataFrame, lShapeCol: String, rt: DataFrame, rShapeCol: String,
+      lB: Array[Array[Double]], lN: Long, rB: Array[Array[Double]],
+      rS: InputStats[graft.spatial.Shape], k: Int, lId: String,
+      tieBreak: Seq[String]): DataFrame = {
+    val Seq(lx, ly, hx, hy) = shapeBox(col(lShapeCol))
+    val Array(ex0, ey0, ex1, ey1) = rS.extent
+    val side = math.max(pbsmSide(lB, lN, rB, rS.count, rS.kth.max),
+      math.max(ex1 - ex0, ey1 - ey0) / 64)
+    val theta = col("__graft_theta")
+    val dist = stDistance(col(lShapeCol), col(rShapeCol))
+    val withTheta = starved.withColumn("__graft_theta", boxReach(
+      when(col(lShapeCol).isNotNull, array(lx, ly, hx, hy)), lB.flatten, rS.kth))
+    firstK(pbsmJoin(withTheta,
+        Seq(greatest(lx - theta, lit(ex0)), greatest(ly - theta, lit(ey0)),
+          least(hx + theta, lit(ex1)), least(hy + theta, lit(ey1))),
+        rt, shapeBox(col(rShapeCol)), 0.0, side, dist <= theta).withColumn(DIST, dist),
+      lId, k, tieBreak, DIST)
+      .select((starved.columns ++ rt.columns).map(col): _*)
+  }
+
+  /** The first `k` rows of each `lId` by (`distCol`, tieBreak). */
+  private def firstK(cand: DataFrame, lId: String, k: Int, tieBreak: Seq[String],
+                     distCol: String): DataFrame = {
+    val w = Window.partitionBy(col(lId))
+      .orderBy((col(distCol) +: tieBreak.map(col)).map(_.asc): _*)
+    cand.withColumn("__graft_rn", row_number().over(w))
+      .filter(col("__graft_rn") <= k)
+      .drop("__graft_rn")
+  }
+
+  /** Key columns packed as ONE array vector for the compiled pivot
+    * kernels (same Euclidean metric as pointDistance — the
+    * triangle-inequality bounds need metric consistency); a null in
+    * ANY key nulls the whole vector, so those rows never join. */
+  private def keyVec(keys: Seq[String]): Column =
+    when(keys.map(col(_).isNotNull).reduce(_ && _), array(keys.map(col(_).cast("double")): _*))
 
   /** Two-level pivot layout for the Voronoi kNN joins' p ∝ n scale
     * route: `coarseFlat` is the G×d coarse-center matrix, `offsets`
@@ -1811,9 +1799,10 @@ object SpatialOps {
     * argmin cell assignment over a plan-time pivot array, per-cell
     * triangle-inequality bounds (numPivots rows to the driver),
     * selective right replication into admitting cells, cell equi-join +
-    * exact distance filter + windowed top-k, and an exact fallback for
-    * starved lefts (correct for any theta). `fallback` must return the
-    * FINAL output schema (`outCols`-shaped).
+    * exact distance filter + windowed top-k, and the caller's `rescue`
+    * ([[rescueStarved]]) for starved lefts (correct for any theta).
+    * `rescue` must return the FINAL output schema (`outCols`-shaped).
+    * The caller handles an empty left.
     *
     * `cellThetas` (1-based pivot cell id -> radius <= theta) filters
     * each cell's candidates at the cell's OWN radius and shrinks its
@@ -1834,18 +1823,16 @@ object SpatialOps {
     * (ArrayTransform is CodegenFallback) — at d=64 its boxed
     * per-element arithmetic dominated the whole join (the r14 b6v/b5hd
     * steady overage). `lVec`/`rVec` must be NULL (not element-null)
-    * rows the caller wants routed to the fallback's null semantics. */
+    * for rows with no neighbours (a null key). */
   private[operators] def pivotCellKnn(
       l: DataFrame, rt: DataFrame,
       lVec: Column, rVec: Column,
       pivotsFlat: Array[Double], dim: Int, vecIsFloat: Boolean,
       numPivots: Int, theta: Double, exactDist: Column,
       lId: String, k: Int, tieBreak: Seq[String],
-      outCols: Seq[Column], fallback: DataFrame => DataFrame,
+      outCols: Seq[Column], rescue: DataFrame => DataFrame,
       cellThetas: Map[Int, Double] = Map.empty,
-      retryThreshold: Long = 1024L,
-      hier: Option[PivotHierarchy] = None,
-      rightCount: Long = -1L): DataFrame = {
+      hier: Option[PivotHierarchy] = None): DataFrame = {
     // two-level vs flat kernels: same emitted cells/distances; the hier
     // form's assignment is a hierarchical approximation whose bounds
     // stay exact because maxDl is measured from the ACTUAL assignment
@@ -1865,7 +1852,7 @@ object SpatialOps {
     def thetaOf(cell1Based: Int): Double = cellThetas.getOrElse(cell1Based, theta)
     // each left's nearest pivot cell and its distance to that pivot;
     // null-keyed lefts get a null cell
-    def assigned(left: DataFrame): DataFrame = left
+    val lAsg = l
       .withColumn("__graft_asgn", argminCol(lVec))
       .withColumn("__graft_cell", col("__graft_asgn.cell"))
       .withColumn("__graft_dl", col("__graft_asgn.dist"))
@@ -1873,15 +1860,11 @@ object SpatialOps {
     // per-cell radius bound (numPivots rows to the driver) and, from the
     // same aggregate, the count of lefts that can starve: the null
     // cell's group holds the null-keyed lefts, which have no neighbours
-    def cellBounds(lAsg: DataFrame): (Map[Int, Double], Long) = {
-      val rows = lAsg.groupBy(col("__graft_cell"))
-        .agg(max(col("__graft_dl")), count(lit(1))).collect()
-        .filterNot(_.isNullAt(0))
-      (rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap, rows.map(_.getLong(2)).sum)
-    }
-    // One candidate pass of `left` at per-cell thetas `mul`·theta_i,
-    // returning its hydrated top-k rows and the counted split.
-    //
+    val rows = lAsg.groupBy(col("__graft_cell"))
+      .agg(max(col("__graft_dl")), count(lit(1))).collect()
+      .filterNot(_.isNullAt(0))
+    val maxDl = rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val nLeft = rows.map(_.getLong(2)).sum
     // Right rows fan out only to admitting cells; each cell's admission
     // band uses ITS radius, and a left-less cell's -inf band admits
     // nothing (skipped inside the kernel, its rows never materialized).
@@ -1897,80 +1880,40 @@ object SpatialOps {
     // checkpoint (size ~admission-factor·|right|) also pins
     // monotonically_increasing_id, which is only stable once
     // materialized.
-    def pass(left: DataFrame, lAsg: DataFrame, maxDl: Map[Int, Double],
-             mul: Double): (DataFrame, TopK) = {
-      val thetaArr = lit((1 to numPivots).map(thetaOf(_) * mul).toArray)
-      val lAug = lAsg.filter(col("__graft_cell").isNotNull)
-        .withColumn("__graft_ctheta", element_at(thetaArr, col("__graft_cell")))
-      val bands = Array.tabulate(numPivots)(i =>
-        maxDl.get(i + 1).map(_ + thetaOf(i + 1) * mul).getOrElse(Double.NegativeInfinity))
-      val admitted = rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
-        .withColumn("__graft_rrow", monotonically_increasing_id())
-        .localCheckpoint()
-      val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
-        .withColumn("__graft_d", exactDist)
-        .filter(col("__graft_d") <= col("__graft_ctheta"))
-      // wide join output narrows INSIDE its stage (project before the
-      // exchange — whole-stage codegen never materializes wide pairs);
-      // keepDist: outCols may reference __graft_d (the vec join's `l2`)
-      val top = topKCounted(
-        cand.select(col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*),
-        lId, k, tieBreak, distCol = "__graft_d", keepDist = true)
-      // hydrate the k·|left| winners: left payload by the (unique) lId,
-      // right payload by the checkpointed replica id — two bounded
-      // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
-      // are pinned to shuffle-hash: the payload sides are TABLE-sized,
-      // and Spark's static size estimate of a many-leg union of pruned
-      // parquet scans can undershoot the broadcast threshold —
-      // measured on the d=4 100x slice, the planner broadcast the full
-      // 1.5M-row left side and the driver OOM'd building the hashed
-      // relation. The hinted side is the per-key-unique build side
-      // (~|side|/parts rows per task); no sort, no broadcast,
-      // spill-safe.
-      val hydrated = top.rows
-        .select(col(lId), col("__graft_rrow"), col("__graft_d"))
-        .join(left.hint("shuffle_hash"), Seq(lId))
-        .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
-        .select(outCols: _*)
-      (hydrated, top)
-    }
-
-    val lAsg = assigned(l)
-    val (maxDl, nLeft) = cellBounds(lAsg)
-    // empty left -> no cells; the fallback IS the correct empty result
-    if (maxDl.isEmpty) return fallback(l)
-    val (satisfied, top) = pass(l, lAsg, maxDl, 1.0)
-    val nStarved = nLeft - top.nSatisfied
-    // the shared starved route: the caller's exact fallback for a small
-    // starved set, else the bounded doubled-theta retry below first
-    routeStarved(satisfied, nStarved, minusByKey(l, top.ids, lId),
-        retryThreshold, rightCount)(fallback, starved => {
-      // Bounded retry before the cross-window fallback (VERDICT r6 #4):
-      // one more candidate pass over the starved lefts at DOUBLED
-      // per-cell thetas. The pivot array is reused; it is
-      // metric-generic, so the vector kNN join gets the same cap.
-      // Exactness: a right within 2*theta_i of a starved left in cell i
-      // has d(r, p_i) <= maxDl_i + 2*theta_i by the triangle inequality,
-      // so the doubled band admits every such right — >= k candidates
-      // here provably contain the true k nearest.
-      // Retry bands come from the STARVED lefts' own cells (one tiny agg
-      // over the checkpointed starved set): the full-left maxDl
-      // upper-bounds correctly but admits rights into every populated
-      // cell — at the 100x slice the doubled bands over all cells
-      // re-replicated most of the right side to serve a few hundred
-      // starved rows. A right serving starved left l in cell i satisfies
-      // d(r, p_i) <= d(l, p_i) + 2·theta_i <= maxDl2_i + 2·theta_i, so
-      // starved-only bands stay exact; starved-free cells go -inf (no
-      // replicas materialize).
-      val sAsg = assigned(starved)
-      val (maxDl2, _) = cellBounds(sAsg)
-      if (maxDl2.isEmpty) fallback(starved)
-      else {
-        val (satisfied2, top2) = pass(starved, sAsg, maxDl2, 2.0)
-        withStarved(satisfied2, nStarved - top2.nSatisfied)(
-          fallback(minusByKey(starved, top2.ids, lId)))
-      }
-    })
+    val thetaArr = lit((1 to numPivots).map(thetaOf).toArray)
+    val lAug = lAsg.filter(col("__graft_cell").isNotNull)
+      .withColumn("__graft_ctheta", element_at(thetaArr, col("__graft_cell")))
+    val bands = Array.tabulate(numPivots)(i =>
+      maxDl.get(i + 1).map(_ + thetaOf(i + 1)).getOrElse(Double.NegativeInfinity))
+    val admitted = rt.withColumn("__graft_rcell", explode(admittedCol(rVec, bands)))
+      .withColumn("__graft_rrow", monotonically_increasing_id())
+      .localCheckpoint()
+    val cand = lAug.join(admitted, col("__graft_cell") === col("__graft_rcell"))
+      .withColumn("__graft_d", exactDist)
+      .filter(col("__graft_d") <= col("__graft_ctheta"))
+    // wide join output narrows INSIDE its stage (project before the
+    // exchange — whole-stage codegen never materializes wide pairs);
+    // keepDist: outCols may reference __graft_d (the vec join's `l2`)
+    val top = topKCounted(
+      cand.select(col(lId) +: col("__graft_rrow") +: col("__graft_d") +: tieBreak.map(col): _*),
+      lId, k, tieBreak, distCol = "__graft_d", keepDist = true)
+    // hydrate the k·|left| winners: left payload by the (unique) lId,
+    // right payload by the checkpointed replica id — two bounded
+    // equi-joins over RESULT-sized rows, not candidate-sized. BOTH
+    // are pinned to shuffle-hash: the payload sides are TABLE-sized,
+    // and Spark's static size estimate of a many-leg union of pruned
+    // parquet scans can undershoot the broadcast threshold —
+    // measured on the d=4 100x slice, the planner broadcast the full
+    // 1.5M-row left side and the driver OOM'd building the hashed
+    // relation. The hinted side is the per-key-unique build side
+    // (~|side|/parts rows per task); no sort, no broadcast,
+    // spill-safe.
+    val satisfied = top.rows
+      .select(col(lId), col("__graft_rrow"), col("__graft_d"))
+      .join(l.hint("shuffle_hash"), Seq(lId))
+      .join(admitted.drop("__graft_rcell").hint("shuffle_hash"), Seq("__graft_rrow"))
+      .select(outCols: _*)
+    withStarved(satisfied, nLeft - top.nSatisfied)(rescue(minusByKey(l, top.ids, lId)))
   }
 
   /** Ensure at least the cluster's default parallelism of partitions on
@@ -1988,18 +1931,15 @@ object SpatialOps {
     // Cheap under-split signal (ADVICE r16): the former
     // `queryExecution.toRdd.getNumPartitions` probe forced full physical
     // planning + RDD DAG construction at plan-BUILD time — paid on every
-    // naive/cross plan construction, including the pivot routes'
-    // starved-fallback plans that are usually built for EMPTY starved
-    // sets. The optimizer size estimate answers the same question
+    // naive/cross plan construction. The optimizer size estimate
+    // answers the same question
     // without touching the physical layer: a frame at least
     // `cores × maxPartitionBytes` big cannot scan in fewer than `cores`
     // splits (and at that size the quadratic baseline is not latency-
     // bound anyway), so it passes through untouched at scale exactly as
     // before; anything smaller eats one bounded repartition — for
-    // checkpointed starved sets and small-file tables that is the same
-    // spread the probe produced, minus the build-time planning.
-    // (localCheckpoint keeps the origin plan's stats, so checkpointed
-    // fallback inputs still read small — pinned in SpatialOpsSpec.)
+    // small-file tables that is the same spread the probe produced,
+    // minus the build-time planning.
     // A leaf at or above `spark.sql.defaultSizeInBytes` has NO stats (a
     // stats-free RDD-backed frame reads as the default, Long.MaxValue):
     // unknown is not big, so it spreads too rather than pass through to
@@ -2071,7 +2011,7 @@ object SpatialOps {
                                   r: DataFrame, rBox: Seq[Column], d: Double,
                                   side: Double, exact: Column): DataFrame = {
     val P = "__graft_pbsm_"
-    def cell(c: Column): Column = floor(c / side).cast("long")
+    def cell(c: Column): Column = cellId(c, lit(side))
     def celled(df: DataFrame, box: Seq[Column], s: String): DataFrame = {
       val names = Seq("lx", "ly", "hx", "hy").map(a => s"$P$s$a")
       df.withColumns(names.zip(box).toMap)
@@ -2135,11 +2075,11 @@ object SpatialOps {
         var i = 0
         while (i < boxes.length) {
           val b = boxes(i)
-          val x0 = math.floor((b(0) - dil) / s).toLong
-          val x1 = math.floor((b(2) + dil) / s).toLong
-          val y0 = math.floor((b(1) - dil) / s).toLong
-          val y1 = math.floor((b(3) + dil) / s).toLong
-          val n = (x1 - x0 + 1) * (y1 - y0 + 1)
+          val x0 = cellId(b(0) - dil, s)
+          val x1 = cellId(b(2) + dil, s)
+          val y0 = cellId(b(1) - dil, s)
+          val y1 = cellId(b(3) + dil, s)
+          val n = (x1 - x0 + 1).toDouble * (y1 - y0 + 1)
           if (n > PerBoxCellCap) return None
           repl += n
           var x = x0
@@ -2186,9 +2126,11 @@ object SpatialOps {
     }
 
   /** One input's plan-build statistics, from ONE bounded Spark job:
-    * `count` rows with every key non-null. */
+    * `count` rows with every key non-null; `extent`, when asked for, the
+    * 2-D bbox [lx, ly, hx, hy] of every such row. */
   private[graft] final case class InputStats[T](count: Long, sample: Array[T],
-                                                kth: Array[Double])
+                                                kth: Array[Double],
+                                                extent: Array[Double] = Array.empty)
 
   /** The stats pass: every plan-build statistic of one join input from
     * a single `mapPartitionsWithIndex` + `treeAggregate` job over the
@@ -2210,7 +2152,8 @@ object SpatialOps {
     *  - `kth`: per probe, the exact k-th smallest `dist(probe, row)` over
     *    EVERY row (the farthest row when the input holds fewer than k
     *    rows; empty when it holds none), folded with the [[mergeInto]]
-    *    insertion kernel.
+    *    insertion kernel;
+    *  - `extent`: with `box`, the union of every row's 2-D bbox.
     * Per-partition state is bounded — `cap` rows plus |probes| × k
     * doubles — and so is every merge of the tree, so driver memory never
     * scales with the partition count. A row is decoded only when it
@@ -2219,13 +2162,20 @@ object SpatialOps {
     * DataFrame form. */
   private def statsPass[T: scala.reflect.ClassTag, P: scala.reflect.ClassTag](
       projected: DataFrame, cap: Int, seed: Long, decode: Row => T,
-      probes: Array[P], k: Int, dist: (P, T) => Double): InputStats[T] = {
-    type Part = (Long, Array[(Double, T)], Array[Array[Double]])
+      probes: Array[P], k: Int, dist: (P, T) => Double,
+      box: Option[T => Array[Double]] = None): InputStats[T] = {
+    type Part = (Long, Array[(Double, T)], Array[Array[Double]], Array[Double])
     val bc = projected.sparkSession.sparkContext.broadcast(probes)
     val byPriority = Ordering.by[(Double, T), Double](_._1)
+    val inf = Double.PositiveInfinity
+    def widen(e: Array[Double], b: Array[Double]): Unit = {
+      e(0) = math.min(e(0), b(0)); e(1) = math.min(e(1), b(1))
+      e(2) = math.max(e(2), b(2)); e(3) = math.max(e(3), b(3))
+    }
     def merge(a: Part, b: Part): Part = {
       a._3.zip(b._3).foreach { case (x, y) => y.foreach(mergeInto(x, _)) }
-      (a._1 + b._1, (a._2 ++ b._2).sorted(byPriority).take(cap), a._3)
+      widen(a._4, b._4)
+      (a._1 + b._1, (a._2 ++ b._2).sorted(byPriority).take(cap), a._3, a._4)
     }
     val partials = projected.rdd.mapPartitionsWithIndex { (idx, rows) =>
       val ps = bc.value
@@ -2233,13 +2183,14 @@ object SpatialOps {
       val heap = new java.util.PriorityQueue[(Double, T)](
         math.max(cap, 1), byPriority.reverse)
       val best = Array.fill(ps.length)(Array.fill(k)(Double.MaxValue))
+      val extent = Array(inf, inf, -inf, -inf)
       var n = 0L
       rows.foreach { row =>
         if (!row.anyNull) {
           n += 1
           val pri = rng.nextDouble()
           val keep = cap > 0 && (heap.size < cap || pri < heap.peek._1)
-          if (keep || ps.nonEmpty) {
+          if (keep || ps.nonEmpty || box.isDefined) {
             val t = decode(row)
             if (keep) {
               if (heap.size == cap) heap.poll()
@@ -2247,18 +2198,20 @@ object SpatialOps {
             }
             var i = 0
             while (i < ps.length) { mergeInto(best(i), dist(ps(i), t)); i += 1 }
+            box.foreach(b => widen(extent, b(t)))
           }
         }
       }
       val sample = Array.fill(heap.size)(heap.poll()).reverse
-      Iterator.single[Part]((n, sample, best))
+      Iterator.single[Part]((n, sample, best, extent))
     }
     val zero: Part = (0L, Array.empty[(Double, T)],
-      Array.fill(probes.length)(Array.fill(k)(Double.MaxValue)))
-    val (n, sample, best) = partials.treeAggregate(zero)(merge, merge)
+      Array.fill(probes.length)(Array.fill(k)(Double.MaxValue)), Array(inf, inf, -inf, -inf))
+    val (n, sample, best, extent) = partials.treeAggregate(zero)(merge, merge)
     bc.destroy()
     InputStats(n, sample.map(_._2),
-      if (n == 0) Array.empty else best.map(_(math.min(k.toLong, n).toInt - 1)))
+      if (n == 0) Array.empty else best.map(_(math.min(k.toLong, n).toInt - 1)),
+      if (box.isDefined && n > 0) extent else Array.empty)
   }
 
   /** [[statsPass]] over coordinate columns cast to double (rows with a
@@ -2274,14 +2227,34 @@ object SpatialOps {
       graft.spatial.Dist.pointToPoint)
   }
 
+  /** Euclidean distance of two float vectors, accumulated in double —
+    * the `l2Distance` kernel's arithmetic. */
+  private[operators] def l2(a: Array[Float], b: Array[Float]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) {
+      val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1
+    }
+    math.sqrt(acc)
+  }
+
+  /** [[statsPass]] over an `array<float>` vector column (null vectors
+    * skipped); probes are vectors, distances [[l2]]. */
+  private[graft] def vecStats(df: DataFrame, c: String, cap: Int,
+                              probes: Array[Array[Float]] = Array.empty,
+                              k: Int = 1): InputStats[Array[Float]] =
+    statsPass[Array[Float], Array[Float]](df.select(col(c)), cap, seed = 42,
+      row => row.getSeq[Float](0).toArray, probes, k, l2)
+
   /** [[statsPass]] over a ShapeCodec struct column (null shapes
     * skipped), sampled rows decoded to ADT shapes; probes are shapes,
-    * distances the exact `minDist`. */
+    * distances the exact `minDist`; `extent` asks for the shapes' bbox
+    * extent. */
   private[graft] def shapeStats(df: DataFrame, c: String, cap: Int, seed: Long,
                                 probes: Array[graft.spatial.Shape] = Array.empty,
-                                k: Int = 1): InputStats[graft.spatial.Shape] =
+                                k: Int = 1,
+                                extent: Boolean = false): InputStats[graft.spatial.Shape] =
     statsPass[graft.spatial.Shape, graft.spatial.Shape](
       df.select(col(s"$c.tag"), col(s"$c.coords")), cap, seed,
       row => graft.spatial.ShapeCodec.decode(row.getInt(0), row.getSeq[Double](1).toArray),
-      probes, k, (p, s) => p.minDist(s))
+      probes, k, (p, s) => p.minDist(s), if (extent) Some(sampleBox) else None)
 }

@@ -1451,54 +1451,41 @@ object VectorOps {
       * angular similarity, L2 over unit-normalized vectors is monotone
       * with cosine). Sub-quadratic: candidates are only (left cell,
       * admitted rights) pairs, never the cross product, and the exact
-      * fallback keeps the result correct whatever theta the sample
+      * rescue keeps the result correct whatever theta the sample
       * produced. */
     def knnJoinVec(right: Dataset[_], lVec: String, rVec: String,
                    lId: String, k: Int, tieBreak: Seq[String],
                    numPivots: Int = 16, sampleCap: Int = 500,
                    quantile: Double = 0.95, safety: Double = 2.0): DataFrame = {
+      import SpatialOps.l2
       val l = ds.toDF
       val rt = right.toDF
       SpatialOps.requireDisjoint("knnJoinVec", l, rt)
 
-      // bounded AND unbiased: small tables are taken whole (limit probe),
-      // larger ones get a seeded random sample — a first-N slice of data
-      // written clustered-by-topic would skew theta, pivots, and the
-      // admit-fraction gate all at once
-      def collectVecs(df: DataFrame, c: String, cap: Int): Array[Array[Float]] = {
-        val projected = df.select(col(c))
-        val head = projected.limit(cap + 1).collect()
-        val rows =
-          if (head.length <= cap) head
-          // uniform random cap: Bernoulli-thin first (bounds the
-          // TakeOrdered driver merge at ~1.2*cap rows at any partition
-          // count — ADVICE r15), then orderBy(rand).limit. A bare
-          // `sample(0.1).limit(cap)` reads the FIRST partitions only,
-          // and a partition-clustered corpus (written by topic/time)
-          // would hand theta, the admit gate, AND the pivot set to one
-          // cluster (the bias SpatialOps.pointStats avoids too).
-          else {
-            val total = projected.count()
-            val frac = math.min(1.0, cap.toDouble * 1.2 / total)
-            val thinned = projected.sample(withReplacement = false, frac, 42)
-              .orderBy(rand(42)).limit(cap).collect()
-            if (thinned.length >= math.min(cap.toLong, total)) thinned
-            else projected.orderBy(rand(42)).limit(cap).collect()
-          }
-        rows.map(_.getSeq[Float](0).toArray)
-      }
-
-      def l2(a: Array[Float], b: Array[Float]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) {
-          val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1
+      // The gate/theta estimation is a STATISTICAL read — a bounded
+      // 500x500 sub-sample estimates admit fraction, radii, and pivots
+      // just as well, and the full sampleDists matrix is quadratic in
+      // sampleCap (driver memory AND time: a 50k sample would build a
+      // 20 GB matrix before any plan exists). Callers raise sampleCap
+      // for the approximate route's IVF TRAINING (linear per Lloyd
+      // round over rS below), never for the gate. `spread` strides the
+      // sample instead of taking a prefix, so a raised cap still spreads
+      // the gate's 500 over all of it (identical at the default cap).
+      def spread(a: Array[Array[Float]]): Array[Array[Float]] =
+        if (a.length <= 500) a
+        else {
+          val step = a.length.toDouble / 500
+          Array.tabulate(500)(i => a(math.min((i * step).toInt, a.length - 1)))
         }
-        math.sqrt(acc)
-      }
-
-      // theta from driver-capped samples (cap^2 * dim kernel ops)
-      val lS = collectVecs(l, lVec, sampleCap)
-      val rS = collectVecs(rt, rVec, sampleCap)
+      // One uniform, partition-blind stats pass per side. The right pass
+      // carries the gate's left sample as probes, so each of those lefts
+      // gets its EXACT k-th distance to the whole right side — the reach
+      // of the starved rescue (a sample-vs-sample radius is no bound
+      // once k exceeds the right sample).
+      val lS = SpatialOps.vecStats(l, lVec, sampleCap).sample
+      val gateL = spread(lS)
+      val rStats = SpatialOps.vecStats(rt, rVec, sampleCap, probes = gateL, k = k)
+      val rS = rStats.sample
       require(rS.nonEmpty, "vector kNN join: right side is empty")
 
       def naivePlan(left: DataFrame): DataFrame = {
@@ -1551,26 +1538,7 @@ object VectorOps {
       // empty left: the naive plan IS the correct empty result
       if (lS.isEmpty) return naivePlan(l)
 
-      // The gate/theta estimation is a STATISTICAL read — a bounded
-      // 500x500 sub-sample estimates admit fraction, radii, and pivots
-      // just as well, and the full sampleDists matrix is quadratic in
-      // sampleCap (driver memory AND time: a 50k sample would build a
-      // 20 GB matrix before any plan exists). Callers raise sampleCap
-      // for the approximate route's IVF TRAINING (linear per Lloyd
-      // round over rS below), never for the gate. Identical behavior at
-      // the default cap.
-      // a deterministic STRIDE over the collected sample, not a prefix:
-      // when callers raise sampleCap for IVF training, a take(500) head
-      // is typically the first partitions — topic-clustered data would
-      // bias theta, pivots, and the admit-fraction gate all at once.
-      // Identical to take() at the default cap (length <= 500).
-      def spread(a: Array[Array[Float]]): Array[Array[Float]] =
-        if (a.length <= 500) a
-        else {
-          val step = a.length.toDouble / 500
-          Array.tabulate(500)(i => a(math.min((i * step).toInt, a.length - 1)))
-        }
-      val gateL = spread(lS)
+      // theta and the admit-fraction gate from the 500x500 sample matrix
       val gateR = spread(rS)
       val sampleDists = gateL.map(a => gateR.map(b => l2(a, b)))
       val radii = sampleDists.map { ds0 =>
@@ -1773,14 +1741,16 @@ object VectorOps {
       // in flattened as one reference object inside the compiled argmin/
       // admission kernels (float->double is exact, so the kernel's
       // arithmetic equals l2F's bit-for-bit)
+      val dim = pivots.head.length
+      val outCols = (l.columns ++ rt.columns).map(col) :+ col("__graft_d").as("l2")
       SpatialOps.pivotCellKnn(l, rt, col(lVec), col(rVec),
-        pivotsFlat = pivots.flatMap(_.map(_.toDouble)),
-        dim = pivots.head.length, vecIsFloat = true,
+        pivotsFlat = pivots.flatMap(_.map(_.toDouble)), dim = dim, vecIsFloat = true,
         numPivots = pivots.length, theta = theta,
         exactDist = l2Distance(col(lVec), col(rVec)),
-        lId = lId, k = k, tieBreak = tieBreak,
-        outCols = (l.columns ++ rt.columns).map(col) :+ col("__graft_d").as("l2"),
-        fallback = naivePlan,
+        lId = lId, k = k, tieBreak = tieBreak, outCols = outCols,
+        rescue = SpatialOps.rescueStarved(_, rt, col(lVec), col(rVec), dim,
+          vecIsFloat = true, gateL.map(_.map(_.toDouble)), rStats.kth,
+          l2Distance(col(lVec), col(rVec)), lId, k, tieBreak, outCols),
         cellThetas = cellThetas)
     }
 

@@ -86,7 +86,7 @@ object ExplainPlans {
     // ExistingRDD leaves under the hydrate joins; the argmin and
     // admission kernels, the candidate exchange and the window ran
     // before the checkpoints.
-    show("knn_join_pivot (expect the checkpointed narrow top-k hydrated by shuffle-hash joins on c_custkey and __graft_rrow — a union with the exact cross fallback only when some left is starved)") {
+    show("knn_join_pivot (expect the checkpointed narrow top-k hydrated by shuffle-hash joins on c_custkey and __graft_rrow — a union with the rescue pass only when some left is starved)") {
       customerPts(spark, d).knnJoinPivot(supplierPts(spark, d),
         Seq("cx", "cy"), Seq("sx", "sy"), 3, "c_custkey", Seq("s_suppkey"))
     }
@@ -94,7 +94,8 @@ object ExplainPlans {
     // distances concentrate), which takes the narrow exact cross; 16 tight
     // clusters in 8-D reach the pivot route. Its argmin, admission and
     // cell join run in the build-time checkpoints, so those plans print
-    // first, then the result's.
+    // first, then the result's. The two statistics passes before them
+    // are RDD jobs, not SQL actions, so they print no plan.
     showBuild("knn_join_vec_pivot (expect build plans with the argmin and admission kernels over float vectors, the candidate join on __graft_cell and the windowed top-k under the checkpoints; the result hydrates the narrow top-k by shuffle-hash joins on vec_id and __graft_rrow; l2 carried from __graft_d)") {
       val vecs = spark.range(0, 2000, 1, 4).select(col("id").as("vec_id"),
         array((0 until 8).map(i => ((col("id") % 16) * 10.0 +
@@ -563,7 +564,7 @@ object ExplainPlans {
           array(col("cx"), col("cy")).as("coords")).as("cpt"))
       boxes.shapeDistanceJoin(pts, "nbox", "cpt", 100.37)
     }
-    show("shape_knn_join (expect the theta pass's checkpointed top-k; a union with a starved-left branch only when some left is starved — the exact cross-window for a few, the doubled-theta retry's checkpointed top-k plus that cross for many)") {
+    locally {
       import graft.spatial.ShapeCodec
       val ncx = col("n_nationkey").cast("double") * 400.0
       val ncy = col("n_nationkey").cast("double") * 40.0
@@ -574,8 +575,20 @@ object ExplainPlans {
       val pts = customerPts(spark, d).select(col("c_custkey"),
         struct(lit(ShapeCodec.TagPoint).as("tag"),
           array(col("cx"), col("cy")).as("coords")).as("cpt"))
-      boxes.shapeKnnJoin(pts, "nbox", "cpt", 3, "n_nationkey",
-        tieBreak = Seq("c_custkey"))
+      show("shape_knn_join (expect the theta pass's checkpointed top-k; a union with the PBSM rescue branch only when some left is starved)") {
+        boxes.shapeKnnJoin(pts, "nbox", "cpt", 3, "n_nationkey",
+          tieBreak = Seq("c_custkey"))
+      }
+      // Seeded starvation (radius safety 0.05): the starved branch is
+      // the one rescue pass, never a cross
+      show("shape_knn_join_rescue (expect the union's starved branch: box_reach per-left bounds dilating the left boxes, clamped to the right extent's scalar subquery, the PBSM cell join, the bound filter and a row_number window — no CartesianProduct or BroadcastNestedLoopJoin)") {
+        boxes.shapeKnnJoin(pts, "nbox", "cpt", 3, "n_nationkey",
+          tieBreak = Seq("c_custkey"), safety = 0.05)
+      }
+    }
+    show("knn_join_rescue (expect the union's starved branch: the knn_rescue kernel's per-left bound and Voronoi cells exploded on the starved lefts, joined on __graft_lvc = __graft_rvc to the rights' pivot_argmin cells, the bound filter and a row_number window — no CartesianProduct or BroadcastNestedLoopJoin)") {
+      customerPts(spark, d).knnJoin(supplierPts(spark, d), Seq("cx", "cy"), Seq("sx", "sy"),
+        3, "c_custkey", Seq("s_suppkey"), safety = 0.05)
     }
     show("phrase_bool (expect ONE term-pruned posting sliver — PushedFilters In(term, all query terms) — feeding per-alternative conjunctive aggs; adjacency text read only via the pushed id IN; OR = union distinct, AND = semi-join chain)") {
       import graft.operators.CorpusOps

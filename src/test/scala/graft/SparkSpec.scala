@@ -51,12 +51,15 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body`'s result plus the optimized and physical plan of every SQL
     * action it ran while building it — the eager checkpoints of the kNN
-    * joins, whose work no longer shows in the returned plan. A marker
-    * action closes the capture, since the listener bus delivers events
-    * in order. */
+    * joins, whose work no longer shows in the returned plan. Two marker
+    * actions bracket the capture, since the listener bus delivers events
+    * in order but late: a newly registered listener still receives the
+    * events of actions that ended before it, which the opening marker
+    * fences off. */
   def withBuildPlans[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.sql.execution.QueryExecution
-    val marker = s"build_plans_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    val id = java.util.UUID.randomUUID.toString.replace("-", "")
+    val (open, close) = (s"build_open_$id", s"build_close_$id")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -65,14 +68,15 @@ trait SparkSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).toDF(open).collect()
       val result = body
-      spark.range(1).toDF(marker).collect()
+      spark.range(1).toDF(close).collect()
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
       def plans = seen.toArray.map(_.toString).toSeq
-      while (!plans.exists(_.contains(marker)) && System.nanoTime() < deadline)
+      while (!plans.exists(_.contains(close)) && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(plans.exists(_.contains(marker)), "listener never saw the marker action")
-      (result, plans.filterNot(_.contains(marker)))
+      assert(plans.exists(_.contains(close)), "listener never saw the marker action")
+      (result, plans.dropWhile(!_.contains(open)).drop(1).filterNot(_.contains(close)))
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -220,6 +220,52 @@ class IndexManagerSpec extends SparkSpec {
     IndexManager.dropIndex(spark, "t_disk_knn2")
   }
 
+  test("persisted-index loaders start only their global-level jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_jobs").toString
+    def built(name: String)(make: => Any)(persist: Any => Unit): Unit =
+      try persist(make) finally IndexManager.dropIndex(spark, name)
+    built("t_jobs_z")(freshIndex("t_jobs_z"))(i =>
+      IndexManager.persistIndex(i.asInstanceOf[IndexedTable], s"$dir/z"))
+    built("t_jobs_r")(IndexManager.rangeIndexTable(spark, Tables.orders(spark, sf()),
+      "t_jobs_r", "o_totalprice", numPartitions = 8))(i =>
+      IndexManager.persistRangeIndex(i.asInstanceOf[RangeIndexedTable], s"$dir/r"))
+    built("t_jobs_h")(IndexManager.hashIndexTable(spark, Tables.customer(spark, sf()),
+      "t_jobs_h", "c_mktsegment", numPartitions = 8))(i =>
+      IndexManager.persistHashIndex(i.asInstanceOf[HashIndexedTable], s"$dir/h"))
+    built("t_jobs_q")(IndexManager.quadTreeIndexTable(spark, cust, "t_jobs_q",
+      Seq("cx", "cy"), numPartitions = 8))(i =>
+      IndexManager.persistQuadIndex(i.asInstanceOf[QuadTreeIndexedTable], s"$dir/q"))
+    def jobs(name: String)(load: => Any): Int =
+      try jobsOf(load) finally IndexManager.dropIndex(spark, name)
+    // the meta is read on the driver and the data with its footer's
+    // schema: what is left is the global level each kind recomputes —
+    // partition stats (z-order), range bounds, the quadtree's leaves;
+    // the hash index has none
+    val got = Seq(
+      jobs("t_jobs_z2")(IndexManager.loadIndex(spark, "t_jobs_z2", s"$dir/z")),
+      jobs("t_jobs_r2")(IndexManager.loadRangeIndex(spark, "t_jobs_r2", s"$dir/r")),
+      jobs("t_jobs_h2")(IndexManager.loadHashIndex(spark, "t_jobs_h2", s"$dir/h")),
+      jobs("t_jobs_q2")(IndexManager.loadQuadIndex(spark, "t_jobs_q2", s"$dir/q")),
+      jobs("t_jobs_a2")(IndexManager.loadIndexAuto(spark, "t_jobs_a2", s"$dir/q")))
+    assert(got == Seq(3, 3, 0, 3, 3), s"loader jobs $got")
+  }
+
+  test("an index persisted with a Spark-written text meta still loads") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_old").toString
+    try IndexManager.persistIndex(freshIndex("t_old_meta"), path)
+    finally IndexManager.dropIndex(spark, "t_old_meta")
+    // the meta as the Spark text writer leaves it: part-*.txt and _SUCCESS
+    val line = graft.operators.DedupOps.readMetaLines(spark, path, "test").head
+    val meta = new org.apache.hadoop.fs.Path(s"$path/meta")
+    meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, true)
+    Seq(line).toDS().coalesce(1).write.text(s"$path/meta")
+    val loaded = IndexManager.loadIndex(spark, "t_old_meta2", path)
+    try assert(loaded.boxRange(Array(0.0, 100.0), Array(5000.0, 600.0)).count() ===
+      cust.boxRange(Seq("cx", "cy"), Seq(0.0, 100.0), Seq(5000.0, 600.0)).count())
+    finally IndexManager.dropIndex(spark, "t_old_meta2")
+  }
+
   test("range index round-trips through disk with recomputed bounds") {
     val orders = Tables.orders(spark, sf())
     val idx = IndexManager.rangeIndexTable(spark, orders, "t_range_disk",

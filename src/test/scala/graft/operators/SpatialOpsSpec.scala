@@ -113,24 +113,22 @@ class SpatialOpsSpec extends SparkSpec {
       spark.conf.set(graft.GraftConf.KnnSafety, "0.05")
       val tuned = l.knnJoinAuto(r, Seq("lx", "ly"), Seq("rx", "ry"),
         2, "lid", "rid", Seq("rid"))
-      assert(tuned.count() === 100) // exactness preserved (fallback)
-      // theta = 2nd-NN(50) * quantile-pick * safety(0.05) = 2.5. Both
-      // grid passes sit behind their top-k checkpoints, so the witness
-      // is the plan the retry's checkpoint ran with retryThreshold 0:
-      // its grid divisor `floor(<key> / (2*theta))` = `/ 5.0)` is a
-      // fragment specific enough that it can only come from the
-      // conf-driven theta (sampleCap, quantile, AND safety plumbed)
-      spark.conf.set(graft.GraftConf.KnnRetryThreshold, "0")
-      val (retried, plans) = withBuildPlans(l.knnJoinAuto(r, Seq("lx", "ly"),
+      assert(tuned.count() === 100) // exactness preserved (rescue)
+      // theta = 2nd-NN(50) * quantile-pick * safety(0.05) = 2.5. The
+      // grid pass sits behind its top-k checkpoint, so the witness is
+      // the plan that checkpoint ran: its grid divisor
+      // `floor(<key> / theta)` = `/ 2.5)` is a fragment specific enough
+      // that it can only come from the conf-driven theta (sampleCap,
+      // quantile, AND safety plumbed)
+      val (again, plans) = withBuildPlans(l.knnJoinAuto(r, Seq("lx", "ly"),
         Seq("rx", "ry"), 2, "lid", "rid", Seq("rid")))
-      assert(plans.exists(_.contains("/ 5.0)")),
-        "expected conf-driven doubled theta 5.0 as the retry grid divisor")
-      assert(retried.count() === 100)
+      assert(plans.exists(_.contains("/ 2.5)")),
+        "expected conf-driven theta 2.5 as the grid divisor")
+      assert(again.count() === 100)
     } finally {
       spark.conf.unset(graft.GraftConf.SampleCap)
       spark.conf.unset(graft.GraftConf.KnnQuantile)
       spark.conf.unset(graft.GraftConf.KnnSafety)
-      spark.conf.unset(graft.GraftConf.KnnRetryThreshold)
     }
   }
 
@@ -246,23 +244,36 @@ class SpatialOpsSpec extends SparkSpec {
 
   // Route witnesses for the starved-left tests: the distinct
   // checkpoints a kNN join's plan reads (each top-k and pivot admission
-  // pass is one; the retry route adds the starved set and its own
-  // passes) and whether a fallback branch was unioned in at all.
+  // pass is one; the rescue adds none), whether a starved branch was
+  // unioned in at all, and whether that branch is the rescue pass.
   private def checkpoints(df: DataFrame): Int = df.queryExecution.analyzed.collect {
     case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
   }.distinct.size
   private def hasFallback(df: DataFrame): Boolean = df.queryExecution.analyzed.collect {
     case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
   }.nonEmpty
+  // the rescue kernel appears ONCE: it runs on the starved lefts only,
+  // with no inferred filter copying it below the starved split
+  private def rescued(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    hasFallback(df) && Seq("knn_rescue(", "box_reach(").map(f =>
+      plan.sliding(f.length).count(_ == f)).sum == 1
+  }
+  // `df`'s rows and whether any plan that building or collecting it ran
+  // holds a cross product
+  private def rowsAndCross(df: => DataFrame, cols: Seq[String]): (Seq[String], Boolean) = {
+    val (rows, plans) = withBuildPlans(rowsOf(df, cols))
+    (rows, plans.exists(p => p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
+  }
   // every column of every row, as a sorted multiset
   private def rowsOf(df: DataFrame, cols: Seq[String]): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
 
   // A kNN verb under test: its route through `run(l, r, k, quantile,
-  // safety, retryThreshold)`, its naive twin, and how many checkpoints
-  // its main phase reads.
+  // safety)`, its naive twin, and how many checkpoints its main phase
+  // reads.
   private case class KnnVerb(name: String, dims: Int, shapes: Boolean, base: Int,
-      run: (DataFrame, DataFrame, Int, Double, Double, Long) => DataFrame)
+      run: (DataFrame, DataFrame, Int, Double, Double) => DataFrame)
 
   // Seeded lattice inputs (integer coordinates, so k-th distances tie
   // and the right-id tie-break decides), optionally with an outlier
@@ -318,81 +329,71 @@ class SpatialOpsSpec extends SparkSpec {
   private lazy val knnVerbs: Seq[KnnVerb] = {
     def keys(p: String, d: Int) = (0 until d).map(i => s"$p$i")
     Seq(
-      KnnVerb("grid", 2, shapes = false, base = 1, (l, r, k, q, s, t) =>
+      KnnVerb("grid", 2, shapes = false, base = 1, (l, r, k, q, s) =>
         l.knnJoin(r, keys("lx", 2), keys("rx", 2), k, "lid", Seq("rid"),
-          quantile = q, safety = s, retryThreshold = t)),
-      KnnVerb("pivot flat d=4", 4, shapes = false, base = 2, (l, r, k, q, s, t) =>
+          quantile = q, safety = s)),
+      KnnVerb("pivot flat d=4", 4, shapes = false, base = 2, (l, r, k, q, s) =>
         l.knnJoinPivot(r, keys("lx", 4), keys("rx", 4), k, "lid", Seq("rid"),
-          numPivots = 8, quantile = q, safety = s, retryThreshold = t)),
+          numPivots = 8, quantile = q, safety = s)),
       // cell size 1: pTarget = |right| > HierPivotThreshold
-      KnnVerb("pivot hierarchical", 2, shapes = false, base = 2, (l, r, k, q, s, t) => {
+      KnnVerb("pivot hierarchical", 2, shapes = false, base = 2, (l, r, k, q, s) => {
         spark.conf.set(graft.GraftConf.KnnPivotCellSize, "1")
         try l.knnJoinPivot(r, keys("lx", 2), keys("rx", 2), k, "lid", Seq("rid"),
-          quantile = q, safety = s, retryThreshold = t)
+          quantile = q, safety = s)
         finally spark.conf.unset(graft.GraftConf.KnnPivotCellSize)
       }),
-      KnnVerb("shape", 2, shapes = true, base = 1, (l, r, k, q, s, t) => {
-        spark.conf.set(graft.GraftConf.KnnRetryThreshold, t.toString)
-        try l.shapeKnnJoin(r, "lshape", "rshape", k, "lid", Seq("rid"),
-          quantile = q, safety = s)
-        finally spark.conf.unset(graft.GraftConf.KnnRetryThreshold)
-      }))
+      KnnVerb("shape", 2, shapes = true, base = 1, (l, r, k, q, s) =>
+        l.shapeKnnJoin(r, "lshape", "rshape", k, "lid", Seq("rid"),
+          quantile = q, safety = s)))
   }
 
-  test("starved routing: naive-pair budget forces the doubled-theta retry, results exact") {
-    // tiny safety starves most lefts; budget=1 makes ANY starved count
-    // exceed the pair budget, so the route MUST take the doubled-theta
-    // retry (the 100x defense: starved · |right| crosses are a hidden
-    // quadratic, r16) — and the result must still equal the oracle
-    // through retry + residual naive, for every verb: grid, flat and
-    // hierarchical pivot, shape
-    spark.conf.set(graft.GraftConf.KnnNaivePairBudget, "1")
-    try {
-      val want = pairSet(cust.knnJoinNaive(supp, Seq("cx", "cy"), Seq("sx", "sy"),
-        k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey")))
-      val pivot = pairSet(cust.knnJoinPivot(supp, Seq("cx", "cy"), Seq("sx", "sy"),
-        k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey"),
-        numPivots = 8, safety = 0.2))
-      assert(pivot === want)
-      val grid = pairSet(cust.knnJoin(supp, Seq("cx", "cy"), Seq("sx", "sy"),
-        k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey"),
-        safety = 0.2))
-      assert(grid === want)
-      val nR = SpatialOps.HierPivotThreshold + 14
-      for (v <- knnVerbs) {
-        val (l, r) = knnInputs(v, 8, 60, nR, false, 0)
-        val got = v.run(l, r, 3, 0.95, 0.2, 1024L)
-        val twin = naiveTwin(v, l, r, 3)
-        assert(rowsOf(got, twin.columns) == rowsOf(twin, twin.columns), v.name)
-        assert(checkpoints(got) > v.base, s"${v.name} never retried")
-      }
-    } finally spark.conf.unset(graft.GraftConf.KnnNaivePairBudget)
+  test("starved routing: mass starvation takes one rescue pass, exact") {
+    // tiny safety starves most lefts: every verb — grid, flat and
+    // hierarchical pivot, shape — must rescue them in ONE pass (no
+    // checkpoint beyond its main phase's, no cross product in any plan
+    // it ran) and still equal the oracle
+    val want = pairSet(cust.knnJoinNaive(supp, Seq("cx", "cy"), Seq("sx", "sy"),
+      k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey")))
+    val pivot = cust.knnJoinPivot(supp, Seq("cx", "cy"), Seq("sx", "sy"),
+      k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey"), numPivots = 8, safety = 0.2)
+    assert(pairSet(pivot) === want && rescued(pivot))
+    val grid = cust.knnJoin(supp, Seq("cx", "cy"), Seq("sx", "sy"),
+      k = 3, leftId = "c_custkey", tieBreak = Seq("s_suppkey"), safety = 0.2)
+    assert(pairSet(grid) === want && rescued(grid))
+    val nR = SpatialOps.HierPivotThreshold + 14
+    for (v <- knnVerbs) {
+      val (l, r) = knnInputs(v, 8, 60, nR, false, 0)
+      val twin = naiveTwin(v, l, r, 3)
+      lazy val got = v.run(l, r, 3, 0.95, 0.05)
+      val (rows, cross) = rowsAndCross(got, twin.columns)
+      assert(!cross, s"${v.name} ran a cross")
+      assert(rows == rowsOf(twin, twin.columns), v.name)
+      assert(rescued(got) && checkpoints(got) == v.base, s"${v.name} took no single rescue")
+    }
   }
 
   test("starved routing: every exact kNN verb equals its naive twin on each route") {
     val nR = SpatialOps.HierPivotThreshold + 14
     for (v <- knnVerbs) {
-      // (case, inputs, k, quantile, safety, retryThreshold, expected route)
+      // (case, inputs, k, quantile, safety, expected route)
       val cases = Seq(
         // quantile 1 over a whole-left sample: theta covers every left
-        ("none starved", knnInputs(v, 1, 60, nR, false, 0), 3, 1.0, 2.0, 1024L, "none"),
-        ("a few starved", knnInputs(v, 2, 60, nR, true, 0), 3, 0.95, 2.0, 1024L, "direct"),
-        ("retry forced", knnInputs(v, 3, 60, nR, false, 0), 3, 0.95, 0.5, 0L, "retry"),
+        ("none starved", knnInputs(v, 1, 60, nR, false, 0), 3, 1.0, 2.0, "none"),
+        ("a few starved", knnInputs(v, 2, 60, nR, true, 0), 3, 0.95, 2.0, "rescue"),
+        ("many starved", knnInputs(v, 3, 60, nR, false, 0), 3, 0.95, 0.5, "rescue"),
         // a null-key left has no neighbours, so it never starves: with
-        // every keyed left satisfied, no fallback is built
-        ("null-key lefts", knnInputs(v, 4, 60, nR, false, 3), 3, 1.0, 2.0, 1024L, "none"),
-        ("k >= |right|", knnInputs(v, 5, 30, nR, false, 0), nR + 2, 0.95, 2.0, 1024L,
-          "direct"),
-        ("empty left", knnInputs(v, 6, 0, nR, false, 0), 3, 0.95, 2.0, 1024L, "any"))
-      for ((name, (l, r), k, q, s, t, route) <- cases) {
-        val got = v.run(l, r, k, q, s, t)
+        // every keyed left satisfied, no rescue is built
+        ("null-key lefts", knnInputs(v, 4, 60, nR, false, 3), 3, 1.0, 2.0, "none"),
+        ("k >= |right|", knnInputs(v, 5, 30, nR, false, 0), nR + 2, 0.95, 2.0, "rescue"),
+        ("empty left", knnInputs(v, 6, 0, nR, false, 0), 3, 0.95, 2.0, "any"))
+      for ((name, (l, r), k, q, s, route) <- cases) {
+        val got = v.run(l, r, k, q, s)
         val want = naiveTwin(v, l, r, k)
         assert(rowsOf(got, want.columns) == rowsOf(want, want.columns), s"${v.name}: $name")
         route match {
-          case "none" => assert(!hasFallback(got), s"${v.name}: $name built a fallback")
-          case "direct" => assert(hasFallback(got) && checkpoints(got) == v.base,
+          case "none" => assert(!hasFallback(got), s"${v.name}: $name built a rescue")
+          case "rescue" => assert(rescued(got) && checkpoints(got) == v.base,
             s"${v.name}: $name took ${checkpoints(got)} checkpoints, want ${v.base}")
-          case "retry" => assert(checkpoints(got) > v.base, s"${v.name}: $name never retried")
           case _ =>
         }
       }
@@ -546,34 +547,20 @@ class SpatialOpsSpec extends SparkSpec {
     } finally spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
   }
 
-  test("spark.graft.knn.retryThreshold reaches the zorder path") {
+  test("zorder starved lefts take the exact rescue, never a cross") {
     import spark.implicits._
     // 2 rights < k=3: every left starves off the curve (candidates per
-    // left are bounded by the right count), so the fallback route is
-    // fully determined by the count-gate — which must read the conf
-    // (ADVICE r7: it was hardcoded at 1024, making the conf a no-op
-    // for the zorder algorithm)
+    // left are bounded by the right count), so the whole result is the
+    // rescue's
     val l = (0 until 20).map(i => (i.toLong, i * 10.0, 0.0)).toDF("lid", "lx", "ly")
     val r = Seq((1000L, 5.0, 0.0), (1001L, 15.0, 0.0)).toDF("rid", "rx", "ry")
-    def plan(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.optimizedPlan.toString
-    val (dflt, dfltBuilt) = withBuildPlans(l.zknnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"),
-      3, "lid", "rid", Seq("rid")))
-    // 20 starved lefts <= default 1024: straight to the cross fallback,
-    // no grid-retry cell columns anywhere in the plan or its build
-    assert(!plan(dflt).contains("__graft_cell_lc0"), plan(dflt))
-    assert(!dfltBuilt.exists(_.contains("__graft_cell_lc0")))
-    try {
-      spark.conf.set(graft.GraftConf.KnnRetryThreshold, "0")
-      // the retry's grid candidates sit behind its top-k checkpoint: the
-      // witness is the plan that checkpoint ran
-      val (retried, built) = withBuildPlans(l.zknnJoin(r, Seq("lx", "ly"),
-        Seq("rx", "ry"), 3, "lid", "rid", Seq("rid")))
-      assert(built.exists(_.contains("__graft_cell_lc0")),
-        s"threshold 0 must route the zorder starved set through the grid retry:\n${plan(retried)}")
-      // exactness unchanged either way: 2 rights -> 2 neighbors per left
-      assert(dflt.count() === 40 && retried.count() === 40)
-    } finally spark.conf.unset(graft.GraftConf.KnnRetryThreshold)
+    lazy val got = l.zknnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", "rid", Seq("rid"))
+    val want = l.knnJoinNaive(r, Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", Seq("rid"))
+    val (rows, cross) = rowsAndCross(got, want.columns)
+    assert(!cross)
+    assert(rescued(got), got.queryExecution.optimizedPlan.toString)
+    // exact: 2 rights -> 2 neighbors per left, the naive twin's rows
+    assert(rows == rowsOf(want, want.columns) && rows.size == 40)
   }
 
   test("segmentRange equals kernel brute force") {
@@ -588,38 +575,34 @@ class SpatialOpsSpec extends SparkSpec {
     assert(got === want && got.nonEmpty)
   }
 
-  test("forced mass starvation: doubled-theta retry rescues every left from the cross plan") {
+  test("forced mass starvation: one rescue pass, no cross plan") {
     import spark.implicits._
     // each left's kth(=1)-NN sits at exactly 3; safety 0.7 crushes the
     // sampled theta to 2.1 < 3, so EVERY left starves in phase 1 — the
-    // adversarial shape that previously sent the whole left side to the
-    // quadratic cross-window in one step. The retry at 2*theta = 4.2
-    // >= 3 satisfies every left, so the cross plan's input is empty.
+    // adversarial shape that once sent the whole left side to the
+    // quadratic cross-window in one step. The rescue bounds each left
+    // at d(l, s) + 3 from the sample (the whole left here: d = 0), so
+    // one pass satisfies every left.
     val l = (0 until 200).map(i => (i.toLong, i * 10.0, 0.0)).toDF("lid", "lx", "ly")
     val r = (0 until 200).map(i => (i.toLong + 1000, i * 10.0 + 3.0, 0.0)).toDF("rid", "rx", "ry")
     val want = l.knnJoinNaive(r, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-
-    // retryThreshold = 0 forces the retry route even for this small set
-    // (the count-gate would otherwise send 200 starved lefts, below the
-    // default 1024, straight to the cross plan)
-    val gotGrid = l.knnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid"),
-      sampleCap = 1000, quantile = 0.95, safety = 0.7, retryThreshold = 0L)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(gotGrid === want && gotGrid.size === 200)
-
-    val gotPivot = l.knnJoinPivot(r, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid"),
-      numPivots = 8, sampleCap = 1000, quantile = 0.95, safety = 0.7, retryThreshold = 0L)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(gotPivot === want)
-
+    def grid() = l.knnJoin(r, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid"),
+      sampleCap = 1000, quantile = 0.95, safety = 0.7)
+    def pivot() = l.knnJoinPivot(r, Seq("lx", "ly"), Seq("rx", "ry"), 1, "lid", Seq("rid"),
+      numPivots = 8, sampleCap = 1000, quantile = 0.95, safety = 0.7)
+    for ((name, run) <- Seq[(String, () => DataFrame)]("grid" -> grid, "pivot" -> pivot)) {
+      lazy val got = run()
+      val (rows, cross) = rowsAndCross(got, Seq("lid", "rid"))
+      assert(!cross, s"$name ran a cross")
+      assert(rescued(got), name)
+      assert(rows == want.toSeq.map { case (a, b) => s"[$a,$b]" }.sorted && want.size == 200, name)
+    }
     // the implementation's own theta estimate confirms the shape: the
-    // phase-1 radius misses every kth neighbor, the doubled one covers
-    // all of them — so the retry provably empties the cross plan's left
+    // phase-1 radius misses every kth neighbor
     val theta = SpatialOps.sampleKnnRadii(l, r, Seq("lx", "ly"), Seq("rx", "ry"),
       k = 1, cap = 1000, quantile = 0.95, safety = 0.7).theta
     assert(theta < 3.0, s"phase-1 theta must starve every left, got $theta")
-    assert(2 * theta >= 3.0, s"retry theta must cover every kth neighbor, got ${2 * theta}")
   }
 
   test("distance join stays correct under extreme cell skew") {
