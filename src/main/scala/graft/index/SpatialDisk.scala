@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{inBox, inCircle, quantize, zorder, zorderCells}
+import graft.operators.SpatialOps
 import graft.spatial.ZValue
 
 /** The AT-REST spatial layout — the disk sibling of the in-memory
@@ -957,6 +958,14 @@ object SpatialDisk {
         schema = dataSchema(spark, m)),
       path, m)
 
+  /** The layout's data columns, internals dropped: from the recorded
+    * schema (no job), else from a one-directory probe. */
+  private def layoutColumns(spark: SparkSession, path: String,
+                            m: Meta): Seq[String] =
+    m.schema.map(_.fieldNames.toSeq).getOrElse(prunedScan(spark, path, m,
+        m.cells.headOption.map(_.id).toIndexedSeq).columns.toSeq)
+      .filterNot(Seq(CellCol, ZCol, TokenCol).contains(_))
+
   private def scanBox(spark: SparkSession, path: String, m: Meta,
                       lo: Array[Double], hi: Array[Double]): DataFrame = {
     require(lo.length == m.keyCols.length && hi.length == m.keyCols.length,
@@ -1024,6 +1033,8 @@ object SpatialDisk {
     val m = readMeta(spark, path)
     require(leftKeys.length == m.keyCols.length,
       s"left dims ${leftKeys.length} != layout dims ${m.keyCols.length}")
+    val layoutCols = layoutColumns(spark, path, m)
+    SpatialOps.requireDisjoint("SpatialDisk.distanceJoin", left.columns, layoutCols)
     val ordCols = m.keyCols.indices.map(i => s"__graft_dj_o$i")
     var celled = left
     m.keyCols.indices.foreach { i =>
@@ -1040,10 +1051,6 @@ object SpatialDisk {
     val cellSet = leftCelled.select(col("__graft_dj_cell")).distinct()
       .collect().map(_.getLong(0))
     val data = prunedScan(spark, path, m, cellSet.toIndexedSeq)
-    val layoutCols = data.columns.filterNot(
-      Seq(CellCol, ZCol, TokenCol).contains(_))
-    require(left.columns.intersect(layoutCols).isEmpty,
-      "need disjoint column names between the left side and the layout")
     if (cellSet.isEmpty)
       return leftCelled.drop("__graft_dj_cell")
         .join(data.select(layoutCols.map(col): _*), lit(false))
@@ -1059,24 +1066,29 @@ object SpatialDisk {
     * distances broken by `tieBreak`, ascending). The in-memory
     * `knnJoin`'s bound-then-refine discipline applied to directories:
     *
-    *  1. A bounded driver sample of the left (≤ `sampleCap` points)
-    *     gets per-point GUARANTEED radii from the meta's TRUE cell
-    *     stats — the [[knn]] walk: accumulate cells by minDist until
-    *     they hold ≥ k rows, radius = max furthest-corner distance.
-    *     No data is read; driver cost is sampleCap × cell count, both
-    *     bounded (cells ≤ 2^16 by the write-side require).
-    *  2. Radii group to per-grid-cell bounds (side = the sampled
-    *     radii's max), so a dense region dilates small while a sparse
-    *     one dilates wide — the estimateKnnRadii skew discipline.
+    *  1. One stats pass samples the left (≤ `sampleCap` points) and
+    *     counts its keyed rows. Each sampled point walks the meta's TRUE
+    *     cell stats by minDist until the walked cells hold ≥ k rows; the
+    *     max furthest corner is its CERTIFIED radius, a disc holding
+    *     ≥ min(k, total) live rows ([[knn]]'s argument). No data is
+    *     read; driver cost is sampleCap × cell count, both bounded
+    *     (cells ≤ 2^16 by the write-side require).
+    *  2. The main phase's radius per sampled point is the smaller of
+    *     that certificate and a density estimate. Radii group to
+    *     per-grid-cell maxima (side = the largest radius), so a dense
+    *     region dilates small while a sparse one dilates wide — the
+    *     estimateKnnRadii skew discipline.
     *  3. Each left row explodes to the coarse cells its radius-dilated
     *     bbox intersects (the [[distanceJoin]] shape); the distinct
     *     candidate cells prune directories BEFORE listing (prunedScan),
     *     and a layout row sits in exactly one cell, so the equi-join
     *     meets each candidate pair once.
-    *  4. Windowed top-k per left inside the radius; lefts that matched
-    *     fewer than k rows (the sampled radii are guaranteed only AT
-    *     the sampled points) take an exact fallback against the full
-    *     layout — correctness never depends on the sample.
+    *  4. A counted top-k inside the radius keeps every left with ≥ k
+    *     candidates. The estimate is not certified, so some lefts may
+    *     starve; they take the in-memory joins' one rescue pass
+    *     ([[graft.operators.SpatialOps.rescueKeys]]) against the whole
+    *     layout at each one's proven bound min_s d(l, s) + certified(s).
+    *     Correctness never depends on the sample.
     *
     * Output columns: left ++ layout (no internals). */
   def knnJoin(left: DataFrame, leftKeys: Seq[String], path: String, k: Int,
@@ -1088,22 +1100,28 @@ object SpatialDisk {
     val dims = m.keyCols.length
     require(leftKeys.length == dims,
       s"left dims ${leftKeys.length} != layout dims $dims")
+    val layoutCols = layoutColumns(spark, path, m)
+    SpatialOps.requireDisjoint("SpatialDisk.knnJoin", left.columns, layoutCols)
+    val outCols = (left.columns ++ layoutCols).map(col(_))
 
     // ---- driver-side radius bounds from the meta's true cell stats
-    val lPts = graft.operators.SpatialOps.pointStats(left, leftKeys, sampleCap).sample
-    val total = m.cells.map(_.count).sum
+    val lStats = SpatialOps.pointStats(left, leftKeys, sampleCap)
+    val lPts = lStats.sample
+    if (m.cells.map(_.count).sum == 0L || lPts.isEmpty)
+      return left.join(prunedScan(spark, path, m, m.cells.headOption.map(_.id).toIndexedSeq)
+          .select(layoutCols.map(col(_)): _*), lit(false))
+        .select(outCols: _*)
     val cellArr = m.cells.toArray
-    // radius per sampled point = min(CERTIFIED walk bound, density
-    // ESTIMATE). The walk bound (accumulate cells by minDist until they
-    // hold >= k rows, take the max furthest corner) provably covers k
-    // but is only as tight as the cells — a coarse anisotropic cell
-    // makes it the cell diagonal, and the dilated candidate join
-    // detonates (measured 10 s at the 100x slice, where cells run 8600
-    // wide). The density estimate (radius of a disc holding k rows at
-    // the nearest cell's density, x2 safety) tracks the actual kth-NN
-    // scale instead; it is NOT certified, and does not need to be —
-    // starved lefts take the observed count-routed exact fallback.
-    def walkRadius(p: Array[Double]): Double = {
+    // per sampled point: the CERTIFIED walk radius and the main phase's
+    // radius, the smaller of it and a density ESTIMATE. The certificate
+    // is only as tight as the cells — a coarse anisotropic cell makes it
+    // the cell diagonal, and the dilated candidate join detonates
+    // (measured 10 s at the 100x slice, where cells run 8600 wide). The
+    // estimate (radius of a disc holding k rows at the nearest cell's
+    // density, x2 safety) tracks the actual kth-NN scale instead; it is
+    // NOT certified, and does not need to be: a left it starves takes
+    // the rescue at the certified radii.
+    def walkRadii(p: Array[Double]): (Double, Double) = {
       val q = graft.spatial.Point(p)
       // nearest cell: ONE linear scan (at 2^14 cells a per-sample sort
       // dominated the whole driver phase)
@@ -1116,8 +1134,7 @@ object SpatialDisk {
         i += 1
       }
       val certified: Double =
-        if (best != null && best.count >= k)
-          graft.spatial.Dist.furthest(q, best.mbr)
+        if (best.count >= k) graft.spatial.Dist.furthest(q, best.mbr)
         else {
           val byDist = m.cells.sortBy(_.mbr.minDist(q))
           var covered = 0L; var r = 0.0; var j = 0
@@ -1128,59 +1145,30 @@ object SpatialDisk {
           }
           r
         }
-      if (best == null || best.count <= 0) return certified
+      if (best.count <= 0) return (certified, certified)
       // disc of k rows at the nearest cell's density (2-D area from the
       // cell's TRUE mbr; degenerate extents floor at 1e-9)
       val area = (0 until dims).map(i => math.max(1e-9,
         best.mbr.high.coord(i) - best.mbr.low.coord(i))).product
       val density = best.count.toDouble / area
       val est = (bestD + 2.0 * math.pow(k / density, 1.0 / dims))
-      math.min(certified, est)
+      (certified, math.min(certified, est))
     }
-    val radii = lPts.map(walkRadius)
-    val thetaG = if (radii.isEmpty) 0.0 else radii.max
-    // per-grid-cell MAX of the guaranteed sampled radii: quantile 1.0
-    // because each radius is already a certified k-cover at its point —
-    // shrinking below a neighbor's certificate only buys starvation
+    val (reach, radii) = lPts.map(walkRadii).unzip
+    val thetaG = radii.max
+    // per-grid-cell MAX of the sampled radii: quantile 1.0, since a
+    // radius below a sampled neighbor's only buys starvation
     val side = math.max(thetaG, 1e-9)
-    val cellRadii: Map[Seq[Long], Double] =
-      if (lPts.isEmpty) Map.empty
-      else graft.operators.SpatialOps.perCellQuantile(
-        lPts.map(p => p.toSeq.map(x => math.floor(x / side).toLong)),
-        radii, 1.0, Double.MaxValue)
+    val cellRadii: Map[Seq[Long], Double] = SpatialOps.perCellQuantile(
+      lPts.map(p => p.toSeq.map(x => math.floor(x / side).toLong)),
+      radii, 1.0, Double.MaxValue)
 
-    // ---- dilate, prune, join, window.
-    // NOTE no full-layout DataFrame is constructed on the common path:
-    // even a never-executed branch pays the full FILE LISTING at
-    // DataFrame creation, and at 2^14 directories that listing is the
-    // dominant cost (measured 26 s vs the pruned join's 5 s at the
-    // 100x slice). Schema comes from the meta's cells (one explicit
-    // directory), the fallback from an observed starved count.
-    val schemaProbe = prunedScan(spark, path, m,
-      m.cells.headOption.map(_.id).toIndexedSeq)
-    val layoutCols = schemaProbe.columns.filterNot(
-      Seq(CellCol, ZCol, TokenCol).contains(_))
-    require(left.columns.intersect(layoutCols).isEmpty,
-      "need disjoint column names between the left side and the layout")
-    val outCols = (left.columns ++ layoutCols).map(col(_))
-    if (total == 0L || lPts.isEmpty)
-      return left.join(schemaProbe.select(layoutCols.map(col(_)): _*), lit(false))
-        .select(outCols: _*)
-
-    // per-left radius via a tiny broadcast (grid cell -> radius)
-    val gridCols = (0 until dims).map(i => s"__graft_kj_g$i")
-    val rTable = {
-      import spark.implicits._
-      cellRadii.toSeq.map { case (c, r) => (c.mkString(","), r) }
-        .toDF("__graft_kj_gkey", "__graft_kj_r0")
-    }
-    val gkey = concat_ws(",",
-      (0 until dims).map(i =>
-        floor(col(leftKeys(i)) / side).cast("long").cast("string")): _*)
-    val leftR = left.withColumn("__graft_kj_gkey", gkey)
-      .join(broadcast(rTable), Seq("__graft_kj_gkey"), "left")
-      .withColumn("__graft_kj_r", coalesce(col("__graft_kj_r0"), lit(thetaG)))
-      .drop("__graft_kj_gkey", "__graft_kj_r0")
+    // ---- dilate, prune, join, top-k: each left's radius is its grid
+    // cell's, or thetaG where no sampled point fell
+    val leftR = left.withColumn("__graft_kj_r", coalesce(
+      try_element_at(typedLit(cellRadii), array((0 until dims).map(i =>
+        floor(col(leftKeys(i)) / side).cast("long")): _*)),
+      lit(thetaG)))
     val ordCols = (0 until dims).map(i => s"__graft_kj_o$i")
     var celled = leftR
     (0 until dims).foreach { i =>
@@ -1195,47 +1183,22 @@ object SpatialDisk {
       .drop(ordCols: _*)
     val cellSet = leftCelled.select(col("__graft_kj_cell")).distinct()
       .collect().map(_.getLong(0))
-    val data = prunedScan(spark, path, m, cellSet.toIndexedSeq)
-    val dist = graft.functions.pointDistance(
-      leftKeys.map(col(_)), m.keyCols.map(col(_)))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(leftId))
-      .orderBy(dist.asc +: tieBreak.map(col(_).asc): _*)
-    // materialize the candidate top-k ONCE (the in-memory join's
-    // top-k checkpoint discipline): okIds, the satisfied branch, and the
-    // starved anti-join all read these blocks instead of re-running
-    // the candidate pipeline per consumer
-    val ranked = leftCelled
-      .join(data, col("__graft_kj_cell") === col(CellCol))
-      .filter(dist <= col("__graft_kj_r"))
-      .withColumn("__graft_kj_rn", row_number().over(w))
-      .filter(col("__graft_kj_rn") <= k)
-      .localCheckpoint()
-
-    // exact fallback for starved lefts (< k candidates in the radius),
-    // COUNT-ROUTED: the full-layout scan is only constructed when
-    // starvation is actually observed — the common all-satisfied path
-    // never lists the table
-    val okIds = ranked.groupBy(col(leftId))
-      .agg(count(lit(1)).as("__graft_kj_n"))
-      .filter(col("__graft_kj_n") === k)
-      .select(col(leftId))
-    val good = ranked.join(okIds, Seq(leftId), "left_semi")
-      .select(outCols: _*)
-    // left-outer + null-filter, not LeftAnti: the anti form pushes
-    // through a union-shaped wave and re-executes okIds per leg
-    // (SpatialOps.minusByKey — the 2-D 100x pivot lesson). A left with a
-    // null key has no neighbours (as in the naive join): it never starves
-    val starved = graft.operators.SpatialOps.minusByKey(
-        left.filter(leftKeys.map(col(_).isNotNull).reduce(_ && _)), okIds, leftId)
-      .localCheckpoint()
-    if (starved.isEmpty) return good
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col(leftId))
-      .orderBy(dist.asc +: tieBreak.map(col(_).asc): _*)
-    val fallback = starved.join(validated(spark, path, m))
-      .withColumn("__graft_kj_rn", row_number().over(wAll))
-      .filter(col("__graft_kj_rn") <= k)
-      .select(outCols: _*)
-    good.unionByName(fallback)
+    val top = SpatialOps.topKCounted(leftCelled
+        .join(prunedScan(spark, path, m, cellSet.toIndexedSeq),
+          col("__graft_kj_cell") === col(CellCol))
+        .withColumn("__graft_kj_d", graft.functions.pointDistance(
+          leftKeys.map(col(_)), m.keyCols.map(col(_))))
+        .filter(col("__graft_kj_d") <= col("__graft_kj_r"))
+        .select(outCols :+ col("__graft_kj_d"): _*),
+      leftId, k, tieBreak, distCol = "__graft_kj_d")
+    // Only a starved left builds the full-layout frame: even a
+    // never-executed branch pays the full FILE LISTING at DataFrame
+    // creation, and at 2^14 directories that listing dominates
+    // (measured 26 s vs the pruned join's 5 s at the 100x slice).
+    SpatialOps.withStarved(top.rows, lStats.count - top.nSatisfied)(
+      SpatialOps.rescueKeys(SpatialOps.minusByKey(left, top.ids, leftId),
+        validated(spark, path, m).drop(CellCol, ZCol, TokenCol), leftKeys, m.keyCols,
+        lPts, reach, k, leftId, tieBreak))
   }
 
   /** The STATIC side of a stream-static spatial join: the

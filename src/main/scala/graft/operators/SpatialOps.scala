@@ -1551,8 +1551,8 @@ object SpatialOps {
       .drop("__graft_sat")
 
   /** A counted per-left top-k: see [[topKCounted]]. */
-  private[operators] final case class TopK(rows: DataFrame, ids: DataFrame,
-                                           nSatisfied: Long)
+  private[graft] final case class TopK(rows: DataFrame, ids: DataFrame,
+                                       nSatisfied: Long)
 
   private val SatisfiedMetric = "__graft_satisfied"
 
@@ -1574,7 +1574,7 @@ object SpatialOps {
     * the distance (the vector join exposes it as `l2`); the default
     * drops it, matching the spatial verbs whose contract is exactly
     * left++right columns. */
-  private[operators] def topKCounted(
+  private[graft] def topKCounted(
       cand: DataFrame, leftId: String, k: Int, tieBreak: Seq[String],
       distCol: String = DIST, keepDist: Boolean = false): TopK = {
     val w = Window.partitionBy(col(leftId))
@@ -1599,7 +1599,7 @@ object SpatialOps {
   /** `kept` plus `rescue`, the rows of `nStarved` starved lefts —
     * `kept` alone when none is starved, so no rescue plan is built
     * over an empty set. */
-  private[operators] def withStarved(kept: DataFrame, nStarved: Long)(
+  private[graft] def withStarved(kept: DataFrame, nStarved: Long)(
       rescue: => DataFrame): DataFrame = {
     require(nStarved >= 0,
       s"kNN join: $nStarved starved lefts (a left input that changed between passes?)")
@@ -1650,7 +1650,7 @@ object SpatialOps {
   }
 
   /** [[rescueStarved]] for coordinate-keyed joins: output left ++ right. */
-  private[operators] def rescueKeys(
+  private[graft] def rescueKeys(
       starved: DataFrame, rt: DataFrame, lKeys: Seq[String], rKeys: Seq[String],
       sample: Array[Array[Double]], reach: Array[Double], k: Int, lId: String,
       tieBreak: Seq[String]): DataFrame =
@@ -1986,8 +1986,12 @@ object SpatialOps {
   /** Joins take no shared column names: every internal and output
     * column is referenced unqualified. */
   private[operators] def requireDisjoint(verb: String, l: DataFrame,
-                                         r: DataFrame): Unit = {
-    val shared = l.columns.intersect(r.columns)
+                                         r: DataFrame): Unit =
+    requireDisjoint(verb, l.columns.toSeq, r.columns.toSeq)
+
+  private[graft] def requireDisjoint(verb: String, l: Seq[String],
+                                     r: Seq[String]): Unit = {
+    val shared = l.intersect(r)
     require(shared.isEmpty,
       s"$verb requires disjoint column names, shared: " + shared.mkString(","))
   }

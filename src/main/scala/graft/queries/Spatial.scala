@@ -119,8 +119,8 @@ object Spatial {
   }
 
   /** kNN join where the RIGHT side is the at-rest layout: per-left
-    * guaranteed radii from the meta's true cell stats, dilated-cell
-    * explode, pruned directory scan, windowed top-k + exact fallback.
+    * radii from the meta's true cell stats, dilated-cell explode,
+    * pruned directory scan, counted top-k + the proven rescue pass.
     * Same results as the in-memory kNN join with the sides swapped, so
     * the oracle is the plain window SQL partitioned by the left id. */
   def diskKnnJoin(s: SparkSession, d: String): DataFrame = {

@@ -359,10 +359,19 @@ object ExplainPlans {
       graft.index.SpatialDisk.distanceJoin(supplierPts(spark, d),
         Seq("sx", "sy"), path, 100.0)
     }
-    show("spatial_disk_knn_join (expect the satisfied branch reading the MATERIALIZED candidate top-k — the candidate phase ran once at build, count-routed: no full-layout scan or fallback branch appears unless starvation was observed)") {
+    showBuild("spatial_disk_knn_join (expect the build's counted top-k checkpoint over the dilated-cell equi-join against the pruned layout scan; the result reads that checkpoint, with a union to the knn_rescue branch over the whole layout only when some left starved)") {
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft_plans_spatial_disk").toString
       graft.index.SpatialDisk.knnJoin(supplierPts(spark, d),
+        Seq("sx", "sy"), path, 3, leftId = "s_suppkey",
+        tieBreak = Seq("c_custkey"))
+    }
+    // Seeded starvation: the lefts moved past the layout's x extent
+    show("spatial_disk_knn_join_rescue (expect the union's starved branch: the knn_rescue kernel's per-left bound and Voronoi cells exploded on the starved lefts, joined on __graft_lvc = __graft_rvc to the whole layout's pivot_argmin cells, the bound filter and a row_number window — no CartesianProduct or BroadcastNestedLoopJoin)") {
+      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+        "graft_plans_spatial_disk").toString
+      graft.index.SpatialDisk.knnJoin(supplierPts(spark, d)
+          .withColumn("sx", col("sx") + 20000.0),
         Seq("sx", "sy"), path, 3, leftId = "s_suppkey",
         tieBreak = Seq("c_custkey"))
     }

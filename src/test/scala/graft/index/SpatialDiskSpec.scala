@@ -321,9 +321,9 @@ class SpatialDiskSpec extends SparkSpec {
       tieBreak = Seq("c_custkey")).count()
     assert(all === 2L * cust.count())
     // a clustered left reads a sliver of the directories. The candidate
-    // phase materializes at build time (count-routed fallback), so the
-    // pruning is observed through prunedScan's own path counter rather
-    // than the (checkpoint-reading) result plan.
+    // phase materializes at build time (the counted top-k checkpoint),
+    // so the pruning is observed through prunedScan's own path counter
+    // rather than the (checkpoint-reading) result plan.
     val total = spark.read.parquet(s"$path/data")
       .select(count_distinct(col("__graft_cell"))).head().getLong(0)
     val clustered = supp.filter(col("sx") < 1000.0 && col("sy") < 200.0)
@@ -332,6 +332,44 @@ class SpatialDiskSpec extends SparkSpec {
     val read = SpatialDisk.pruneLastPathCount.get()
     assert(read >= 0 && read * 2 < total,
       s"clustered left read $read of $total cells — no pruning win")
+  }
+
+  test("knnJoin: lefts outside the layout take the one rescue pass, never a cross") {
+    // an 8 x 8-cell lattice layout, where no inside left starves, and
+    // every fifth left moved 10-20 units past the layout's x extent:
+    // some of those starve at their estimated radius
+    def pts(n: Int, id: String, x: String, y: String) = spark.range(0, n, 1, 2)
+      .select(col("id").as(id), (col("id") * 37 % 101).cast("double").as(x),
+        (col("id") * 53 % 89).cast("double").as(y))
+    val r = pts(800, "rid", "rx", "ry")
+    val l = pts(600, "lid", "lx", "ly").withColumn("lx",
+      when(col("lid") % 5 === 0, col("lx") / 10 + 110.0).otherwise(col("lx")))
+    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_spatial_disk_spec_kj_rescue").toString
+    SpatialDisk.write(r, path, Seq("rx", "ry"), cellBits = 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    var joined: org.apache.spark.sql.DataFrame = null
+    var jobs = 0
+    val (got, plans) = withBuildPlans {
+      jobs = jobsOf { joined = SpatialDisk.knnJoin(l, Seq("lx", "ly"), path, 3,
+        leftId = "lid", tieBreak = Seq("rid")) }
+      rows(joined)
+    }
+    assert(got === rows(l.knnJoinNaive(r, Seq("lx", "ly"), Seq("rx", "ry"), 3,
+      leftId = "lid", tieBreak = Seq("rid"))))
+    // the union's second branch is the rescue; its first, the kept top-k,
+    // holds the satisfied lefts: only some starve
+    val union = joined.queryExecution.sparkPlan.collectFirst {
+      case u: org.apache.spark.sql.execution.UnionExec => u }
+    assert(union.exists(_.children(1).toString.contains("knn_rescue")), "no rescue branch")
+    val kept = union.get.children.head.executeCollect().length
+    assert(kept > 0 && kept < got.size, s"kept $kept of ${got.size} rows")
+    // the rescue is built from driver values: the same jobs as a
+    // starvation-free build (SamplerSpec)
+    assert(jobs == 6)
+    assert(!plans.exists(p =>
+      p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
   }
 
   test("compact: wave shards collapse to few files, same answers, fresh token") {

@@ -11,11 +11,11 @@ import graft.operators.SpatialOps._
 import graft.operators.VectorOps._
 
 /** Generated differential tests: every exact kNN verb — grid, flat and
-  * hierarchical pivot, shape, vector, and the z-order join's exact
-  * rescue — returns its naive twin's rows, every column and the
-  * right-id tie-break included, on hostile inputs. Each input kind is
-  * one scalacheck property with a fixed seed, so a run is reproducible
-  * and a failure reports the generated case. */
+  * hierarchical pivot, shape, vector, the at-rest layout join, and the
+  * z-order join's exact rescue — returns its naive twin's rows, every
+  * column and the right-id tie-break included, on hostile inputs. Each
+  * input kind is one scalacheck property with a fixed seed, so a run is
+  * reproducible and a failure reports the generated case. */
 class KnnPropertySpec extends SparkSpec {
 
   /** Both sides' points (None: a null key), k and the radius safety. */
@@ -112,7 +112,17 @@ class KnnPropertySpec extends SparkSpec {
     val (sl, sr) = shapeFrames(c)
     val (vl, vr) = vecFrames(c)
     val nR = c.rPts.count(_.nonEmpty)
-    Seq(
+    // the layout holds no null key and no empty table (its write refuses
+    // both); null-key rights never pair, so the twin is unchanged
+    val layout = if (nR == 0) Nil else {
+      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+        "graft_knn_property_layout").toString
+      graft.index.SpatialDisk.write(pr.na.drop(rk), path, rk,
+        cellBits = 16 / c.dims min 5, bits = 62 / c.dims min 18)
+      Seq(("layout", () => graft.index.SpatialDisk.knnJoin(pl, lk, path, c.k, "lid",
+        Seq("rid")), pointTwin))
+    }
+    layout ++ Seq(
       ("pivot flat", () => pl.knnJoinPivot(pr, lk, rk, c.k, "lid", Seq("rid"),
         numPivots = 8, safety = c.safety), pointTwin),
       ("shape", () => sl.shapeKnnJoin(sr, "lshape", "rshape", c.k, "lid", Seq("rid"),
@@ -139,7 +149,8 @@ class KnnPropertySpec extends SparkSpec {
   /** Every verb on one case: its rows equal its twin's — or, for an
     * empty right, where the grid, pivot and vector verbs refuse the
     * input, it raises that documented error — and under mass
-    * starvation no plan it ran, build or action, holds a cross product. */
+    * starvation, or for the layout join on any case, no plan it ran,
+    * build or action, holds a cross product. */
   private def property(kind: String): Prop =
     Prop.forAllNoShrink(caseGen(kind)) { c =>
       val emptyRight = c.rPts.forall(_.isEmpty)
@@ -152,7 +163,7 @@ class KnnPropertySpec extends SparkSpec {
           case Right(rows) => rows == twins.getOrElseUpdate(want, rowsOf(want, want.columns))
           case Left(msg) => emptyRight && msg.contains("right side is empty")
         }
-        val cross = c.kind == "mass starvation" && plans.exists(p =>
+        val cross = (c.kind == "mass starvation" || name == "layout") && plans.exists(p =>
           p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
         Prop(exact && !cross) :| s"$name: ${if (!exact) "rows differ" else "ran a cross"}"
       }: _*)

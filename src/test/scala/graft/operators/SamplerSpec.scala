@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.operators.SpatialOps._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the estimator plumbing every kNN join builds on: the stats pass
@@ -17,6 +18,15 @@ import org.apache.spark.sql.functions._
   */
 class SamplerSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `df` written as a fresh at-rest layout keyed by `keys`. */
+  private def layoutOf(df: DataFrame, keys: Seq[String], tag: String,
+                       cellBits: Int = 5): String = {
+    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_sampler_spec_$tag").toString
+    graft.index.SpatialDisk.write(df, path, keys, cellBits)
+    path
+  }
 
   private def dist(a: Array[Double], b: Array[Double]): Double =
     math.sqrt(math.pow(a(0) - b(0), 2) + math.pow(a(1) - b(1), 2))
@@ -193,13 +203,18 @@ class SamplerSpec extends SparkSpec {
     val (lv, rv) = (Seq((1L, Seq(0f, 1f), 0.0)).toDF("lid", "lv", "x"),
       Seq((2L, Seq(1f, 0f), 1.0)).toDF("rid", "rv", "x"))
     val (lk, rk) = (Seq("x", "ly"), Seq("x", "ry"))
+    val layout = layoutOf(r, rk, "disjoint")
     val verbs: Seq[(String, () => Any)] = Seq(
       "knnJoin" -> (() => l.knnJoin(r, lk, rk, 1, "lid", Seq("rid"))),
       "knnJoinPivot" -> (() => l.knnJoinPivot(r, lk, rk, 1, "lid", Seq("rid"))),
       "zknnJoin" -> (() => l.zknnJoin(r, lk, rk, 1, "lid", "rid", Seq("rid"))),
       "knnJoinNaive" -> (() => l.knnJoinNaive(r, lk, rk, 1, "lid", Seq("rid"))),
       "knnJoinVec" -> (() => lv.knnJoinVec(rv, "lv", "rv", "lid", 1, Seq("rid"))),
-      "distanceJoinNaive" -> (() => l.distanceJoinNaive(r, lk, rk, 1.0)))
+      "distanceJoinNaive" -> (() => l.distanceJoinNaive(r, lk, rk, 1.0)),
+      "SpatialDisk.knnJoin" -> (() =>
+        graft.index.SpatialDisk.knnJoin(l, lk, layout, 1, "lid", Seq("rid"))),
+      "SpatialDisk.distanceJoin" -> (() =>
+        graft.index.SpatialDisk.distanceJoin(l, lk, layout, 1.0)))
     for ((verb, call) <- verbs) {
       var msg = ""
       val jobs = jobsOf {
@@ -231,7 +246,16 @@ class SamplerSpec extends SparkSpec {
       array(col("rx"), col("ry")).as("coords")).as("rshape"))
     val shape = jobsOf(boxes.shapeKnnJoin(shapePts, "lshape", "rshape", 3, "lid",
       Seq("rid")))
-    assert((grid, pivot, shape) == (9, 8, 5))
+    // the layout join's three build actions (stats pass, candidate-cell
+    // set, top-k checkpoint) run as 6 jobs, counting their shuffle
+    // stages; at 8 x 8 cells no left starves, so the plan holds no
+    // rescue union
+    val layout = layoutOf(r, rk, "jobs", cellBits = 3)
+    var joined: DataFrame = null
+    val disk = jobsOf { joined = graft.index.SpatialDisk.knnJoin(l, lk, layout, 3, "lid",
+      Seq("rid")) }
+    assert(!joined.queryExecution.optimizedPlan.toString.contains("Union"))
+    assert((grid, pivot, shape, disk) == (9, 8, 5, 6))
   }
 
   test("perCellQuantile: minSamples gates sparse-sampled cells, default keeps all") {
