@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -9,37 +11,61 @@ import graft.operators.SpatialOps._
 import graft.operators.DedupOps._
 import graft.operators.VectorOps._
 
-/** Benchmark main (driver contract): runs the headline queries of
-  * BASELINE.md's plan (B1-B6 + pipeline ops) on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Naive/optimized pairs are both measured so the
-  * optimized plans' advantage is visible in the same run.
+/** The bench registry and its sweep: the headline entries of
+  * BASELINE.md's plan (B1-B11 + pipeline ops) and the indexed and
+  * at-rest entries, each forced once through the `noop` sink on
+  * SPARK_GRAFT_SF_DIR, printed as ONE JSON line. Naive/optimized pairs
+  * are both measured so the optimized plans' advantage is visible in
+  * the same run. `tools.TimeEntry` and `tools.ScaleTrend` share the
+  * registry, the force and the session.
   */
 object Bench {
 
-  /** One headline entry by name — the probe surface measurement tools
-    * use to time a single bench entry in isolation (in-JVM A/Bs, band
-    * re-measures) without replicating its definition. */
+  /** One headline entry by name — how measurement tools time a single
+    * entry in isolation without replicating its definition. */
   private[graft] def entryFor(name: String): (SparkSession, String) => DataFrame =
-    phases.flatMap(_._2).find(_._1 == name).map(_._2)
+    headline.find(_._1 == name).map(_._2)
       .getOrElse(throw new IllegalArgumentException(s"no bench entry $name"))
 
-  /** Headline entries grouped into probe-bracketed phases: a memory
-    * calibration probe runs between phases, so a contention burst is
-    * localized to the phase it hit instead of invalidating the whole
-    * sweep (VERDICT r7 #6). */
-  private def phases: Seq[(String, Seq[(String, (SparkSession, String) => DataFrame)])] = Seq(
-    // b11 (temporal) sorts under its own phase, not "selections" — the
-    // b1* prefix match would otherwise bracket the as-of/interval joins
-    // with the range scans and misattribute a dirty probe
-    "selections" -> headline.filter(e => !e._1.startsWith("b11") && (e._1.startsWith("b1")
-      || e._1.startsWith("b2") || e._1.startsWith("b3") || e._1.startsWith("b4"))),
-    "knn_joins" -> headline.filter(_._1.startsWith("b5")),
-    "vectors_dedup" -> headline.filter(e => e._1.startsWith("b6") || e._1.startsWith("b7")),
-    "pipeline_relational" -> headline.filter(e => e._1.startsWith("b8") || e._1.startsWith("b9")
-      || e._1.startsWith("b11"))
-  )
+  /** Force `df`'s full output through the `noop` sink, which builds every
+    * column a caller would get (a `count()` lets Catalyst prune a plan
+    * down to a scan), and return its row count. The count is an observed
+    * metric of that same write job, so no second job runs; a write that
+    * reports none throws. */
+  private[graft] def force(df: DataFrame): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    // the observation completes from the listener bus, just after the
+    // write returns
+    val row = try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(60, "s"))
+      catch { case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException("Bench.force: the noop write reported no row count") }
+    row.getLong(0)
+  }
 
-  private def headline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+  /** Cores of the measurement session: SPARK_GRAFT_CPUS, default 32. */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The session every measurement main runs on: `local[cpus]` with as
+    * many shuffle partitions, adaptive execution on, plus `conf`
+    * overrides. */
+  private[graft] def session(conf: Seq[(String, String)] = Nil): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The registry: every headline entry by name, in sweep order. */
+  private[graft] def headline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // B1-B3: selections (pushdown-able filters, top-k)
     "b1_box_range" -> ((s: SparkSession, d: String) =>
       customerPts(s, d).boxRange(Seq("cx", "cy"), Seq(2000.0, 100.0), Seq(4000.0, 300.0))),
@@ -426,9 +452,6 @@ object Bench {
     customerPts(s, d).select(col("c_custkey").as("c2_custkey"),
       col("cx").as("c2x"), col("cy").as("c2y"))
 
-  /** Deterministic heavy-skew point set derived from customer: 4 of 5
-    * rows compress 100x into a dense cluster, the rest spread 10x wider
-    * — the adversarial distribution for radius-bounded kNN joins. */
   /** 4-D point fixture for the high-dimensional auto-route entry: the
     * 2-D customer coordinates plus two decorrelated residue axes. */
   private def pts4d(s: SparkSession, d: String, p: String): DataFrame =
@@ -439,166 +462,43 @@ object Bench {
       (col("c_custkey") % 773).cast("double").as(s"${p}z"),
       (col("c_custkey") % 337).cast("double").as(s"${p}w"))
 
-  /** Pure-CPU environment calibration: `cpus` tasks each run a fixed
-    * 2.5e8-iteration splitmix64 loop — no I/O, no shuffle, no allocation.
-    * On a quiet machine this is wall-clock constant (~0.66 s reference in
-    * BASELINE.md), and host CPU steal inflates it by the same factor it
-    * inflates the long parallel stages. Run BEFORE and AFTER the query
-    * sweep (`calibration_pre`/`calibration_post` top-level fields —
-    * round 5 proved a single start-of-run point sample integrates none
-    * of the contention that arrives later), and complemented by the
-    * per-query `cpu_per_wall` ratios from the stage-metrics listener,
-    * which give each entry its own contention denominator. */
-  private def calibration(spark: SparkSession, cpus: Int): Double = {
-    val t0 = System.nanoTime()
-    val mix = spark.sparkContext.parallelize(0 until cpus, cpus).map { seed =>
-      var x = 0x9E3779B97F4A7C15L * (seed + 1)
-      var acc = 0L
-      var i = 0
-      while (i < 250000000) {
-        x += 0x9E3779B97F4A7C15L
-        var z = x
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        acc ^= z ^ (z >>> 31)
-        i += 1
-      }
-      acc
-    }.reduce(_ ^ _)
-    if (mix == 42L) System.err.println("[bench] calibration fixpoint") // defeat DCE
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Memory-traversing calibration probe — the splitmix loop's blind
-    * spot (proven in round 6: a co-runner that saturates memory
-    * bandwidth inflates query wall AND CPU time proportionally, so
-    * `cpu_per_wall` stays normal, while the register-only ALU loop
-    * reads clean). Each of `cpus` tasks fills a 64 MiB Long array
-    * (32 tasks = 2 GiB, far past any LLC) and then makes 16M strided
-    * reads (odd stride, power-of-two wrap -> full-period visit order
-    * that defeats the prefetcher), so the probe's wall time is memory-
-    * bandwidth-bound. A run where this probe disagrees with its
-    * BASELINE.md reference while the ALU probe reads clean is
-    * bandwidth/cache contamination. */
-  private def memCalibration(spark: SparkSession, cpus: Int): Double = {
-    val t0 = System.nanoTime()
-    val mix = spark.sparkContext.parallelize(0 until cpus, cpus).map { seed =>
-      val n = 1 << 23 // 8M longs = 64 MiB per task
-      val a = new Array[Long](n)
-      var i = 0
-      while (i < n) { a(i) = (i + seed).toLong * 0x9E3779B97F4A7C15L; i += 1 }
-      var acc = 0L
-      var idx = seed & (n - 1)
-      var j = 0
-      while (j < (n << 1)) { // 16M reads x 64B lines = 1 GiB of traffic/task
-        acc ^= a(idx)
-        idx = (idx + 4097) & (n - 1)
-        j += 1
-      }
-      acc
-    }.reduce(_ ^ _)
-    if (mix == 42L) System.err.println("[bench] mem calibration fixpoint") // defeat DCE
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Write-path calibration probe (r11 verdict #5): the ALU and memory
-    * probes are read/compute-oriented and cannot sense the host state
-    * the WRITE entries ride on — dirty-page writeback pressure and
-    * filesystem metadata (committer rename) cost, which the
-    * `b10d_spatial_disk_write` history shows swinging 2x across DAYS
-    * under identical code (4.4–6.4 s in the round-12 A/B incl. cache
-    * drops, vs 9.1–9.2 s in two prior artifacts) while same-day drops
-    * move it under 20%. This probe writes a fixed 16-file parquet
-    * table through the same committer machinery and deletes it —
-    * recorded as `calibration_fs` so a slow-write-host artifact is
-    * VISIBLE in-band instead of reading as a b10d regression.
-    * Record-only this round (no dirty gate until a clean band exists
-    * across hosts/days). */
-  private def fsCalibration(spark: SparkSession): Double = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_bench_fsprobe"
-    val t0 = System.nanoTime()
-    spark.range(0, 4000000, 1, 16)
-      .select(col("id"), xxhash64(col("id")).as("h"))
-      .write.mode("overwrite").parquet(p)
-    val secs = (System.nanoTime() - t0) / 1e9
-    try {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    } catch { case _: Throwable => }
-    secs
-  }
-
-  /** Accumulates executor CPU nanoseconds across completed stages.
-    * Snapshot deltas around each timed query give `cpu_per_wall` =
-    * stage CPU seconds / wall seconds — a per-query contention
-    * denominator (a CPU-bound query on an idle 32-thread host sits far
-    * above 1; host CPU steal leaves its CPU time unchanged while wall
-    * inflates, so the ratio collapses exactly when the entry is
-    * contaminated). Listener delivery is asynchronous, so attribution
-    * is approximate at the boundary of very short queries — it is a
-    * diagnostic denominator, not a timing source. */
-  private final class CpuListener extends org.apache.spark.scheduler.SparkListener {
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
-
-  private final class Recorder(listener: CpuListener) {
-    val wall = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val cpuRatio = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed(name: String)(f: => Unit): Unit = {
-      val c0 = listener.cpuNs.get()
-      val t0 = System.nanoTime()
-      try f
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      val w = (System.nanoTime() - t0) / 1e9
-      wall(name) = w
-      // small settle window so async stage-completed events land
-      Thread.sleep(50)
-      cpuRatio(name) = ((listener.cpuNs.get() - c0) / 1e9) / math.max(w, 1e-9)
-    }
-  }
-
   /** Indexed-path timings: build once (reported), then query. The
     * `indexTable`/`quadTreeIndexTable` calls run their driver-side work
     * (bounds agg, leaf collect) eagerly, so they sit INSIDE the timed
     * block — the build entries measure the whole build, not just the
     * cache fill. */
-  private def indexedPhase(spark: SparkSession, sfDir: String, rec: Recorder): Unit = {
-    // a retry attempt must rebuild, not read the registry entry of the
-    // dirty attempt — otherwise b10_index_build times a registry no-op
+  private def indexedPhase(spark: SparkSession, sfDir: String, timed: Timer): Unit = {
+    // the build entries must build, not read an index left in the
+    // registry — otherwise b10_index_build times a registry no-op
     IndexManager.dropIndex(spark, s"bench:$sfDir")
     IndexManager.dropIndex(spark, s"bench_qt:$sfDir")
     var idx: graft.index.IndexedTable = null
-    rec.timed("b10_index_build") {
+    timed("b10_index_build") {
       idx = IndexManager.indexTable(spark, customerPts(spark, sfDir),
         s"bench:$sfDir", Seq("cx", "cy"), numPartitions = 32)
-      idx.boxRange(Array(0.0, 0.0), Array(1.0, 1.0)).count() // force build + cache
+      force(idx.boxRange(Array(0.0, 0.0), Array(1.0, 1.0)))
     }
-    rec.timed("b1i_box_range_indexed") {
-      idx.boxRange(Array(2000.0, 100.0), Array(4000.0, 300.0)).count()
+    timed("b1i_box_range_indexed") {
+      force(idx.boxRange(Array(2000.0, 100.0), Array(4000.0, 300.0)))
     }
-    rec.timed("b2i_circle_range_indexed") {
-      idx.circleRange(Array(5000.0, 500.0), 500.0).count()
+    timed("b2i_circle_range_indexed") {
+      force(idx.circleRange(Array(5000.0, 500.0), 500.0))
     }
-    rec.timed("b3i_knn_indexed") {
-      idx.knn(Array(5000.0, 500.0), 10, Seq("c_custkey")).count()
+    timed("b3i_knn_indexed") {
+      force(idx.knn(Array(5000.0, 500.0), 10, Seq("c_custkey")))
     }
     // quadtree twin: same probes through the multi-interval leaf pruning
     var qt: graft.index.QuadTreeIndexedTable = null
-    rec.timed("b10q_quadtree_build") {
+    timed("b10q_quadtree_build") {
       qt = IndexManager.quadTreeIndexTable(spark, customerPts(spark, sfDir),
         s"bench_qt:$sfDir", Seq("cx", "cy"), numPartitions = 32)
-      qt.boxRange(Array(0.0, 0.0), Array(1.0, 1.0)).count() // force build + cache
+      force(qt.boxRange(Array(0.0, 0.0), Array(1.0, 1.0)))
     }
-    rec.timed("b1q_box_range_quadtree") {
-      qt.boxRange(Array(2000.0, 100.0), Array(4000.0, 300.0)).count()
+    timed("b1q_box_range_quadtree") {
+      force(qt.boxRange(Array(2000.0, 100.0), Array(4000.0, 300.0)))
     }
-    rec.timed("b3q_knn_quadtree") {
-      qt.knn(Array(5000.0, 500.0), 10, Seq("c_custkey")).count()
+    timed("b3q_knn_quadtree") {
+      force(qt.knn(Array(5000.0, 500.0), 10, Seq("c_custkey")))
     }
     // at-rest layout twin (r10): write the cell-partitioned z-sorted
     // parquet once (timed — the build entry), then answer the same box
@@ -609,36 +509,36 @@ object Bench {
     // 3.5 s; a 100-TB table wants MORE cells, not fewer)
     val diskPath = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_bench_spatial_disk").toString
-    rec.timed("b10d_spatial_disk_write") {
+    timed("b10d_spatial_disk_write") {
       graft.index.SpatialDisk.write(customerPts(spark, sfDir), diskPath,
         Seq("cx", "cy"), cellBits = 4)
     }
-    rec.timed("b1d_box_range_disk") {
-      graft.index.SpatialDisk.boxRange(spark, diskPath,
-        Array(2000.0, 100.0), Array(4000.0, 300.0)).count()
+    timed("b1d_box_range_disk") {
+      force(graft.index.SpatialDisk.boxRange(spark, diskPath,
+        Array(2000.0, 100.0), Array(4000.0, 300.0)))
     }
-    rec.timed("b3d_knn_disk") {
-      graft.index.SpatialDisk.knn(spark, diskPath,
-        Array(5000.0, 500.0), 10, Seq("c_custkey")).count()
+    timed("b3d_knn_disk") {
+      force(graft.index.SpatialDisk.knn(spark, diskPath,
+        Array(5000.0, 500.0), 10, Seq("c_custkey")))
     }
     // the at-rest twin of b5_knn_join_grid: same query set, k, tie-break
-    rec.timed("b5d_knn_join_disk") {
-      graft.index.SpatialDisk.knnJoin(supplierPts(spark, sfDir),
+    timed("b5d_knn_join_disk") {
+      force(graft.index.SpatialDisk.knnJoin(supplierPts(spark, sfDir),
         Seq("sx", "sy"), diskPath, 3,
-        leftId = "s_suppkey", tieBreak = Seq("c_custkey")).count()
+        leftId = "s_suppkey", tieBreak = Seq("c_custkey")))
     }
     // located tombstone delete (r13): the O(wave) purge verb — the
     // wave carries the written coordinates, presence verifies against
     // only the claimed cells — then the tombstoned box read (the
     // anti-join cost a deleted-but-uncompacted layout pays per query)
-    rec.timed("b10z_spatial_delete_at") {
+    timed("b10z_spatial_delete_at") {
       graft.index.SpatialDisk.deleteAt(spark, diskPath,
         customerPts(spark, sfDir).filter(col("c_custkey") % 10 === 3)
           .select("c_custkey", "cx", "cy"), "c_custkey")
     }
-    rec.timed("b1dt_box_range_disk_deleted") {
-      graft.index.SpatialDisk.boxRange(spark, diskPath,
-        Array(2000.0, 100.0), Array(4000.0, 300.0)).count()
+    timed("b1dt_box_range_disk_deleted") {
+      force(graft.index.SpatialDisk.boxRange(spark, diskPath,
+        Array(2000.0, 100.0), Array(4000.0, 300.0)))
     }
     // at-rest ANN layout (r13): write the IVF-PQ index once (timed —
     // the clustered one-file-per-cell write), then join a query wave
@@ -647,18 +547,18 @@ object Bench {
     // at 1x
     val ivfpqPath = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_bench_ivfpq_disk").toString
-    rec.timed("b10y_ivfpq_index_write") {
+    timed("b10y_ivfpq_index_write") {
       import graft.operators.VectorOps._
       embeddings(spark, sfDir).writeIvfPq(ivfpqPath, "embedding", "vec_id",
         nlist = 8, m = 4, ksub = 4, iters = 2)
     }
-    rec.timed("b6vd_ann_join_disk") {
+    timed("b6vd_ann_join_disk") {
       val wave = embeddings(spark, sfDir).filter(col("vec_id") % 97 === 0)
         .select((col("vec_id") + 900000000L).as("qid"),
           col("embedding").as("qvec"))
-      graft.operators.VectorOps.readIvfPqTopKJoin(wave, "qvec", "qid",
+      force(graft.operators.VectorOps.readIvfPqTopKJoin(wave, "qvec", "qid",
         ivfpqPath, "embedding", "vec_id", k = 3, nprobe = 4,
-        refine = 50).count()
+        refine = 50))
     }
     // at-rest TEXT layouts (r11): the corpus's digest set and CDC chunk
     // index each write once (timed build entries), then a synthetic
@@ -676,23 +576,23 @@ object Bench {
           concat(col("text"), lit(" NOVEL")).as("text")))
     val digestPath = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_bench_digest_idx").toString
-    rec.timed("b10t_digest_index_write") {
+    timed("b10t_digest_index_write") {
       docsAll.writeDigestIndex(digestPath, "doc_id", "text")
     }
-    rec.timed("b7dg_digest_gate") {
-      wave.exactPairsAgainstIndex(digestPath, "doc_id", "text").count()
+    timed("b7dg_digest_gate") {
+      force(wave.exactPairsAgainstIndex(digestPath, "doc_id", "text"))
     }
-    rec.timed("b7da_digest_admit") {
-      wave.admitAgainstDigestIndex(digestPath, "doc_id", "text").count()
+    timed("b7da_digest_admit") {
+      force(wave.admitAgainstDigestIndex(digestPath, "doc_id", "text"))
     }
     val cdcPath = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_bench_cdc_idx").toString
-    rec.timed("b10u_cdc_index_write") {
+    timed("b10u_cdc_index_write") {
       docsAll.writeCdcIndex(cdcPath, "doc_id", "text")
     }
-    rec.timed("b7cg_cdc_gate") {
-      wave.cdcPairsAgainstIndex(cdcPath, "doc_id", "text",
-        minShared = 1).count()
+    timed("b7cg_cdc_gate") {
+      force(wave.cdcPairsAgainstIndex(cdcPath, "doc_id", "text",
+        minShared = 1))
     }
     // at-rest retrieval (r11): postings layout written once, queries
     // read only their terms' posting rows
@@ -701,484 +601,68 @@ object Bench {
     val bmTerms = Seq("spark", "vector", "window", "hash", "merge", "customer")
     val bmPath = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_bench_bm25_idx").toString
-    rec.timed("b10v_bm25_index_write") {
+    timed("b10v_bm25_index_write") {
       docsAll.writeBm25Index(bmPath, "doc_id", "text")
     }
-    rec.timed("b8ri_bm25_index_topk") {
-      CorpusOps.bm25TopKAgainstIndex(spark, bmPath, bmTerms, 20).count()
+    timed("b8ri_bm25_index_topk") {
+      force(CorpusOps.bm25TopKAgainstIndex(spark, bmPath, bmTerms, 20))
     }
     // tombstone deletes (r12): the delete verb itself (digest = wave
     // write + meta; bm25 additionally derives df/constant deltas from
     // one column-pruned postings pass), then the tombstoned layouts'
     // read paths — the anti-join cost a deleted-but-uncompacted layout
     // pays per query
-    rec.timed("b10w_digest_delete") {
+    timed("b10w_digest_delete") {
       graft.operators.DedupOps.deleteFromDigestIndex(spark, digestPath,
         docsAll.filter(col("doc_id") % 3 === 0).select(col("doc_id")))
     }
-    rec.timed("b7dt_digest_gate_deleted") {
-      wave.exactPairsAgainstIndex(digestPath, "doc_id", "text").count()
+    timed("b7dt_digest_gate_deleted") {
+      force(wave.exactPairsAgainstIndex(digestPath, "doc_id", "text"))
     }
-    rec.timed("b10x_bm25_delete") {
+    timed("b10x_bm25_delete") {
       CorpusOps.deleteFromBm25Index(spark, bmPath,
         docsAll.filter(col("doc_id") % 7 === 0).select(col("doc_id")))
     }
-    rec.timed("b8rd_bm25_topk_deleted") {
-      CorpusOps.bm25TopKAgainstIndex(spark, bmPath, bmTerms, 20).count()
+    timed("b8rd_bm25_topk_deleted") {
+      force(CorpusOps.bm25TopKAgainstIndex(spark, bmPath, bmTerms, 20))
     }
   }
 
-  /** One full sweep: ALU + memory brackets around the whole run, plus a
-    * memory probe between phases (7 mem points: pre, one per headline
-    * phase boundary, post after the indexed phase, and one after the
-    * trailing steady-state re-execution). The headline pre/post pair is
-    * (pre, post_indexed); post_steady guards only the steady numbers. */
-  private final case class Sweep(
-      rec: Recorder, calPre: Double, calPost: Double,
-      memProbes: scala.collection.mutable.LinkedHashMap[String, Double],
-      steady: scala.collection.mutable.LinkedHashMap[String, Double],
-      fsProbe: Double = -1.0,
-      steadyAttempts: scala.collection.mutable.LinkedHashMap[String, Seq[Double]] =
-        scala.collection.mutable.LinkedHashMap.empty) {
-    def memPre: Double = memProbes.getOrElse("pre", -1.0)
-    def memPost: Double = memProbes.getOrElse("post_indexed",
-      memProbes.lastOption.map(_._2).getOrElse(-1.0))
-    def total: Double = rec.wall.values.sum
-  }
-
-  /** Cold-vs-steady consistency: each steady-tracked entry's second
-    * execution is a same-sweep CONTROL for its cold number. The cold
-    * run carries fixed cost (first-run JIT, driver-side AQE gaps) but
-    * historically at most ~2x the steady rate (r8-r10 clean runs:
-    * 0.93-1.64x); a cold entry 4x+ its own steady reading — double the
-    * historical ceiling — means a burst hit the timed window yet missed
-    * every memory probe, exactly the hole the committed r10 artifact
-    * fell through (pivot 31.99 s cold beside 3.16 s steady, certified
-    * clean because the probes' take-the-minimum re-probe absorbed the
-    * burst). Tiny steady denominators (< 0.5 s — small-sf smoke runs)
-    * are skipped: there the ratio measures JIT, not contamination.
-    *
-    * `ratioCap` is 4x on a FIRST attempt; after any rejected attempt
-    * the caller tightens it to [[retryColdSteadyCap]] (3x): once a
-    * sweep has read dirty, the prior is contamination, and a final
-    * attempt sliding in just under the 4x bar right after two dirty
-    * ones is exactly how the committed r11 artifact shipped
-    * b5s_knn_join_skew_grid at 12.98 s cold beside its own 3.42 s
-    * steady (3.80x; judge's clean re-run read 4.73 s). */
-  private[graft] val firstColdSteadyCap = 4.0
-  private[graft] val retryColdSteadyCap = 3.0
-
-  /** Recorded steady-state bands (UPPER edge, seconds at sf0.1) for the
-    * steady-tracked entries — the r9-r12 judge-clean history. The hole
-    * this closes (r12 verdict #2): contamination that persists through
-    * BOTH an entry's cold number and its steady re-execution satisfies
-    * the cold/steady ratio rule BY CONSTRUCTION (the committed r12
-    * artifact shipped b5s_knn_join_skew_grid at 11.79 cold / 11.91
-    * steady — 3.5x its band — with `attempts: []` because the phase
-    * probes bracketing it read under the 0.7 bar). The steady reading
-    * has no fixed cold cost to excuse it, so an absolute band IS the
-    * right control: a steady-tracked entry reading over
-    * [[steadyBandCap]]x its recorded band marks the sweep dirty even
-    * when every probe passes. Bands move only via an explicit
-    * band-update note in BASELINE.md (the b8nd / b10d precedent) —
-    * never silently. */
-  private[graft] val steadyBandsSf01: Map[String, Double] = Map(
-    "b5_knn_join_grid" -> 2.4,        // r9-r12 steady 1.54-2.32
-    "b5_knn_join_zorder" -> 2.4,      // 1.50-2.38
-    "b5_knn_join_pivot" -> 3.5,       // 2.33-3.48
-    "b5s_knn_join_skew_grid" -> 4.2,  // 2.97-4.20 (judge r12)
-    "b5s_knn_join_skew_pivot" -> 5.0, // re-banded r15 addendum 2 (post pivot-budget/sampler fixes: 2.56-2.98)
-    "b6v_knn_join_vec_pivot" -> 4.4)  // 3.23-4.34
-  private[graft] val steadyBandCap = 2.5
-
-  /** Recorded COLD bands (upper edge, seconds at sf0.1) for entries not
-    * in the steady-tracked set — the r14 BASELINE.md addenda 3-4 bands
-    * moved into code (r14 verdict #2): as prose only, a 2x regression
-    * in the three newest joins tripped nothing. Cold walls carry fixed
-    * startup cost the steady loop amortizes, so these check against the
-    * same [[steadyBandCap]] multiple of the recorded ceiling rather
-    * than the ceiling itself; band values move only via a BASELINE.md
-    * band-update note, like [[steadyBandsSf01]]. */
-  private[graft] val coldBandsSf01: Map[String, Double] = Map(
-    "b4sh_shape_distance_join" -> 2.5, // r14 addendum 3: 1.0-2.5
-    "b5sh_shape_knn_join" -> 4.5,      // r14 addendum 3: 2.2-4.5
-    "b5hd_knn_join_4d_auto" -> 5.5)    // re-banded r15 addendum 2 (post fixes: 3.67-4.79; was 5.5-8.5)
-  // the recorded cold bands are already range UPPER edges (startup cost
-  // included), so the noise allowance is tighter than the steady cap:
-  // 1.5x catches the 2x-regression class the r14 verdict named while
-  // clearing every recorded clean host state
-  private[graft] val coldBandCap = 1.5
-
-  /** Cold walls against their recorded bands — the tripwire for the
-    * entries whose only recorded figure is the cold number. Same
-    * banded-scale-factor guard as [[steadyBandViolations]]. */
-  private[graft] def coldBandViolations(
-      wall: collection.Map[String, Double],
-      sfDir: String): Seq[String] =
-    if (!sfDir.contains("sf0.1")) Nil
-    else wall.toSeq.collect {
-      case (name, w) if coldBandsSf01.get(name).exists(b => w > coldBandCap * b) =>
-        f"cold out of band: $name cold $w%.2f s vs recorded band " +
-          f"<= ${coldBandsSf01(name)}%.2f s (> ${coldBandCap}%.1fx)"
+  /** Wall seconds per entry, in run order. A failing entry is reported
+    * on stderr and keeps the time it took to fail. */
+  private final class Timer {
+    val wall = scala.collection.mutable.LinkedHashMap[String, Double]()
+    def apply(name: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      try f catch { case NonFatal(e) => System.err.println(s"[bench] $name failed: $e") }
+      wall(name) = (System.nanoTime() - t0) / 1e9
     }
-
-  /** Executable interpretation of `b10d_spatial_disk_write` against
-    * the `calibration_fs` probe — the r12 mechanism finding made a
-    * rule. b10d swings 2x across sweeps with NO code change because it
-    * rides host FS write-path state (dirty-page writeback, committer
-    * costs) that the ALU/memory probes cannot see; the fs probe
-    * (a small parquet write+read) senses exactly that state. Recorded
-    * pairs (probe -> b10d): 0.33 -> 4.7, 0.48 -> 5.2, 0.48 -> 9.13,
-    * judge 0.43 -> 6.30, 0.41 -> closing sweeps — probe band 0.25-0.55
-    * spans every recorded clean host state, b10d band 4.4-9.3 spans
-    * every reading beside an in-band probe. The rule: a b10d reading
-    * OVER its band beside an IN-band probe is a REGRESSION (the host
-    * was fine — the code got slower); beside an out-of-band probe it
-    * is HOST STATE (re-measure, don't re-band). Emitted per-artifact
-    * as `b10d_verdict` so the interpretation is recorded, not
-    * re-derived. */
-  private[graft] val b10dBandUpperSf01 = 9.3
-  // clean band tightened r13 (addendum 5): a 0.52 probe accompanied a
-  // +50% board-wide shift and a 2x b10d that the very next sweep
-  // (probe 0.38) read at 4.84 — no recorded clean pair sits above 0.48
-  private[graft] val fsProbeBand: (Double, Double) = (0.25, 0.50)
-  private[graft] def b10dVerdict(b10d: Double, fsProbe: Double): String =
-    if (b10d <= b10dBandUpperSf01) "in-band"
-    else if (fsProbe >= fsProbeBand._1 && fsProbe <= fsProbeBand._2)
-      "regression"
-    else "host-state"
-
-  /** Steady readings against their own recorded bands — the persistent-
-    * contamination control. Applies only at the banded scale factor
-    * (the bands are sf0.1 figures; a smoke run's steady values sit far
-    * BELOW band and a larger sf would legitimately exceed it). */
-  private[graft] def steadyBandViolations(
-      steady: collection.Map[String, Double],
-      sfDir: String): Seq[String] =
-    if (!sfDir.contains("sf0.1")) Nil
-    else steady.toSeq.collect {
-      case (name, st) if steadyBandsSf01.get(name).exists(b => st > steadyBandCap * b) =>
-        f"steady out of band: $name steady $st%.2f s vs recorded band " +
-          f"<= ${steadyBandsSf01(name)}%.2f s (> ${steadyBandCap}%.1fx — " +
-          "persistent contamination through cold AND steady)"
-    }
-  private[graft] def coldSteadyViolations(
-      wall: collection.Map[String, Double],
-      steady: collection.Map[String, Double],
-      ratioCap: Double = firstColdSteadyCap): Seq[String] =
-    steady.toSeq.collect {
-      case (name, st) if st >= 0.5 && wall.getOrElse(name, 0.0) / st > ratioCap =>
-        f"cold/steady inconsistent: $name cold ${wall(name)}%.2f s vs " +
-          f"steady $st%.2f s (> ${ratioCap}%.0fx)"
-    }
-
-  /** Why this sweep cannot be trusted, per BASELINE.md's interpretation
-    * rule: any memory probe at/above the 0.7 s contamination threshold,
-    * a pre/post bracket pair (ALU or memory) disagreeing >= 1.5x, or a
-    * steady-tracked entry whose cold number is 4x+ its own steady
-    * re-execution (3x+ once any attempt has been rejected). None ->
-    * clean. */
-  private def dirtyReason(s: Sweep, coldSteadyCap: Double,
-                          sfDir: String): Option[String] = {
-    val memDirty = s.memProbes.collect {
-      case (k, v) if v >= 0.7 => f"mem probe $k=$v%.3f >= 0.7"
-    }
-    def pairOff(a: Double, b: Double): Boolean =
-      a > 0 && b > 0 && math.max(a, b) / math.min(a, b) >= 1.5
-    val aluDirty =
-      if (pairOff(s.calPre, s.calPost))
-        Seq(f"ALU pre/post disagree: ${s.calPre}%.3f vs ${s.calPost}%.3f")
-      else Nil
-    // the mem pair rule additionally requires the larger side to breach
-    // the absolute threshold: the clean band's own noise spans ~0.38-0.65
-    // (r8 measurements), so a bare 1.5x ratio between two in-band values
-    // is not evidence of contamination and was burning retry attempts
-    val memPairDirty =
-      if (pairOff(s.memPre, s.memPost) && math.max(s.memPre, s.memPost) >= 0.7)
-        Seq(f"mem pre/post disagree: ${s.memPre}%.3f vs ${s.memPost}%.3f")
-      else Nil
-    val coldSteady = coldSteadyViolations(s.rec.wall, s.steady, coldSteadyCap)
-    val steadyBand = steadyBandViolations(s.steady, sfDir)
-    val coldBand = coldBandViolations(s.rec.wall, sfDir)
-    val all = memDirty.toSeq ++ aluDirty ++ memPairDirty ++ coldSteady ++
-      steadyBand ++ coldBand
-    if (all.isEmpty) None else Some(all.mkString("; "))
-  }
-
-  /** Drop every retained block this JVM accumulated — checkpointed kNN
-    * candidate exchanges, persisted projections, index caches of
-    * FINISHED work — and pay the GC debt now. The calibration probes
-    * exist to detect EXTERNAL contamination; without this, a probe's
-    * 2 GiB task allocation measures this JVM's own heap history (r8
-    * observation: an attempt's `pre` probe read 14.5 s purely from the
-    * previous sweep's leftovers, decaying probe-by-probe as blocks
-    * aged out — a self-inflicted dirty verdict that burned all 3
-    * self-healing attempts). Entries only ever count() their frame and
-    * discard it, so nothing released here is still needed; the indexed
-    * phase rebuilds its indexes per attempt by design. */
-  private def releaseRetained(spark: SparkSession): Unit = {
-    try {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] releaseRetained failed: $e") }
-  }
-
-  private def runSweep(spark: SparkSession, sfDir: String, cpus: Int,
-                       listener: CpuListener): Sweep = {
-    def cal(): Double =
-      try calibration(spark, cpus)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] calibration failed: $e"); -1.0 }
-    def memCal(): Double =
-      try memCalibration(spark, cpus)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] mem calibration failed: $e"); -1.0 }
-    // One probe reading is a ~0.5 s sample of a shared host; a transient
-    // burst overlapping JUST that window reads >= 0.7 and burns an entire
-    // ~75 s attempt (r9: all 3 attempts died on single marginal probes,
-    // 0.74-1.15, every neighboring probe clean). Genuine contamination
-    // persists across seconds; a blip does not — so a reading at/above
-    // the threshold is re-measured after a short settle (up to 2
-    // re-probes) and the MINIMUM wins. Min is the right statistic for a
-    // bandwidth probe: interference is strictly additive (co-runners
-    // only ever slow it), so the minimum is the least-contaminated view
-    // of the environment, and a probe that stays >= 0.7 across three
-    // spaced readings is real contamination, not noise.
-    def memCalRobust(): Double = {
-      var best = memCal()
-      var tries = 0
-      while (best >= 0.7 && tries < 2) {
-        System.err.println(f"[bench] mem probe $best%.3f >= 0.7; settling + re-probing")
-        try Thread.sleep(1500) catch { case _: InterruptedException => }
-        val again = memCal()
-        if (again >= 0) best = if (best < 0) again else math.min(best, again)
-        tries += 1
-      }
-      best
-    }
-    releaseRetained(spark) // a retry starts from a clean slate
-    val calPre = cal()
-    val memProbes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    memProbes("pre") = memCalRobust()
-    // write-path probe: senses the dirty-writeback/committer state the
-    // read-oriented probes miss (the b10d 2x day-swing); record-only
-    val fsProbe =
-      try fsCalibration(spark)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] fs calibration failed: $e"); -1.0 }
-    val rec = new Recorder(listener)
-    phases.foreach { case (phaseName, entries) =>
-      entries.foreach { case (name, fn) =>
-        rec.timed(name) { fn(spark, sfDir).count() }
-      }
-      // finished entries' retained blocks are garbage; release before
-      // the probe so it reads the environment, not this heap's history
-      releaseRetained(spark)
-      // phase-boundary probe: a burst is pinned to the phase it hit
-      memProbes(s"post_$phaseName") = memCalRobust()
-    }
-    try indexedPhase(spark, sfDir, rec)
-    catch { case e: Throwable => System.err.println(s"[bench] indexed phase failed: $e") }
-    releaseRetained(spark)
-    val calPost = cal()
-    memProbes("post_indexed") = memCalRobust()
-    // Steady-state re-execution of the kNN-join family: the cold sweep
-    // number carries ~2-2.5 s of local-mode fixed cost per entry
-    // (driver-side gaps across ~25 AQE stage-jobs + first-run JIT —
-    // job-time sum ~2.7 s inside a 5.2 s cold wall) that amortizes away
-    // at scale. The second execution measures the steady-state rate the
-    // 100-TB story actually rides on. Runs AFTER every headline entry
-    // so it cannot perturb them; reported as `steady_state`, never
-    // mixed into `queries`/`total`.
-    val steady = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val steadyAttempts = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val steadyNames = Set("b5_knn_join_grid", "b5_knn_join_zorder",
-      "b5_knn_join_pivot", "b5s_knn_join_skew_grid", "b5s_knn_join_skew_pivot",
-      "b6v_knn_join_vec_pivot")
-    // Per-entry contention retry (r13 verdict #1): three rounds running,
-    // a banded steady entry read 2x its band on the driver's contended
-    // host while the same commit re-measured in-band idle — a single
-    // shared-host burst overlapping one ~5 s entry kept producing false
-    // regressions that burned a whole-sweep retry (or shipped as
-    // `weak`). A banded reading OVER its band is itself the contention
-    // evidence (the band spans every judge-clean reading), so the entry
-    // — not the sweep — is re-run up to 2x after a short settle and the
-    // MINIMUM is admitted (interference is strictly additive; the min
-    // is the least-contaminated view, the same statistic the memory
-    // probes use). Every reading is recorded in `steady_attempts` so
-    // the artifact says which was admitted and what it replaced; an
-    // entry still over band after three spaced readings is genuinely
-    // slow and trips the steady-band dirty rule as before.
-    val banded = sfDir.contains("sf0.1")
-    phases.foreach { case (_, entries) =>
-      entries.filter(e => steadyNames(e._1)).foreach { case (name, fn) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => System.err.println(s"[bench] steady $name failed: $e") }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val readings = scala.collection.mutable.ArrayBuffer(once())
-        while (banded &&
-            steadyBandsSf01.get(name).exists(b => readings.min > b) &&
-            readings.size < 3) {
-          System.err.println(f"[bench] steady $name ${readings.min}%.2f s over " +
-            f"band ${steadyBandsSf01(name)}%.2f s; settling + retrying " +
-            f"(${readings.size}/3)")
-          releaseRetained(spark)
-          try Thread.sleep(2000) catch { case _: InterruptedException => }
-          readings += once()
-        }
-        steady(name) = readings.min
-        if (readings.size > 1) steadyAttempts(name) = readings.toSeq
-      }
-    }
-    releaseRetained(spark)
-    memProbes("post_steady") = memCalRobust()
-    Sweep(rec, calPre, calPost, memProbes, steady, fsProbe, steadyAttempts)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new CpuListener
-    spark.sparkContext.addSparkListener(listener)
-
-    // JVM/codegen warmup on a small query (not reported)
-    try customerPts(spark, sfDir).boxRange(Seq("cx", "cy"), Seq(0.0, 0.0), Seq(1.0, 1.0)).count()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    // the first memory-probe call pays one-off heap growth + page
-    // faults (observed +0.2-0.35 s on the pre bracket); a discarded
-    // warmup call keeps the measured brackets comparable
-    try memCalibration(spark, cpus.toInt)
-    catch { case e: Throwable => System.err.println(s"[bench] mem warmup failed: $e") }
-    // ...and one discarded fs-probe call: the first parquet write pays
-    // writer init + codegen that would otherwise ride the measured probe
-    try fsCalibration(spark)
-    catch { case e: Throwable => System.err.println(s"[bench] fs warmup failed: $e") }
-
-    // Self-healing (VERDICT r7 #1): a sweep whose own probes read dirty
-    // is re-run (bounded attempts) instead of being emitted as the
-    // round's number — r6 AND r7 both checked in artifacts their probes
-    // could have rejected. The first clean sweep wins; every dirty
-    // attempt is summarized in the `attempts` field. If no attempt
-    // comes back clean, the last sweep is emitted with its `dirty`
-    // reason so the artifact says explicitly it is not trustworthy.
-    val maxAttempts = 3
-    val dirtySummaries = scala.collection.mutable.ArrayBuffer[String]()
-    var chosen: Sweep = null
-    var chosenDirty: Option[String] = None
-    var attempt = 0
-    while (attempt < maxAttempts && chosen == null) {
-      attempt += 1
-      val s = runSweep(spark, sfDir, cpus.toInt, listener)
-      // r11 verdict #2: after any rejected attempt the cold/steady bar
-      // tightens — a retry must be cleaner than the sweeps it replaces,
-      // not merely squeak under the first-attempt threshold
-      val cap = if (dirtySummaries.isEmpty) firstColdSteadyCap
-                else retryColdSteadyCap
-      dirtyReason(s, cap, sfDir) match {
-        case None =>
-          chosen = s; chosenDirty = None
-        case Some(reason) =>
-          System.err.println(s"[bench] attempt $attempt dirty: $reason")
-          dirtySummaries += s"""{"attempt":$attempt,"reason":${jstr(reason)},""" +
-            s""""total":${s.total},"calibration_pre":${s.calPre},""" +
-            s""""calibration_post":${s.calPost},"mem_probes":${jmap(s.memProbes)}}"""
-          if (attempt == maxAttempts) { chosen = s; chosenDirty = Some(reason) }
-      }
-    }
-
-    // calibration measures the environment, not the engine: top-level
-    // fields, never part of `queries`, so sum(queries) == total
-    val rec = chosen.rec
-    val dirtyField = chosenDirty.map(r => s""""dirty":${jstr(r)},""").getOrElse("")
-    // calibration-normalized series (VERDICT r8 #7): the ALU reference
-    // band itself drifts with host state (0.66 documented, 0.71-0.78
-    // judge-observed on a clean run), so absolute seconds compare
-    // noisily across rounds. Each entry divided by THIS run's ALU
-    // calibration mean is a host-speed-free number — cross-round and
-    // cross-host comparable. Raw seconds stay the primary series.
-    val calMean = {
-      val vals = Seq(chosen.calPre, chosen.calPost).filter(_ > 0)
-      if (vals.isEmpty) -1.0 else vals.sum / vals.length
-    }
-    val normalized: scala.collection.Map[String, Double] =
-      if (calMean > 0) rec.wall.map { case (k, v) => k -> v / calMean }
-      else scala.collection.Map.empty[String, Double]
-    val line = s"""{"metric":"total","value":${chosen.total},"unit":"sec",""" +
-      s""""queries":${jmap(rec.wall)},"cpu_per_wall":${jmap(rec.cpuRatio)},""" +
-      s""""calibration_mean":$calMean,""" +
-      s""""queries_normalized":${jmap(normalized)},""" +
-      s""""calibration_pre":${chosen.calPre},"calibration_post":${chosen.calPost},""" +
-      s""""calibration_mem_pre":${chosen.memPre},"calibration_mem_post":${chosen.memPost},""" +
-      s""""calibration_mem_phases":${jmap(chosen.memProbes)},""" +
-      s""""calibration_fs":${chosen.fsProbe},""" +
-      s""""steady_state":${jmap(chosen.steady)},""" +
-      s""""steady_bands":${jmap(steadyBandsSf01)},""" +
-      s""""steady_attempts":${jmapArr(chosen.steadyAttempts)},""" +
-      rec.wall.get("b10d_spatial_disk_write")
-        .filter(_ => sfDir.contains("sf0.1"))
-        .map(v => s""""b10d_verdict":${jstr(b10dVerdict(v, chosen.fsProbe))},""")
-        .getOrElse("") +
-      dirtyField +
-      s""""attempts":[${dirtySummaries.mkString(",")}],""" +
-      s""""cpus":$cpus,"sf":"$sfDir"}"""
-    // The FULL record (attempts, probes, bands, steady history — several
-    // KB) goes to files only: target/bench.json (the long-standing
-    // artifact path) plus a per-run target/bench_c<N>.json so a later
-    // scaling run at a different core count never clobbers this run's
-    // per-query record (r16 verdict #1: the 8-core run overwrote the
-    // only recoverable 32-core artifact).
-    for (fname <- Seq("bench.json", s"bench_c$cpus.json")) {
-      try {
-        val p = java.nio.file.Paths.get("target", fname)
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
-        System.err.println(s"[bench] full json written to ${p.toAbsolutePath}")
-      } catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
-    }
-    // a failing stop must not cost the contract line below
+    val spark = session()
+    // JVM/codegen warm-up on a small query (not reported)
+    try force(customerPts(spark, sfDir).boxRange(Seq("cx", "cy"), Seq(0.0, 0.0), Seq(1.0, 1.0)))
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: $e") }
+    val timed = new Timer
+    headline.foreach { case (name, fn) => timed(name)(force(fn(spark, sfDir))) }
+    try indexedPhase(spark, sfDir, timed)
+    catch { case NonFatal(e) => System.err.println(s"[bench] indexed phase failed: $e") }
+    // a failing stop must not cost the result line below
     try spark.stop()
-    catch { case e: Throwable => System.err.println(s"[bench] spark.stop failed: $e") }
-    // The driver-contract line, printed LAST (after spark.stop() so no
-    // shutdown logging can follow it) and COMPACT (r16 verdict #2: the
-    // driver keeps a bounded tail of the output and its parse has
-    // failed every round on the multi-KB full line): per-query seconds
-    // (3 decimals — full precision lives in the files above), total,
-    // cpus, sf, plus the dirty flag when no sweep attempt came back
-    // clean. Same schema as always, fewer bytes; no entry renamed or
-    // dropped.
+    catch { case NonFatal(e) => System.err.println(s"[bench] spark.stop failed: $e") }
+    // printed LAST (after spark.stop(), so no shutdown logging follows
+    // it) and compact: per-entry seconds to 3 decimals
     def r3(v: Double): String = {
       val s = java.math.BigDecimal.valueOf(v)
         .setScale(3, java.math.RoundingMode.HALF_UP).toPlainString
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
-    val compactQueries = rec.wall
+    val queries = timed.wall
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(chosen.total)},"unit":"sec",""" +
-      s""""queries":$compactQueries,""" + dirtyField +
-      s""""cpus":$cpus,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(timed.wall.values.sum)},"unit":"sec",""" +
+      s""""queries":$queries,"cpus":$cpus,"sf":"$sfDir"}""")
   }
-
-  private def jmap(m: scala.collection.Map[String, Double]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-
-  private def jmapArr(m: scala.collection.Map[String, Seq[Double]]): String =
-    m.map { case (k, vs) => "\"" + k + "\":" + vs.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

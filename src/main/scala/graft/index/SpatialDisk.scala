@@ -1074,7 +1074,8 @@ object SpatialDisk {
     *     read; driver cost is sampleCap × cell count, both bounded
     *     (cells ≤ 2^16 by the write-side require).
     *  2. The main phase's radius per sampled point is the smaller of
-    *     that certificate and a density estimate. Radii group to
+    *     that certificate and a density estimate, where the nearest cell
+    *     holds ≥ k rows (else the certificate alone). Radii group to
     *     per-grid-cell maxima (side = the largest radius), so a dense
     *     region dilates small while a sparse one dilates wide — the
     *     estimateKnnRadii skew discipline.
@@ -1145,7 +1146,10 @@ object SpatialDisk {
           }
           r
         }
-      if (best.count <= 0) return (certified, certified)
+      // a cell of fewer than k rows has no density to speak of: its tight
+      // mbr can be a point (one row), whose floored area makes the
+      // estimate the distance to that one row — a disc that never holds k
+      if (best.count < k) return (certified, certified)
       // disc of k rows at the nearest cell's density (2-D area from the
       // cell's TRUE mbr; degenerate extents floor at 1e-9)
       val area = (0 until dims).map(i => math.max(1e-9,

@@ -366,14 +366,15 @@ object ExplainPlans {
         Seq("sx", "sy"), path, 3, leftId = "s_suppkey",
         tieBreak = Seq("c_custkey"))
     }
-    // Seeded starvation: the lefts moved past the layout's x extent
+    // Seeded starvation: the lefts moved past the layout's x extent, one
+    // of them sampled, so the others take its radius
     show("spatial_disk_knn_join_rescue (expect the union's starved branch: the knn_rescue kernel's per-left bound and Voronoi cells exploded on the starved lefts, joined on __graft_lvc = __graft_rvc to the whole layout's pivot_argmin cells, the bound filter and a row_number window — no CartesianProduct or BroadcastNestedLoopJoin)") {
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft_plans_spatial_disk").toString
       graft.index.SpatialDisk.knnJoin(supplierPts(spark, d)
           .withColumn("sx", col("sx") + 20000.0),
         Seq("sx", "sy"), path, 3, leftId = "s_suppkey",
-        tieBreak = Seq("c_custkey"))
+        tieBreak = Seq("c_custkey"), sampleCap = 1)
     }
     show("polygon_distance_join (expect per-polygon bbox-cell explode, equi-join on (cx,cy) cells — no cross — with the codegen'd shape-distance refine)") {
       import graft.spatial.ShapeCodec

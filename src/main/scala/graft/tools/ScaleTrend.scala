@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Bench
+import graft.Bench.force
 import graft.Tables._
 import graft.operators.DedupOps._
 import graft.operators.SpatialOps._
@@ -22,6 +24,10 @@ import graft.operators.SpatialOps._
   *    structure is preserved) and ids offset per replica.
   * Both sides of every join are replicated, so total work for a linear
   * plan grows ~10x (the naive cross plans would grow ~100x).
+  *
+  * Every slice is forced through the `noop` sink (`Bench.force`), so it
+  * times the full output, and runs on `Bench.session` (cores from
+  * SPARK_GRAFT_CPUS).
   */
 object ScaleTrend {
 
@@ -65,58 +71,64 @@ object ScaleTrend {
         translate(col("text"), "aeiou", vowelMap(r)).as("text"))
     }.reduce(_ unionByName _)
 
+  /** One run of `df` forced through the noop sink: (seconds, rows). */
+  private def timed(df: => DataFrame): (Double, Long) = {
+    val t0 = System.nanoTime(); val rows = force(df)
+    ((System.nanoTime() - t0) / 1e9, rows)
+  }
+
+  /** The faster of two forced runs of `df`: (seconds, rows). */
+  private def best2(df: => DataFrame): (Double, Long) = {
+    val (a, rows) = timed(df); val (b, _) = timed(df)
+    (math.min(a, b), rows)
+  }
+
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
 
-    def b4l(n: Int): Long =
+    def b4l(n: Int): DataFrame =
       custRep(spark, d, n, "l").distanceJoin(custRep(spark, d, n, "m"),
-        Seq("lx", "ly"), Seq("mx", "my"), 50.0).count()
-    def b5(n: Int): Long =
+        Seq("lx", "ly"), Seq("mx", "my"), 50.0)
+    def b5(n: Int): DataFrame =
       custRep(spark, d, n, "l").knnJoin(suppRep(spark, d, n),
-        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", Seq("rid")).count()
-    def b5p(n: Int): Long =
+        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", Seq("rid"))
+    def b5p(n: Int): DataFrame =
       custRep(spark, d, n, "l").knnJoinPivot(suppRep(spark, d, n),
-        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", Seq("rid")).count()
-    def b5z(n: Int): Long =
+        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", Seq("rid"))
+    def b5z(n: Int): DataFrame =
       custRep(spark, d, n, "l").zknnJoin(suppRep(spark, d, n),
-        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", "rid", Seq("rid")).count()
-    def b7(n: Int): Long =
+        Seq("lx", "ly"), Seq("rx", "ry"), 3, "lid", "rid", Seq("rid"))
+    def b7(n: Int): DataFrame =
       docsRep(spark, d, n).minHashPairs("doc_id", "text", shingle = 3,
-        numHashes = 64, bands = 16, threshold = 0.8, maxBucket = 1000).count()
+        numHashes = 64, bands = 16, threshold = 0.8, maxBucket = 1000)
     // decontamination sweep over the replicated corpus: both the corpus
     // and the stand-in benchmark set grow with the slice (the same %7
     // split as the driver query); cross-replica grams differ (vowel
     // translation), so matched pairs grow ~n, not n^2
-    def b8d(n: Int): Long = {
+    def b8d(n: Int): DataFrame = {
       val docs = docsRep(spark, d, n)
       val eval = docs.filter(col("doc_id") % 7 === 0)
         .select(col("doc_id").as("eval_id"), col("text"))
       graft.operators.DedupOps.contaminationPairs(
         docs.filter(col("doc_id") % 7 =!= 0), broadcast(eval),
-        "doc_id", "eval_id", "text", n = 8).count()
+        "doc_id", "eval_id", "text", n = 8)
     }
 
     // corpus boilerplate over the replicated corpus: each replica's
     // vowel translation makes cross-replica grams distinct, so the
     // document-frequency table grows ~n and matched grams stay within
     // a replica — the 100-TB shape (per-shard boilerplate)
-    def b8b(n: Int): Long = {
+    def b8b(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       docsRep(spark, d, n).boilerplateScore("doc_id", "text", n = 5, minDocs = 2L)
-        .count()
     }
 
     // as-of join over replicated events: each replica shifts BOTH its
     // user ids and its timestamps, so key cardinality grows ~n with
     // per-key timeline sizes constant — the 100-TB shape (more users,
     // not densified users). One shuffle + per-key window reads e ≈ 1.
-    def b11(n: Int): Long = {
+    def b11(n: Int): DataFrame = {
       import graft.operators.TemporalOps._
       val span = 3600L * 24 * 40 // > the events table's ~31-day span, s
       val ev = (0 until n).map { r =>
@@ -132,16 +144,16 @@ object ScaleTrend {
         .select(col("user_id"), col("ts").as("p_ts"),
           col("event_id").as("p_event_id"), col("value").as("p_value"))
       clicks.asOfJoin(purchases, Seq("user_id"), Seq("user_id"),
-        "ts", "p_ts", "p_event_id").count()
+        "ts", "p_ts", "p_event_id")
     }
 
     // unigram LM scoring over the replicated corpus: vowel translation
     // multiplies the vocabulary ~n-fold while per-replica count shapes
     // stay constant — the count table and the token-keyed score join
     // both grow ~n, so a healthy plan reads e ≈ 1
-    def b8u(n: Int): Long = {
+    def b8u(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
-      docsRep(spark, d, n).unigramScore("doc_id", "text").count()
+      docsRep(spark, d, n).unigramScore("doc_id", "text")
     }
 
     // embedding replicas for the clustering trend: replica r multiplies
@@ -172,26 +184,26 @@ object ScaleTrend {
     // size; a fixed k at 10x data would measure 10x-fatter cells, not
     // the operator). Per iteration: one scan (argmin over the literal
     // centroid array) + a (k*dim)-key partial-combined aggregation.
-    def b6k(n: Int): Long = {
+    def b6k(n: Int): DataFrame = {
       import graft.operators.VectorOps._
-      embRep(n).kmeansAssign("embedding", "vec_id", k = 8 * n, iters = 2).count()
+      embRep(n).kmeansAssign("embedding", "vec_id", k = 8 * n, iters = 2)
     }
 
     // semantic dedup on those blocks: within-cell pairs only; constant
     // cell size -> pair volume ~n and the verify join ~n
-    def b6sd(n: Int): Long = {
+    def b6sd(n: Int): DataFrame = {
       import graft.operators.VectorOps._
       embRep(n).semanticDedupPairs("embedding", "vec_id", k = 8 * n,
-        threshold = 0.8).count()
+        threshold = 0.8)
     }
 
     // BM25 over the replicated corpus: the stats aggregation and the
     // scoring scan both grow ~n; the term set is fixed, so df work per
     // row is constant (vowel-translated replicas simply miss the terms)
-    def b8r(n: Int): Long = {
+    def b8r(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       docsRep(spark, d, n).bm25TopK("doc_id", "text",
-        Seq("spark", "vector", "window", "hash", "merge", "customer"), 20).count()
+        Seq("spark", "vector", "window", "hash", "merge", "customer"), 20)
     }
 
     // semantic decontamination over sign-flip embedding replicas: corpus
@@ -201,19 +213,19 @@ object ScaleTrend {
     // (measured ~100x at 10x) — the same harness artifact as the n-gram
     // contamination 100x note — while the banded candidate work stays
     // data-proportional; the runtime exponent is the claim under test
-    def b8sc(n: Int): Long = {
+    def b8sc(n: Int): DataFrame = {
       import graft.operators.VectorOps._
       val emb = embRep(n)
       emb.filter(col("vec_id") % 7 =!= 0).semanticContaminationAgainst(
         emb.filter(col("vec_id") % 7 === 0)
           .select(col("vec_id").as("eval_id"), col("embedding").as("eval_emb")),
-        "embedding", "vec_id", "eval_emb", "eval_id", threshold = 0.3).count()
+        "embedding", "vec_id", "eval_emb", "eval_id", threshold = 0.3)
     }
 
     // certified quantiles over replicated lineitem: same 3 groups, rows
     // x n — per-group sort grows n log n, so a healthy window plan reads
     // e slightly above but near 1
-    def b9q(n: Int): Long = {
+    def b9q(n: Int): DataFrame = {
       import graft.operators.StatsOps._
       val li = (0 until n).map { r =>
         lineitem(spark, d).select(col("l_returnflag"),
@@ -221,55 +233,55 @@ object ScaleTrend {
           .toDF("l_returnflag", "l_extendedprice")
       }.reduce(_ unionByName _)
       li.quantileStats("l_returnflag", "l_extendedprice",
-        Seq(0.25, 0.5, 0.75, 0.95)).count()
+        Seq(0.25, 0.5, 0.75, 0.95))
     }
 
     // DSIR importance weights over the replicated corpus: the vowel
     // translation grows BOTH vocab tables ~n (target slice = the %3
     // stand-in, same per-replica share); the token-keyed score join and
     // the doc-keyed sum grow ~n — a healthy plan reads e ≈ 1
-    def b8i(n: Int): Long = {
+    def b8i(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       docsRep(spark, d, n)
-        .importanceWeights("doc_id", "text", col("doc_id") % 3 === 0).count()
+        .importanceWeights("doc_id", "text", col("doc_id") % 3 === 0)
     }
 
     // BPE pair stats over the replicated corpus: the token-stream scan
     // and the vocab collapse grow ~n; the pair table is alphabet-bounded
     // (the vowel translation maps letters to letters), so the weighted
     // pair aggregation's key space is CONSTANT — e ≈ 1 measures the scan
-    def b8e(n: Int): Long = {
+    def b8e(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
-      docsRep(spark, d, n).bpePairStats("text", topN = 50).count()
+      docsRep(spark, d, n).bpePairStats("text", topN = 50)
     }
 
     // PQ ANN over sign-flip embedding replicas: training scans grow ~n
     // with a FIXED (dim * ksub)-key aggregation; ADC scoring is one
     // shuffle-free scan; the refine/re-rank is constant-size
-    def b6pq(n: Int): Long = {
+    def b6pq(n: Int): DataFrame = {
       import graft.operators.VectorOps._
       val emb = embRep(n)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
       emb.cosineTopKPq("embedding", "vec_id", q, 10,
-        m = 4, ksub = 4, refine = 50, iters = 2).count()
+        m = 4, ksub = 4, refine = 50, iters = 2)
     }
 
     // passage dedup over the replicated corpus: the vowel translation
     // keeps cross-replica passages distinct, so the first-occurrence
     // table grows ~n and within-replica duplication structure is
     // preserved — both shuffles (digest-keyed, id-keyed) grow ~n
-    def b8pd(n: Int): Long = {
+    def b8pd(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
-      docsRep(spark, d, n).passageDedup("doc_id", "text", width = 20).count()
+      docsRep(spark, d, n).passageDedup("doc_id", "text", width = 20)
     }
 
     // bigram quality over the replicated corpus: vocabulary and bigram
     // count tables grow ~n (translated replicas share no tokens), the
     // token-keyed joins and doc sums grow ~n — a healthy plan reads e≈1
-    def b8bg(n: Int): Long = {
+    def b8bg(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
-      docsRep(spark, d, n).bigramScore("doc_id", "text").count()
+      docsRep(spark, d, n).bigramScore("doc_id", "text")
     }
 
     // integer PageRank over replicated purchase graphs: replica r
@@ -278,19 +290,19 @@ object ScaleTrend {
     // 100-TB shape). Each iteration's equi-join + contribution agg
     // grows ~n; dst base 5e7 keeps src/dst ranges disjoint within and
     // across replicas at any n here
-    def b8pr(n: Int): Long = {
+    def b8pr(n: Int): DataFrame = {
       val e = (0 until n).map { r =>
         lineitem(spark, d).select(
           (col("l_suppkey") + lit(r * IdOffset)).as("src"),
           (col("l_partkey") + lit(50000000L + r * IdOffset)).as("dst"))
       }.reduce(_ unionByName _).distinct()
-      graft.operators.GraphOps.pageRank(e, "src", "dst", iters = 3).count()
+      graft.operators.GraphOps.pageRank(e, "src", "dst", iters = 3)
     }
 
     // triangle counting over offset-disjoint part co-occurrence
     // replicas: edges, wedges, and triangles all grow ~n (replicas
     // share no nodes), so the oriented wedge join is what scales
-    def b8tc(n: Int): Long = {
+    def b8tc(n: Int): DataFrame = {
       val li = (0 until n).map { r =>
         lineitem(spark, d).select(
           (col("l_orderkey") + lit(r * IdOffset)).as("ok"),
@@ -299,55 +311,53 @@ object ScaleTrend {
       val pairs = li.as("x").join(li.as("y"), Seq("ok"))
         .filter(col("x.pk") < col("y.pk"))
         .select(col("x.pk").as("src"), col("y.pk").as("dst"))
-      graft.operators.GraphOps.triangleCounts(pairs, "src", "dst").count()
+      graft.operators.GraphOps.triangleCounts(pairs, "src", "dst")
     }
 
     // inverted index over the replicated corpus: translated replicas
     // share no tokens, so terms grow ~n while per-term df/postings stay
     // fixed — the (term, doc) agg and the WindowGroupLimit cap are what
     // the trend measures
-    def b8ii(n: Int): Long = {
+    def b8ii(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       docsRep(spark, d, n).invertedIndex("doc_id", "text", maxPostings = 20)
-        .count()
     }
 
     // PCA over replicated embeddings: the Gram scan grows ~n while the
     // shuffle stays d^2/2 cells and the driver work is constant — the
     // one-scan aggregation is what the trend certifies
-    def b6pc(n: Int): Long = {
+    def b6pc(n: Int): DataFrame = {
       import graft.operators.VectorOps._
-      embRep(n).principalComponents("embedding", "vec_id", k = 2).count()
+      embRep(n).principalComponents("embedding", "vec_id", k = 2)
     }
 
     // exact span dedup over the replicated corpus: translated replicas
     // share almost no grams, so occurrences AND duplicate groups grow
     // ~n — the min(struct) first-occurrence agg is what the trend
     // certifies (within-replica duplication replicates n-fold)
-    def b8xd(n: Int): Long = {
+    def b8xd(n: Int): DataFrame = {
       graft.operators.DedupOps.dedupRepeatedSpans(
-        docsRep(spark, d, n), "doc_id", "text", n = 8).count()
+        docsRep(spark, d, n), "doc_id", "text", n = 8)
     }
 
     // vocab encode over the replicated corpus: the count table grows ~n
     // (translated replicas share no tokens) but the vocab CUT stays
     // fixed at vocabSize — so the OOV share rises while the TakeOrdered
     // cut, encode join, and id reassembly all grow ~n
-    def b8ve(n: Int): Long = {
+    def b8ve(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       docsRep(spark, d, n).vocabEncode("doc_id", "text", vocabSize = 1000)
-        .count()
     }
 
     // span decontamination over the replicated corpus: corpus AND eval
     // grow with the slice (the %7 split); cross-replica grams differ,
     // so matched spans grow ~n and the redaction projection scans ~n
-    def b8sd2(n: Int): Long = {
+    def b8sd2(n: Int): DataFrame = {
       val docs = docsRep(spark, d, n)
       graft.operators.DedupOps.decontaminateSpans(
         docs.filter(col("doc_id") % 7 =!= 0),
         broadcast(docs.filter(col("doc_id") % 7 === 0)),
-        "doc_id", "text", "text", n = 8).count()
+        "doc_id", "text", "text", n = 8)
     }
 
     // global sequence packing over the replicated corpus: same sources,
@@ -355,7 +365,7 @@ object ScaleTrend {
     // same bucket width; the offset tables stay aggregate-sized. The
     // decomposed two-pass scan should read e ≈ 1 where a naive global
     // window would serialize on one partition.
-    def b8sq(n: Int): Long = {
+    def b8sq(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
       // docsRep drops `source`; a synthetic 16-shard key preserves the
       // shape (few groups, n-times the docs per group)
@@ -363,7 +373,7 @@ object ScaleTrend {
         .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(16))))
         .sequencePackGlobal("source", "doc_id",
           graft.functions.tokenCount(col("text")), capacity = 2048L,
-          bucketWidth = 64L).count()
+          bucketWidth = 64L)
     }
 
     // at-rest spatial layout (its OWN mode, `ScaleTrend disk`): the box
@@ -387,15 +397,10 @@ object ScaleTrend {
         docsRep(spark, d, n).writeMinhashIndex(p, "doc_id", "text",
           shingle = 3, numHashes = 64, bands = 16)
         val tw = (System.nanoTime() - t0) / 1e9
-        def g(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = wave.minHashPairsAgainstIndex(p, "doc_id", "text",
-            threshold = 0.8, maxBucket = 1000).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (ga, rows) = g(); val (gb, _) = g()
+        val (g, rows) = best2(wave.minHashPairsAgainstIndex(p, "doc_id", "text",
+          threshold = 0.8, maxBucket = 1000))
         println(f"b7i_minhash_index_gate ${n}%3dx: write $tw%7.2f s, " +
-          f"gate ${math.min(ga, gb)}%6.2f s ($rows rows)")
+          f"gate $g%6.2f s ($rows rows)")
       }
       spark.stop(); return
     }
@@ -420,14 +425,9 @@ object ScaleTrend {
         var t0 = System.nanoTime()
         docsRep(spark, d, n).writeDigestIndex(pd, "doc_id", "text")
         val twd = (System.nanoTime() - t0) / 1e9
-        def gd(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = wave.exactPairsAgainstIndex(pd, "doc_id", "text").count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (gda, rowsD) = gd(); val (gdb, _) = gd()
+        val (gd, rowsD) = best2(wave.exactPairsAgainstIndex(pd, "doc_id", "text"))
         println(f"b7dg_digest_gate ${n}%3dx: write $twd%7.2f s, " +
-          f"gate ${math.min(gda, gdb)}%6.2f s ($rowsD rows)")
+          f"gate $gd%6.2f s ($rowsD rows)")
         // append cost must track the WAVE, not the corpus decade: the
         // id-clash gate is a LOCAL bloom probe in the common no-clash
         // case, so the decade's only O(table)-ish touch is gone
@@ -441,15 +441,10 @@ object ScaleTrend {
         t0 = System.nanoTime()
         docsRep(spark, d, n).writeCdcIndex(pc, "doc_id", "text")
         val twc = (System.nanoTime() - t0) / 1e9
-        def gc(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = wave.cdcPairsAgainstIndex(pc, "doc_id", "text",
-            minShared = 1).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (gca, rowsC) = gc(); val (gcb, _) = gc()
+        val (gc, rowsC) = best2(wave.cdcPairsAgainstIndex(pc, "doc_id", "text",
+          minShared = 1))
         println(f"b7cg_cdc_gate ${n}%3dx: write $twc%7.2f s, " +
-          f"gate ${math.min(gca, gcb)}%6.2f s ($rowsC rows)")
+          f"gate $gc%6.2f s ($rowsC rows)")
         // the retrieval layout: a top-k query reads only its terms'
         // postings — those grow O(corpus), but stay 6 terms' slivers
         val pb = s"${System.getProperty("java.io.tmpdir")}/graft_trend_bmidx_$n"
@@ -457,16 +452,10 @@ object ScaleTrend {
         docsRep(spark, d, n)
           .writeBm25Index(pb, "doc_id", "text")
         val twb = (System.nanoTime() - t0) / 1e9
-        def gb2(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = graft.operators.CorpusOps.bm25TopKAgainstIndex(spark,
-            pb, Seq("spark", "vector", "window", "hash", "merge",
-              "customer"), 20).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (gba, rowsB) = gb2(); val (gbb, _) = gb2()
+        val (gb, rowsB) = best2(graft.operators.CorpusOps.bm25TopKAgainstIndex(spark,
+          pb, Seq("spark", "vector", "window", "hash", "merge", "customer"), 20))
         println(f"b8ri_bm25_index_topk ${n}%3dx: write $twb%7.2f s, " +
-          f"query ${math.min(gba, gbb)}%6.2f s ($rowsB rows)")
+          f"query $gb%6.2f s ($rowsB rows)")
       }
       spark.stop(); return
     }
@@ -505,9 +494,8 @@ object ScaleTrend {
           w2, "text")
         println(f"bm25delete ${n}%3dx: located   delete-verb " +
           f"${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        val rows = graft.operators.CorpusOps.bm25TopKAgainstIndex(spark, p,
-          Seq("spark", "vector", "window", "hash", "merge", "customer"),
-          20).count()
+        val rows = force(graft.operators.CorpusOps.bm25TopKAgainstIndex(spark, p,
+          Seq("spark", "vector", "window", "hash", "merge", "customer"), 20))
         println(s"bm25delete ${n}x: post-delete top-20 answers $rows rows")
       }
       spark.stop(); return
@@ -542,21 +530,11 @@ object ScaleTrend {
         ksub = 4, iters = 2)
       val q = embeddings(spark, d).filter(col("vec_id") === 1L)
         .head().getSeq[Float](1).toArray
-      def mm(f: => Long): (Double, Long) = {
-        def once(): (Double, Long) = {
-          val t1 = System.nanoTime(); val r = f
-          ((System.nanoTime() - t1) / 1e9, r)
-        }
-        val (a, r) = once(); val (b, _) = once()
-        (math.min(a, b), r)
-      }
       def measure(tag: String): Unit = {
-        val (tg, rg) = mm(
-          wave.exactPairsAgainstIndex(pd, "doc_id", "text").count())
-        val (tb, rb) = mm(
-          CorpusOps.bm25TopKAgainstIndex(spark, pb, terms, 20).count())
-        val (tv, rv) = mm(VectorOps.readIvfPqTopK(spark, pe, "embedding",
-          "vec_id", q, 10, nprobe = 4, refine = 50).count())
+        val (tg, rg) = best2(wave.exactPairsAgainstIndex(pd, "doc_id", "text"))
+        val (tb, rb) = best2(CorpusOps.bm25TopKAgainstIndex(spark, pb, terms, 20))
+        val (tv, rv) = best2(VectorOps.readIvfPqTopK(spark, pe, "embedding",
+          "vec_id", q, 10, nprobe = 4, refine = 50))
         println(f"deletes $tag%-12s digest_gate $tg%5.2f s ($rg rows), " +
           f"bm25_topk $tb%5.2f s ($rb), ann_topk $tv%5.2f s ($rv)")
       }
@@ -595,22 +573,13 @@ object ScaleTrend {
       val table = custRep(spark, d, 10, "c")
       graft.index.SpatialDisk.write(table, p, Seq("cx", "cy"), cellBits = 7)
       val wave = suppRep(spark, d, 1).limit(500)
-      def mm(f: => Long): (Double, Long) = {
-        def once(): (Double, Long) = {
-          val t1 = System.nanoTime(); val r = f
-          ((System.nanoTime() - t1) / 1e9, r)
-        }
-        val (a, r) = once(); val (b, _) = once()
-        (math.min(a, b), r)
-      }
       def measure(tag: String): Unit = {
-        val (tb, rb) = mm(graft.index.SpatialDisk.boxRange(spark, p,
-          Array(2000.0, 100.0), Array(4000.0, 300.0)).count())
-        val (tk, rk) = mm(graft.index.SpatialDisk.knn(spark, p,
-          Array(5000.0, 500.0), 10, Seq("cid")).count())
-        val (tj, rj) = mm(graft.index.SpatialDisk.knnJoin(wave,
-          Seq("rx", "ry"), p, 3, leftId = "rid",
-          tieBreak = Seq("cid")).count())
+        val (tb, rb) = best2(graft.index.SpatialDisk.boxRange(spark, p,
+          Array(2000.0, 100.0), Array(4000.0, 300.0)))
+        val (tk, rk) = best2(graft.index.SpatialDisk.knn(spark, p,
+          Array(5000.0, 500.0), 10, Seq("cid")))
+        val (tj, rj) = best2(graft.index.SpatialDisk.knnJoin(wave,
+          Seq("rx", "ry"), p, 3, leftId = "rid", tieBreak = Seq("cid")))
         println(f"spdeletes $tag%-12s box $tb%5.2f s ($rb rows), " +
           f"knn $tk%5.2f s ($rk), knn_join $tj%5.2f s ($rj)")
       }
@@ -666,12 +635,12 @@ object ScaleTrend {
         Array(5000.0, 100.0), Array(5250.0, 300.0), "cid")
       println(f"spdeleteat region    delete-verb " +
         f"${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      val live = graft.index.SpatialDisk.boxRange(spark, p,
-        Array(-1e9, -1e9), Array(1e9, 1e9)).count()
-      val want = table.filter(col("cid") % 1000 =!= 1 &&
+      val live = force(graft.index.SpatialDisk.boxRange(spark, p,
+        Array(-1e9, -1e9), Array(1e9, 1e9)))
+      val want = force(table.filter(col("cid") % 1000 =!= 1 &&
         col("cid") % 1000 =!= 2 && col("cid") % 1000 =!= 3 &&
         !(col("cx").between(5000.0, 5250.0) &&
-          col("cy").between(100.0, 300.0))).count()
+          col("cy").between(100.0, 300.0))))
       println(s"spdeleteat parity: live=$live want=$want " +
         (if (live == want) "OK" else "MISMATCH"))
       spark.stop(); return
@@ -702,16 +671,10 @@ object ScaleTrend {
         embRep(n).writeIvfPq(p, "embedding", "vec_id", nlist = 8 * n,
           m = 4, ksub = 4, iters = 2)
         val tw = (System.nanoTime() - t0) / 1e9
-        def q(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = graft.operators.VectorOps.readIvfPqTopKJoin(wave,
-            "qvec", "qid", p, "embedding", "vec_id", k = 3, nprobe = 4,
-            refine = 50).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (qa, rows) = q(); val (qb, _) = q()
+        val (tq, rows) = best2(graft.operators.VectorOps.readIvfPqTopKJoin(wave,
+          "qvec", "qid", p, "embedding", "vec_id", k = 3, nprobe = 4, refine = 50))
         println(f"b6vd_ann_join_disk ${n}%3dx: write $tw%7.2f s, " +
-          f"join ${math.min(qa, qb)}%6.2f s ($rows rows)")
+          f"join $tq%6.2f s ($rows rows)")
         // append cost must track the WAVE, not the corpus decade: the
         // id-clash gate is a LOCAL bloom probe in the common no-clash
         // case (r13 — previously an O(table) id semi-join per wave)
@@ -733,38 +696,23 @@ object ScaleTrend {
         graft.index.SpatialDisk.write(custRep(spark, d, n, "c"), p,
           Seq("cx", "cy"), cellBits = cb)
         val tw = (System.nanoTime() - t0) / 1e9
-        def q(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = graft.index.SpatialDisk.boxRange(spark, p,
-            Array(2000.0, 100.0), Array(4000.0, 300.0)).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (qa, rows) = q(); val (qb, _) = q()
+        val (tq, rows) = best2(graft.index.SpatialDisk.boxRange(spark, p,
+          Array(2000.0, 100.0), Array(4000.0, 300.0)))
         println(f"b1d_box_range_disk ${n}%3dx cellBits=$cb: " +
-          f"write $tw%7.2f s, query ${math.min(qa, qb)}%6.2f s ($rows rows)")
+          f"write $tw%7.2f s, query $tq%6.2f s ($rows rows)")
         // kNN JOIN against the growing layout: the query set stays
         // replica-0-sized, so per-left radii SHRINK as density grows
         // (cell stats adapt) and the pruned read must stay ~flat while
         // the table grows 10x/100x
-        def kj(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = graft.index.SpatialDisk.knnJoin(
-            suppRep(spark, d, 1).limit(500), Seq("rx", "ry"), p, 3,
-            leftId = "rid", tieBreak = Seq("cid")).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (ka, kRows) = kj(); val (kb, _) = kj()
+        val (tk, kRows) = best2(graft.index.SpatialDisk.knnJoin(
+          suppRep(spark, d, 1).limit(500), Seq("rx", "ry"), p, 3,
+          leftId = "rid", tieBreak = Seq("cid")))
         println(f"b5d_knn_join_disk  ${n}%3dx cellBits=$cb: " +
-          f"query ${math.min(ka, kb)}%6.2f s ($kRows rows)")
-        def k1(): (Double, Long) = {
-          val t1 = System.nanoTime()
-          val rows = graft.index.SpatialDisk.knn(spark, p,
-            Array(5000.0, 500.0), 10, Seq("cid")).count()
-          ((System.nanoTime() - t1) / 1e9, rows)
-        }
-        val (na, nRows) = k1(); val (nb, _) = k1()
+          f"query $tk%6.2f s ($kRows rows)")
+        val (tn, nRows) = best2(graft.index.SpatialDisk.knn(spark, p,
+          Array(5000.0, 500.0), 10, Seq("cid")))
         println(f"b3d_knn_disk       ${n}%3dx cellBits=$cb: " +
-          f"query ${math.min(na, nb)}%6.2f s ($nRows rows)")
+          f"query $tn%6.2f s ($nRows rows)")
       }
       spark.stop(); return
     }
@@ -774,7 +722,7 @@ object ScaleTrend {
     // co-locate in time whatever their spatial overlap — per-window
     // density is constant (the "more days of the same feed" shape) and
     // the one (space, time)-cell equi-join should read e ≈ 1
-    def b4st(n: Int): Long = {
+    def b4st(n: Int): DataFrame = {
       val span = 3600L * 24 * 40 // > the events table's ~31-day span, s
       val ev = (0 until n).map { r =>
         eventsPts(spark, d).select(
@@ -786,13 +734,13 @@ object ScaleTrend {
         col("ts").as("ts2"), col("ex").as("ex2"), col("ey").as("ey2"))
       ev.spatioTemporalJoin(rSide, Seq("ex", "ey"), Seq("ex2", "ey2"),
           "ts", "ts2", r = 5.0, dtMillis = 300000L)
-        .filter(col("event_id") < col("event_id2")).count()
+        .filter(col("event_id") < col("event_id2"))
     }
 
     // PBSM intersects join over shifted replicas: boxes shift with
     // their centers, replicas stay disjoint in x, so true overlaps —
     // and the reference-point-deduped pair work — grow ~n
-    def b4x(n: Int): Long = {
+    def b4x(n: Int): DataFrame = {
       import graft.spatial.ShapeCodec
       val lb = suppRep(spark, d, n).select(col("rid"),
         struct(lit(ShapeCodec.TagMBR).as("tag"),
@@ -802,37 +750,35 @@ object ScaleTrend {
         struct(lit(ShapeCodec.TagMBR).as("tag"),
           array(col("cx") - 50.0, col("cy") - 8.0,
             col("cx") + 50.0, col("cy") + 8.0).as("coords")).as("rbox"))
-      lb.shapeIntersectsJoin(rb, "lbox", "rbox").count()
+      lb.shapeIntersectsJoin(rb, "lbox", "rbox")
     }
 
     // epoch shuffle over the replicated corpus: shard count fixed at 8,
     // rows grow ~n — ONE hash exchange + per-shard sorts, so e ≈ 1
     // (the n log n sort term is invisible at these decades)
-    def b8es(n: Int): Long = {
+    def b8es(n: Int): DataFrame = {
       import graft.operators.SampleOps._
       docsRep(spark, d, n).epochShuffle("doc_id", epoch = 1, numShards = 8)
-        .count()
     }
 
     // heavy n-grams over the replicated corpus: translated replicas
     // share no grams, so distinct grams AND heavy grams grow ~n; the
     // sketch pass's agg state stays width-bounded while both scans
     // grow ~n — e ≈ 1
-    def b8hh(n: Int): Long = {
+    def b8hh(n: Int): DataFrame = {
       import graft.operators.CorpusOps._
-      docsRep(spark, d, n).heavyNgrams("text", n = 3, minCount = 4L).count()
+      docsRep(spark, d, n).heavyNgrams("text", n = 3, minCount = 4L)
     }
 
     // per-group top fraction: the b8sq synthetic-source shape (few
     // groups, n-times the docs per group) — one exchange + in-group
     // sort, e ≈ 1
-    def b8gt(n: Int): Long = {
+    def b8gt(n: Int): DataFrame = {
       import graft.operators.SampleOps._
       docsRep(spark, d, n)
         .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(16))))
         .groupTopFraction("source", 0.25,
           Seq(graft.functions.tokenCount(col("text")).desc, col("doc_id").asc))
-        .count()
     }
 
     // approximate vector kNN join (the r9 conf-gated IVF probe route,
@@ -841,7 +787,7 @@ object ScaleTrend {
     // occupancy stays constant, so per-left candidates are flat and
     // total work ~n. Replicas shift dim 0 by a large offset (neighbor
     // structure intact within a replica); ids offset per replica.
-    def b6va(n: Int): Long = {
+    def b6va(n: Int): DataFrame = {
       import graft.operators.VectorOps._
       def rep(p: String): DataFrame =
         (0 until n).map { r =>
@@ -855,7 +801,7 @@ object ScaleTrend {
       spark.conf.set(graft.GraftConf.KnnVecApprox, "true")
       spark.conf.set(graft.GraftConf.KnnVecApproxNlist, (16 * n).toString)
       try rep("l").knnJoinVec(rep("r"), "lvec", "rvec", "lid", 3,
-        Seq("rid"), sampleCap = 500 * n, safety = 1e9).count()
+        Seq("rid"), sampleCap = 500 * n, safety = 1e9)
       finally {
         spark.conf.unset(graft.GraftConf.KnnVecApprox)
         spark.conf.unset(graft.GraftConf.KnnVecApproxNlist)
@@ -887,12 +833,12 @@ object ScaleTrend {
             .as("rpt"))
       }.reduce(_ unionByName _)
     }
-    def b4sh(n: Int): Long =
+    def b4sh(n: Int): DataFrame =
       shapeBoxesRep(n).shapeDistanceJoin(shapePtsRep(n), "lbox", "rpt",
-        50.0).count()
-    def b5sh(n: Int): Long =
+        50.0)
+    def b5sh(n: Int): DataFrame =
       shapeBoxesRep(n).shapeKnnJoin(shapePtsRep(n), "lbox", "rpt", 3,
-        "lid", Seq("rid")).count()
+        "lid", Seq("rid"))
 
     // the d=4 auto-routed kNN join (bench b5hd's fixture: customer xy
     // plus two residue axes) over x-shifted replicas — same XOffset
@@ -908,15 +854,15 @@ object ScaleTrend {
           (col("c_custkey") % 773).cast("double").as(s"${p}z"),
           (col("c_custkey") % 337).cast("double").as(s"${p}w"))
       }.reduce(_ unionByName _)
-    def b5hd(n: Int): Long = {
+    def b5hd(n: Int): DataFrame = {
       spark.conf.set(graft.GraftConf.KnnJoinAlgo, "auto")
       try pts4dRep(n, "l").knnJoinAuto(pts4dRep(n, "r"),
         Seq("lx", "ly", "lz", "lw"), Seq("rx", "ry", "rz", "rw"),
-        3, "lid", "rid", Seq("rid")).count()
+        3, "lid", "rid", Seq("rid"))
       finally spark.conf.unset(graft.GraftConf.KnnJoinAlgo)
     }
 
-    val entries: Seq[(String, Int => Long)] =
+    val entries: Seq[(String, Int => DataFrame)] =
       Seq("b4l_distance_join_self_grid" -> (b4l _),
           "b4sh_shape_distance_join" -> (b4sh _),
           "b5sh_shape_knn_join" -> (b5sh _),
@@ -954,18 +900,13 @@ object ScaleTrend {
           "b8gt_group_top_frac" -> (b8gt _),
           "b6va_knn_join_vec_approx" -> (b6va _))
 
-    def timed(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val rows = f
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-
     // `ScaleTrend 100` measures the second decade instead: the 1x vs
     // 100x pair, once per entry (a 100x run is minutes, min-of-2 would
     // double that for little variance reduction), on the two headline
     // join shapes. Exponent is per-decade: e = log100(t100/t1) * ... =
     // log10(t_100x / t_1x) / 2, directly comparable to the 10x column.
     if (args.headOption.contains("100")) {
-      val hundred: Seq[(String, Int => Long)] =
+      val hundred: Seq[(String, Int => DataFrame)] =
         Seq("b4l_distance_join_self_grid" -> (b4l _),
             "b4sh_shape_distance_join" -> (b4sh _),
             "b5sh_shape_knn_join" -> (b5sh _),
@@ -989,10 +930,9 @@ object ScaleTrend {
       // without re-paying the minutes-long others)
       val want = args.drop(1).toSet
       val sel = if (want.isEmpty) hundred else hundred.filter(e => want(e._1))
-      sel.foreach { case (_, f) => f(1) } // warmup
+      sel.foreach { case (_, f) => force(f(1)) } // warmup
       sel.foreach { case (name, f) =>
-        val (t1, r1) = timed(f(1)); val (t1b, _) = timed(f(1))
-        val b1 = math.min(t1, t1b)
+        val (b1, r1) = best2(f(1))
         val (t100, r100) = timed(f(100))
         val e = math.log10(t100 / b1) / 2.0
         println(f"$name%-30s 1x: $b1%6.2f s ($r1%9d rows)  100x: $t100%7.2f s ($r100%10d rows)  exponent/decade=$e%.2f")
@@ -1004,11 +944,10 @@ object ScaleTrend {
     // re-paying the whole sweep), same contract as the 100x mode
     val wanted = args.toSet
     val selected = if (wanted.isEmpty) entries else entries.filter(e => wanted(e._1))
-    selected.foreach { case (name, f) => f(1) } // warmup at 1x
+    selected.foreach { case (_, f) => force(f(1)) } // warmup at 1x
     selected.foreach { case (name, f) =>
-      val (t1, r1) = timed(f(1)); val (t1b, _) = timed(f(1))
-      val (t10, r10) = timed(f(10)); val (t10b, _) = timed(f(10))
-      val b1 = math.min(t1, t1b); val b10 = math.min(t10, t10b)
+      val (b1, r1) = best2(f(1))
+      val (b10, r10) = best2(f(10))
       val e = math.log10(b10 / b1)
       println(f"$name%-30s 1x: $b1%6.2f s ($r1%9d rows)  10x: $b10%6.2f s ($r10%9d rows)  exponent=$e%.2f")
     }

@@ -336,8 +336,9 @@ class SpatialDiskSpec extends SparkSpec {
 
   test("knnJoin: lefts outside the layout take the one rescue pass, never a cross") {
     // an 8 x 8-cell lattice layout, where no inside left starves, and
-    // every fifth left moved 10-20 units past the layout's x extent:
-    // some of those starve at their estimated radius
+    // every fifth left moved 10-20 units past the layout's x extent.
+    // With 16 of the 600 lefts sampled, an unsampled outside left takes
+    // the radius its grid cell's sampled lefts need, and some starve
     def pts(n: Int, id: String, x: String, y: String) = spark.range(0, n, 1, 2)
       .select(col("id").as(id), (col("id") * 37 % 101).cast("double").as(x),
         (col("id") * 53 % 89).cast("double").as(y))
@@ -353,7 +354,7 @@ class SpatialDiskSpec extends SparkSpec {
     var jobs = 0
     val (got, plans) = withBuildPlans {
       jobs = jobsOf { joined = SpatialDisk.knnJoin(l, Seq("lx", "ly"), path, 3,
-        leftId = "lid", tieBreak = Seq("rid")) }
+        leftId = "lid", tieBreak = Seq("rid"), sampleCap = 16) }
       rows(joined)
     }
     assert(got === rows(l.knnJoinNaive(r, Seq("lx", "ly"), Seq("rx", "ry"), 3,
@@ -370,6 +371,29 @@ class SpatialDiskSpec extends SparkSpec {
     assert(jobs == 6)
     assert(!plans.exists(p =>
       p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
+  }
+
+  test("knnJoin on a layout of about one row per cell starves no left") {
+    // 150 customers over the default 1024 cells: the nearest cell of a
+    // supplier mostly holds one row, whose point mbr has no density, so
+    // the main phase must take the certified radius there
+    val path = freshLayout("kj_sparse")
+    val supp = graft.Tables.supplierPts(spark, sf())
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    var joined: org.apache.spark.sql.DataFrame = null
+    var jobs = 0
+    val (got, plans) = withBuildPlans {
+      jobs = jobsOf { joined = SpatialDisk.knnJoin(supp, Seq("sx", "sy"), path, 3,
+        leftId = "s_suppkey", tieBreak = Seq("c_custkey")) }
+      rows(joined)
+    }
+    assert(got === rows(supp.knnJoinNaive(cust, Seq("sx", "sy"), Seq("cx", "cy"), 3,
+      leftId = "s_suppkey", tieBreak = Seq("c_custkey"))))
+    val plan = joined.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("Union") && !(plans :+ plan).exists(_.contains("knn_rescue")),
+      s"some left starved: $plan")
+    assert(jobs == 6)
   }
 
   test("compact: wave shards collapse to few files, same answers, fresh token") {
